@@ -91,8 +91,9 @@ class Config:
     strict_reference_semantics: bool = False
     # checksum upgrade: also compare order-insensitive content
     # fingerprints source-vs-target (verify.content_fingerprint) —
-    # catches value corruption counts can't; costs one extra scan of
-    # each side, so opt-in
+    # catches value corruption counts can't. The target's fingerprint
+    # comes from the scan that counts it; the source side pays one
+    # extra scan (a JDBC re-read for JdbcArchiveJob), so opt-in
     verify_fingerprint: bool = False
     # degrade output to the reference's wire shape (bool->tinyint,
     # temporal->string, decimal->double); see sources/typemap.py

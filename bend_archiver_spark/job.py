@@ -9,9 +9,15 @@ distributed write, then the verification counts. The goroutine pool,
 condition channel, retry loop and pagination all disappear into the
 scheduler.
 
+The target is read twice per run: once by the gate before the write,
+and once after it, where a single aggregate yields both the target
+count and (with ``verify_fingerprint``) its fingerprint. The second
+read reuses the schema the gate read instead of inferring it again.
+
 ``FileArchiveJob`` runs the flow against file-based sources (parquet/
-csv/json), which is also the bench path; ``JdbcArchiveJob`` (sources/
-jdbc.py) does the same against live RDBMS sources.
+csv/json); ``JdbcArchiveJob`` (sources/jdbc.py) does the same against
+live RDBMS sources, with its bounds and count probes run as plain SQL
+on a driver-side connection rather than as Spark jobs.
 """
 
 from __future__ import annotations
@@ -22,12 +28,13 @@ from dataclasses import dataclass, field
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .cancel import raise_if_cancelled
 from .config import Config
 from .planner import adjust_batch_size, coerce_key, split_time_windows
 from .sink import write_batch
-from .verify import VerifyResult, count_verify, idempotency_gate
+from .verify import VerifyResult, count_and_fingerprint, idempotency_gate
 
 __all__ = [
     "ArchiveReport",
@@ -37,37 +44,75 @@ __all__ = [
 ]
 
 
-def read_target(spark: SparkSession, cfg: Config) -> DataFrame:
+def read_target(
+    spark: SparkSession, cfg: Config, schema: StructType | None = None
+) -> DataFrame:
     """Read the sink back for gate/verify. 'ndjson' is a sink-side
     name (stage-file parity); Spark's reader calls it 'json', with the
-    same micro-precision timestamp format the writer used."""
+    same micro-precision timestamp format the writer used. A given
+    ``schema`` (the one the gate read) spares the Spark job that file
+    formats spend inferring it; Delta keeps its schema in the table log
+    and refuses one given at read time."""
     if cfg.target_format == "ndjson":
         from .sink import NDJSON_TS_FMT
 
-        return (
-            spark.read.format("json")
-            .option("timestampFormat", NDJSON_TS_FMT)
-            .load(cfg.target_path)
+        reader = spark.read.format("json").option(
+            "timestampFormat", NDJSON_TS_FMT
         )
-    return spark.read.format(cfg.target_format).load(cfg.target_path)
+    else:
+        reader = spark.read.format(cfg.target_format)
+    if schema is not None and cfg.target_format != "delta":
+        reader = reader.schema(schema)
+    return reader.load(cfg.target_path)
 
 
-def check_idempotency_gate(spark: SparkSession, cfg: Config) -> None:
-    """Refuse to double-archive (A32, cmd/main.go:74-82). Only the
-    target *load* may fail soft (missing target == clean slate); an
-    error evaluating the gate predicate against an existing target
-    must propagate — swallowing it would silently skip the guard on a
-    corrupt or schema-degraded target and append rows twice."""
+def check_idempotency_gate(
+    spark: SparkSession, cfg: Config
+) -> StructType | None:
+    """Refuse to double-archive (A32, cmd/main.go:74-82). Returns the
+    schema of the existing target, or ``None`` when there is none yet.
+    Only the target *load* may fail soft (missing target == clean
+    slate); an error evaluating the gate predicate against an existing
+    target must propagate — swallowing it would silently skip the guard
+    on a corrupt or schema-degraded target and append rows twice."""
     try:
         existing = read_target(spark, cfg)
     except AnalysisException:
-        return  # target does not exist yet — clean slate
+        return None  # target does not exist yet — clean slate
     already = idempotency_gate(existing, cfg.source_where_condition)
     if already > 0:
         raise RuntimeError(
             f"idempotency gate: target already has {already} rows "
             "matching the predicate; refusing to double-archive"
         )
+    return existing.schema
+
+
+def verify_target(
+    spark: SparkSession,
+    cfg: Config,
+    columns: list[str],
+    schema: StructType | None = None,
+) -> tuple[int, int | None]:
+    """Target side of the verification contract in one scan: the
+    number of target rows matching the predicate and, with
+    ``verify_fingerprint``, their content fingerprint over ``columns``
+    (``None`` otherwise). ``schema`` is passed on to :func:`read_target`."""
+    target = read_target(spark, cfg, schema)
+    # predicate-scoped: a target dir may hold other archives. Under
+    # reference_compat the degraded column types may not accept the
+    # source predicate — fall back to the whole target
+    try:
+        scoped = (
+            target.filter(cfg.source_where_condition)
+            if cfg.source_where_condition
+            else target
+        )
+    except AnalysisException:
+        scoped = target
+    if not cfg.verify_fingerprint:
+        return scoped.count(), None
+    return count_and_fingerprint(scoped.select(*columns))
 
 
 def run_copy_into(spark: SparkSession, cfg: Config, copy_executor=None) -> int:
@@ -181,8 +226,9 @@ class FileArchiveJob:
         )
 
         # pre-flight gate (A32)
-        if check_idempotency:
-            check_idempotency_gate(self.spark, cfg)
+        schema = (
+            check_idempotency_gate(self.spark, cfg) if check_idempotency else None
+        )
 
         n_parts, batch, part_col, cnt = self._plan_partitions(filtered)
         if cnt == 0:
@@ -204,10 +250,14 @@ class FileArchiveJob:
         extracted = filtered.repartitionByRange(
             n_parts, F.col(part_col)
         ).sortWithinPartitions(part_col)
+        # the rows as the target stores them, without the shuffle: what
+        # the (order-insensitive) source fingerprint hashes
+        written = filtered
         if cfg.reference_compat:
             from .sources.typemap import apply_reference_compat
 
             extracted = apply_reference_compat(extracted)
+            written = apply_reference_compat(filtered)
         write_batch(
             extracted,
             cfg.target_path,
@@ -221,34 +271,19 @@ class FileArchiveJob:
             else None
         )
 
-        target = read_target(self.spark, cfg)
+        tgt_rows, tgt_fp = verify_target(
+            self.spark, cfg, written.columns, schema
+        )
         # source side of the verification contract (worker/worker.go:230-242):
         # the bounds probe already counted the filtered source — file
         # sources are immutable within the job, so reuse it instead of
         # a second full scan
-        src_rows = cnt
-        # target verification is predicate-scoped (a target dir may hold
-        # other archives); under reference_compat the degraded column
-        # types may not accept the source predicate — fall back to full
-        # count
-        try:
-            tgt_scoped = (
-                target.filter(cfg.source_where_condition)
-                if cfg.source_where_condition
-                else target
-            )
-            tgt_rows = tgt_scoped.count()
-        except AnalysisException:
-            tgt_scoped = target
-            tgt_rows = target.count()
-        verify = VerifyResult(src_rows, tgt_rows)
+        verify = VerifyResult(cnt, tgt_rows)
         if cfg.verify_fingerprint:
             from .verify import content_fingerprint
 
-            verify.source_fingerprint = content_fingerprint(extracted)
-            verify.target_fingerprint = content_fingerprint(
-                tgt_scoped.select(*extracted.columns)
-            )
+            verify.source_fingerprint = content_fingerprint(written)
+            verify.target_fingerprint = tgt_fp
         elapsed = time.monotonic() - t0
         return ArchiveReport(
             table=cfg.source_table,
@@ -269,9 +304,10 @@ class JdbcArchiveJob:
     per task) -> distributed write -> count verification -> optional
     verification-gated delete-after-sync.
 
-    Requires the dialect's JDBC driver jar on the Spark classpath; the
-    probe/plan/SQL layers are unit-tested without a live database
-    (tests/test_archiver_core.py, tests/test_job.py)."""
+    Requires the dialect's JDBC driver jar on the Spark classpath. The
+    SQL generation is unit-tested per dialect (tests/test_archiver_core.py,
+    tests/test_job.py); the whole flow runs end to end against embedded
+    Derby (tests/test_jdbc_e2e.py)."""
 
     def __init__(self, spark: SparkSession, cfg: Config):
         from .sources.jdbc import JdbcSource
@@ -285,8 +321,9 @@ class JdbcArchiveJob:
     ) -> ArchiveReport:
         cfg = self.cfg
         t0 = time.monotonic()
-        if check_idempotency:
-            check_idempotency_gate(self.spark, cfg)
+        schema = (
+            check_idempotency_gate(self.spark, cfg) if check_idempotency else None
+        )
 
         plan = (
             self.source.plan_time_split()
@@ -314,23 +351,15 @@ class JdbcArchiveJob:
         )
 
         source_rows = self.source.count()
-        target = read_target(self.spark, cfg)
-        tgt_scoped = (
-            target.filter(cfg.source_where_condition)
-            if cfg.source_where_condition
-            else target
-        )
-        tgt_rows = tgt_scoped.count()
+        tgt_rows, tgt_fp = verify_target(self.spark, cfg, df.columns, schema)
         verify = VerifyResult(source_rows, tgt_rows)
         if cfg.verify_fingerprint:
-            # checksum upgrade: one extra scan of each side (the
-            # source side re-reads over JDBC — opt-in for that reason)
+            # checksum upgrade: the source side re-reads over JDBC —
+            # the one extra scan it costs, so opt-in
             from .verify import content_fingerprint
 
             verify.source_fingerprint = content_fingerprint(df)
-            verify.target_fingerprint = content_fingerprint(
-                tgt_scoped.select(*df.columns)
-            )
+            verify.target_fingerprint = tgt_fp
 
         deleted = 0
         if cfg.delete_after_sync and verify.is_correct:
@@ -346,6 +375,7 @@ class JdbcArchiveJob:
                 plan.url,
                 cfg.source_user,
                 cfg.source_pass,
+                self.source.dialect.driver,
             )
             deleted = delete_after_sync(cfg, verify, execute)
 

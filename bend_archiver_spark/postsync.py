@@ -11,7 +11,8 @@ Safety contract preserved exactly from the reference:
   (source/postgres.go:174-187).
 
 Statements execute through a raw JDBC connection obtained from the
-driver JVM (DataFrames cannot DELETE on a remote RDBMS).
+driver JVM (DataFrames cannot DELETE on a remote RDBMS), the same
+connection helper the source probes use.
 """
 
 from __future__ import annotations
@@ -21,26 +22,27 @@ from collections.abc import Callable
 
 from .config import Config
 from .sources.dialects import get_dialect
+from .sources.jdbc import driver_connection
 from .verify import VerifyResult
 
 __all__ = ["delete_after_sync", "jdbc_executor"]
 
 
-def jdbc_executor(spark, url: str, user: str, password: str) -> Callable[[str], int]:
-    """Build an update-statement executor over the driver JVM's
-    java.sql.DriverManager. Returns affected-row counts."""
-    jvm = spark._sc._jvm  # noqa: SLF001 - py4j JDBC access
+def jdbc_executor(
+    spark, url: str, user: str, password: str, driver: str = ""
+) -> Callable[[str], int]:
+    """Build an update-statement executor over a driver-side JDBC
+    connection (``sources.jdbc.driver_connection``, which registers
+    ``driver`` the way Spark's JDBC reader does). Returns affected-row
+    counts."""
 
     def execute(sql: str) -> int:
-        conn = jvm.java.sql.DriverManager.getConnection(url, user, password)
-        try:
+        with driver_connection(spark, url, driver, user, password) as conn:
             stmt = conn.createStatement()
             try:
                 return stmt.executeUpdate(sql)
             finally:
                 stmt.close()
-        finally:
-            conn.close()
 
     return execute
 

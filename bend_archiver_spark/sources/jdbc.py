@@ -10,14 +10,22 @@ OFFSET/FETCH loop, source/sql_server.go:284-313) is replaced by
 (worker/worker.go:139-143) disappears because window predicates are
 independent snapshots, not LIMIT/OFFSET pages.
 
-No live database exists in this environment; the SQL/URL/option
-generation is unit-tested and the DataFrame plumbing is exercised via
-the file-source path which shares the planner.
+The bounds and count probes are single-row aggregates, so they run as
+plain SQL over one driver-side JDBC connection (as the reference's
+GetMinMaxSplitKey / GetSourceReadRowsCount do, source/mysql.go:79-114)
+instead of as Spark jobs; only the partitioned read goes through Spark.
+
+The SQL/URL/option generation is unit-tested per dialect; the probes,
+partitioned reads and deletes run end to end against embedded Derby,
+which ships inside Spark's JVM (tests/test_jdbc_e2e.py).
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+from contextlib import contextmanager
 from dataclasses import dataclass, field
+from decimal import Decimal
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -30,7 +38,32 @@ from ..planner import (
 )
 from .dialects import Dialect, get_dialect
 
-__all__ = ["JdbcSource", "JdbcReadPlan"]
+__all__ = ["JdbcSource", "JdbcReadPlan", "driver_connection"]
+
+# per-query timeout analog of the 60s page timeout (source/sql_server.go:314)
+QUERY_TIMEOUT_S = 60
+
+
+@contextmanager
+def driver_connection(
+    spark: SparkSession, url: str, driver: str, user: str, password: str
+) -> Iterator[object]:
+    """A JDBC connection opened in the driver JVM, closed on exit.
+
+    ``driver`` (when given) is registered with Spark's
+    ``DriverRegistry`` first, as Spark's own JDBC reader does, so a
+    driver jar that Spark's reader can load is visible here too; an
+    empty ``driver`` leaves the lookup to ``DriverManager`` by URL."""
+    jvm = spark._jvm  # noqa: SLF001 - py4j JDBC access
+    if driver:
+        jvm.org.apache.spark.sql.execution.datasources.jdbc.DriverRegistry.register(
+            driver
+        )
+    conn = jvm.java.sql.DriverManager.getConnection(url, user, password)
+    try:
+        yield conn
+    finally:
+        conn.close()
 
 
 def _floor_bound(v: object) -> str:
@@ -88,23 +121,27 @@ class JdbcSource:
             # bounds per-fetch memory like the reference's 10k-row
             # MSSQL pages (source/sql_server.go:284)
             "fetchsize": "10000",
-            # per-query timeout analog of the 60s page timeout
-            # (source/sql_server.go:314)
-            "queryTimeout": "60",
+            "queryTimeout": str(QUERY_TIMEOUT_S),
         }
 
-    def _query_df(self, sql: str, database: str | None = None) -> DataFrame:
-        reader = (
-            self.spark.read.format("jdbc")
-            .option("url", self._url(database))
-            .option("query", sql)
-        )
-        for k, v in self._base_options().items():
-            reader = reader.option(k, v)
-        df = reader.load()
-        # Oracle/Derby fold unquoted aliases to UPPERCASE; normalize so
-        # probe rows are addressable by the alias we wrote (min_key...)
-        return df.toDF(*[c.lower() for c in df.columns])
+    def _query_row(self, sql: str) -> list[str | None]:
+        """First row of ``sql``, each value as its string form (NULL ->
+        None), read positionally over one driver-side connection — no
+        Spark job. The probes are single-row aggregates."""
+        cfg = self.cfg
+        with driver_connection(
+            self.spark, self._url(), self.dialect.driver,
+            cfg.source_user, cfg.source_pass,
+        ) as conn:
+            stmt = conn.createStatement()
+            try:
+                stmt.setQueryTimeout(QUERY_TIMEOUT_S)
+                rs = stmt.executeQuery(sql)
+                rs.next()
+                n = rs.getMetaData().getColumnCount()
+                return [rs.getString(i) for i in range(1, n + 1)]
+            finally:
+                stmt.close()
 
     # --- DSv2 catalog (aggregate/limit pushdown) ---------------------
     def register_v2_catalog(self, catalog_name: str = "srcdb") -> str:
@@ -147,12 +184,11 @@ class JdbcSource:
             self.cfg.source_split_key,
             self.cfg.source_where_condition,
         )
-        row = self._query_df(sql).first()
-        return (
-            coerce_key(row["min_key"]),
-            coerce_key(row["max_key"]),
-            int(row["cnt"]),
-        )
+        mn, mx, cnt = self._query_row(sql)
+        # through Decimal: DECIMAL(20,0) / NUMBER keys arrive as digit
+        # strings (possibly with a scale or exponent) and must coerce
+        # exactly, past int64
+        return coerce_key(Decimal(mn)), coerce_key(Decimal(mx)), int(cnt)
 
     def probe_time_bounds(self) -> tuple[str | None, str | None]:
         sql = self.dialect.minmax_time_sql(
@@ -161,8 +197,8 @@ class JdbcSource:
             self.cfg.source_split_time_key,
             self.cfg.source_where_condition,
         )
-        row = self._query_df(sql).first()
-        return row["min_time"], row["max_time"]
+        lo, hi = self._query_row(sql)
+        return lo, hi
 
     def count(self) -> int:
         sql = self.dialect.count_sql(
@@ -170,7 +206,8 @@ class JdbcSource:
             self.cfg.source_table,
             self.cfg.source_where_condition,
         )
-        return int(self._query_df(sql).first()["cnt"])
+        (cnt,) = self._query_row(sql)
+        return int(cnt)
 
     # --- partitioned reads (A1-A9, A20-A24) --------------------------
     def plan_key_split(self) -> JdbcReadPlan:

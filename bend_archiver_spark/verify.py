@@ -8,7 +8,9 @@ Parity with the reference's correctness contract:
 - checksum upgrade: order-insensitive content fingerprints (sum of
   per-row xxhash64) — a strictly stronger check than counts that still
   aggregates distributively (one partial agg, no sort, scales to any
-  partition count).
+  partition count). The count and the fingerprint of one side come
+  from the same aggregate, so fingerprinting the target costs no scan
+  beyond its count.
 """
 
 from __future__ import annotations
@@ -18,7 +20,13 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["VerifyResult", "count_verify", "idempotency_gate", "content_fingerprint"]
+__all__ = [
+    "VerifyResult",
+    "count_verify",
+    "idempotency_gate",
+    "count_and_fingerprint",
+    "content_fingerprint",
+]
 
 
 @dataclass
@@ -62,13 +70,20 @@ def idempotency_gate(target_df: DataFrame, predicate: str | None = None) -> int:
     return tgt.count()
 
 
+def count_and_fingerprint(df: DataFrame) -> tuple[int, int]:
+    """Row count and order-insensitive content fingerprint in ONE
+    aggregate over ``df``: the fingerprint is xxhash64 per row (all
+    columns), summed distributively; an empty frame gives (0, 0)."""
+    row = df.agg(
+        F.count(F.lit(1)).alias("n"),
+        # decimal sum: no int64 overflow (ANSI)
+        F.sum(F.xxhash64(*df.columns).cast("decimal(38,0)")).alias("fp"),
+    ).first()
+    return int(row["n"]), (int(row["fp"]) if row["fp"] is not None else 0)
+
+
 def content_fingerprint(df: DataFrame) -> int:
-    """Order-insensitive content hash: xxhash64 per row (all columns),
-    summed distributively. Upgrade over the reference's count-only
-    check — detects value corruption, not just cardinality drift."""
-    row = (
-        df.select(F.xxhash64(*df.columns).cast("decimal(38,0)").alias("h"))
-        .agg(F.sum("h").alias("fp"))  # decimal sum: no int64 overflow (ANSI)
-        .first()
-    )
-    return int(row["fp"]) if row["fp"] is not None else 0
+    """Order-insensitive content hash (see :func:`count_and_fingerprint`).
+    Upgrade over the reference's count-only check — detects value
+    corruption, not just cardinality drift."""
+    return count_and_fingerprint(df)[1]

@@ -1,5 +1,6 @@
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -29,3 +30,24 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture()
+def spark_jobs(spark):
+    """``spark_jobs(fn)`` runs ``fn`` under a fresh job group and returns
+    ``(result, number of Spark jobs it launched)``."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"count-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            result = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        # job-start events reach the status store through the
+        # asynchronous listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+        return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

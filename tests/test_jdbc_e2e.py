@@ -17,6 +17,7 @@ from bend_archiver_spark.config import Config
 from bend_archiver_spark.job import JdbcArchiveJob
 
 N_ROWS = 200
+PINNED_JDBC_JOBS = 8
 
 
 @pytest.fixture()
@@ -486,3 +487,159 @@ class TestDecimal20JdbcE2E:
             )
         except Exception:
             pass  # Derby signals successful shutdown via SQLException
+
+
+def _source_count(spark, db_path):
+    from bend_archiver_spark.sources.jdbc import JdbcSource
+
+    return JdbcSource(spark, _cfg(db_path, "")).count()
+
+
+class TestDriverSideProbes:
+    """The bounds and count probes are single-row SQL over one
+    driver-side connection, as the reference runs them
+    (source/mysql.go:79-114): no Spark job, same values."""
+
+    def test_key_probes_launch_no_spark_job(self, spark, derby, spark_jobs):
+        from bend_archiver_spark.sources.jdbc import JdbcSource
+
+        src = JdbcSource(spark, _cfg(derby, ""))
+        assert spark_jobs(src.probe_bounds) == ((1, N_ROWS, N_ROWS), 0)
+        assert spark_jobs(src.count) == (N_ROWS, 0)
+        # empty range: the COALESCE 0/0/0 sentinel
+        empty = JdbcSource(
+            spark, _cfg(derby, "", source_where_condition="ID > 1000")
+        )
+        assert spark_jobs(empty.probe_bounds) == ((0, 0, 0), 0)
+        assert spark_jobs(empty.count) == (0, 0)
+
+    def test_decimal20_bounds_near_2_64(self, spark, derby, spark_jobs):
+        from bend_archiver_spark.sources.jdbc import JdbcSource
+
+        jvm = spark._sc._jvm  # noqa: SLF001
+        conn = jvm.java.sql.DriverManager.getConnection(
+            f"jdbc:derby:{derby};create=true"
+        )
+        st = conn.createStatement()
+        st.execute("CREATE TABLE UTAB (ID DECIMAL(20,0) NOT NULL, V INT)")
+        for k in (2**64 - 9, 2**64 - 2, 2**63 + 5):
+            st.execute(f"INSERT INTO UTAB VALUES ({k}, 1)")
+        conn.close()
+        src = JdbcSource(spark, _cfg(derby, "", source_table="UTAB"))
+        assert spark_jobs(src.probe_bounds) == ((2**63 + 5, 2**64 - 2, 3), 0)
+
+    def test_time_probe_launches_no_spark_job(self, spark, derby, spark_jobs):
+        from bend_archiver_spark.sources.jdbc import JdbcSource, _ceil_bound
+
+        src = JdbcSource(
+            spark, _cfg(derby, "", source_split_key="", source_split_time_key="TS")
+        )
+        (lo, hi), jobs = spark_jobs(src.probe_time_bounds)
+        assert jobs == 0
+        assert lo.startswith("2024-06-30 10:00:00.1235")
+        assert hi.startswith("2024-06-30 10:00:58.1235")
+        assert _ceil_bound(hi) == "2024-06-30 10:00:59"
+        # only NULL times in range: NULL bounds, hence no windows
+        nulls = JdbcSource(
+            spark,
+            _cfg(derby, "", source_split_key="", source_split_time_key="TS",
+                 source_where_condition="TS IS NULL"),
+        )
+        assert spark_jobs(nulls.probe_time_bounds) == ((None, None), 0)
+        assert nulls.plan_time_split().predicates == []
+
+    def test_connection_registers_driver_before_connecting(self):
+        """Like Spark's JDBC reader, the helper registers the driver
+        class with Spark's DriverRegistry before asking DriverManager
+        for a connection, and closes the connection on exit."""
+        from types import SimpleNamespace as ns
+
+        from bend_archiver_spark.sources.jdbc import driver_connection
+
+        calls = []
+        conn = ns(close=lambda: calls.append("close"))
+        registry = ns(register=lambda d: calls.append(("register", d)))
+        manager = ns(
+            getConnection=lambda *a: calls.append(("connect", *a)) or conn
+        )
+        spark_jdbc = ns(DriverRegistry=registry)
+        jvm = ns(
+            org=ns(apache=ns(spark=ns(sql=ns(execution=ns(
+                datasources=ns(jdbc=spark_jdbc)))))),
+            java=ns(sql=ns(DriverManager=manager)),
+        )
+        with driver_connection(
+            ns(_jvm=jvm), "jdbc:x:db", "x.Driver", "u", "p"
+        ) as got:
+            assert got is conn
+        assert calls == [
+            ("register", "x.Driver"),
+            ("connect", "jdbc:x:db", "u", "p"),
+            "close",
+        ]
+
+
+class TestFingerprintedDeleteE2E:
+    """Fingerprint verification in front of the destructive delete,
+    over a live source: a match deletes, a value-level mismatch (equal
+    counts) refuses and leaves the source intact."""
+
+    def test_matching_fingerprints_delete(self, spark, derby, tmp_path):
+        tgt = str(tmp_path / "tgt_fp_del")
+        cfg = _cfg(derby, tgt, verify_fingerprint=True, delete_after_sync=True)
+        report = JdbcArchiveJob(spark, cfg).run()
+        assert report.verify.source_fingerprint is not None
+        assert report.verify.source_fingerprint == report.verify.target_fingerprint
+        assert report.verify.is_correct
+        assert report.deleted_rows == N_ROWS
+        assert _source_count(spark, derby) == 0
+        shutil.rmtree(tgt, ignore_errors=True)
+
+    def test_corrupt_value_fails_and_keeps_source(
+        self, spark, derby, tmp_path, monkeypatch
+    ):
+        from pyspark.sql import functions as F
+
+        from bend_archiver_spark import job as job_mod
+
+        real_write = job_mod.write_batch
+
+        def write_one_altered(df, *a, **kw):
+            altered = df.withColumn(
+                "V", F.when(F.col("ID") == 42, F.col("V") + 1).otherwise(F.col("V"))
+            )
+            return real_write(altered, *a, **kw)
+
+        monkeypatch.setattr(job_mod, "write_batch", write_one_altered)
+        tgt = str(tmp_path / "tgt_fp_bad")
+        cfg = _cfg(derby, tgt, verify_fingerprint=True, delete_after_sync=True)
+        report = JdbcArchiveJob(spark, cfg).run()
+        assert report.source_rows == report.target_rows == N_ROWS
+        assert report.verify.source_fingerprint != report.verify.target_fingerprint
+        assert not report.verify.is_correct
+        assert report.deleted_rows == 0
+        assert _source_count(spark, derby) == N_ROWS
+        shutil.rmtree(tgt, ignore_errors=True)
+
+
+class TestArchiveJobSparkJobs:
+    def test_fingerprinted_run_against_existing_target(
+        self, spark, derby, tmp_path, spark_jobs
+    ):
+        """Pins the Spark jobs of a fingerprinted, deleting archive into
+        an existing target: gate schema inference + gate count, the
+        write, one target pass for count and fingerprint, the JDBC
+        fingerprint re-read. Probes, the source count and the delete
+        run on the driver's connection; the post-write target read
+        reuses the gate's schema."""
+        tgt = str(tmp_path / "tgt_jobs")
+        first = _cfg(derby, tgt, source_where_condition="ID <= 100")
+        assert JdbcArchiveJob(spark, first).run().verify.is_correct
+        cfg = _cfg(
+            derby, tgt, source_where_condition="ID > 100",
+            verify_fingerprint=True, delete_after_sync=True,
+        )
+        report, jobs = spark_jobs(JdbcArchiveJob(spark, cfg).run)
+        assert report.verify.is_correct and report.deleted_rows == 100
+        assert jobs == PINNED_JDBC_JOBS
+        shutil.rmtree(tgt, ignore_errors=True)

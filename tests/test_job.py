@@ -9,7 +9,13 @@ from bend_archiver_spark.config import Config
 from bend_archiver_spark.job import FileArchiveJob
 from bend_archiver_spark.sources.jdbc import JdbcSource
 from bend_archiver_spark.tables import load_table
-from bend_archiver_spark.verify import content_fingerprint, count_verify
+from bend_archiver_spark.verify import (
+    content_fingerprint,
+    count_and_fingerprint,
+    count_verify,
+)
+
+PINNED_FILE_JOBS = 12
 
 
 def _cfg(target, **kw):
@@ -148,6 +154,44 @@ class TestFileArchiveJob:
         li = load_table(spark, sf_dir, "lineitem")
         res = count_verify(li, li.filter("l_linenumber > 1"))
         assert not res.is_correct
+
+    def test_fingerprinted_run_spark_jobs(
+        self, spark, sf_dir, tmp_path, spark_jobs
+    ):
+        """Pins the Spark jobs of a fingerprinted archive into an
+        existing target: the target is read once for the gate and once
+        for a fused count + fingerprint (reusing the gate's schema), and
+        the source fingerprint hashes the filtered rows without
+        re-running the range-partition sampling and shuffle."""
+        tgt = str(tmp_path / "fp_jobs")
+        li = load_table(spark, sf_dir, "lineitem")
+        first = _cfg(tgt, source_where_condition="l_quantity <= 25")
+        assert FileArchiveJob(spark, first, li).run().verify.is_correct
+        cfg = _cfg(
+            tgt, source_where_condition="l_quantity > 25", verify_fingerprint=True
+        )
+        report, jobs = spark_jobs(FileArchiveJob(spark, cfg, li).run)
+        assert report.verify.is_correct
+        assert report.verify.source_fingerprint is not None
+        assert jobs == PINNED_FILE_JOBS
+        shutil.rmtree(tgt, ignore_errors=True)
+
+
+class TestCountAndFingerprint:
+    def test_equals_count_and_row_hash_sum(self, spark):
+        from pyspark.sql import functions as F
+
+        df = spark.createDataFrame(
+            [(1, "a", None), (2, None, 1.5), (None, None, None), (2, None, 1.5)],
+            "k int, s string, d double",
+        )
+        hashes = [r[0] for r in df.select(F.xxhash64(*df.columns)).collect()]
+        assert count_and_fingerprint(df) == (df.count(), sum(hashes))
+        assert content_fingerprint(df) == sum(hashes)
+
+    def test_empty_frame(self, spark):
+        df = spark.createDataFrame([], "k int, s string")
+        assert count_and_fingerprint(df) == (0, 0)
 
 
 class TestPartitionedSink:
