@@ -15,12 +15,34 @@ reference's temporal-as-string model to ``TimestampType`` natively):
    oracle's view of the same file — and belt-and-braces cast any NTZ
    column that still slips through (e.g. a caller-supplied session with
    the conf pinned).
+
+Parquet schema memo: inferring a schema is a Spark job that reads
+footers, and a session loads the same tables again and again. So
+:func:`load_parquet` keeps the schema Spark inferred for a path in a
+bounded LRU and hands it to ``spark.read.schema(...)`` on the next
+load. The key is the path, the sorted ``(relative name, size,
+mtime_ns)`` of every file under it, and the session confs that change
+what inference returns, so a rewritten, added or removed file, or a
+flipped ``binaryAsString`` / ``nanosAsLong``, is a miss and infers
+afresh. Files modified in the last two seconds are not memoised, since
+a same-size rewrite inside one filesystem timestamp tick keeps its
+mtime. Remote URIs (``s3a://``, ``hdfs://`` ...) and glob patterns pass
+through unmemoised, the rule ``queries.base.fanout`` applies: listing
+a remote store to build the key costs about what inference does. Only
+inference is skipped: Spark still lists the files on every read.
 """
 
 from __future__ import annotations
 
+import os
+import threading
+import time
+import urllib.parse
+from collections import OrderedDict
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = [
     "region",
@@ -34,6 +56,83 @@ TABLES = [
     "documents",
     "embeddings",
 ]
+
+_SCHEMA_MEMO_SIZE = 256
+_schema_memo: OrderedDict[tuple, StructType] = OrderedDict()
+_schema_memo_lock = threading.Lock()
+# session confs that change what parquet (and partition-directory)
+# schema inference returns
+_INFERENCE_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+    "spark.sql.timestampType",
+)
+_SETTLE_NS = 2_000_000_000
+
+
+def _file_signature(path: str) -> tuple | None:
+    """Sorted ``(relative name, size, mtime_ns)`` of every file under a
+    local *path*; ``None`` (do not memoise) for remote URIs, globs,
+    unreadable paths and files modified in the last ``_SETTLE_NS``."""
+    uri = urllib.parse.urlparse(path)
+    if uri.scheme not in ("", "file") or any(c in path for c in "*?[{"):
+        return None
+    local = urllib.parse.unquote(uri.path) if uri.scheme else path
+    try:
+        if not os.path.isdir(local):
+            st = os.stat(local)
+            files = [("", st.st_size, st.st_mtime_ns)]
+        else:
+            files = []
+            for root, _dirs, names in os.walk(local):
+                for name in names:
+                    full = os.path.join(root, name)
+                    st = os.stat(full)
+                    files.append(
+                        (os.path.relpath(full, local), st.st_size, st.st_mtime_ns)
+                    )
+    except OSError:
+        return None
+    settled = time.time_ns() - _SETTLE_NS
+    if any(mtime > settled for _name, _size, mtime in files):
+        return None
+    return tuple(sorted(files))
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, reusing the schema inferred for the
+    same files under the same inference confs (module docstring)."""
+    files = _file_signature(path)
+    if files is None:
+        return spark.read.parquet(path)
+    key = (path, files, tuple(spark.conf.get(c, None) for c in _INFERENCE_CONFS))
+    schema = _recall_schema(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    _remember_schema(key, df.schema)
+    return df
+
+
+def _recall_schema(key: tuple) -> StructType | None:
+    with _schema_memo_lock:
+        schema = _schema_memo.get(key)
+        if schema is not None:
+            _schema_memo.move_to_end(key)
+        return schema
+
+
+def _remember_schema(key: tuple, schema: StructType) -> None:
+    with _schema_memo_lock:
+        _schema_memo[key] = schema
+        _schema_memo.move_to_end(key)
+        while len(_schema_memo) > _SCHEMA_MEMO_SIZE:
+            _schema_memo.popitem(last=False)
+
 
 def _nano_ts_columns(path: str) -> list[str]:
     """Columns stored as parquet TIMESTAMP(NANOS), read from the footer."""
@@ -79,9 +178,9 @@ def load_parquet(spark: SparkSession, path: str) -> DataFrame:
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     nano_cols = _nano_ts_columns(path)
     if not nano_cols:
-        return _normalize_ntz(spark.read.parquet(path))
+        return _normalize_ntz(_read_parquet(spark, path))
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
+    df = _read_parquet(spark, path)
     dtypes = dict(df.dtypes)
     for c in nano_cols:
         # Arrow also reports Spark-written INT96 timestamps as ns, but

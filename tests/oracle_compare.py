@@ -51,6 +51,30 @@ def duck_con(sf_dir: str) -> "duckdb.DuckDBPyConnection":
     return con
 
 
+_CAUSED_BY = "Caused by: "
+ROOT_CAUSE_CHARS = 300
+
+
+def root_cause(exc: BaseException) -> str:
+    """One line naming why *exc* happened: the deepest Java ``Caused by``
+    as ``Class: message``, else the Java exception a Py4J error wraps,
+    else the first line of the message; at most ``ROOT_CAUSE_CHARS``.
+
+    ``str()`` of a ``Py4JJavaError`` is ``An error occurred while
+    calling oN.method.`` followed by the whole Java stack trace; the
+    sweep keeps only the first line of a FAIL line, which names the
+    call but not the failure."""
+    lines = [ln.strip() for ln in str(exc).splitlines() if ln.strip()]
+    causes = [ln[len(_CAUSED_BY):] for ln in lines if ln.startswith(_CAUSED_BY)]
+    if causes:
+        line = causes[-1]
+    elif len(lines) > 1 and lines[1].startswith(": "):
+        line = lines[1][2:]
+    else:
+        line = lines[0] if lines else type(exc).__name__
+    return line[:ROOT_CAUSE_CHARS]
+
+
 def _norm_cell(v):
     if v is None:
         return None
@@ -161,9 +185,9 @@ def run(
             # 100x run reported a bare spark error after the oracle
             # had also died)
             duck_part = (
-                f"  [duckdb ALSO failed: {duck_err}]" if duck_err else ""
+                f"  [duckdb ALSO failed: {root_cause(duck_err)}]" if duck_err else ""
             )
-            print(f"FAIL  {name}: spark error: {e}{duck_part}")
+            print(f"FAIL  {name}: spark error: {root_cause(e)}{duck_part}")
             ok = False
             continue
         finally:
@@ -176,7 +200,7 @@ def run(
         t_spark = _time.monotonic() - t0
         if duck_err is not None:
             print(
-                f"FAIL  {name}: duckdb error: {duck_err}  "
+                f"FAIL  {name}: duckdb error: {root_cause(duck_err)}  "
                 f"[spark side OK, {len(spark_pdf)} rows, {t_spark:.1f}s]"
             )
             continue
