@@ -51,3 +51,18 @@ def spark_jobs(spark):
         return result, len(sc.statusTracker().getJobIdsForGroup(group))
 
     return run
+
+
+@pytest.fixture()
+def codegen_compiles(spark):
+    """``codegen_compiles(fn)`` runs ``fn`` and returns ``(result, number
+    of Janino compilations it caused)``. In local mode the executors
+    share the driver's JVM, so the count covers task-side code too."""
+    timer = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()  # noqa: SLF001
+
+    def run(fn):
+        before = timer.getCount()
+        result = fn()
+        return result, timer.getCount() - before
+
+    return run

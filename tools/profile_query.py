@@ -4,6 +4,10 @@
 Runs named registry queries (or --headline for the bench set) in a
 fresh bench-identical session, times N noop-sink iterations each, and
 optionally writes ``.explain("formatted")`` to plans/<tag>/<name>_<suffix>.txt.
+Each query's JSON row holds its best time, the samples, and ``compiles``:
+the Janino compilations over its iterations, builds included. The first
+iteration compiles the query's generated classes; later ones should
+find them in the session's codegen cache.
 
 Usage:
   python tools/profile_query.py tpch_q1 pipeline_curate_v2 --iters 3
@@ -47,16 +51,23 @@ def main() -> None:
         "noop"
     ).mode("overwrite").save()
 
+    # in local mode the executors share the driver JVM, so this counts
+    # task-side compilations too
+    compile_timer = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
     out: dict[str, dict] = {}
     for name in names:
         spec = REGISTRY[name]
         samples = []
+        compiles = 0
         spark.sparkContext.setJobDescription(f"profile:{name}")
         for _ in range(args.iters):
+            c0 = compile_timer.getCount()
             df = spec.spark(spark, args.sf_dir)
             t0 = time.monotonic()
             df.write.format("noop").mode("overwrite").save()
             samples.append(round(time.monotonic() - t0, 4))
+            compiles += compile_timer.getCount() - c0
             spark.catalog.clearCache()
         if args.plans:
             d = os.path.join(REPO, "plans", args.plans)
@@ -68,7 +79,7 @@ def main() -> None:
             with open(os.path.join(d, f"{name}_{args.suffix}.txt"), "w") as f:
                 f.write(plan)
             spark.catalog.clearCache()
-        out[name] = {"best": min(samples), "samples": samples}
+        out[name] = {"best": min(samples), "samples": samples, "compiles": compiles}
         print(json.dumps({name: out[name]}), flush=True)
     print("TOTAL", json.dumps({n: v["best"] for n, v in out.items()}))
     spark.stop()
