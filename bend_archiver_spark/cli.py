@@ -33,7 +33,7 @@ from .cancel import (
     restore_signal_handlers,
 )
 from .config import Config, ConfigError, load_config
-from .job import FileArchiveJob
+from .job import FileArchiveJob, JdbcArchiveJob
 from .metrics import ThroughputRecorder
 from .session import get_spark
 from .tables import load_table
@@ -174,10 +174,12 @@ def _archive_main(argv: list[str] | None = None) -> int:
         prev_handlers = install_signal_handlers()
         spark = get_spark("bend_archiver_spark")
         jdbc_mode = not args.source_path and not args.sf_table
-        if args.sf_table:
-            source_df = load_table(spark, args.source_path, args.sf_table)
-        elif args.source_path:
-            if args.source_format == "parquet":
+        if jdbc_mode:
+            job = JdbcArchiveJob(spark, cfg)
+        else:
+            if args.sf_table:
+                source_df = load_table(spark, args.source_path, args.sf_table)
+            elif args.source_format == "parquet":
                 from .tables import load_parquet
 
                 source_df = load_parquet(spark, args.source_path)
@@ -185,25 +187,13 @@ def _archive_main(argv: list[str] | None = None) -> int:
                 source_df = (
                     spark.read.format(args.source_format).load(args.source_path)
                 )
-        else:
-            from .sources.jdbc import JdbcSource
-
-            source_df = JdbcSource(spark, cfg).read()
+            job = FileArchiveJob(spark, cfg, source_df)
 
         if args.dry_run:
-            n = (
-                source_df.filter(cfg.source_where_condition).count()
-                if cfg.source_where_condition
-                else source_df.count()
-            )
+            # JDBC: one COUNT(*) over the driver's connection, no Spark job
+            n = job.source.count() if jdbc_mode else job.filtered().count()
             print(json.dumps({"dry_run": True, "matching_rows": n}))
         else:
-            if jdbc_mode:
-                from .job import JdbcArchiveJob
-
-                job = JdbcArchiveJob(spark, cfg)
-            else:
-                job = FileArchiveJob(spark, cfg, source_df)
             try:
                 report = job.run(
                     check_idempotency=not args.no_idempotency_check

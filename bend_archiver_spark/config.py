@@ -93,10 +93,13 @@ class Config:
     # fingerprints source-vs-target (verify.content_fingerprint) —
     # catches value corruption counts can't. The target's fingerprint
     # comes from the scan that counts it; the source side pays one
-    # extra scan (a JDBC re-read for JdbcArchiveJob), so opt-in
+    # extra scan for every source (a re-read over JDBC, an unshuffled
+    # scan of the filtered files), so opt-in
     verify_fingerprint: bool = False
     # degrade output to the reference's wire shape (bool->tinyint,
-    # temporal->string, decimal->double); see sources/typemap.py
+    # temporal->string, decimal->double) for file and JDBC sources
+    # alike; the source fingerprint hashes the degraded rows, as the
+    # target stores them. See sources/typemap.py
     reference_compat: bool = False
     # execute the generated COPY INTO against a live warehouse over
     # JDBC after the stage write (reference

@@ -3,21 +3,22 @@
 The reference's whole control flow (cmd/main.go:22-121 +
 worker/worker.go) is: discover tables -> idempotency gate -> bounds
 probe -> split plan -> fan out scan->ingest -> verify -> optional
-delete. In Spark that collapses to: one bounds-probe aggregate, one
-partitioned read (the split plan *is* the partitioning), one
-distributed write, then the verification counts. The goroutine pool,
-condition channel, retry loop and pagination all disappear into the
-scheduler.
+delete. In Spark that collapses to: one bounds probe, one partitioned
+read (the split plan *is* the partitioning), one distributed write,
+then the verification counts. The goroutine pool, condition channel,
+retry loop and pagination all disappear into the scheduler.
+
+``ArchiveJob.run`` is that one flow for every source, as Worker.Run is
+behind the reference's Sourcer interface (source/source.go:18-29).
+Subclasses supply only the source hooks ``_plan``, ``_read``,
+``_count`` and ``_delete``: ``FileArchiveJob`` over file sources
+(parquet/csv/json), ``JdbcArchiveJob`` over live RDBMS sources, whose
+probes run as plain SQL on a driver-side connection (sources/jdbc.py).
 
 The target is read twice per run: once by the gate before the write,
 and once after it, where a single aggregate yields both the target
 count and (with ``verify_fingerprint``) its fingerprint. The second
 read reuses the schema the gate read instead of inferring it again.
-
-``FileArchiveJob`` runs the flow against file-based sources (parquet/
-csv/json); ``JdbcArchiveJob`` (sources/jdbc.py) does the same against
-live RDBMS sources, with its bounds and count probes run as plain SQL
-on a driver-side connection rather than as Spark jobs.
 """
 
 from __future__ import annotations
@@ -32,11 +33,17 @@ from pyspark.sql.types import StructType
 
 from .cancel import raise_if_cancelled
 from .config import Config
-from .planner import adjust_batch_size, coerce_key, split_time_windows
+from .planner import (
+    MAX_PARTITIONS,
+    coerce_key,
+    plan_jdbc_partitions,
+    split_time_windows,
+)
 from .sink import write_batch
 from .verify import VerifyResult, count_and_fingerprint, idempotency_gate
 
 __all__ = [
+    "ArchiveJob",
     "ArchiveReport",
     "FileArchiveJob",
     "JdbcArchiveJob",
@@ -165,99 +172,46 @@ class ArchiveReport:
         return self.source_rows / self.elapsed_sec if self.elapsed_sec else 0.0
 
 
-class FileArchiveJob:
-    """Archive one table from a file source into a file/Delta target.
+class ArchiveJob:
+    """Archive one table into a file/Delta target (Worker.Run,
+    worker/worker.go:244-259)."""
 
-    Mirrors Worker.Run (worker/worker.go:244-259): bounds probe ->
-    split-mode decision -> partitioned extract -> ingest -> verify.
-    """
+    deletes_source = False  # whether the subclass implements ``_delete``
 
-    def __init__(self, spark: SparkSession, cfg: Config, source_df: DataFrame):
+    def __init__(self, spark: SparkSession, cfg: Config):
         self.spark = spark
         self.cfg = cfg
-        self.source = source_df
-
-    def _probe_bounds(self, df: DataFrame) -> tuple[int, int, int]:
-        """One aggregate replaces the reference's three probe queries
-        (GetMinMaxSplitKey + GetSourceReadRowsCount)."""
-        key = self.cfg.source_split_key
-        row = df.agg(
-            F.coalesce(F.min(key), F.lit(0)).alias("mn"),
-            F.coalesce(F.max(key), F.lit(0)).alias("mx"),
-            F.count(F.lit(1)).alias("cnt"),
-        ).first()
-        return coerce_key(row["mn"]), coerce_key(row["mx"]), int(row["cnt"])
-
-    def _plan_partitions(self, filtered: DataFrame) -> tuple[int, int, str, int]:
-        """Split-mode dispatch (Worker.Run branches on SourceSplitTimeKey,
-        worker/worker.go:248-252): returns (num_partitions, batch_size,
-        partition_column, row_count)."""
-        cfg = self.cfg
-        if cfg.source_split_time_key:
-            key = cfg.source_split_time_key
-            row = filtered.agg(
-                F.min(key).alias("mn"),
-                F.max(key).alias("mx"),
-                F.count(F.lit(1)).alias("cnt"),
-            ).first()
-            cnt = int(row["cnt"])
-            if cnt == 0:
-                return 0, cfg.batch_size, key, 0
-            windows = split_time_windows(
-                key, cfg.time_split_unit, row["mn"], row["mx"]
-            )
-            return max(1, min(len(windows), 10_000)), cfg.batch_size, key, cnt
-        mn, mx, cnt = self._probe_bounds(filtered)
-        if cnt == 0:
-            return 0, cfg.batch_size, cfg.source_split_key, 0
-        batch = adjust_batch_size(cfg.batch_size, mn, mx, cnt)
-        n_parts = max(1, min((mx - mn) // batch + 1, 10_000))
-        return int(n_parts), batch, cfg.source_split_key, cnt
 
     def run(
         self, check_idempotency: bool = True, copy_executor=None
     ) -> ArchiveReport:
         cfg = self.cfg
         t0 = time.monotonic()
-        filtered = (
-            self.source.filter(cfg.source_where_condition)
-            if cfg.source_where_condition
-            else self.source
-        )
+        if cfg.delete_after_sync and not self.deletes_source:
+            raise RuntimeError(
+                f"deleteAfterSync is not supported by {type(self).__name__}:"
+                " it cannot delete from its source"
+            )
 
         # pre-flight gate (A32)
         schema = (
             check_idempotency_gate(self.spark, cfg) if check_idempotency else None
         )
 
-        n_parts, batch, part_col, cnt = self._plan_partitions(filtered)
-        if cnt == 0:
+        plan = self._plan()
+        if not plan.num_partitions:
             # empty-table short-circuit (worker/worker.go:92-95)
             return ArchiveReport(
-                cfg.source_table, 0, 0, 0, cfg.batch_size,
+                cfg.source_table, 0, 0, 0, plan.batch_size,
                 time.monotonic() - t0, VerifyResult(0, 0),
             )
-
-        # The split plan as partitioning: range-partition on the split
-        # key (or time key) — same disjoint ranges as the predicate
-        # planner, but computed by Spark's range partitioner in one
-        # shuffle instead of N re-scans. Sorting within each partition
-        # costs nothing extra at write time (data is already range-
-        # clustered) and gives every parquet row group a tight min/max
-        # on the key, so later key-range scans prune at row-group
-        # granularity, not just file granularity.
         raise_if_cancelled("write")
-        extracted = filtered.repartitionByRange(
-            n_parts, F.col(part_col)
-        ).sortWithinPartitions(part_col)
-        # the rows as the target stores them, without the shuffle: what
-        # the (order-insensitive) source fingerprint hashes
-        written = filtered
+        extracted, written = self._read(plan)
         if cfg.reference_compat:
             from .sources.typemap import apply_reference_compat
 
             extracted = apply_reference_compat(extracted)
-            written = apply_reference_compat(filtered)
+            written = apply_reference_compat(written)
         write_batch(
             extracted,
             cfg.target_path,
@@ -271,94 +225,16 @@ class FileArchiveJob:
             else None
         )
 
+        # source side of the verification contract (worker/worker.go:230-242)
+        source_rows = self._count(plan)
         tgt_rows, tgt_fp = verify_target(
             self.spark, cfg, written.columns, schema
         )
-        # source side of the verification contract (worker/worker.go:230-242):
-        # the bounds probe already counted the filtered source — file
-        # sources are immutable within the job, so reuse it instead of
-        # a second full scan
-        verify = VerifyResult(cnt, tgt_rows)
+        verify = VerifyResult(source_rows, tgt_rows)
         if cfg.verify_fingerprint:
             from .verify import content_fingerprint
 
             verify.source_fingerprint = content_fingerprint(written)
-            verify.target_fingerprint = tgt_fp
-        elapsed = time.monotonic() - t0
-        return ArchiveReport(
-            table=cfg.source_table,
-            source_rows=verify.source_rows,
-            target_rows=verify.target_rows,
-            num_partitions=int(n_parts),
-            batch_size=batch,
-            elapsed_sec=elapsed,
-            verify=verify,
-            details={} if copied is None else {"copy_into_rows": copied},
-        )
-
-
-class JdbcArchiveJob:
-    """Archive one RDBMS table into a file/Delta target — the complete
-    reference flow (cmd/main.go:74-121) over a live JDBC source:
-    idempotency gate -> bounds probe -> partitioned read (one predicate
-    per task) -> distributed write -> count verification -> optional
-    verification-gated delete-after-sync.
-
-    Requires the dialect's JDBC driver jar on the Spark classpath. The
-    SQL generation is unit-tested per dialect (tests/test_archiver_core.py,
-    tests/test_job.py); the whole flow runs end to end against embedded
-    Derby (tests/test_jdbc_e2e.py)."""
-
-    def __init__(self, spark: SparkSession, cfg: Config):
-        from .sources.jdbc import JdbcSource
-
-        self.spark = spark
-        self.cfg = cfg
-        self.source = JdbcSource(spark, cfg)
-
-    def run(
-        self, check_idempotency: bool = True, copy_executor=None
-    ) -> ArchiveReport:
-        cfg = self.cfg
-        t0 = time.monotonic()
-        schema = (
-            check_idempotency_gate(self.spark, cfg) if check_idempotency else None
-        )
-
-        plan = (
-            self.source.plan_time_split()
-            if cfg.source_split_time_key
-            else self.source.plan_key_split()
-        )
-        if not plan.predicates:
-            return ArchiveReport(
-                cfg.source_table, 0, 0, 0, cfg.batch_size,
-                time.monotonic() - t0, VerifyResult(0, 0),
-            )
-        raise_if_cancelled("write")
-        df = self.source.read(plan)
-        write_batch(
-            df,
-            cfg.target_path,
-            cfg.target_format,
-            mode="append",
-            partition_by=cfg.target_partition_by or None,
-        )
-        copied = (
-            run_copy_into(self.spark, cfg, copy_executor)
-            if cfg.execute_copy_into
-            else None
-        )
-
-        source_rows = self.source.count()
-        tgt_rows, tgt_fp = verify_target(self.spark, cfg, df.columns, schema)
-        verify = VerifyResult(source_rows, tgt_rows)
-        if cfg.verify_fingerprint:
-            # checksum upgrade: the source side re-reads over JDBC —
-            # the one extra scan it costs, so opt-in
-            from .verify import content_fingerprint
-
-            verify.source_fingerprint = content_fingerprint(df)
             verify.target_fingerprint = tgt_fp
 
         deleted = 0
@@ -368,25 +244,128 @@ class JdbcArchiveJob:
             # the handler's exception could not preempt) must stop the
             # job BEFORE the source-mutating phase (cmd/main.go:29-35)
             raise_if_cancelled("delete-after-sync")
-            from .postsync import delete_after_sync, jdbc_executor
-
-            execute = jdbc_executor(
-                self.spark,
-                plan.url,
-                cfg.source_user,
-                cfg.source_pass,
-                self.source.dialect.driver,
-            )
-            deleted = delete_after_sync(cfg, verify, execute)
+            deleted = self._delete(plan, verify)
 
         return ArchiveReport(
             table=cfg.source_table,
             source_rows=verify.source_rows,
             target_rows=verify.target_rows,
-            num_partitions=len(plan.predicates),
-            batch_size=cfg.batch_size,
+            num_partitions=plan.num_partitions,
+            batch_size=plan.batch_size,
             elapsed_sec=time.monotonic() - t0,
             verify=verify,
             deleted_rows=deleted,
             details={} if copied is None else {"copy_into_rows": copied},
         )
+
+
+@dataclass
+class _FilePlan:
+    key: str  # the range-partitioning column
+    row_count: int
+    num_partitions: int
+    batch_size: int
+
+
+class FileArchiveJob(ArchiveJob):
+    """Archive one table from a file source. File sources are immutable
+    within the job: the plan's count is the source side of the
+    verification, and there is no source to delete from."""
+
+    def __init__(self, spark: SparkSession, cfg: Config, source_df: DataFrame):
+        super().__init__(spark, cfg)
+        self.source = source_df
+
+    def filtered(self) -> DataFrame:
+        """The source rows the predicate selects."""
+        cond = self.cfg.source_where_condition
+        return self.source.filter(cond) if cond else self.source
+
+    def _plan(self) -> _FilePlan:
+        """One aggregate replaces the reference's three probe queries
+        (GetMinMaxSplitKey + GetSourceReadRowsCount); the split mode
+        (worker/worker.go:248-252) then sizes the plan: one partition
+        per time window, or the planner's key-range plan."""
+        cfg = self.cfg
+        key = cfg.source_split_time_key or cfg.source_split_key
+        row = self.filtered().agg(
+            F.min(key).alias("mn"),
+            F.max(key).alias("mx"),
+            F.count(F.lit(1)).alias("cnt"),
+        ).first()
+        cnt = int(row["cnt"])
+        if cnt == 0:
+            return _FilePlan(key, 0, 0, cfg.batch_size)
+        if cfg.source_split_time_key:
+            windows = split_time_windows(
+                key, cfg.time_split_unit, row["mn"], row["mx"]
+            )
+            n_parts = min(len(windows), MAX_PARTITIONS)
+            return _FilePlan(key, cnt, n_parts, cfg.batch_size)
+        # an all-NULL key column probes as the reference's 0 sentinel
+        mn, mx = (coerce_key(v or 0) for v in (row["mn"], row["mx"]))
+        plan = plan_jdbc_partitions(key, mn, mx, cnt, cfg.batch_size)
+        return _FilePlan(key, cnt, plan.num_partitions, plan.batch_size)
+
+    def _read(self, plan: _FilePlan) -> tuple[DataFrame, DataFrame]:
+        """The split plan as partitioning: range-partition on the split
+        key (or time key) — same disjoint ranges as the predicate
+        planner, but computed by Spark's range partitioner in one
+        shuffle instead of N re-scans. Sorting within each partition
+        costs nothing extra at write time (data is already range-
+        clustered) and gives every parquet row group a tight min/max
+        on the key, so later key-range scans prune at row-group
+        granularity, not just file granularity. The second frame is the
+        rows as the target stores them, without the shuffle: what the
+        (order-insensitive) source fingerprint hashes."""
+        filtered = self.filtered()
+        extracted = filtered.repartitionByRange(
+            plan.num_partitions, F.col(plan.key)
+        ).sortWithinPartitions(plan.key)
+        return extracted, filtered
+
+    def _count(self, plan: _FilePlan) -> int:
+        return plan.row_count
+
+
+class JdbcArchiveJob(ArchiveJob):
+    """Archive one RDBMS table over a live JDBC source: one predicate
+    per read task, a SQL ``COUNT`` after the write, and the
+    verification-gated delete-after-sync (cmd/main.go:74-121).
+
+    Requires the dialect's JDBC driver jar on the Spark classpath. The
+    whole flow runs end to end against embedded Derby
+    (tests/test_jdbc_e2e.py)."""
+
+    deletes_source = True
+
+    def __init__(self, spark: SparkSession, cfg: Config):
+        from .sources.jdbc import JdbcSource
+
+        super().__init__(spark, cfg)
+        self.source = JdbcSource(spark, cfg)
+
+    def _plan(self):
+        return self.source.plan()
+
+    def _read(self, plan) -> tuple[DataFrame, DataFrame]:
+        # the fingerprint's source side re-reads over JDBC: the extra
+        # scan that makes verify_fingerprint opt-in
+        df = self.source.read(plan)
+        return df, df
+
+    def _count(self, plan) -> int:
+        return self.source.count()
+
+    def _delete(self, plan, verify: VerifyResult) -> int:
+        from .postsync import delete_after_sync, jdbc_executor
+
+        cfg = self.cfg
+        execute = jdbc_executor(
+            self.spark,
+            plan.url,
+            cfg.source_user,
+            cfg.source_pass,
+            self.source.dialect.driver,
+        )
+        return delete_after_sync(cfg, verify, execute)

@@ -53,9 +53,13 @@ __all__ = [
     "needs_fanout",
     "plan_jdbc_partitions",
     "JdbcPartitionPlan",
+    "MAX_PARTITIONS",
 ]
 
 _TIME_FMT = "%Y-%m-%d %H:%M:%S"
+
+# the most partitions (tasks) one archive plan may fan out to
+MAX_PARTITIONS = 10_000
 
 
 def slim_condition(
@@ -312,10 +316,13 @@ def plan_jdbc_partitions(
     row_count: int,
     batch_size: int = 1000,
     where_condition: str = "",
-    max_partitions: int = 10_000,
+    max_partitions: int = MAX_PARTITIONS,
 ) -> JdbcPartitionPlan:
     """Spark-native partition plan: density-adjusted batch size ->
-    disjoint range predicates -> capped partition count.
+    disjoint range predicates -> capped partition count. The one
+    split-sizing policy: a JDBC source reads one predicate per task, a
+    file source range-partitions into as many partitions, and both
+    report this batch.
 
     The cap matters at 100 TB: a 10^12-key range with batch 1000 would
     emit 10^9 predicates and kill the driver; instead we widen the batch

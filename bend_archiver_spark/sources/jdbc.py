@@ -92,7 +92,12 @@ class JdbcReadPlan:
     url: str
     table: str
     predicates: list[str]
+    batch_size: int
     options: dict[str, str] = field(default_factory=dict)
+
+    @property
+    def num_partitions(self) -> int:
+        return len(self.predicates)
 
 
 class JdbcSource:
@@ -210,6 +215,24 @@ class JdbcSource:
         return int(cnt)
 
     # --- partitioned reads (A1-A9, A20-A24) --------------------------
+    def plan(self) -> JdbcReadPlan:
+        """Split-mode dispatch (Worker.Run branches on
+        SourceSplitTimeKey, worker/worker.go:248-252)."""
+        if self.cfg.source_split_time_key:
+            return self.plan_time_split()
+        return self.plan_key_split()
+
+    def _read_plan(self, predicates: list[str], batch_size: int) -> JdbcReadPlan:
+        return JdbcReadPlan(
+            url=self._url(),
+            table=self.dialect.table_ref(
+                self.cfg.source_db, self.cfg.source_table
+            ),
+            predicates=predicates,
+            batch_size=batch_size,
+            options=self._base_options(),
+        )
+
     def plan_key_split(self) -> JdbcReadPlan:
         mn, mx, cnt = self.probe_bounds()
         plan = plan_jdbc_partitions(
@@ -220,14 +243,7 @@ class JdbcSource:
             batch_size=self.cfg.batch_size,
             where_condition=self.cfg.source_where_condition,
         )
-        return JdbcReadPlan(
-            url=self._url(),
-            table=self.dialect.table_ref(
-                self.cfg.source_db, self.cfg.source_table
-            ),
-            predicates=plan.predicates,
-            options=self._base_options(),
-        )
+        return self._read_plan(plan.predicates, plan.batch_size)
 
     def plan_time_split(self) -> JdbcReadPlan:
         lo, hi = self.probe_time_bounds()
@@ -243,34 +259,17 @@ class JdbcSource:
             predicates = (
                 [f"{w} and ({where})" for w in windows] if where else windows
             )
-        return JdbcReadPlan(
-            url=self._url(),
-            table=self.dialect.table_ref(
-                self.cfg.source_db, self.cfg.source_table
-            ),
-            predicates=predicates,
-            options=self._base_options(),
-        )
+        return self._read_plan(predicates, self.cfg.batch_size)
 
-    def read(self, plan: JdbcReadPlan | None = None) -> DataFrame:
+    def read(self, plan: JdbcReadPlan) -> DataFrame:
         """Partitioned read: one Spark partition per predicate. Filters
         and column pruning push down into the generated per-partition
-        SQL (Catalyst JDBC pushdown)."""
-        if plan is None:
-            plan = (
-                self.plan_time_split()
-                if self.cfg.source_split_time_key
-                else self.plan_key_split()
-            )
-        if not plan.predicates:
-            # empty-table sentinel (worker/worker.go:92-95): empty frame
-            # with the source schema via an always-false predicate
-            plan = JdbcReadPlan(
-                plan.url, plan.table, ["1 = 0"], plan.options
-            )
+        SQL (Catalyst JDBC pushdown). An empty plan (the empty-table
+        sentinel, worker/worker.go:92-95) reads an empty frame with the
+        source schema through an always-false predicate."""
         return self.spark.read.jdbc(
             url=plan.url,
             table=plan.table,
-            predicates=plan.predicates,
+            predicates=plan.predicates or ["1 = 0"],
             properties=plan.options,
         )

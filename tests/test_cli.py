@@ -87,6 +87,17 @@ class TestCliContract:
         assert rc2 == 1
         assert "idempotency gate" in err
 
+    def test_delete_after_sync_on_file_source_fails(
+        self, cli_spark, sf_dir, tmp_path, capsys
+    ):
+        conf = _write_conf(tmp_path, tmp_path / "out", deleteAfterSync=True)
+        rc = cli.main(
+            ["--conf", conf, "--source-path", f"{sf_dir}/lineitem.parquet"]
+        )
+        assert rc == 1
+        assert "deleteAfterSync" in capsys.readouterr().err
+        assert not (tmp_path / "out").exists()
+
     def test_missing_conf_is_usage_error(self, cli_spark, capsys):
         assert cli.main([]) == 2
         assert "--conf is required" in capsys.readouterr().err

@@ -643,3 +643,157 @@ class TestArchiveJobSparkJobs:
         assert report.verify.is_correct and report.deleted_rows == 100
         assert jobs == PINNED_JDBC_JOBS
         shutil.rmtree(tgt, ignore_errors=True)
+
+
+class TestReferenceCompatJdbc:
+    def test_compat_degrades_jdbc_archive(self, spark, derby, tmp_path):
+        """reference_compat applies to JDBC sources too: the written
+        rows and the fingerprinted rows are both the degraded ones."""
+        tgt = str(tmp_path / "tgt_compat")
+        cfg = _cfg(derby, tgt, reference_compat=True, verify_fingerprint=True)
+        report = JdbcArchiveJob(spark, cfg).run()
+        assert report.verify.is_correct
+        assert report.verify.source_fingerprint is not None
+        back = spark.read.parquet(tgt)
+        assert dict(back.dtypes)["TS"] == "string"
+        assert len(back.filter("ID = 42").first().TS) == 19
+        # odd ids stay NULL through the degradation
+        assert back.filter("ID % 2 = 1 AND TS IS NOT NULL").count() == 0
+        assert back.filter("ID % 2 = 1").count() == N_ROWS // 2
+        shutil.rmtree(tgt, ignore_errors=True)
+
+
+class TestFileJdbcParity:
+    def test_same_rows_same_report(self, spark, derby, tmp_path):
+        """The same Derby rows archived through JdbcArchiveJob and
+        through FileArchiveJob over a Spark JDBC frame get one split
+        plan (the planner's partition count and batch) and the same
+        counts and fingerprints."""
+        from bend_archiver_spark.job import FileArchiveJob
+        from bend_archiver_spark.sources.dialects import get_dialect
+
+        dialect = get_dialect("derby")
+        url = dialect.jdbc_url("", 0, derby)
+        jdbc = JdbcArchiveJob(
+            spark,
+            _cfg(derby, str(tmp_path / "via_jdbc"), verify_fingerprint=True),
+        ).run()
+        df = spark.read.jdbc(url, "TESTTAB", properties={"driver": dialect.driver})
+        files = FileArchiveJob(
+            spark,
+            _cfg(derby, str(tmp_path / "via_file"), verify_fingerprint=True),
+            df,
+        ).run()
+        assert jdbc.verify.is_correct and files.verify.is_correct
+        for attr in ("source_rows", "target_rows", "num_partitions", "batch_size"):
+            assert getattr(jdbc, attr) == getattr(files, attr), attr
+        assert jdbc.source_rows == N_ROWS
+        assert jdbc.verify.source_fingerprint == files.verify.source_fingerprint
+        assert jdbc.verify.target_fingerprint == files.verify.target_fingerprint
+
+
+def _count_calls(monkeypatch, owner, attr):
+    """Wrap ``owner.attr`` so each call is counted; returns the list
+    the calls append to."""
+    calls = []
+    original = getattr(owner, attr)
+
+    def counted(*a, **kw):
+        calls.append(attr)
+        return original(*a, **kw)
+
+    monkeypatch.setattr(owner, attr, counted)
+    return calls
+
+
+class TestTracedEntryPoints:
+    def test_archive_reaches_every_patched_entry_point(
+        self, spark, derby, tmp_path, monkeypatch
+    ):
+        """The benchmark's tracer (perfbench/tracer.py) patches these
+        names on their owners and expects the job to look them up at
+        call time. A fingerprinted, deleting JDBC archive reaches each
+        one, this many times."""
+        from bend_archiver_spark import job, postsync, verify
+        from bend_archiver_spark.sources import jdbc
+
+        expected = {
+            (job, "check_idempotency_gate"): 1,
+            (job, "write_batch"): 1,
+            # the gate's read and the post-write count + fingerprint read
+            (job, "read_target"): 2,
+            (verify, "content_fingerprint"): 1,
+            (jdbc.JdbcSource, "probe_bounds"): 1,
+            (jdbc.JdbcSource, "count"): 1,
+            (jdbc.JdbcSource, "read"): 1,
+            (jdbc, "plan_jdbc_partitions"): 1,
+            (postsync, "delete_after_sync"): 1,
+        }
+        calls = {
+            key: _count_calls(monkeypatch, *key) for key in expected
+        }
+        tgt = str(tmp_path / "tgt_traced")
+        cfg = _cfg(derby, tgt, verify_fingerprint=True, delete_after_sync=True)
+        report = JdbcArchiveJob(spark, cfg).run()
+        assert report.verify.is_correct and report.deleted_rows == N_ROWS
+        assert {k: len(v) for k, v in calls.items()} == expected
+        shutil.rmtree(tgt, ignore_errors=True)
+
+
+class TestCliJdbcMode:
+    """The CLI's JDBC mode builds one JdbcArchiveJob: the archive probes
+    the bounds once, and a dry run is one COUNT(*) on the driver's
+    connection."""
+
+    @pytest.fixture()
+    def conf(self, spark, derby, tmp_path, monkeypatch):
+        import json
+
+        from bend_archiver_spark import cancel, cli
+
+        monkeypatch.setattr(cli, "get_spark", lambda *a, **k: spark)
+        monkeypatch.setattr(spark, "stop", lambda: None)
+        cancel.reset()
+        path = tmp_path / "conf.json"
+        path.write_text(json.dumps({
+            "databaseType": "derby",
+            "sourceDB": derby,
+            "sourceTable": "TESTTAB",
+            "sourceSplitKey": "ID",
+            "sourceWhereCondition": "ID > 0",
+            "batchSize": 50,
+            "targetPath": str(tmp_path / "cli_tgt"),
+            "targetFormat": "parquet",
+        }))
+        yield str(path)
+        cancel.reset()
+
+    @staticmethod
+    def _payload(out):
+        import json
+
+        return next(json.loads(l) for l in out.splitlines() if l.startswith("{"))
+
+    def test_archive_probes_bounds_once(self, conf, capsys, monkeypatch):
+        from bend_archiver_spark import cli
+        from bend_archiver_spark.sources.jdbc import JdbcSource
+
+        probes = _count_calls(monkeypatch, JdbcSource, "probe_bounds")
+        assert cli.main(["--conf", conf]) == 0
+        report = self._payload(capsys.readouterr().out)
+        assert report["verified"] is True
+        assert report["source_rows"] == report["target_rows"] == N_ROWS
+        assert len(probes) == 1
+
+    def test_dry_run_counts_without_spark_job(
+        self, conf, capsys, spark_jobs, tmp_path
+    ):
+        from bend_archiver_spark import cli
+
+        rc, jobs = spark_jobs(lambda: cli.main(["--conf", conf, "--dry-run"]))
+        assert rc == 0
+        assert jobs == 0
+        assert self._payload(capsys.readouterr().out) == {
+            "dry_run": True, "matching_rows": N_ROWS,
+        }
+        assert not (tmp_path / "cli_tgt").exists()

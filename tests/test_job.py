@@ -150,6 +150,19 @@ class TestFileArchiveJob:
         assert report.source_rows == 0
         assert report.num_partitions == 0
 
+    def test_delete_after_sync_refused_before_any_write(
+        self, spark, sf_dir, tmp_path
+    ):
+        """A file source cannot be deleted from: the job refuses the
+        option up front instead of reporting a verified archive that
+        deleted nothing."""
+        tgt = tmp_path / "t_del"
+        li = load_table(spark, sf_dir, "lineitem")
+        job = FileArchiveJob(spark, _cfg(str(tgt), delete_after_sync=True), li)
+        with pytest.raises(RuntimeError, match="deleteAfterSync"):
+            job.run()
+        assert not tgt.exists()
+
     def test_count_verify_detects_loss(self, spark, sf_dir):
         li = load_table(spark, sf_dir, "lineitem")
         res = count_verify(li, li.filter("l_linenumber > 1"))
