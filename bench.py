@@ -1,7 +1,12 @@
 #!/usr/bin/env python
-"""Headline benchmark: runs the suite's headline queries plus the
-archive-sync pipeline at $SPARK_GRAFT_SF_DIR (default sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints one JSON line.
+"""Headline benchmark and the one timer for registry queries and the
+archive-sync job. Runs at $SPARK_GRAFT_SF_DIR (default sf0.1) on
+local[$SPARK_GRAFT_CPUS].
+
+    python bench.py                # headline suite + archive_sync: one JSON line
+    python bench.py NAME ...       # registry names or archive_sync: one
+                                   # {name: {best, samples, compiles}} row
+                                   # each, then a TOTAL line
 
 Baseline protocol (BASELINE.md): archive_sync mirrors the reference's
 production-sample shape — partitioned extract of lineitem with
@@ -13,6 +18,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import sys
 import tempfile
@@ -21,7 +27,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from bend_archiver_spark.config import Config
-from bend_archiver_spark.job import FileArchiveJob
+from bend_archiver_spark.job import ArchiveReport, FileArchiveJob
 from bend_archiver_spark.queries import REGISTRY
 from bend_archiver_spark.session import get_spark
 from bend_archiver_spark.tables import load_table
@@ -246,87 +252,117 @@ def find_regressions(
     return out
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
-    machine_start = _machine_state()
-    spark = get_spark("bench")
+def scale_of(sf_dir: str) -> float | None:
+    """The scale factor an ``.../sf<N>`` corpus directory names; None
+    for any other directory (e.g. a rehearsal corpus ``.../x3``),
+    which no anchor set gates."""
+    m = re.fullmatch(r"(?:.*/)?sf(\d+(?:\.\d+)?)/?", sf_dir)
+    return float(m.group(1)) if m else None
 
+
+# archive-sync pipeline (reference production shape: ~40k rows per
+# partition over the split key, extract -> write -> verify)
+ARCHIVE_SYNC = dict(
+    source_table="lineitem",
+    source_split_key="l_orderkey",
+    source_where_condition="l_quantity > 0",
+    batch_size=40000,
+    max_thread=5,
+    target_format="parquet",
+)
+
+
+def _compilations(spark) -> int:
+    """Janino compilations so far. In local mode the executors share
+    the driver JVM, so this counts task-side compilations too."""
+    metrics = spark._jvm.org.apache.spark.metrics.source  # noqa: SLF001
+    return metrics.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def run_archive_sync(spark, sf_dir: str) -> tuple[float, ArchiveReport]:
+    """One archive_sync run into a fresh target (the job appends, so a
+    reused target would double its rows); returns (wall, report) and
+    fails unless the archive verifies."""
+    target = tempfile.mkdtemp(prefix="bench_archive_")
+    shutil.rmtree(target, ignore_errors=True)
+    try:
+        li = load_table(spark, sf_dir, "lineitem")
+        cfg = Config(**ARCHIVE_SYNC, target_path=target)
+        job = FileArchiveJob(spark, cfg, li)
+        t0 = time.monotonic()
+        report = job.run(check_idempotency=False)
+        wall = time.monotonic() - t0
+    finally:
+        shutil.rmtree(target, ignore_errors=True)
+    if not report.verify.is_correct:
+        raise RuntimeError(f"archive_sync verify mismatch: {report.verify}")
+    return wall, report
+
+
+def time_archive_sync(spark, sf_dir: str) -> dict:
+    """One iteration: the job writes real data."""
+    c0 = _compilations(spark)
+    wall, _ = run_archive_sync(spark, sf_dir)
+    sample = round(wall, 4)
+    compiles = _compilations(spark) - c0
+    return {"best": sample, "samples": [sample], "compiles": compiles}
+
+
+def time_query(spark, name: str, sf_dir: str) -> dict:
+    """Best-of-3 into the noop sink; ``compiles`` covers the builds too.
+    Three iterations, not one: single-shot numbers at this scale are
+    noise-dominated (+-1.5s observed), and sub-300ms queries ran
+    0.75x-1.9x their suite numbers in fresh isolated sessions (the
+    r05->r06 isolation audit) — scheduler/JIT noise a third iteration
+    largely averages out of the min."""
+    spec = REGISTRY[name]
+    spark.sparkContext.setJobDescription(f"bench:{name}")
+    samples: list[float] = []
+    c0 = _compilations(spark)
+    try:
+        for _ in range(3):
+            df = spec.spark(spark, sf_dir)
+            t0 = time.monotonic()
+            force(df)
+            samples.append(round(time.monotonic() - t0, 4))
+    finally:
+        # queries persist intermediates (minhash signatures, BM25
+        # postings); clear between queries so cached blocks from one
+        # query never skew another's timing or accumulate across the
+        # suite. Not between iterations: the anchors were measured
+        # with a query's own blocks kept across its iterations.
+        spark.catalog.clearCache()
+    compiles = _compilations(spark) - c0
+    return {"best": min(samples), "samples": samples, "compiles": compiles}
+
+
+def time_one(spark, name: str, sf_dir: str) -> dict:
+    if name == "archive_sync":
+        return time_archive_sync(spark, sf_dir)
+    return time_query(spark, name, sf_dir)
+
+
+def run_suite(spark, sf_dir: str, machine_start: dict) -> dict:
+    """The headline suite plus archive_sync as the one JSON result."""
+    sf = scale_of(sf_dir)
     timings: dict[str, float] = {}
     stats: dict[str, dict[str, float]] = {}
     errors: dict[str, str] = {}
 
-    # JVM/codegen warmup so the first timed query isn't charged for it
-    force(load_table(spark, sf_dir, "lineitem").limit(1000))
-
-    # headline queries: best-of-3 — single-shot numbers at this scale
-    # are noise-dominated (+-1.5s observed), which would trip the
-    # round-over-round regression gate spuriously. Raised from 2 after
-    # the r05->r06 isolation audit: the four sub-second queries that
-    # "drifted" 1.1-1.5x vs r04 in-suite ran anywhere from 0.75x to
-    # 1.9x their suite numbers in fresh isolated sessions — pure
-    # scheduler/JIT noise at sub-300ms scale, which a third iteration
-    # largely averages out of the min.
     # Per-query isolation: one failing query must never blind the whole
     # perf signal (rounds 2-3 had rc=1 and no numbers at all because a
     # single AnalysisException escaped) — record the error and keep
     # going; the JSON line always prints.
-    for name, spec in REGISTRY.items():
-        if not spec.headline:
-            continue
-        samples: list[float] = []
+    names = [n for n, s in REGISTRY.items() if s.headline] + ["archive_sync"]
+    for name in names:
         try:
-            for _ in range(3):
-                df = spec.spark(spark, sf_dir)
-                t0 = time.monotonic()
-                force(df)
-                samples.append(time.monotonic() - t0)
-            timings[name] = round(min(samples), 4)
-            stats[name] = _sample_stats(samples)
+            row = time_one(spark, name, sf_dir)
         except Exception as exc:  # noqa: BLE001 — perf harness must survive
             errors[name] = f"{type(exc).__name__}: {exc}"[:500]
             print(f"ERR {name}: {errors[name]}", file=sys.stderr)
-            if samples:
-                # salvage the completed iterations' measurements
-                timings[name] = round(min(samples), 4)
-                stats[name] = _sample_stats(samples)
-        finally:
-            # queries persist intermediates (minhash signatures, BM25
-            # postings); clear between queries so cached blocks from
-            # one query never skew another's timing or accumulate
-            # across the suite
-            spark.catalog.clearCache()
-
-    # archive-sync pipeline (reference production shape: ~40k rows per
-    # partition over the split key, extract -> write -> verify)
-    target = tempfile.mkdtemp(prefix="bench_archive_")
-    shutil.rmtree(target, ignore_errors=True)
-    try:
-        cfg = Config(
-            source_table="lineitem",
-            source_split_key="l_orderkey",
-            source_where_condition="l_quantity > 0",
-            batch_size=40000,
-            max_thread=5,
-            target_path=target,
-            target_format="parquet",
-        )
-        li = load_table(spark, sf_dir, "lineitem")
-        t0 = time.monotonic()
-        report = FileArchiveJob(spark, cfg, li).run(check_idempotency=False)
-        timings["archive_sync"] = round(time.monotonic() - t0, 4)
-        # one iteration (the job writes real data); stats degenerate
-        stats["archive_sync"] = _sample_stats([timings["archive_sync"]])
-        if not report.verify.is_correct:
-            print(
-                f"WARN archive_sync verify mismatch: {report.verify}",
-                file=sys.stderr,
-            )
-    except Exception as exc:  # noqa: BLE001 — perf harness must survive
-        errors["archive_sync"] = f"{type(exc).__name__}: {exc}"[:500]
-        print(f"ERR archive_sync: {errors['archive_sync']}", file=sys.stderr)
-    finally:
-        shutil.rmtree(target, ignore_errors=True)
+            continue
+        timings[name] = row["best"]
+        stats[name] = _sample_stats(row["samples"])
 
     total = round(sum(timings.values()), 4)
     regressions = find_regressions(timings, sf, stats)
@@ -382,7 +418,24 @@ def main() -> None:
             )
     if errors:
         result["errors"] = errors
-    print(json.dumps(result))
+    return result
+
+
+def main(names: list[str]) -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    machine_start = _machine_state()
+    spark = get_spark("bench")
+    # JVM/codegen warmup so the first timed query isn't charged for it
+    force(load_table(spark, sf_dir, "lineitem").limit(1000))
+    if names:
+        best = {}
+        for name in names:
+            row = time_one(spark, name, sf_dir)
+            best[name] = row["best"]
+            print(json.dumps({name: row}), flush=True)
+        print("TOTAL", json.dumps(best))
+    else:
+        print(json.dumps(run_suite(spark, sf_dir, machine_start)))
     try:
         spark.stop()
     except Exception:
@@ -390,4 +443,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

@@ -10,9 +10,9 @@ Semantic upgrade (documented, intentional): the reference forbids
 ``maxThread > 1`` with a time split key because its LIMIT/OFFSET paging
 is unsafe under concurrency (``worker/worker.go:139-143``). Spark
 partitioned reads have no OFFSET hazard — each time window becomes one
-independent partition predicate — so this engine only *warns* via
-``time_split_parallel_safe`` instead of refusing. Set
-``strict_reference_semantics=True`` to get the reference behavior.
+independent partition predicate — so this engine accepts it instead
+of refusing. Set ``strict_reference_semantics=True`` to get the
+reference behavior.
 """
 
 from __future__ import annotations
@@ -208,12 +208,6 @@ class Config:
                     "should be 'minute', 'quarter', 'hour', or 'day'"
                 )
 
-    @property
-    def time_split_parallel_safe(self) -> bool:
-        """True: Spark time-window partitions are independent predicates,
-        no LIMIT/OFFSET pagination hazard (reference restriction lifted)."""
-        return True
-
     def time_split_stride(self) -> timedelta:
         return TIME_SPLIT_STRIDES[self.time_split_unit]
 
@@ -223,8 +217,3 @@ def load_config(path: str) -> Config:
         raw = json.load(f)
     return Config.from_dict(raw)
 
-
-def validate_source_split_time_key(value: str) -> bool:
-    """Exposed for tests: the time-predicate shape check
-    (reference config/config.go:126-137)."""
-    return bool(_TIME_CONDITION_RE.match(value))

@@ -22,7 +22,6 @@ from pyspark.sql import functions as F
 
 __all__ = [
     "VerifyResult",
-    "count_verify",
     "idempotency_gate",
     "count_and_fingerprint",
     "content_fingerprint",
@@ -49,17 +48,6 @@ class VerifyResult:
     @property
     def is_correct(self) -> bool:
         return self.source_rows == self.target_rows and self.fingerprints_match
-
-
-def count_verify(
-    source_df: DataFrame,
-    target_df: DataFrame,
-    predicate: str | None = None,
-) -> VerifyResult:
-    """source-vs-target row-count verification (A31)."""
-    src = source_df.filter(predicate) if predicate else source_df
-    tgt = target_df.filter(predicate) if predicate else target_df
-    return VerifyResult(src.count(), tgt.count())
 
 
 def idempotency_gate(target_df: DataFrame, predicate: str | None = None) -> int:

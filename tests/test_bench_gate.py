@@ -139,3 +139,16 @@ def test_sf1_anchors_do_not_gate_sf01():
     for info in out.values():
         assert "sf1_r10_anchor" not in info["gates"]
         assert set(info["gates"]) <= {"r01_anchor", "r11_median_anchor"}
+
+
+def test_scale_parsed_only_from_sf_directories():
+    """Only an ``.../sf<N>`` directory names a scale; any other corpus
+    (the rehearsal's ``.../x3``) runs ungated instead of crashing the
+    bench."""
+    assert bench.scale_of("/data/sf0.1") == 0.1
+    assert bench.scale_of("/data/sf1/") == 1.0
+    assert bench.scale_of("sf0.01") == 0.01
+    assert bench.scale_of("/tmp/scale_rehearsal/x3") is None
+    assert bench.scale_of("/data/sf0.1_copy") is None
+    slow = {n: v * 10 for n, v in bench._R01_ANCHOR.items()}
+    assert bench.find_regressions(slow, None) == {}

@@ -9,7 +9,6 @@ from bend_archiver_spark.config import (
     Config,
     ConfigError,
     load_config,
-    validate_source_split_time_key,
 )
 
 
@@ -29,7 +28,17 @@ class TestValidateSourceSplitTimeKey:
         ],
     )
     def test_regex(self, cond, ok):
-        assert validate_source_split_time_key(cond) is ok
+        d = dict(
+            sourceSplitTimeKey="t1",
+            sourceWhereCondition=cond,
+            sourceTable="t",
+            sourceDB="db",
+        )
+        if ok:
+            Config.from_dict(d)
+        else:
+            with pytest.raises(ConfigError, match="required format"):
+                Config.from_dict(d)
 
 
 class TestStrides:
@@ -86,8 +95,6 @@ class TestConfigValidation:
             )
         )
         assert cfg.time_split_stride().total_seconds() == 86400
-        # semantic upgrade over the reference: parallel time split is safe
-        assert cfg.time_split_parallel_safe
 
     def test_strict_mode_rejects_parallel_time_split(self):
         with pytest.raises(ConfigError):

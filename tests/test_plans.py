@@ -1392,8 +1392,8 @@ class TestScanCountGuard:
     table lacked a persist barrier; this pins the fixed state so a
     refactor can't silently reintroduce the N-scans shape.
 
-    Counting rules (mirror tools/scan_audit.py, but via a JVM tree
-    walk instead of the plan string, which truncates long lines):
+    Counting rules (a JVM tree walk over the physical plan, not the
+    plan string, which truncates long lines):
     - bounded scans (a constant comparison on an ID-like column in
       the data filters, e.g. ``vec_id < 10`` probe sets) are free —
       pushdown makes them near-zero-cost at any scale — and are not
@@ -1603,29 +1603,27 @@ class TestSuiteWideCartesianBan:
 
 
 class TestPlanLedgerCurrent:
-    def test_recorded_fingerprints_match_live_plans(self, spark, sf_dir):
+    def test_recorded_fingerprints_match_live_plans(
+        self, sf_dir, release_heap
+    ):
         """Every registry query's live canonicalized optimized plan
         must hash to its PLANS.json record — the enforcement half of
         the mechanized re-tier ledger (__spark_entry__ docstring). A
         plan change without `tools/plan_fingerprints.py --update
         --round N` fails HERE, instead of silently keeping the query
         in emission tier 2 with a stale green row (the round-10
-        hand-bookkeeping bug). Builds every plan, executes nothing
-        beyond construction-time sizing probes (~2-4 min)."""
+        hand-bookkeeping bug). Plans are built in a subprocess on
+        local[LEDGER_CPUS], the count the ledger is recorded at, so
+        the check holds on any host. Builds every plan, executes
+        nothing beyond construction-time sizing probes (~2-4 min)."""
         import json
 
-        from tools.plan_fingerprints import plan_fingerprint
+        from tools.plan_fingerprints import fingerprint_all_pinned
 
         with open("PLANS.json") as f:
             ledger = json.load(f)
-        spark.catalog.clearCache()  # cached relations change plans
         mismatched = {}
-        for name, spec in REGISTRY.items():
-            try:
-                df = spec.spark(spark, sf_dir)
-                live = plan_fingerprint(df)
-            finally:
-                spark.catalog.clearCache()
+        for name, live in fingerprint_all_pinned(sf_dir).items():
             want = ledger["queries"].get(name, {}).get("hash")
             if live != want:
                 mismatched[name] = {"recorded": want, "live": live}

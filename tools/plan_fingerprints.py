@@ -39,6 +39,7 @@ import hashlib
 import json
 import os
 import re
+import subprocess
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -46,6 +47,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PLANS_PATH = os.path.join(REPO, "PLANS.json")
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
+# fanout() and its peers size partition counts to the core count
+# (RoundRobinPartitioning(local[N])), so plans differ between hosts;
+# the ledger is recorded and checked at this one pinned count
+LEDGER_CPUS = 32
 
 _VOLATILE = (
     (re.compile(r"plan_id=\d+"), "plan_id=x"),
@@ -150,6 +155,29 @@ def fingerprint_all(spark, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, str]:
     return out
 
 
+def fingerprint_all_pinned(sf_dir: str = DEFAULT_SF_DIR) -> dict[str, str]:
+    """:func:`fingerprint_all` in a fresh process on
+    ``local[LEDGER_CPUS]``: the same plans on any host."""
+    code = (
+        "import json\n"
+        "from bend_archiver_spark.session import get_spark\n"
+        "from tools.plan_fingerprints import fingerprint_all\n"
+        "spark = get_spark('plan_fingerprints', shuffle_partitions=8)\n"
+        f"print('FINGERPRINTS', json.dumps(fingerprint_all(spark, {sf_dir!r})))\n"
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=REPO,
+        env={**os.environ, "SPARK_GRAFT_CPUS": str(LEDGER_CPUS)},
+        capture_output=True,
+        text=True,
+    )
+    for line in proc.stdout.splitlines():
+        if line.startswith("FINGERPRINTS "):
+            return json.loads(line.split(" ", 1)[1])
+    raise RuntimeError(f"fingerprinting failed:\n{proc.stderr[-2000:]}")
+
+
 def load_ledger() -> dict:
     if not os.path.exists(PLANS_PATH):
         return {"round": 0, "changed": [], "x100_stale": [], "queries": {}}
@@ -184,11 +212,7 @@ def seed(baseline_round: int, sf_dir: str) -> dict:
     baseline (round = ``baseline_round``, changed = []). Used once, on
     the last committed round's code, to initialize the ledger without
     declaring the whole registry 'changed'."""
-    from bend_archiver_spark.session import get_spark
-
-    spark = get_spark("plan_fingerprints", shuffle_partitions=8)
-    fresh = fingerprint_all(spark, sf_dir)
-    spark.stop()
+    fresh = fingerprint_all_pinned(sf_dir)
     ledger = {
         "round": baseline_round,
         "changed": [],
@@ -214,11 +238,7 @@ def update(
     changes). When an operator feeding such a query changes, name the
     query here explicitly — the flag exists so the blindness is an
     explicit declaration in the round's command, never silence."""
-    from bend_archiver_spark.session import get_spark
-
-    spark = get_spark("plan_fingerprints", shuffle_partitions=8)
-    fresh = fingerprint_all(spark, sf_dir)
-    spark.stop()
+    fresh = fingerprint_all_pinned(sf_dir)
 
     # a typo'd force-changed name would previously be silently dropped
     # by the `changed &= set(fresh)` prune below — no error, no re-tier,

@@ -4,8 +4,10 @@ linear(ish) scaling actually scale, beyond sf0.1?
 
 Builds 3x and 10x variants of the sf0.1 `documents` and `lineitem`
 tables in /tmp (the /root/testdata tree is read-only and tops out at
-sf0.1), times each scale-claiming query in a FRESH subprocess Spark
-session per (query, scale) point, and prints a JSON scaling table —
+sf0.1), times each scale-claiming query with `python bench.py NAME`
+in a FRESH subprocess per (query, scale) point (bench's protocol:
+best-of-3 for queries, one run for archive_sync), and prints a JSON
+scaling table —
 the measurement SCALE.md's "corpus touched once" / m^1.5-wedge claims
 were missing (they were argued from plan shape only through round 5).
 
@@ -204,86 +206,24 @@ def build_corpus(n_replicas: int, out_dir: str) -> None:
     )
 
 
-_TIMER = """
-import sys, time
-sys.path.insert(0, {repo!r})
-from bend_archiver_spark.queries import REGISTRY
-from bend_archiver_spark.session import get_spark
-name, sf_dir = {name!r}, {sf_dir!r}
-spark = get_spark("rehearsal")
-def force(df): df.write.format("noop").mode("overwrite").save()
-best = float("inf")
-for _ in range(2):
-    df = REGISTRY[name].spark(spark, sf_dir)
-    t0 = time.monotonic(); force(df)
-    best = min(best, time.monotonic() - t0)
-    spark.catalog.clearCache()
-print("RESULT", best)
-spark.stop()
-"""
-
-# archive_sync is the bench's end-to-end job (extract -> range-
-# partitioned write -> verify), not a registry query; same shape as
-# bench.py with the partition count scaling naturally through the
-# fixed 40k batch size over the replica-offset key range. Best-of-2
-# like the query timer (fresh target per iteration — the job appends,
-# so reusing one target would double rows and fail verify); targets
-# are removed in a finally so a failed run never leaks a parquet copy
-# of the scaled table into the temp filesystem.
-_ARCHIVE_TIMER = """
-import shutil, sys, tempfile, time
-sys.path.insert(0, {repo!r})
-from bend_archiver_spark.config import Config
-from bend_archiver_spark.job import FileArchiveJob
-from bend_archiver_spark.session import get_spark
-from bend_archiver_spark.tables import load_table
-spark = get_spark("rehearsal")
-li = load_table(spark, {sf_dir!r}, "lineitem")
-best = float("inf")
-for _ in range(2):
-    target = tempfile.mkdtemp(prefix="rehearsal_archive_")
-    shutil.rmtree(target, ignore_errors=True)
-    cfg = Config(
-        source_table="lineitem",
-        source_split_key="l_orderkey",
-        source_where_condition="l_quantity > 0",
-        batch_size=40000,
-        max_thread=5,
-        target_path=target,
-        target_format="parquet",
-    )
-    try:
-        t0 = time.monotonic()
-        report = FileArchiveJob(spark, cfg, li).run(check_idempotency=False)
-        best = min(best, time.monotonic() - t0)
-        assert report.verify.is_correct, report.verify
-    finally:
-        shutil.rmtree(target, ignore_errors=True)
-print("PARTS", report.num_partitions)
-print("RESULT", best)
-spark.stop()
-"""
-
-# archive_sync at an arbitrary corpus (the 100x row): ONE iteration
-# (60M rows write ~2 GB; best-of-2 doubles the wall for no signal at
-# this size), with
-#  * the partition count ASSERTED against the planner's documented
-#    rule — batch = adjust_batch_size(40000, mn, mx, cnt) (the 100x
-#    key range is ~16x sparser than the rows, so the x5 widening
-#    branch fires), n_parts = min((mx-mn)//batch + 1, 10000) — so a
-#    silent cap hit or a degenerate single-partition plan fails
+# archive_sync at an arbitrary corpus (the 100x row): bench.py's job,
+# run ONCE (60M rows write ~2 GB), with
+#  * the batch and partition count ASSERTED against the planner's
+#    plan for the probed key range (plan_jdbc_partitions — the one
+#    split-sizing policy the job itself uses; the 100x key range is
+#    ~16x sparser than the rows, so the x5 widening branch fires) —
+#    so a silent cap hit or a degenerate single-partition plan fails
 #    loudly instead of shipping a wrong-shaped rehearsal row;
 #  * spill + peak execution memory read from the UI REST API
 #    (per-stage memoryBytesSpilled / diskBytesSpilled /
 #    peakExecutionMemory), the numbers SCALE.md's "spills, doesn't
 #    OOM" claim was missing at this scale.
 _ARCHIVE_AT_SCALE = """
-import json, shutil, sys, tempfile, time, urllib.request
+import json, sys, urllib.request
 sys.path.insert(0, {repo!r})
 from pyspark.sql import functions as F
-from bend_archiver_spark.config import Config
-from bend_archiver_spark.job import FileArchiveJob
-from bend_archiver_spark.planner import adjust_batch_size
+from bench import ARCHIVE_SYNC, run_archive_sync
+from bend_archiver_spark.planner import plan_jdbc_partitions
 from bend_archiver_spark.session import get_spark
 from bend_archiver_spark.tables import load_table
 # sessions default to spark.ui.enabled=false; the REST metrics
@@ -291,30 +231,18 @@ from bend_archiver_spark.tables import load_table
 spark = get_spark(
     "rehearsal_archive", extra_conf={{"spark.ui.enabled": "true"}}
 )
-li = load_table(spark, {sf_dir!r}, "lineitem")
-row = li.filter("l_quantity > 0").agg(
-    F.min("l_orderkey").alias("mn"), F.max("l_orderkey").alias("mx"),
+key = ARCHIVE_SYNC["source_split_key"]
+row = load_table(spark, {sf_dir!r}, "lineitem").filter(
+    ARCHIVE_SYNC["source_where_condition"]).agg(
+    F.min(key).alias("mn"), F.max(key).alias("mx"),
     F.count(F.lit(1)).alias("cnt")).first()
 mn, mx, cnt = int(row["mn"]), int(row["mx"]), int(row["cnt"])
-batch = adjust_batch_size(40000, mn, mx, cnt)
-expected_parts = max(1, min((mx - mn) // batch + 1, 10_000))
-target = tempfile.mkdtemp(prefix="rehearsal_archive_")
-shutil.rmtree(target, ignore_errors=True)
-cfg = Config(
-    source_table="lineitem", source_split_key="l_orderkey",
-    source_where_condition="l_quantity > 0", batch_size=40000,
-    max_thread=5, target_path=target, target_format="parquet",
-)
-try:
-    t0 = time.monotonic()
-    report = FileArchiveJob(spark, cfg, li).run(check_idempotency=False)
-    wall = time.monotonic() - t0
-    assert report.verify.is_correct, report.verify
-    assert report.num_partitions == expected_parts, (
-        report.num_partitions, expected_parts)
-    assert report.batch_size == batch, (report.batch_size, batch)
-finally:
-    shutil.rmtree(target, ignore_errors=True)
+plan = plan_jdbc_partitions(key, mn, mx, cnt, ARCHIVE_SYNC["batch_size"])
+wall, report = run_archive_sync(spark, {sf_dir!r})
+assert report.num_partitions == plan.num_partitions, (
+    report.num_partitions, plan.num_partitions)
+assert report.batch_size == plan.batch_size, (
+    report.batch_size, plan.batch_size)
 ui = spark.sparkContext.uiWebUrl
 spill_mem = spill_disk = peak = 0
 if ui:
@@ -326,9 +254,9 @@ if ui:
     spill_disk = sum(s.get("diskBytesSpilled", 0) for s in stages)
     peak = max((s.get("peakExecutionMemory", 0) for s in stages), default=0)
 print("ARCHIVE_AT_SCALE", json.dumps({{
-    "rows": cnt, "key_range": mx - mn + 1, "batch_size": batch,
+    "rows": cnt, "key_range": mx - mn + 1, "batch_size": plan.batch_size,
     "num_partitions": report.num_partitions,
-    "expected_partitions": expected_parts,
+    "expected_partitions": plan.num_partitions,
     "wall_sec": round(wall, 1),
     "memory_spill_bytes": spill_mem, "disk_spill_bytes": spill_disk,
     "peak_execution_memory_bytes": peak,
@@ -510,19 +438,20 @@ def archive_at_scale(sf_dir: str, timeout: int = 3600) -> dict:
     )
 
 
-def time_query(name: str, sf_dir: str) -> float:
-    """Best-of-2 wall time in a fresh subprocess session (isolation:
-    no shared JIT/cache state between scale points)."""
-    template = _ARCHIVE_TIMER if name == "archive_sync" else _TIMER
+def bench_row(name: str, sf_dir: str) -> dict:
+    """``python bench.py NAME`` at *sf_dir* in a fresh subprocess
+    (isolation: no shared JIT/cache state between scale points);
+    returns its {best, samples, compiles} row."""
     proc = subprocess.run(
-        [sys.executable, "-c", template.format(repo=REPO, name=name, sf_dir=sf_dir)],
+        [sys.executable, os.path.join(REPO, "bench.py"), name],
+        env={**os.environ, "SPARK_GRAFT_SF_DIR": sf_dir},
         capture_output=True,
         text=True,
         timeout=1800,
     )
     for line in proc.stdout.splitlines():
-        if line.startswith("RESULT "):
-            return float(line.split()[1])
+        if line.startswith("{"):
+            return json.loads(line)[name]
     raise RuntimeError(
         f"{name} @ {sf_dir} failed:\n{proc.stderr[-2000:]}"
     )
@@ -575,7 +504,7 @@ def main() -> None:
     for name in queries:
         table[name] = {}
         for s in scales:
-            sec = time_query(name, dirs[s])
+            sec = bench_row(name, dirs[s])["best"]
             table[name][f"x{s}"] = round(sec, 3)
             print(f"{name} x{s}: {sec:.3f}s", file=sys.stderr)
         base = table[name].get("x1")
