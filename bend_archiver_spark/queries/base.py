@@ -34,7 +34,7 @@ __all__ = ["QuerySpec", "REGISTRY", "register", "t", "fanout", "dec_sum", "dec_a
 class QuerySpec:
     name: str
     spark: Callable[[SparkSession, str], DataFrame]
-    oracle: str | None  # ANSI SQL for DuckDB; None -> rows-only check
+    oracle: str | None  # ANSI SQL for DuckDB; set for every registered query
     headline: bool = False  # include in bench.py
     tags: tuple[str, ...] = field(default=())
 

@@ -14,23 +14,16 @@ Formats:
 - ``ndjson``  — byte-compatible with the reference's stage files
   (one JSON object per line, NULLs as ``null``; source/source.go:164-189).
 - ``delta``   — used when delta-spark is installed (gated import).
-- ``jdbc``    — passthrough for real warehouse targets; for Databend
-  the ``COPY INTO`` SQL is generated for execution via a JDBC
-  statement, mirroring ingest_databend.go:182-195.
 """
 
 from __future__ import annotations
-
-from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 
 __all__ = [
     "write_batch",
-    "write_jdbc",
     "copy_into_sql",
     "execute_copy_into",
-    "SinkResult",
     "NDJSON_TS_FMT",
 ]
 
@@ -39,20 +32,13 @@ __all__ = [
 NDJSON_TS_FMT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"
 
 
-@dataclass
-class SinkResult:
-    path: str
-    format: str
-    rows: int | None = None
-
-
 def write_batch(
     df: DataFrame,
     path: str,
     fmt: str = "parquet",
     mode: str = "append",
     partition_by: list[str] | None = None,
-) -> SinkResult:
+) -> None:
     """Distributed write of one batch/table. ``mode='append'`` matches
     the reference's COPY INTO accumulation semantics."""
     writer = df.write.mode(mode)
@@ -76,30 +62,7 @@ def write_batch(
                 "delta-spark not available in this environment"
             ) from e
     else:
-        raise ValueError(
-            f"unsupported sink format: {fmt} "
-            "(for RDBMS targets use write_jdbc)"
-        )
-    return SinkResult(path=path, format=fmt)
-
-
-def write_jdbc(
-    df: DataFrame,
-    url: str,
-    table: str,
-    properties: dict[str, str],
-    mode: str = "append",
-    batchsize: int = 10_000,
-) -> SinkResult:
-    """Distributed JDBC write — the passthrough sink for warehouse
-    targets reachable over JDBC (each task writes its partition with
-    batched inserts; ``batchsize`` mirrors the read-side fetchsize).
-    For Databend specifically, the higher-throughput path is a file
-    write to the stage location + ``copy_into_sql`` executed over a
-    JDBC statement."""
-    props = {**properties, "batchsize": str(batchsize)}
-    df.write.jdbc(url=url, table=table, mode=mode, properties=props)
-    return SinkResult(path=f"{url}/{table}", format="jdbc")
+        raise ValueError(f"unsupported sink format: {fmt}")
 
 
 def copy_into_sql(

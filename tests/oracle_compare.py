@@ -5,10 +5,20 @@ the same parquet files, then compares row count, schema shape, and an
 order-insensitive value hash with columns sorted by name — the same
 contract the driver applies at sf0.01.
 
+It is the one verification runner: the 10x/100x sweeps run it over
+a scaled corpus (tools/scale_corpus.py) and the full-registry
+partition-invariance check is two runs at different shuffle widths.
+Every query has an exact oracle (test_every_query_has_an_oracle), so
+"equal to the oracle at 7 and at 29 partitions" implies "equal at 7
+and 29"; each run is its own process, so no cached block or query
+memo carries over from one width to the other.
+
 Usage:
     python -m tests.oracle_compare            # all queries, sf0.001
     python -m tests.oracle_compare tpch_q1    # subset
     SF_DIR=/root/testdata/sf0.01 python -m tests.oracle_compare
+    SHUFFLE_PARTITIONS=7 python -m tests.oracle_compare    # default 8
+    SHUFFLE_PARTITIONS=29 python -m tests.oracle_compare
 """
 
 from __future__ import annotations
@@ -124,16 +134,12 @@ def compare_frames(spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame) -> dict:
     return res
 
 
-def run(
-    names: list[str] | None = None,
-    sf_dir: str | None = None,
-    shuffle_partitions: int = 8,
-) -> bool:
+def run(names: list[str] | None = None) -> bool:
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from bend_archiver_spark.queries import REGISTRY
     from bend_archiver_spark.session import get_spark
 
-    sf_dir = sf_dir or os.environ.get("SF_DIR", "/root/testdata/sf0.001")
+    sf_dir = os.environ.get("SF_DIR", "/root/testdata/sf0.001")
     # the compare contract COLLECTS both sides (toPandas); at the 100x
     # rehearsal a multi-million-row result trips the 1g default
     # maxResultSize inside the harness — a collection limit of the
@@ -142,7 +148,7 @@ def run(
     # 24g driver heap.
     spark = get_spark(
         "oracle_compare",
-        shuffle_partitions=shuffle_partitions,
+        shuffle_partitions=int(os.environ.get("SHUFFLE_PARTITIONS", "8")),
         extra_conf={"spark.driver.maxResultSize": "8g"},
     )
     con = duck_con(sf_dir)
@@ -159,23 +165,22 @@ def run(
         # space left on device" purely because ~30 GB of the just-run
         # Spark pass was still resident. Running the oracle before
         # its Spark twin keeps the two disk peaks disjoint.
-        duck_pdf, t_duck, duck_err = None, 0.0, None
-        if spec.oracle is not None:
-            t1 = _time.monotonic()
-            try:
-                duck_pdf = con.execute(spec.oracle).df()
-            except Exception as e:  # noqa: BLE001
-                # record but DON'T skip the Spark twin: an oracle
-                # failure must not be able to hide a Spark-side
-                # regression behind it (the comparison still fails).
-                # Surface the error NOW, flushed: the Spark twin can
-                # run for many minutes, and a harness timeout in that
-                # window used to discard the oracle's failure detail
-                # (the final FAIL line only prints after both sides)
-                print(f"oracle-error  {name}: {e}", flush=True)
-                duck_err = e
-                ok = False
-            t_duck = _time.monotonic() - t1
+        duck_pdf, duck_err = None, None
+        t1 = _time.monotonic()
+        try:
+            duck_pdf = con.execute(spec.oracle).df()
+        except Exception as e:  # noqa: BLE001
+            # record but DON'T skip the Spark twin: an oracle
+            # failure must not be able to hide a Spark-side
+            # regression behind it (the comparison still fails).
+            # Surface the error NOW, flushed: the Spark twin can
+            # run for many minutes, and a harness timeout in that
+            # window used to discard the oracle's failure detail
+            # (the final FAIL line only prints after both sides)
+            print(f"oracle-error  {name}: {e}", flush=True)
+            duck_err = e
+            ok = False
+        t_duck = _time.monotonic() - t1
         t0 = _time.monotonic()
         try:
             spark_pdf = spec.spark(spark, sf_dir).toPandas()
@@ -203,9 +208,6 @@ def run(
                 f"FAIL  {name}: duckdb error: {root_cause(duck_err)}  "
                 f"[spark side OK, {len(spark_pdf)} rows, {t_spark:.1f}s]"
             )
-            continue
-        if spec.oracle is None:
-            print(f"rows-only  {name}: {len(spark_pdf)} rows  [spark {t_spark:.1f}s]")
             continue
         res = compare_frames(spark_pdf, duck_pdf)
         status = "OK  " if (res["rows_match"] and res["cols_match"] and res["values_match"]) else "FAIL"

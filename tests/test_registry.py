@@ -183,3 +183,49 @@ def test_x100_substitute_lane_names_real_queries_and_tools():
     assert set(X100_SUBSTITUTES) & set(X100_ORACLE_BOUNDS) == set()
     for name, tool in X100_SUBSTITUTES.items():
         assert os.path.exists(os.path.join(repo, tool)), (name, tool)
+
+
+def test_x100_batch_runs_oracle_compare_in_a_subprocess(release_heap):
+    """The sweep's subprocess contract: ``run_batch`` runs
+    ``tests.oracle_compare`` over the given corpus and reads its OK /
+    FAIL lines back as per-query verdicts."""
+    import os
+    import sys
+
+    sys.path.insert(
+        0,
+        os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools"),
+    )
+    from x100_sweep import run_batch
+
+    verdicts, details, timed_out = run_batch(
+        ["tpch_q1", "tpch_q6_revenue"], timeout=600, sf_dir=SF_DIR
+    )
+    assert verdicts == {"tpch_q1": "OK", "tpch_q6_revenue": "OK"}
+    assert details == {}
+    assert not timed_out
+
+
+def test_x100_merge_folds_verdicts_into_family_row():
+    """One fold for every verdict source (batch, retry, recheck,
+    targeted re-sweep, substitute): an unreported name is TIMEOUT or
+    CRASH, OK drops the recorded detail, OK-substitute keeps the
+    primary oracle's failure detail, and green/total are recounted."""
+    import os
+    import sys
+
+    sys.path.insert(
+        0,
+        os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools"),
+    )
+    from x100_sweep import merge
+
+    row = {"verdicts": {"a": "FAIL", "b": "FAIL"}, "details": {"a": "x", "b": "y"}}
+    merge(row, ["a", "c"], ({"a": "OK"}, {}, True))
+    assert row["verdicts"] == {"a": "OK", "b": "FAIL", "c": "TIMEOUT"}
+    assert row["details"] == {"b": "y"}
+    merge(row, ["b"], ({"b": "OK-substitute"}, {}, False))
+    merge(row, ["c"], ({}, {}, False))
+    assert row["verdicts"] == {"a": "OK", "b": "OK-substitute", "c": "CRASH"}
+    assert row["details"] == {"b": "y"}
+    assert (row["green"], row["total"]) == (2, 3)

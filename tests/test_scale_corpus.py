@@ -11,7 +11,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from tools.scale_rehearsal import _AFFINE_UNITS, _caesar  # noqa: E402
+from tools.scale_corpus import _AFFINE_UNITS, _caesar  # noqa: E402
 
 ALPHA = "abcdefghijklmnopqrstuvwxyz"
 

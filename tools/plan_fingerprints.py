@@ -190,8 +190,7 @@ def newest_green_x100_round() -> dict[str, int]:
     from X100_SWEEP_r*.json artifacts. ``OK-substitute`` counts — it
     is a full independent recomputation with the same compare contract
     (tools/x100_sweep.py X100_SUBSTITUTES), recorded distinctly only
-    so the artifact shows WHICH verifier ran. ``rows-only`` does NOT
-    count (weaker check)."""
+    so the artifact shows WHICH verifier ran."""
     newest: dict[str, int] = {}
     for path in glob.glob(os.path.join(REPO, "X100_SWEEP_r*.json")):
         m = re.search(r"r(\d+)\.json$", path)

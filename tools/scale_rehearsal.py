@@ -2,34 +2,16 @@
 """Measured scale rehearsal: do the five operators that claim
 linear(ish) scaling actually scale, beyond sf0.1?
 
-Builds 3x and 10x variants of the sf0.1 `documents` and `lineitem`
-tables in /tmp (the /root/testdata tree is read-only and tops out at
-sf0.1), times each scale-claiming query with `python bench.py NAME`
-in a FRESH subprocess per (query, scale) point (bench's protocol:
-best-of-3 for queries, one run for archive_sync), and prints a JSON
-scaling table —
-the measurement SCALE.md's "corpus touched once" / m^1.5-wedge claims
-were missing (they were argued from plan shape only through round 5).
-
-Corpus construction (replica r = 0..n-1, r=0 the original):
-
-- `documents`: doc_id += r * 1_000_000; every word NOT in the Gopher
-  stopword list is caesar-shifted by r. This preserves each replica's
-  internal statistics (word counts, stopword ratio, alpha ratio, doc
-  lengths — so funnel-stage selectivity is identical per replica) and
-  each replica's internal near-dup structure (one transform applied
-  uniformly), while cross-replica 5-gram/shingle collisions stay
-  negligible — replicating text VERBATIM would put every surviving
-  doc in a 10-member LSH bucket cluster and blow candidate pairs up
-  QUADRATICALLY, which no real 10x corpus does. The benchmark side of
-  the decontamination query (doc_id < 10) exists only in replica 0,
-  so the bench stays fixed while the corpus scales — the production
-  shape.
-- `lineitem`: l_orderkey += r * 10_000_000, l_partkey += r * 1_000_000
-  — each replica is a DISJOINT isomorphic copy of the part
-  co-occurrence graph, so edges, wedges, and triangles all scale
-  exactly linearly and the measured factor is attributable to the
-  engine, not to changed graph topology.
+Times each scale-claiming query on the 1x (sf0.1) tree and on the
+scaled corpora of tools/scale_corpus.py (the same 10-table replica
+corpus the 10x/100x correctness sweeps check), with `python bench.py
+NAME` in a FRESH subprocess per (query, scale) point (bench's
+protocol: best-of-3 for queries, one run for archive_sync), and
+prints a JSON scaling table — the measurement SCALE.md's "corpus
+touched once" / m^1.5-wedge claims were missing (they were argued
+from plan shape only through round 5). Each replica is a disjoint
+isomorphic copy, so the measured factor is attributable to the
+engine, not to changed data shape.
 
 Usage:
     python tools/scale_rehearsal.py            # full 1x/3x/10x table
@@ -46,8 +28,9 @@ import sys
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-SF01 = "/root/testdata/sf0.1"
-WORK = "/tmp/scale_rehearsal"
+sys.path.insert(0, REPO)
+
+from tools.scale_corpus import SF01, corpus_dir  # noqa: E402
 
 QUERIES = [
     "graph_triangle_count",
@@ -58,153 +41,10 @@ QUERIES = [
     "archive_sync",
     # round 9: the two most production-shaped curation DAGs (quality
     # gate -> banded near-dup -> keep/drop funnel; near-dup components
-    # -> component-atomic train/val/test split) — documents-only, so
-    # the 4-table rehearsal corpus covers them
+    # -> component-atomic train/val/test split)
     "pipeline_curate_near_dedup",
     "pipeline_leakage_safe_split",
 ]
-
-# must match queries/text.py _STOPWORDS — the funnel's stopword rule
-STOPWORDS = frozenset(("the", "a", "of", "and", "to", "in"))
-
-
-# Multiplicative units mod 26 — UNITS[0] = 1 so every replica r < 26
-# reduces to the plain caesar shift (corpora at scale <= 26 stay
-# byte-identical to what rounds 7-9 measured and hash-proved).
-_AFFINE_UNITS = (1, 3, 5, 7, 9, 11, 15, 17, 19, 21, 23, 25)
-
-
-def _caesar(word: str, r: int) -> str:
-    """Per-replica letter bijection: affine cipher x -> a*x + b mod 26
-    with a = UNITS[r // 26], b = r % 26. A pure caesar shift wraps at
-    r = 26, so past 26 replicas texts clone verbatim across replicas
-    and near-dup density grows QUADRATICALLY in shift-class size (the
-    100x-rehearsal artifact). Distinct (a, b) pairs give distinct
-    bijections for every r < 312, each preserving intra-replica edit
-    distances and shingle structure exactly — same reasons the shift
-    was chosen, now without the wrap."""
-    if word.lower() in STOPWORDS:
-        return word
-    # the (a, b) family is bijective only for r < 26*12 = 312; past
-    # that the `% len(_AFFINE_UNITS)` would silently re-clone text
-    # across replicas — the exact artifact this cipher replaced at
-    # r = 26. Fail loudly instead of wrapping.
-    assert r < 26 * len(_AFFINE_UNITS), (
-        f"replica {r} exceeds the 312 distinct affine bijections; "
-        "extend _AFFINE_UNITS (e.g. a second alphabet transform) "
-        "before building corpora past 312x"
-    )
-    a = _AFFINE_UNITS[(r // 26) % len(_AFFINE_UNITS)]
-    b = r % 26
-    out = []
-    for ch in word:
-        if "a" <= ch <= "z":
-            out.append(chr((a * (ord(ch) - 97) + b) % 26 + 97))
-        elif "A" <= ch <= "Z":
-            out.append(chr((a * (ord(ch) - 65) + b) % 26 + 65))
-        else:
-            out.append(ch)
-    return "".join(out)
-
-
-def write_scaled_documents(n_replicas: int, out_dir: str) -> None:
-    """Write the n-replica documents.parquet: doc_id offset by 1M per
-    replica, non-stopword words caesar-shifted by the replica index.
-
-    SHARED between the perf rehearsal and tools/scale_correctness.py —
-    the two 10x corpora must have byte-identical text statistics, so
-    there is exactly one copy of this transform."""
-    import duckdb
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    con = duckdb.connect()
-    docs = con.execute(
-        f"SELECT doc_id, text, lang, source, n_chars "
-        f"FROM '{SF01}/documents.parquet' ORDER BY doc_id"
-    ).fetchall()
-    # stream one replica per row group instead of materializing every
-    # replica in driver lists — memory stays bounded at one replica
-    # regardless of the scale factor
-    schema = pa.schema(
-        [
-            ("doc_id", pa.int64()),
-            ("text", pa.string()),
-            ("lang", pa.string()),
-            ("source", pa.string()),
-            ("n_chars", pa.int64()),
-        ]
-    )
-    with pq.ParquetWriter(f"{out_dir}/documents.parquet", schema) as w:
-        for r in range(n_replicas):
-            w.write_table(
-                pa.table(
-                    {
-                        "doc_id": pa.array(
-                            [d[0] + r * 1_000_000 for d in docs], pa.int64()
-                        ),
-                        "text": pa.array(
-                            [
-                                d[1]
-                                if r == 0
-                                else " ".join(
-                                    _caesar(wd, r) for wd in d[1].split(" ")
-                                )
-                                for d in docs
-                            ]
-                        ),
-                        "lang": pa.array([d[2] for d in docs]),
-                        "source": pa.array([d[3] for d in docs]),
-                        "n_chars": pa.array(
-                            [d[4] for d in docs], pa.int64()
-                        ),
-                    },
-                    schema=schema,
-                )
-            )
-    con.close()
-
-
-def build_corpus(n_replicas: int, out_dir: str) -> None:
-    """Write scaled documents.parquet + lineitem.parquet to out_dir."""
-    import duckdb
-
-    os.makedirs(out_dir, exist_ok=True)
-    con = duckdb.connect()
-
-    write_scaled_documents(n_replicas, out_dir)
-
-    con.execute(
-        f"""
-        COPY (
-          SELECT li.* REPLACE (
-                   l_orderkey + r * 10_000_000 AS l_orderkey,
-                   l_partkey + r * 1_000_000 AS l_partkey)
-          FROM '{SF01}/lineitem.parquet' li, range({n_replicas}) t(r)
-        ) TO '{out_dir}/lineitem.parquet' (FORMAT parquet)
-        """
-    )
-    # orders/customer: disjoint key-offset replicas (the per-customer
-    # rollups and segment Gini then scale linearly by construction)
-    con.execute(
-        f"""
-        COPY (
-          SELECT o.* REPLACE (
-                   o_orderkey + r * 10_000_000 AS o_orderkey,
-                   o_custkey + r * 1_000_000 AS o_custkey)
-          FROM '{SF01}/orders.parquet' o, range({n_replicas}) t(r)
-        ) TO '{out_dir}/orders.parquet' (FORMAT parquet)
-        """
-    )
-    con.execute(
-        f"""
-        COPY (
-          SELECT c.* REPLACE (c_custkey + r * 1_000_000 AS c_custkey)
-          FROM '{SF01}/customer.parquet' c, range({n_replicas}) t(r)
-        ) TO '{out_dir}/customer.parquet' (FORMAT parquet)
-        """
-    )
-
 
 # archive_sync at an arbitrary corpus (the 100x row): bench.py's job,
 # run ONCE (60M rows write ~2 GB), with
@@ -486,19 +326,7 @@ def main() -> None:
     scales = [int(s) for s in args.scales.split(",")]
     queries = args.queries.split(",")
 
-    dirs = {}
-    for s in scales:
-        if s == 1:
-            dirs[s] = SF01
-            continue
-        d = f"{WORK}/x{s}"
-        needed = ["documents", "lineitem", "orders", "customer"]
-        if not all(
-            os.path.exists(f"{d}/{t}.parquet") for t in needed
-        ):
-            print(f"building {s}x corpus at {d} ...", file=sys.stderr)
-            build_corpus(s, d)
-        dirs[s] = d
+    dirs = {s: SF01 if s == 1 else corpus_dir(s) for s in scales}
 
     table = {}
     for name in queries:

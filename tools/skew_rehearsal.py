@@ -10,10 +10,10 @@ path in round 6; this rehearsal measures the AQE path — the one that
 needs no query rewrite — against the same join with splitting
 disabled, and against ``salted_join``.
 
-Workload: the 10x-scale lineitem (6M rows, built by
-tools/scale_correctness.py) with a synthetic hot key — ~30% of rows
-remapped to join key 0, the rest keep l_partkey — joined to the 10x
-part table (200k rows) and aggregated. autoBroadcastJoinThreshold is
+Workload: the 10x-scale lineitem (6M rows; tools/scale_corpus.py's
+corpus, built first if missing) with a synthetic hot key — ~30% of
+rows remapped to join key 0, the rest keep l_partkey — joined to the
+10x part table (200k rows) and aggregated. autoBroadcastJoinThreshold is
 -1: at 100 TB the dim side of a skewed fact join routinely exceeds
 the broadcast limit, and a broadcast join would sidestep the very
 mechanism under test.
@@ -49,7 +49,6 @@ import subprocess
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-X10 = "/tmp/scale_correctness/x10"
 
 _RUNNER = """
 import sys, time
@@ -119,12 +118,12 @@ spark.stop()
 """
 
 
-def run_mode(mode: str) -> dict:
+def run_mode(mode: str, x10: str) -> dict:
     proc = subprocess.run(
         [
             sys.executable,
             "-c",
-            _RUNNER.format(repo=REPO, mode=mode, x10=X10),
+            _RUNNER.format(repo=REPO, mode=mode, x10=x10),
         ],
         capture_output=True,
         text=True,
@@ -152,15 +151,12 @@ def main() -> int:
     ap.add_argument("--modes", default="aqe_on,aqe_off,salted")
     args = ap.parse_args()
 
-    if not os.path.exists(f"{X10}/lineitem.parquet"):
-        print("building 10x corpus first ...", file=sys.stderr)
-        from tools.scale_correctness import build_full_corpus
+    from tools.scale_corpus import corpus_dir
 
-        build_full_corpus(10, X10)
-
+    x10 = corpus_dir(10)
     table = {}
     for mode in args.modes.split(","):
-        r = run_mode(mode)
+        r = run_mode(mode, x10)
         table[mode] = {
             "sec": round(r["result"], 3),
             "skew_split_fired": r["skewed"],

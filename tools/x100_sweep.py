@@ -15,6 +15,10 @@ it is the *verification* SQL whose brute shape cannot fit one node.
 The judge-facing contract: SCALE.md's per-family table names every
 exclusion and its reason; nothing is silently skipped.
 
+Each family batch is one `python -m tests.oracle_compare NAMES`
+subprocess (SF_DIR = the 100x corpus of tools/scale_corpus.py,
+SHUFFLE_PARTITIONS=32), whose OK/FAIL lines become the verdicts.
+
 Usage:
     python tools/x100_sweep.py                    # all families
     python tools/x100_sweep.py --families text,dedup
@@ -77,7 +81,7 @@ X100_SUBSTITUTES: dict[str, str] = {
 
 X100_DIR = "/tmp/scale_correctness/x100"
 
-_GREEN = ("OK", "rows-only", "OK-substitute")
+_GREEN = ("OK", "OK-substitute")
 
 _SUB_LINE = re.compile(
     r"^(OK-substitute|FAIL)\s+(\S+?): (.*)$", re.MULTILINE
@@ -103,10 +107,7 @@ def run_substitute(name: str, timeout: int) -> tuple[str, str]:
             cwd=REPO,
         )
         out = proc.stdout + proc.stderr
-    except subprocess.TimeoutExpired as e:
-        out = (e.stdout or "") + (e.stderr or "")
-        if isinstance(out, bytes):  # pragma: no cover
-            out = out.decode(errors="replace")
+    except subprocess.TimeoutExpired:
         return "TIMEOUT", f"substitute timed out after {timeout}s"
     for m in _SUB_LINE.finditer(out):
         if m.group(2) == name:
@@ -123,9 +124,7 @@ def families() -> dict[str, list[str]]:
     return dict(fam)
 
 
-_LINE = re.compile(
-    r"^(OK|FAIL|rows-only)\s+(\S+?): (.*)$", re.MULTILINE
-)
+_LINE = re.compile(r"^(OK|FAIL)\s+(\S+?): (.*)$", re.MULTILINE)
 
 _ORACLE_ERR = re.compile(r"^oracle-error\s+(\S+?): (.*)$", re.MULTILINE)
 
@@ -137,20 +136,18 @@ _DETAIL_CHARS = 4000
 
 
 def run_batch(
-    names: list[str], timeout: int
+    names: list[str], timeout: int, sf_dir: str = X100_DIR
 ) -> tuple[dict[str, str], dict[str, str], bool]:
-    """Run *names* through scale_correctness in one subprocess;
-    returns ({query: OK|FAIL|rows-only}, {query: detail line for
+    """Run *names* through ``tests.oracle_compare`` over *sf_dir* in one
+    subprocess; returns ({query: OK|FAIL}, {query: detail line for
     non-OK verdicts}, timed_out)."""
-    cmd = [
-        sys.executable,
-        os.path.join(REPO, "tools", "scale_correctness.py"),
-        "--scale",
-        "100",
-        "--queries",
-        ",".join(names),
-    ]
-    env = dict(os.environ, PYTHONUNBUFFERED="1")
+    cmd = [sys.executable, "-m", "tests.oracle_compare", *names]
+    env = dict(
+        os.environ,
+        PYTHONUNBUFFERED="1",
+        SF_DIR=sf_dir,
+        SHUFFLE_PARTITIONS="32",
+    )
     try:
         proc = subprocess.run(
             cmd,
@@ -190,6 +187,37 @@ def run_batch(
     return verdicts, details, timed_out
 
 
+def merge(
+    row: dict,
+    names: list[str],
+    batch: tuple[dict[str, str], dict[str, str], bool],
+) -> None:
+    """Fold one ``run_batch`` result for *names* into the family *row*
+    and recount it. A name the batch never reported gets TIMEOUT (the
+    batch timed out) or CRASH. An OK verdict drops the name's recorded
+    detail; an OK-substitute keeps it — the primary oracle's captured
+    failure is the evidence that justifies the substitute lane."""
+    verdicts, details, timed_out = batch
+    row_details = row.setdefault("details", {})
+    for n in names:
+        v = row["verdicts"][n] = verdicts.get(
+            n, "TIMEOUT" if timed_out else "CRASH"
+        )
+        if n in details:
+            row_details[n] = details[n]
+        elif v == "OK":
+            row_details.pop(n, None)
+    if not row_details:
+        del row["details"]
+    row["green"] = sum(1 for v in row["verdicts"].values() if v in _GREEN)
+    row["total"] = len(row["verdicts"])
+
+
+def write_artifact(results: dict) -> None:
+    with open(ARTIFACT, "w") as f:
+        json.dump(results, f, indent=1, sort_keys=True)
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--families", default=None)
@@ -220,32 +248,22 @@ def main() -> int:
         "the artifact (batch_verdicts).",
     )
     args = ap.parse_args()
-    if args.recheck:
+    from tools.scale_corpus import corpus_dir
+
+    corpus_dir(100)
+    results: dict[str, dict] = {}
+    if os.path.exists(ARTIFACT):
         with open(ARTIFACT) as f:
             results = json.load(f)
+    if args.recheck:
         for family, row in sorted(results.items()):
-            bad = [
-                n
-                for n, v in row["verdicts"].items()
-                if v not in _GREEN
-            ]
+            bad = [n for n, v in row["verdicts"].items() if v not in _GREEN]
             for n in bad:
-                v, d, t = run_batch([n], args.retry_timeout)
-                new = v.get(n, "TIMEOUT" if t else "CRASH")
-                row.setdefault("batch_verdicts", {})[n] = row[
-                    "verdicts"
-                ][n]
-                row["verdicts"][n] = new
-                if new in _GREEN:
-                    row.get("details", {}).pop(n, None)
-                elif n in d:
-                    row.setdefault("details", {})[n] = d[n]
-                print(f"recheck {n}: {row['batch_verdicts'][n]} -> {new}")
-            row["green"] = sum(
-                1 for v in row["verdicts"].values() if v in _GREEN
-            )
-            with open(ARTIFACT, "w") as f:
-                json.dump(results, f, indent=1, sort_keys=True)
+                old = row["verdicts"][n]
+                merge(row, [n], run_batch([n], args.retry_timeout))
+                row.setdefault("batch_verdicts", {})[n] = old
+                print(f"recheck {n}: {old} -> {row['verdicts'][n]}")
+            write_artifact(results)
         total_green = sum(r["green"] for r in results.values())
         total_run = sum(r["total"] for r in results.values())
         print(json.dumps({"green": total_green, "run": total_run}))
@@ -263,10 +281,6 @@ def main() -> int:
         selected = sorted(
             f for f in fam if any(n in only for n in fam[f])
         )
-    results: dict[str, dict] = {}
-    if os.path.exists(ARTIFACT):
-        with open(ARTIFACT) as f:
-            results = json.load(f)
 
     for family in selected:
         pool = (
@@ -276,14 +290,16 @@ def main() -> int:
         )
         members = [n for n in pool if n not in X100_ORACLE_BOUNDS]
         excluded = [n for n in pool if n in X100_ORACLE_BOUNDS]
+        # targeted mode merges into the family's existing row instead
+        # of dropping its other members; a full sweep starts it afresh
+        row = (results.get(family) if only is not None else None) or {
+            "verdicts": {}
+        }
+        row["excluded"] = sorted(set(row.get("excluded", [])) | set(excluded))
         if not members:
             if only is None:
-                results[family] = {
-                    "green": 0,
-                    "total": 0,
-                    "excluded": excluded,
-                    "verdicts": {},
-                }
+                row.update(green=0, total=0)
+                results[family] = row
             continue
         print(
             f"=== {family}: {len(members)} queries"
@@ -291,71 +307,32 @@ def main() -> int:
             flush=True,
         )
         t0 = time.monotonic()
-        verdicts, details, timed_out = run_batch(members, args.timeout)
+        batch = run_batch(members, args.timeout)
+        merge(row, members, batch)
         # retry lane: anything the batch never reached (timeout or a
         # crash mid-family) gets one isolated attempt with its own
         # clock, so a straggler can't hide the rest of the family
-        missing = [n for n in members if n not in verdicts]
-        if missing and (timed_out or len(missing) < len(members)):
+        missing = [n for n in members if n not in batch[0]]
+        if missing and (batch[2] or len(missing) < len(members)):
             for n in missing:
-                v, d, t = run_batch([n], args.retry_timeout)
-                verdicts[n] = v.get(
-                    n, "TIMEOUT" if t else "CRASH"
-                )
-                details.update(d)
-        for n in members:
-            verdicts.setdefault(n, "TIMEOUT" if timed_out else "CRASH")
+                merge(row, [n], run_batch([n], args.retry_timeout))
         # substitute lane: only for members whose primary oracle just
         # failed AND whose failure detail was captured above — the
         # substitute supplements recorded evidence, never replaces it
-        substitutes: dict[str, str] = {}
         for n in members:
-            if verdicts[n] in _GREEN or n not in X100_SUBSTITUTES:
+            if row["verdicts"][n] in _GREEN or n not in X100_SUBSTITUTES:
                 continue
             sv, sline = run_substitute(n, args.timeout)
             print(f"substitute {n}: {sv}", flush=True)
-            substitutes[n] = sline
+            row.setdefault("substitutes", {})[n] = sline
             if sv == "OK-substitute":
-                verdicts[n] = sv
-        wall = round(time.monotonic() - t0, 1)
-        if only is not None and family in results:
-            # targeted mode: merge the re-swept verdicts into the
-            # existing family row instead of dropping prior members
-            merged = dict(results[family].get("verdicts", {}))
-            merged.update(verdicts)
-            verdicts = merged
-            merged_d = dict(results[family].get("details", {}))
-            for n, v in verdicts.items():
-                # an OK-substitute row KEEPS its primary-oracle detail:
-                # the captured failure is the evidence that justifies
-                # the substitute lane
-                if v in ("OK", "rows-only"):
-                    merged_d.pop(n, None)
-            merged_d.update(details)
-            details = merged_d
-            excluded = sorted(
-                set(results[family].get("excluded", [])) | set(excluded)
-            )
-            substitutes = {
-                **results[family].get("substitutes", {}),
-                **substitutes,
-            }
-        green = sum(1 for v in verdicts.values() if v in _GREEN)
-        results[family] = {
-            "green": green,
-            "total": len(verdicts),
-            "wall_sec": wall,
-            "excluded": excluded,
-            "verdicts": verdicts,
-        }
-        if details:
-            results[family]["details"] = details
-        if substitutes:
-            results[family]["substitutes"] = substitutes
-        with open(ARTIFACT, "w") as f:
-            json.dump(results, f, indent=1, sort_keys=True)
+                merge(row, [n], ({n: sv}, {}, False))
+        row["wall_sec"] = round(time.monotonic() - t0, 1)
+        results[family] = row
+        write_artifact(results)
         print(
-            f"=== {family}: {green}/{len(members)} green in {wall}s",
+            f"=== {family}: {row['green']}/{row['total']} green "
+            f"in {row['wall_sec']}s",
             flush=True,
         )
 
