@@ -13,7 +13,8 @@ fully self-contained; JDBC mode (config with connection fields) needs
 the matching JDBC driver jar on the Spark classpath. The reference's
 start/end/total logging (cmd/main.go:26-28, 118-120) and the
 verification gate are preserved; per-table reports are emitted as one
-JSON line each for machine consumption.
+JSON line each for machine consumption, followed by one JSON line of
+the run's phase timings (``{"phases": {name: {start_s, seconds, rows}}}``).
 """
 
 from __future__ import annotations
@@ -228,6 +229,8 @@ def _archive_main(argv: list[str] | None = None) -> int:
                     }
                 )
             )
+            # when each phase started, how long it ran, what it counted
+            print(json.dumps({"phases": report.details["phases"]}))
             if not report.verify.is_correct:
                 print("verification FAILED: source/target counts differ", file=sys.stderr)
                 rc = 1

@@ -15,17 +15,41 @@ Subclasses supply only the source hooks ``_plan``, ``_read``,
 (parquet/csv/json), ``JdbcArchiveJob`` over live RDBMS sources, whose
 probes run as plain SQL on a driver-side connection (sources/jdbc.py).
 
-The target is read twice per run: once by the gate before the write,
-and once after it, where a single aggregate yields both the target
-count and (with ``verify_fingerprint``) its fingerprint. The second
-read reuses the schema the gate read instead of inferring it again.
+A run writes into ``<target>/_staging/<run_id>/`` (``sink.staging_path``),
+which readers of the target do not list, and publishes only a verified
+run: ``FileSystem.rename`` of the staged files into the target, then
+``COPY INTO`` if set, then delete-after-sync. A run that is refused,
+fails verification or raises before its publish publishes nothing and
+removes its staging directory; a crashed run leaves one, which the
+next run on the target removes (``sink.clear_staging``). A
+cancellation still stops a run at the last boundary before
+delete-after-sync (destructive-last), after a verified publish.
+
+Because nothing is published before verification, two pairs of Spark
+jobs run side by side, each pair's second job on one worker thread:
+
+- the gate's scan of the published target, beside the plan and the
+  staged write;
+- the source fingerprint, beside the source ``COUNT`` and the one
+  aggregate over the staged files that yields their count and (with
+  ``verify_fingerprint``) fingerprint.
+
+The verification contract is unchanged: the source must equal what the
+target holds for the predicate once published, i.e. published + staged
+rows. With the gate on, published is 0 or the run was refused, so only
+the staged files are read, with the schema the gate read instead of
+inferring it again. ``ArchiveReport.details["phases"]`` records when
+each phase started, how long it took and the rows it counted.
 """
 
 from __future__ import annotations
 
 import time
+import uuid
+from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass, field
 
+from pyspark import inheritable_thread_target
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -39,7 +63,7 @@ from .planner import (
     plan_jdbc_partitions,
     split_time_windows,
 )
-from .sink import write_batch
+from .sink import clear_staging, publish_staged, staging_path, write_batch
 from .verify import VerifyResult, count_and_fingerprint, idempotency_gate
 
 __all__ = [
@@ -52,14 +76,18 @@ __all__ = [
 
 
 def read_target(
-    spark: SparkSession, cfg: Config, schema: StructType | None = None
+    spark: SparkSession,
+    cfg: Config,
+    schema: StructType | None = None,
+    paths: list[str] | None = None,
 ) -> DataFrame:
-    """Read the sink back for gate/verify. 'ndjson' is a sink-side
-    name (stage-file parity); Spark's reader calls it 'json', with the
-    same micro-precision timestamp format the writer used. A given
-    ``schema`` (the one the gate read) spares the Spark job that file
-    formats spend inferring it; Delta keeps its schema in the table log
-    and refuses one given at read time."""
+    """Read the sink back for gate/verify: the published target, or
+    ``paths`` (staged files, or the target and staged files together).
+    'ndjson' is a sink-side name (stage-file parity); Spark's reader
+    calls it 'json', with the same micro-precision timestamp format the
+    writer used. A given ``schema`` (the one the gate read) spares the
+    Spark job that file formats spend inferring it; Delta keeps its
+    schema in the table log and refuses one given at read time."""
     if cfg.target_format == "ndjson":
         from .sink import NDJSON_TS_FMT
 
@@ -70,7 +98,7 @@ def read_target(
         reader = spark.read.format(cfg.target_format)
     if schema is not None and cfg.target_format != "delta":
         reader = reader.schema(schema)
-    return reader.load(cfg.target_path)
+    return reader.load(paths or cfg.target_path)
 
 
 def check_idempotency_gate(
@@ -100,12 +128,14 @@ def verify_target(
     cfg: Config,
     columns: list[str],
     schema: StructType | None = None,
+    paths: list[str] | None = None,
 ) -> tuple[int, int | None]:
     """Target side of the verification contract in one scan: the
     number of target rows matching the predicate and, with
     ``verify_fingerprint``, their content fingerprint over ``columns``
-    (``None`` otherwise). ``schema`` is passed on to :func:`read_target`."""
-    target = read_target(spark, cfg, schema)
+    (``None`` otherwise). ``schema`` and ``paths`` are passed on to
+    :func:`read_target`."""
+    target = read_target(spark, cfg, schema, paths)
     # predicate-scoped: a target dir may hold other archives. Under
     # reference_compat the degraded column types may not accept the
     # source predicate — fall back to the whole target
@@ -172,6 +202,66 @@ class ArchiveReport:
         return self.source_rows / self.elapsed_sec if self.elapsed_sec else 0.0
 
 
+JOB_DESCRIPTION = "spark.job.description"
+
+
+class _Phases:
+    """Start offset, seconds and counted rows of each phase of one run,
+    for ``ArchiveReport.details["phases"]``. A phase's Spark jobs carry
+    its name as their description (a thread-local property, so phases
+    on two threads keep their own)."""
+
+    def __init__(self, spark: SparkSession, table: str, t0: float):
+        self.sc = spark.sparkContext
+        self.label = f"archive {table}"
+        self.t0 = t0
+        self.timings: dict[str, dict] = {}
+
+    def run(self, name: str, fn, rows=None):
+        """``fn()`` as phase ``name``; ``rows(result)`` gives the rows
+        the phase counted (``None`` when it counts none)."""
+        self.sc.setJobDescription(f"{self.label}: {name}")
+        start = time.monotonic()
+        result = fn()
+        end = time.monotonic()
+        self.timings[name] = {
+            "start_s": round(start - self.t0, 4),
+            "seconds": round(end - start, 4),
+            "rows": None if rows is None else rows(result),
+        }
+        return result
+
+
+class _Worker:
+    """The one background thread a run overlaps its independent Spark
+    jobs on. A task inherits the caller's local properties (job group,
+    description) through ``inheritable_thread_target`` and tags its
+    jobs with the run's tag, so :meth:`close` can cancel what is still
+    running before it waits for the thread."""
+
+    def __init__(self, spark: SparkSession):
+        self.spark = spark
+        self.tag = f"archive-{uuid.uuid4().hex}"
+        self.pool = ThreadPoolExecutor(1, thread_name_prefix="archive-worker")
+        self.futures: list[Future] = []
+
+    def submit(self, fn, *args, **kwargs) -> Future:
+        sc, tag = self.spark.sparkContext, self.tag
+
+        def task():
+            sc.addJobTag(tag)
+            return fn(*args, **kwargs)
+
+        future = self.pool.submit(inheritable_thread_target(self.spark)(task))
+        self.futures.append(future)
+        return future
+
+    def close(self) -> None:
+        if not all(f.done() for f in self.futures):
+            self.spark.sparkContext.cancelJobsWithTag(self.tag)
+        self.pool.shutdown(wait=True, cancel_futures=True)
+
+
 class ArchiveJob:
     """Archive one table into a file/Delta target (Worker.Run,
     worker/worker.go:244-259)."""
@@ -185,78 +275,127 @@ class ArchiveJob:
     def run(
         self, check_idempotency: bool = True, copy_executor=None
     ) -> ArchiveReport:
-        cfg = self.cfg
+        cfg, spark = self.cfg, self.spark
         t0 = time.monotonic()
         if cfg.delete_after_sync and not self.deletes_source:
             raise RuntimeError(
                 f"deleteAfterSync is not supported by {type(self).__name__}:"
                 " it cannot delete from its source"
             )
-
-        # pre-flight gate (A32)
-        schema = (
-            check_idempotency_gate(self.spark, cfg) if check_idempotency else None
-        )
-
-        plan = self._plan()
-        if not plan.num_partitions:
-            # empty-table short-circuit (worker/worker.go:92-95)
-            return ArchiveReport(
-                cfg.source_table, 0, 0, 0, plan.batch_size,
-                time.monotonic() - t0, VerifyResult(0, 0),
+        clear_staging(spark, cfg.target_path)
+        staged = staging_path(cfg.target_path, uuid.uuid4().hex)
+        description = spark.sparkContext.getLocalProperty(JOB_DESCRIPTION)
+        phases = _Phases(spark, cfg.source_table, t0)
+        worker = _Worker(spark)
+        try:
+            # pre-flight gate (A32) over the published target, beside
+            # the plan and the staged write: nothing is published
+            # unless it passes
+            gate = (
+                worker.submit(
+                    phases.run, "gate",
+                    lambda: check_idempotency_gate(spark, cfg),
+                    rows=lambda _: 0,
+                )
+                if check_idempotency
+                else None
             )
-        raise_if_cancelled("write")
-        extracted, written = self._read(plan)
-        if cfg.reference_compat:
-            from .sources.typemap import apply_reference_compat
+            plan = phases.run(
+                "plan", self._plan, rows=lambda p: getattr(p, "row_count", None)
+            )
+            if not plan.num_partitions:
+                if gate is not None:
+                    gate.result()  # a drained source still refuses
+                # empty-table short-circuit (worker/worker.go:92-95)
+                return ArchiveReport(
+                    cfg.source_table, 0, 0, 0, plan.batch_size,
+                    time.monotonic() - t0, VerifyResult(0, 0),
+                    details={"phases": phases.timings},
+                )
+            raise_if_cancelled("write")
+            extracted, written = self._read(plan)
+            if cfg.reference_compat:
+                from .sources.typemap import apply_reference_compat
 
-            extracted = apply_reference_compat(extracted)
-            written = apply_reference_compat(written)
-        write_batch(
-            extracted,
-            cfg.target_path,
-            cfg.target_format,
-            mode="append",
-            partition_by=cfg.target_partition_by or None,
-        )
-        copied = (
-            run_copy_into(self.spark, cfg, copy_executor)
-            if cfg.execute_copy_into
-            else None
-        )
+                extracted = apply_reference_compat(extracted)
+                written = apply_reference_compat(written)
+            phases.run("write", lambda: write_batch(
+                extracted,
+                staged,
+                cfg.target_format,
+                mode="append",
+                partition_by=cfg.target_partition_by or None,
+            ))
+            schema = gate.result() if gate is not None else None
 
-        # source side of the verification contract (worker/worker.go:230-242)
-        source_rows = self._count(plan)
-        tgt_rows, tgt_fp = verify_target(
-            self.spark, cfg, written.columns, schema
-        )
-        verify = VerifyResult(source_rows, tgt_rows)
-        if cfg.verify_fingerprint:
-            from .verify import content_fingerprint
+            # verification contract (worker/worker.go:230-242): source
+            # rows == published + staged target rows for the predicate;
+            # the source fingerprint runs beside the count and verify
+            fingerprint = None
+            if cfg.verify_fingerprint:
+                from .verify import content_fingerprint
 
-            verify.source_fingerprint = content_fingerprint(written)
-            verify.target_fingerprint = tgt_fp
+                fingerprint = worker.submit(
+                    phases.run, "fingerprint",
+                    lambda: content_fingerprint(written),
+                )
+            source_rows = phases.run(
+                "source_count", lambda: self._count(plan), rows=lambda n: n
+            )
+            paths = [staged] if check_idempotency else [cfg.target_path, staged]
+            tgt_rows, tgt_fp = phases.run(
+                "verify",
+                lambda: verify_target(spark, cfg, written.columns, schema, paths),
+                rows=lambda r: r[0],
+            )
+            verify = VerifyResult(source_rows, tgt_rows)
+            if fingerprint is not None:
+                verify.source_fingerprint = fingerprint.result()
+                verify.target_fingerprint = tgt_fp
 
-        deleted = 0
-        if cfg.delete_after_sync and verify.is_correct:
-            # destructive-last: a cancellation that landed anywhere
-            # between write and here (e.g. inside a blocking JVM call
-            # the handler's exception could not preempt) must stop the
-            # job BEFORE the source-mutating phase (cmd/main.go:29-35)
-            raise_if_cancelled("delete-after-sync")
-            deleted = self._delete(plan, verify)
-
-        return ArchiveReport(
-            table=cfg.source_table,
-            source_rows=verify.source_rows,
-            target_rows=verify.target_rows,
-            num_partitions=plan.num_partitions,
-            batch_size=plan.batch_size,
-            elapsed_sec=time.monotonic() - t0,
-            verify=verify,
-            deleted_rows=deleted,
-            details={} if copied is None else {"copy_into_rows": copied},
-        )
+            copied, deleted = None, 0
+            if verify.is_correct:
+                phases.run(
+                    "publish",
+                    lambda: publish_staged(spark, staged, cfg.target_path),
+                )
+                if cfg.execute_copy_into:
+                    copied = phases.run(
+                        "copy_into",
+                        lambda: run_copy_into(spark, cfg, copy_executor),
+                        rows=lambda n: n,
+                    )
+                if cfg.delete_after_sync:
+                    # destructive-last: a cancellation that landed
+                    # anywhere before here (e.g. inside a blocking JVM
+                    # call the handler's exception could not preempt)
+                    # must stop the job BEFORE the source-mutating phase
+                    # (cmd/main.go:29-35)
+                    raise_if_cancelled("delete-after-sync")
+                    deleted = phases.run(
+                        "delete", lambda: self._delete(plan, verify),
+                        rows=lambda n: n,
+                    )
+            details = {"phases": phases.timings}
+            if copied is not None:
+                details["copy_into_rows"] = copied
+            return ArchiveReport(
+                table=cfg.source_table,
+                source_rows=verify.source_rows,
+                target_rows=verify.target_rows,
+                num_partitions=plan.num_partitions,
+                batch_size=plan.batch_size,
+                elapsed_sec=time.monotonic() - t0,
+                verify=verify,
+                deleted_rows=deleted,
+                details=details,
+            )
+        finally:
+            # wait for (or cancel) the worker's job before removing
+            # what it may still be reading
+            worker.close()
+            clear_staging(spark, cfg.target_path)
+            spark.sparkContext.setLocalProperty(JOB_DESCRIPTION, description)
 
 
 @dataclass

@@ -9,8 +9,9 @@ better recall per candidate.
 
 MLlib's distributed KMeans (kmeans||) trains the codebook; training is
 iterative and seed-deterministic but not cross-engine reproducible, so
-the registry query using this operator runs under the rows-only check
-(row count is structurally fixed at |Q| * k).
+no registry query calls this operator. The registry's ``ann_ivf_topk``
+trains its codebook with one deterministic Lloyd iteration instead and
+is checked against an exact oracle (queries/similarity.py).
 
 Scale: training samples the corpus (no need for all 100 TB); cell
 assignment is one broadcast-model pass; the search shuffles only the

@@ -245,8 +245,8 @@ def ann_ivf_fixed_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
     selection, candidate gather, exact cosine rerank — with a FIXED
     16-vector codebook (vec_id < 16) instead of a trained one, which
     makes every stage exact int64 arithmetic and therefore driver-
-    checkable end-to-end (ann_ivf_topk keeps the trained-KMeans
-    variant; its training is the one non-reproducible stage). Plan
+    checkable end-to-end (ann_ivf_topk trains its codebook with one
+    deterministic Lloyd iteration, also checked exactly). Plan
     shape is identical to production IVF: broadcast codebook, one
     combinable groupBy for assignments, candidates shuffled only on
     probed cells — never an all-pairs product."""

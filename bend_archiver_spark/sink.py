@@ -14,6 +14,20 @@ Formats:
 - ``ndjson``  — byte-compatible with the reference's stage files
   (one JSON object per line, NULLs as ``null``; source/source.go:164-189).
 - ``delta``   — used when delta-spark is installed (gated import).
+
+Staged publish: an archive run writes into ``<target>/_staging/<run_id>/``
+and, once verified, :func:`publish_staged` moves the files into the
+target with ``FileSystem.rename``. Spark's file listing skips
+``_``-prefixed directories, so readers of the target never see staged
+files, and a run that is refused, fails verification or crashes
+publishes nothing. Limits: one writer per target (the next run clears
+the whole ``_staging`` directory); on object stores a rename is a copy
+plus a delete, so publishing costs a second write of the data; a
+publish is file by file, not atomic: a crash part-way through it is
+finished by the next run (:func:`clear_staging`). The publish moves
+plain files and does not carry a Delta table's ``_delta_log``, so the
+optional ``delta`` format is not published by this flow; Delta's own
+commit protocol would take its place.
 """
 
 from __future__ import annotations
@@ -22,6 +36,9 @@ from pyspark.sql import DataFrame
 
 __all__ = [
     "write_batch",
+    "staging_path",
+    "publish_staged",
+    "clear_staging",
     "copy_into_sql",
     "execute_copy_into",
     "NDJSON_TS_FMT",
@@ -30,6 +47,11 @@ __all__ = [
 # micro-precision timestamps: the default JSON format is milliseconds,
 # which silently truncates micros and breaks round-trip fingerprints
 NDJSON_TS_FMT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"
+
+STAGING_DIR = "_staging"
+# written into a staged run before its first rename: the run verified,
+# so a publish cut short is finished rather than discarded
+PUBLISHING_MARKER = "_PUBLISHING"
 
 
 def write_batch(
@@ -63,6 +85,60 @@ def write_batch(
             ) from e
     else:
         raise ValueError(f"unsupported sink format: {fmt}")
+
+
+def staging_path(target: str, run_id: str) -> str:
+    """The directory one run writes its files into before publishing."""
+    return f"{target.rstrip('/')}/{STAGING_DIR}/{run_id}"
+
+
+def _hadoop_path(spark, path: str):
+    """``path`` as a Hadoop ``Path`` and the ``FileSystem`` it lives on,
+    so the same calls serve local, HDFS and object-store targets."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)  # noqa: SLF001
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath  # noqa: SLF001
+
+
+def publish_staged(spark, staged: str, target: str) -> int:
+    """Move a staged run's data files into ``target``, each to the same
+    path relative to the target as it had under ``staged`` (partition
+    directories included), then delete ``staged``. Names starting with
+    ``_`` or ``.`` (``_SUCCESS``; checksum files, which the rename
+    carries along) are not published. Returns the number of files
+    moved."""
+    fs, src = _hadoop_path(spark, staged)
+    Path = spark._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001
+    fs.create(Path(src, PUBLISHING_MARKER), True).close()
+    root = fs.makeQualified(src).toString().rstrip("/") + "/"
+    listing = fs.listFiles(src, True)
+    files = []
+    while listing.hasNext():
+        rel = listing.next().getPath().toString()[len(root):]
+        if not any(part.startswith(("_", ".")) for part in rel.split("/")):
+            files.append(rel)
+    dst_root = Path(target)
+    for rel in files:
+        dst = Path(dst_root, rel)
+        fs.mkdirs(dst.getParent())
+        if not fs.rename(Path(src, rel), dst):
+            raise RuntimeError(f"publish: could not rename {staged}/{rel} to {dst}")
+    fs.delete(src, True)
+    return len(files)
+
+
+def clear_staging(spark, target: str) -> None:
+    """Remove ``<target>/_staging``. A staged run that had begun its
+    publish (it verified) is published to the end first; any other
+    (refused, failed or crashed before publishing) is deleted."""
+    fs, root = _hadoop_path(spark, f"{target.rstrip('/')}/{STAGING_DIR}")
+    if not fs.exists(root):
+        return
+    Path = spark._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001
+    for status in fs.listStatus(root):
+        run = status.getPath()
+        if fs.exists(Path(run, PUBLISHING_MARKER)):
+            publish_staged(spark, run.toString(), target)
+    fs.delete(root, True)
 
 
 def copy_into_sql(

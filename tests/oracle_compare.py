@@ -19,6 +19,12 @@ Usage:
     SF_DIR=/root/testdata/sf0.01 python -m tests.oracle_compare
     SHUFFLE_PARTITIONS=7 python -m tests.oracle_compare    # default 8
     SHUFFLE_PARTITIONS=29 python -m tests.oracle_compare
+
+Each verdict line (``OK``/``FAIL``/``oracle-error``) is flushed as it is
+printed, and the run ends with ``summary  N queries: K ok, F failed``,
+which no verdict pattern matches: with stdout and stderr sent to one
+file, a verdict can land after a Spark progress bar and not start its
+line, so count by the summary rather than by ``grep -c '^OK'``.
 """
 
 from __future__ import annotations
@@ -153,7 +159,7 @@ def run(names: list[str] | None = None) -> bool:
     )
     con = duck_con(sf_dir)
     selected = names or list(REGISTRY)
-    ok = True
+    failed = 0
     import time as _time
 
     for name in selected:
@@ -179,7 +185,6 @@ def run(names: list[str] | None = None) -> bool:
             # (the final FAIL line only prints after both sides)
             print(f"oracle-error  {name}: {e}", flush=True)
             duck_err = e
-            ok = False
         t_duck = _time.monotonic() - t1
         t0 = _time.monotonic()
         try:
@@ -192,8 +197,11 @@ def run(names: list[str] | None = None) -> bool:
             duck_part = (
                 f"  [duckdb ALSO failed: {root_cause(duck_err)}]" if duck_err else ""
             )
-            print(f"FAIL  {name}: spark error: {root_cause(e)}{duck_part}")
-            ok = False
+            print(
+                f"FAIL  {name}: spark error: {root_cause(e)}{duck_part}",
+                flush=True,
+            )
+            failed += 1
             continue
         finally:
             # queries persist intermediates (minhash signatures, BM25
@@ -206,20 +214,28 @@ def run(names: list[str] | None = None) -> bool:
         if duck_err is not None:
             print(
                 f"FAIL  {name}: duckdb error: {root_cause(duck_err)}  "
-                f"[spark side OK, {len(spark_pdf)} rows, {t_spark:.1f}s]"
+                f"[spark side OK, {len(spark_pdf)} rows, {t_spark:.1f}s]",
+                flush=True,
             )
+            failed += 1
             continue
         res = compare_frames(spark_pdf, duck_pdf)
         status = "OK  " if (res["rows_match"] and res["cols_match"] and res["values_match"]) else "FAIL"
         if status == "FAIL":
-            ok = False
-            print(f"{status}  {name}: {res}")
+            failed += 1
+            print(f"{status}  {name}: {res}", flush=True)
         else:
             print(
                 f"{status}  {name}: {res['rows_spark']} rows  "
-                f"[spark {t_spark:.1f}s, duck {t_duck:.1f}s]"
+                f"[spark {t_spark:.1f}s, duck {t_duck:.1f}s]",
+                flush=True,
             )
-    return ok
+    print(
+        f"summary  {len(selected)} queries: {len(selected) - failed} ok, "
+        f"{failed} failed",
+        flush=True,
+    )
+    return failed == 0
 
 
 if __name__ == "__main__":

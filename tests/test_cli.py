@@ -87,6 +87,29 @@ class TestCliContract:
         assert rc2 == 1
         assert "idempotency gate" in err
 
+    def test_archive_prints_phase_timings(
+        self, cli_spark, sf_dir, tmp_path, capsys
+    ):
+        """After the report line, one JSON line gives each phase's start
+        offset, seconds and counted rows."""
+        conf = _write_conf(tmp_path, tmp_path / "out")
+        rc = cli.main(
+            ["--conf", conf, "--source-path", f"{sf_dir}/lineitem.parquet"]
+        )
+        assert rc == 0
+        lines = [
+            json.loads(l)
+            for l in capsys.readouterr().out.splitlines()
+            if l.startswith("{")
+        ]
+        report, phases = lines[0], lines[1]["phases"]
+        assert {"gate", "plan", "write", "source_count", "verify",
+                "publish"} <= set(phases)
+        assert phases["verify"]["rows"] == report["target_rows"]
+        assert all(
+            set(p) == {"start_s", "seconds", "rows"} for p in phases.values()
+        )
+
     def test_delete_after_sync_on_file_source_fails(
         self, cli_spark, sf_dir, tmp_path, capsys
     ):

@@ -436,6 +436,186 @@ class TestCancellationDestructiveLast:
         shutil.rmtree(tgt, ignore_errors=True)
 
 
+class TestStagedJdbcRun:
+    def test_rerun_on_drained_source_still_refuses(self, spark, derby, tmp_path):
+        """Delete-after-sync drained the source, so a rerun plans no
+        partitions; the empty-plan short-circuit still waits for the
+        gate, which refuses."""
+        tgt = str(tmp_path / "tgt_drained")
+        cfg = _cfg(derby, tgt, source_where_condition="ID > 0",
+                   delete_after_sync=True)
+        assert JdbcArchiveJob(spark, cfg).run().deleted_rows == N_ROWS
+        assert _source_count(spark, derby) == 0
+        with pytest.raises(RuntimeError, match="idempotency gate"):
+            JdbcArchiveJob(spark, cfg).run()
+        assert spark.read.parquet(tgt).count() == N_ROWS
+        shutil.rmtree(tgt, ignore_errors=True)
+
+
+# One archive run in a separate Spark driver process (its own JVM over
+# the same Derby files): argv = db, target, mode, flag file. ``kill``
+# stalls the write inside the task that holds ID 150, after an earlier
+# task has written its file, until the test kills that process group;
+# ``corrupt`` alters one written value so the fingerprints differ.
+_CRASH_CHILD = r"""
+import sys, time
+from pyspark.sql import functions as F
+from bend_archiver_spark import job
+from bend_archiver_spark.config import Config
+from bend_archiver_spark.session import get_spark
+
+db, target, mode, flag = sys.argv[1:5]
+spark = get_spark("crash-child", master="local[2]", shuffle_partitions=2)
+real_write = job.write_batch
+
+@F.udf("boolean")
+def stall_at_150(i):
+    if i == 150:
+        open(flag, "w").close()
+        time.sleep(60)
+    return True
+
+def write(df, *a, **kw):
+    if mode == "kill":
+        df = df.filter(stall_at_150("ID"))
+    else:
+        df = df.withColumn(
+            "V", F.when(F.col("ID") == 42, F.col("V") + 1).otherwise(F.col("V")))
+    return real_write(df, *a, **kw)
+
+job.write_batch = write
+cfg = Config(database_type="derby", source_db=db, source_table="TESTTAB",
+             source_split_key="ID", batch_size=50, target_path=target,
+             target_format="parquet", verify_fingerprint=True,
+             delete_after_sync=True)
+report = job.JdbcArchiveJob(spark, cfg).run()
+print("verified", report.verify.is_correct, "deleted", report.deleted_rows)
+try:  # release the database before the JVM's own exit, which lags ours
+    spark._jvm.java.sql.DriverManager.getConnection(f"jdbc:derby:{db};shutdown=true")
+except Exception:
+    pass  # Derby signals a clean shutdown via SQLException
+spark.stop()
+"""
+
+
+class TestCrashSafety:
+    """A crashed or failed run publishes nothing and leaves nothing a
+    plain rerun has to be helped past: the rerun archives every row
+    exactly once, with matching fingerprints."""
+
+    @staticmethod
+    def _child(spark, derby, tgt, mode, tmp_path):
+        import os
+        import subprocess
+        import sys
+
+        # the child's JVM boots the database: release it here first
+        jvm = spark._sc._jvm  # noqa: SLF001
+        try:
+            jvm.java.sql.DriverManager.getConnection(
+                f"jdbc:derby:{derby};shutdown=true"
+            )
+        except Exception:  # noqa: BLE001
+            pass  # Derby signals a clean shutdown via SQLException
+        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        env = dict(
+            os.environ,
+            PYTHONPATH=repo,
+            SPARK_GRAFT_CPUS="2",
+            SPARK_DRIVER_MEMORY="1g",
+        )
+        log = open(tmp_path / f"child_{mode}.log", "w")
+        flag = tmp_path / f"child_{mode}.flag"
+        proc = subprocess.Popen(
+            [sys.executable, "-c", _CRASH_CHILD, derby, tgt, mode, str(flag)],
+            cwd=str(tmp_path), env=env, stdout=log, stderr=subprocess.STDOUT,
+            start_new_session=True,
+        )
+        return proc, flag, log
+
+    @staticmethod
+    def _end(proc, log):
+        """Kill what is left of the child's process group and wait until
+        none of it runs: its JVM holds the Derby database until it has
+        exited, which can be after the child's python process."""
+        import os
+        import signal
+        import time
+
+        try:
+            os.killpg(proc.pid, signal.SIGKILL)
+        except ProcessLookupError:
+            pass
+        proc.wait(timeout=60)
+        deadline = time.monotonic() + 60
+        while True:
+            try:
+                os.killpg(proc.pid, 0)
+            except ProcessLookupError:
+                break
+            assert time.monotonic() < deadline, "child process group still runs"
+            time.sleep(0.1)
+        log.close()
+
+    def _rerun_archives_exactly_once(self, spark, derby, tgt):
+        import os
+
+        cfg = _cfg(derby, tgt, verify_fingerprint=True, delete_after_sync=True)
+        report = JdbcArchiveJob(spark, cfg).run()
+        assert report.verify.is_correct
+        assert report.verify.source_fingerprint == report.verify.target_fingerprint
+        assert report.source_rows == report.target_rows == N_ROWS
+        assert report.deleted_rows == N_ROWS
+        back = spark.read.parquet(tgt)
+        assert back.count() == back.select("ID").distinct().count() == N_ROWS
+        assert not os.path.exists(os.path.join(tgt, "_staging"))
+        assert _source_count(spark, derby) == 0
+
+    def test_driver_killed_mid_write(self, spark, derby, tmp_path, release_heap):
+        import glob
+        import os
+        import signal
+        import time
+
+        tgt = str(tmp_path / "tgt_killed")
+        proc, flag, log = self._child(spark, derby, tgt, "kill", tmp_path)
+        try:
+            deadline = time.monotonic() + 180
+            while not flag.exists():
+                assert proc.poll() is None, (tmp_path / "child_kill.log").read_text()
+                assert time.monotonic() < deadline
+                time.sleep(0.1)
+        finally:
+            # the write is in flight: kill the Spark driver (python and JVM)
+            self._end(proc, log)
+        assert proc.returncode == -signal.SIGKILL
+        # the crash left staged files, none of them published
+        assert os.path.isdir(os.path.join(tgt, "_staging"))
+        assert not glob.glob(os.path.join(tgt, "*.parquet"))
+        assert _source_count(spark, derby) == N_ROWS
+        self._rerun_archives_exactly_once(spark, derby, tgt)
+        shutil.rmtree(tgt, ignore_errors=True)
+
+    def test_fingerprint_mismatch(self, spark, derby, tmp_path, release_heap):
+        import glob
+        import os
+
+        tgt = str(tmp_path / "tgt_mismatch")
+        proc, _, log = self._child(spark, derby, tgt, "corrupt", tmp_path)
+        try:
+            assert proc.wait(timeout=300) == 0
+        finally:
+            self._end(proc, log)
+        out = (tmp_path / "child_corrupt.log").read_text()
+        assert "verified False deleted 0" in out, out
+        # nothing published, nothing staged, nothing deleted
+        assert not glob.glob(os.path.join(tgt, "*.parquet"))
+        assert not os.path.exists(os.path.join(tgt, "_staging"))
+        assert _source_count(spark, derby) == N_ROWS
+        self._rerun_archives_exactly_once(spark, derby, tgt)
+        shutil.rmtree(tgt, ignore_errors=True)
+
+
 class TestDecimal20JdbcE2E:
     def test_uint64_ceiling_key_split_round_trip(self, spark, tmp_path):
         """DECIMAL(20,0) split keys just under 2^64 over a LIVE Derby

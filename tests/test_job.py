@@ -7,6 +7,7 @@ import pytest
 
 from bend_archiver_spark.config import Config
 from bend_archiver_spark.job import FileArchiveJob
+from bend_archiver_spark.sink import write_batch
 from bend_archiver_spark.sources.jdbc import JdbcSource
 from bend_archiver_spark.tables import load_table
 from bend_archiver_spark.verify import (
@@ -183,6 +184,185 @@ class TestFileArchiveJob:
         assert report.verify.source_fingerprint is not None
         assert jobs == PINNED_FILE_JOBS
         shutil.rmtree(tgt, ignore_errors=True)
+
+
+def _files(root) -> list[str]:
+    """Every file under ``root``, as sorted relative paths."""
+    import os
+
+    return sorted(
+        os.path.relpath(os.path.join(d, f), root)
+        for d, _, names in os.walk(root)
+        for f in names
+    )
+
+
+class TestStagedRun:
+    """A run writes into ``<target>/_staging/<run_id>/`` and publishes
+    only once verified; the gate and the source fingerprint overlap
+    other phases on one worker thread."""
+
+    def test_gate_refusal_leaves_target_unchanged(self, spark, sf_dir, tmp_path):
+        tgt = str(tmp_path / "refused")
+        li = load_table(spark, sf_dir, "lineitem")
+        assert FileArchiveJob(spark, _cfg(tgt), li).run().verify.is_correct
+        before = _files(tgt)
+        with pytest.raises(RuntimeError, match="idempotency"):
+            FileArchiveJob(spark, _cfg(tgt), li).run()
+        assert _files(tgt) == before
+        assert not (tmp_path / "refused" / "_staging").exists()
+
+    def test_unchecked_rerun_fails_verification_and_publishes_nothing(
+        self, spark, sf_dir, tmp_path
+    ):
+        """Without the gate, the target side counts published + staged
+        rows: a second copy doubles it, so the run fails verification
+        and its rows are never published."""
+        tgt = str(tmp_path / "unchecked")
+        li = load_table(spark, sf_dir, "lineitem")
+        cfg = _cfg(tgt, verify_fingerprint=True)
+        first = FileArchiveJob(spark, cfg, li).run(check_idempotency=False)
+        assert first.verify.is_correct
+        before = _files(tgt)
+        second = FileArchiveJob(spark, cfg, li).run(check_idempotency=False)
+        assert not second.verify.is_correct
+        assert second.target_rows == 2 * second.source_rows
+        assert "publish" not in second.details["phases"]
+        assert _files(tgt) == before
+        assert spark.read.parquet(tgt).count() == first.source_rows
+
+    def test_phases_are_timed_and_describe_their_jobs(
+        self, spark, sf_dir, tmp_path
+    ):
+        tgt = str(tmp_path / "phases")
+        li = load_table(spark, sf_dir, "lineitem")
+        sc = spark.sparkContext
+        group = "phases-test"
+        sc.setJobGroup(group, group)
+        try:
+            report = FileArchiveJob(
+                spark, _cfg(tgt, verify_fingerprint=True), li
+            ).run()
+            # the caller's description is left as it was
+            assert sc.getLocalProperty("spark.job.description") == group
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        phases = report.details["phases"]
+        assert set(phases) == {
+            "gate", "plan", "write", "source_count", "verify",
+            "fingerprint", "publish",
+        }
+        for p in phases.values():
+            assert p["start_s"] >= 0 and p["seconds"] >= 0
+        def end(name):
+            return phases[name]["start_s"] + phases[name]["seconds"]
+
+        # the gate overlaps the write, the fingerprint the verify scan;
+        # publishing waits for both
+        assert phases["gate"]["start_s"] < end("write")
+        assert phases["fingerprint"]["start_s"] < end("verify")
+        # (offsets and durations are rounded to 0.1 ms apiece)
+        assert phases["publish"]["start_s"] >= max(
+            end("gate"), end("verify"), end("fingerprint")
+        ) - 1e-3
+        rows = report.source_rows
+        assert phases["plan"]["rows"] == phases["source_count"]["rows"] == rows
+        assert phases["verify"]["rows"] == rows and phases["gate"]["rows"] == 0
+
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+        store = sc._jsc.sc().statusStore()  # noqa: SLF001
+        described = set()
+        for job_id in sc.statusTracker().getJobIdsForGroup(group):
+            d = store.job(job_id).description()
+            described.add(d.get() if d.isDefined() else None)
+        assert {"archive lineitem: write", "archive lineitem: verify",
+                "archive lineitem: fingerprint"} <= described
+        assert all(d.startswith("archive lineitem: ") for d in described)
+
+    @pytest.mark.parametrize("error", ["failure", "cancel"])
+    def test_in_flight_worker_job_is_cancelled_before_cleanup(
+        self, spark, sf_dir, tmp_path, monkeypatch, error
+    ):
+        """An exception or a cancellation on the run's thread while the
+        gate's Spark job runs on the worker: the job is cancelled and
+        the worker thread has ended before ``run`` returns, and the
+        staged files are gone."""
+        import threading
+        import time
+
+        from bend_archiver_spark import cancel
+        from bend_archiver_spark import job as job_mod
+
+        sc = spark.sparkContext
+        gate_outcome = []
+
+        def endless_gate(spark_, cfg_):
+            try:
+                # minutes of work unless cancelled
+                spark_.range(0, 1 << 42, 1, 2).selectExpr("sum(id % 7)").collect()
+            except Exception as e:  # noqa: BLE001
+                gate_outcome.append(type(e).__name__)
+                raise
+
+        real_write = job_mod.write_batch
+
+        def write_then_fail(*a, **kw):
+            real_write(*a, **kw)
+            deadline = time.monotonic() + 60
+            while not sc.statusTracker().getActiveJobsIds():
+                assert time.monotonic() < deadline
+                time.sleep(0.05)
+            if error == "cancel":
+                raise cancel.JobCancelled("received signal 15")
+            raise RuntimeError("write failed")
+
+        monkeypatch.setattr(job_mod, "check_idempotency_gate", endless_gate)
+        monkeypatch.setattr(job_mod, "write_batch", write_then_fail)
+        tgt = tmp_path / "inflight"
+        expected = cancel.JobCancelled if error == "cancel" else RuntimeError
+        t0 = time.monotonic()
+        with pytest.raises(expected):
+            FileArchiveJob(spark, _cfg(str(tgt)), load_table(
+                spark, sf_dir, "lineitem")).run()
+        assert time.monotonic() - t0 < 120
+        assert gate_outcome  # the gate's job was cancelled, not finished
+        assert not [
+            t for t in threading.enumerate()
+            if t.name.startswith("archive-worker")
+        ]
+        assert not sc.statusTracker().getActiveJobsIds()
+        assert not (tgt / "_staging").exists()
+        assert not [f for f in _files(tgt) if f.endswith(".parquet")]
+
+    def test_next_run_clears_staging_left_by_a_crash(
+        self, spark, sf_dir, tmp_path
+    ):
+        """What a crashed run left under ``_staging``: a run that had
+        begun publishing is published to the end, any other is
+        deleted, and neither blocks the next run."""
+        from bend_archiver_spark.sink import (
+            PUBLISHING_MARKER,
+            clear_staging,
+            staging_path,
+        )
+
+        tgt = str(tmp_path / "crashed")
+        li = load_table(spark, sf_dir, "lineitem")
+        half = li.filter("l_quantity <= 5")
+        # crashed before publishing: never published
+        write_batch(half, staging_path(tgt, "unverified"), "parquet")
+        # crashed part-way through its publish: finished
+        verified = staging_path(tgt, "verified")
+        write_batch(half, verified, "parquet")
+        (tmp_path / "crashed" / "_staging" / "verified" / PUBLISHING_MARKER).touch()
+        clear_staging(spark, tgt)
+        assert not (tmp_path / "crashed" / "_staging").exists()
+        assert spark.read.parquet(tgt).count() == half.count()
+
+        report = FileArchiveJob(spark, _cfg(tgt), li).run()
+        assert report.verify.is_correct
+        assert spark.read.parquet(tgt).count() == li.count()
 
 
 class TestCountAndFingerprint:
