@@ -21,15 +21,19 @@ run: ``FileSystem.rename`` of the staged files into the target, then
 ``COPY INTO`` if set, then delete-after-sync. A run that is refused,
 fails verification or raises before its publish publishes nothing and
 removes its staging directory; a crashed run leaves one, which the
-next run on the target removes (``sink.clear_staging``). A
-cancellation still stops a run at the last boundary before
-delete-after-sync (destructive-last), after a verified publish.
+next run on the target removes (``sink.clear_staging``), as it
+finishes a publish that failed or was cut short. A cancellation still
+stops a run at the last boundary before delete-after-sync
+(destructive-last), after a verified publish. The ``delta`` target
+format is refused: the publish renames plain files, which a Delta
+table's log would not list.
 
 Because nothing is published before verification, two pairs of Spark
 jobs run side by side, each pair's second job on one worker thread:
 
 - the gate's scan of the published target, beside the plan and the
-  staged write;
+  staged write; a refusal cancels their Spark jobs in flight, so a
+  refused run does not extract the source to the end;
 - the source fingerprint, beside the source ``COUNT`` and the one
   aggregate over the staged files that yields their count and (with
   ``verify_fingerprint``) fingerprint.
@@ -44,6 +48,7 @@ each phase started, how long it took and the rows it counted.
 
 from __future__ import annotations
 
+import threading
 import time
 import uuid
 from concurrent.futures import Future, ThreadPoolExecutor
@@ -55,7 +60,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from .cancel import raise_if_cancelled
+from .cancel import JobCancelled, raise_if_cancelled
 from .config import Config
 from .planner import (
     MAX_PARTITIONS,
@@ -232,18 +237,27 @@ class _Phases:
         return result
 
 
+def _raise_if_refused(gate: Future | None) -> None:
+    """Raise the gate's error once the gate has failed."""
+    if gate is not None and gate.done() and gate.exception() is not None:
+        gate.result()
+
+
 class _Worker:
     """The one background thread a run overlaps its independent Spark
     jobs on. A task inherits the caller's local properties (job group,
-    description) through ``inheritable_thread_target`` and tags its
-    jobs with the run's tag, so :meth:`close` can cancel what is still
-    running before it waits for the thread."""
+    description) through ``inheritable_thread_target``. The run's jobs,
+    on both threads, carry the run's tag while it lives, so
+    :meth:`close` can cancel what is still running before it waits for
+    the thread, and :meth:`cancel_on_error` what the caller runs."""
 
     def __init__(self, spark: SparkSession):
         self.spark = spark
         self.tag = f"archive-{uuid.uuid4().hex}"
+        spark.sparkContext.addJobTag(self.tag)
         self.pool = ThreadPoolExecutor(1, thread_name_prefix="archive-worker")
         self.futures: list[Future] = []
+        self.stopped = threading.Event()
 
     def submit(self, fn, *args, **kwargs) -> Future:
         sc, tag = self.spark.sparkContext, self.tag
@@ -256,10 +270,29 @@ class _Worker:
         self.futures.append(future)
         return future
 
-    def close(self) -> None:
-        if not all(f.done() for f in self.futures):
+    def cancel_on_error(self, future: Future) -> None:
+        """Done-callback: once a task fails, cancel the run's jobs until
+        the caller has stopped (:meth:`caller_stopped`). One cancel is
+        not enough: a phase such as the write runs several jobs in a
+        row, and a cancel landing between two of them stops neither."""
+        if future.cancelled() or future.exception() is None:
+            return
+        while True:
             self.spark.sparkContext.cancelJobsWithTag(self.tag)
+            if self.stopped.wait(0.05):
+                return
+
+    def caller_stopped(self) -> None:
+        """The caller runs no more jobs a failed task should cancel."""
+        self.stopped.set()
+
+    def close(self) -> None:
+        self.caller_stopped()
+        sc = self.spark.sparkContext
+        if not all(f.done() for f in self.futures):
+            sc.cancelJobsWithTag(self.tag)
         self.pool.shutdown(wait=True, cancel_futures=True)
+        sc.removeJobTag(self.tag)
 
 
 class ArchiveJob:
@@ -282,15 +315,24 @@ class ArchiveJob:
                 f"deleteAfterSync is not supported by {type(self).__name__}:"
                 " it cannot delete from its source"
             )
+        if cfg.target_format == "delta":
+            # the publish renames plain files and would leave them out
+            # of the table's _delta_log: invisible to Delta readers
+            raise RuntimeError(
+                "targetFormat 'delta' is not supported by ArchiveJob.run:"
+                " a staged publish cannot commit to a Delta table"
+            )
         clear_staging(spark, cfg.target_path)
         staged = staging_path(cfg.target_path, uuid.uuid4().hex)
         description = spark.sparkContext.getLocalProperty(JOB_DESCRIPTION)
         phases = _Phases(spark, cfg.source_table, t0)
         worker = _Worker(spark)
+        publishing = False
         try:
             # pre-flight gate (A32) over the published target, beside
             # the plan and the staged write: nothing is published
-            # unless it passes
+            # unless it passes, and a refusal cancels the plan's or the
+            # write's job in flight
             gate = (
                 worker.submit(
                     phases.run, "gate",
@@ -300,32 +342,46 @@ class ArchiveJob:
                 if check_idempotency
                 else None
             )
-            plan = phases.run(
-                "plan", self._plan, rows=lambda p: getattr(p, "row_count", None)
-            )
-            if not plan.num_partitions:
-                if gate is not None:
-                    gate.result()  # a drained source still refuses
-                # empty-table short-circuit (worker/worker.go:92-95)
-                return ArchiveReport(
-                    cfg.source_table, 0, 0, 0, plan.batch_size,
-                    time.monotonic() - t0, VerifyResult(0, 0),
-                    details={"phases": phases.timings},
+            if gate is not None:
+                gate.add_done_callback(worker.cancel_on_error)
+            try:
+                plan = phases.run(
+                    "plan", self._plan,
+                    rows=lambda p: getattr(p, "row_count", None),
                 )
-            raise_if_cancelled("write")
-            extracted, written = self._read(plan)
-            if cfg.reference_compat:
-                from .sources.typemap import apply_reference_compat
+                if not plan.num_partitions:
+                    if gate is not None:
+                        gate.result()  # a drained source still refuses
+                    # empty-table short-circuit (worker/worker.go:92-95)
+                    return ArchiveReport(
+                        cfg.source_table, 0, 0, 0, plan.batch_size,
+                        time.monotonic() - t0, VerifyResult(0, 0),
+                        details={"phases": phases.timings},
+                    )
+                raise_if_cancelled("write")
+                extracted, written = self._read(plan)
+                if cfg.reference_compat:
+                    from .sources.typemap import apply_reference_compat
 
-                extracted = apply_reference_compat(extracted)
-                written = apply_reference_compat(written)
-            phases.run("write", lambda: write_batch(
-                extracted,
-                staged,
-                cfg.target_format,
-                mode="append",
-                partition_by=cfg.target_partition_by or None,
-            ))
+                    extracted = apply_reference_compat(extracted)
+                    written = apply_reference_compat(written)
+                _raise_if_refused(gate)
+                phases.run("write", lambda: write_batch(
+                    extracted,
+                    staged,
+                    cfg.target_format,
+                    mode="append",
+                    partition_by=cfg.target_partition_by or None,
+                ))
+            except JobCancelled:
+                raise
+            except Exception:
+                # a job the refusal cancelled fails with Spark's error:
+                # report the refusal instead
+                _raise_if_refused(gate)
+                raise
+            finally:
+                worker.caller_stopped()
             schema = gate.result() if gate is not None else None
 
             # verification contract (worker/worker.go:230-242): source
@@ -355,10 +411,12 @@ class ArchiveJob:
 
             copied, deleted = None, 0
             if verify.is_correct:
+                publishing = True
                 phases.run(
                     "publish",
                     lambda: publish_staged(spark, staged, cfg.target_path),
                 )
+                publishing = False
                 if cfg.execute_copy_into:
                     copied = phases.run(
                         "copy_into",
@@ -394,7 +452,10 @@ class ArchiveJob:
             # wait for (or cancel) the worker's job before removing
             # what it may still be reading
             worker.close()
-            clear_staging(spark, cfg.target_path)
+            # a publish cut short keeps its staged files and marker: the
+            # next run finishes it (sink.clear_staging)
+            if not publishing:
+                clear_staging(spark, cfg.target_path)
             spark.sparkContext.setLocalProperty(JOB_DESCRIPTION, description)
 
 

@@ -22,15 +22,18 @@ target with ``FileSystem.rename``. Spark's file listing skips
 files, and a run that is refused, fails verification or crashes
 publishes nothing. Limits: one writer per target (the next run clears
 the whole ``_staging`` directory); on object stores a rename is a copy
-plus a delete, so publishing costs a second write of the data; a
-publish is file by file, not atomic: a crash part-way through it is
-finished by the next run (:func:`clear_staging`). The publish moves
-plain files and does not carry a Delta table's ``_delta_log``, so the
-optional ``delta`` format is not published by this flow; Delta's own
-commit protocol would take its place.
+plus a delete, so publishing costs a second write of the data, file
+after file from the driver; a publish is file by file, not atomic: a
+crash part-way through it is finished by the next run
+(:func:`clear_staging`). The publish moves plain files and would not
+carry a Delta table's ``_delta_log``, so ``ArchiveJob.run`` refuses the
+optional ``delta`` format; Delta's own commit protocol would take the
+place of this flow.
 """
 
 from __future__ import annotations
+
+import sys
 
 from pyspark.sql import DataFrame
 
@@ -49,6 +52,9 @@ __all__ = [
 NDJSON_TS_FMT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"
 
 STAGING_DIR = "_staging"
+# where clear_staging moves a verified run it could not publish: hidden
+# from readers, never published automatically
+UNPUBLISHED_DIR = "_unpublished"
 # written into a staged run before its first rename: the run verified,
 # so a publish cut short is finished rather than discarded
 PUBLISHING_MARKER = "_PUBLISHING"
@@ -99,27 +105,53 @@ def _hadoop_path(spark, path: str):
     return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath  # noqa: SLF001
 
 
+def _hidden(name: str) -> bool:
+    """Whether Spark's file listing skips a path segment
+    (``PartitioningAwareFileIndex.shouldFilterOutPathName``): ``.``-
+    names, and ``_``-names that are not ``column=value`` partition
+    directories such as ``_dt=2024-01-01``."""
+    return (
+        name.startswith(".")
+        or (name.startswith("_") and "=" not in name)
+        or name.endswith("._COPYING_")
+    )
+
+
+def _listed_files(fs, root, prefix: str = "") -> list[str]:
+    """The files under ``root`` that Spark's listing reads, as paths
+    relative to ``root``. ``listStatus`` level by level: a recursive
+    ``listFiles`` builds a ``LocatedFileStatus`` per file, which on the
+    local filesystem spawns a process to read its permissions."""
+    files = []
+    for status in fs.listStatus(root):
+        name = status.getPath().getName()
+        if _hidden(name):
+            continue
+        if status.isDirectory():
+            files += _listed_files(fs, status.getPath(), f"{prefix}{name}/")
+        else:
+            files.append(prefix + name)
+    return files
+
+
 def publish_staged(spark, staged: str, target: str) -> int:
     """Move a staged run's data files into ``target``, each to the same
     path relative to the target as it had under ``staged`` (partition
-    directories included), then delete ``staged``. Names starting with
-    ``_`` or ``.`` (``_SUCCESS``; checksum files, which the rename
-    carries along) are not published. Returns the number of files
-    moved."""
+    directories included), then delete ``staged``. What Spark's listing
+    skips (``_SUCCESS``; checksum files, which the rename carries
+    along) is not published. Returns the number of files moved."""
     fs, src = _hadoop_path(spark, staged)
     Path = spark._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001
     fs.create(Path(src, PUBLISHING_MARKER), True).close()
-    root = fs.makeQualified(src).toString().rstrip("/") + "/"
-    listing = fs.listFiles(src, True)
-    files = []
-    while listing.hasNext():
-        rel = listing.next().getPath().toString()[len(root):]
-        if not any(part.startswith(("_", ".")) for part in rel.split("/")):
-            files.append(rel)
+    files = _listed_files(fs, src)
     dst_root = Path(target)
+    made = set()
     for rel in files:
         dst = Path(dst_root, rel)
-        fs.mkdirs(dst.getParent())
+        parent = rel.rpartition("/")[0]
+        if parent not in made:
+            fs.mkdirs(dst.getParent())
+            made.add(parent)
         if not fs.rename(Path(src, rel), dst):
             raise RuntimeError(f"publish: could not rename {staged}/{rel} to {dst}")
     fs.delete(src, True)
@@ -129,15 +161,33 @@ def publish_staged(spark, staged: str, target: str) -> int:
 def clear_staging(spark, target: str) -> None:
     """Remove ``<target>/_staging``. A staged run that had begun its
     publish (it verified) is published to the end first; any other
-    (refused, failed or crashed before publishing) is deleted."""
+    (refused, failed or crashed before publishing) is deleted. A run
+    whose publish fails again is moved to ``<target>/_unpublished/``,
+    named in a warning on stderr, and left for the operator: the next
+    run's gate refuses while part of it is published."""
     fs, root = _hadoop_path(spark, f"{target.rstrip('/')}/{STAGING_DIR}")
     if not fs.exists(root):
         return
     Path = spark._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001
     for status in fs.listStatus(root):
         run = status.getPath()
-        if fs.exists(Path(run, PUBLISHING_MARKER)):
+        if not fs.exists(Path(run, PUBLISHING_MARKER)):
+            continue
+        try:
             publish_staged(spark, run.toString(), target)
+        except Exception as e:  # noqa: BLE001
+            aside = Path(f"{target.rstrip('/')}/{UNPUBLISHED_DIR}/{run.getName()}")
+            fs.mkdirs(aside.getParent())
+            if not fs.rename(run, aside):
+                raise RuntimeError(
+                    f"staged run {run} could not be published ({e}) "
+                    f"nor moved to {aside}"
+                ) from e
+            print(
+                f"warning: staged run {run} could not be published ({e}); "
+                f"moved to {aside}",
+                file=sys.stderr,
+            )
     fs.delete(root, True)
 
 

@@ -365,6 +365,161 @@ class TestStagedRun:
         assert spark.read.parquet(tgt).count() == li.count()
 
 
+    def test_partition_column_with_leading_underscore_is_published(
+        self, spark, sf_dir, tmp_path
+    ):
+        """``_p=A`` is a partition directory, not a hidden name: Spark
+        lists it, so the publish must move it too."""
+        tgt = str(tmp_path / "underscore")
+        li = load_table(spark, sf_dir, "lineitem")
+        li = li.withColumn("_p", li["l_returnflag"])
+        cfg = _cfg(tgt, target_partition_by=["_p"])
+        report = FileArchiveJob(spark, cfg, li).run()
+        assert report.verify.is_correct
+        published = spark.read.parquet(tgt)
+        assert published.filter("l_quantity > 5").count() == report.source_rows
+        assert {r[0] for r in published.select("_p").distinct().collect()} == {
+            "A", "N", "R"
+        }
+        assert not (tmp_path / "underscore" / "_staging").exists()
+
+    def test_delta_target_is_refused_before_any_write(
+        self, spark, sf_dir, tmp_path
+    ):
+        """A staged publish renames plain files, which a Delta table's
+        log would never list: the run refuses the format up front."""
+        tgt = tmp_path / "delta"
+        with pytest.raises(RuntimeError, match="targetFormat .delta. is not"):
+            FileArchiveJob(
+                spark, _cfg(str(tgt), target_format="delta"),
+                load_table(spark, sf_dir, "lineitem"),
+            ).run()
+        assert not tgt.exists()
+
+    @pytest.mark.parametrize("phase", ["plan", "write"])
+    def test_gate_refusal_cancels_the_job_in_flight(
+        self, spark, sf_dir, tmp_path, monkeypatch, phase
+    ):
+        """A refusal does not wait for the main thread's plan or staged
+        write: their Spark job is cancelled and the refusal raised."""
+        import threading
+        import time
+
+        from bend_archiver_spark import job as job_mod
+
+        sc = spark.sparkContext
+        tgt = str(tmp_path / "refused_early")
+        li = load_table(spark, sf_dir, "lineitem")
+        assert FileArchiveJob(spark, _cfg(tgt), li).run().verify.is_correct
+        before = _files(tgt)
+
+        # minutes of work unless cancelled
+        endless = spark.range(0, 1 << 42, 1, 2)
+        started = threading.Event()
+        real_gate, real_write = job_mod.check_idempotency_gate, job_mod.write_batch
+
+        def late_gate(spark_, cfg_):
+            # refuse only once the main thread's job is running
+            assert started.wait(60)
+            deadline = time.monotonic() + 60
+            while not sc.statusTracker().getActiveJobsIds():
+                assert time.monotonic() < deadline
+                time.sleep(0.05)
+            return real_gate(spark_, cfg_)
+
+        def endless_write(df, path, *a, **kw):
+            started.set()
+            real_write(endless.selectExpr("sum(id % 7) AS s"), path, *a, **kw)
+
+        monkeypatch.setattr(job_mod, "check_idempotency_gate", late_gate)
+        if phase == "plan":
+            source = endless.selectExpr(
+                "id AS l_orderkey", "id % 50 AS l_quantity"
+            )
+            real_plan = FileArchiveJob._plan
+
+            def signalled_plan(self):
+                started.set()
+                return real_plan(self)
+
+            monkeypatch.setattr(FileArchiveJob, "_plan", signalled_plan)
+        else:
+            source = li
+            monkeypatch.setattr(job_mod, "write_batch", endless_write)
+        t0 = time.monotonic()
+        with pytest.raises(RuntimeError, match="idempotency"):
+            FileArchiveJob(spark, _cfg(tgt), source).run()
+        assert time.monotonic() - t0 < 120
+        assert not sc.statusTracker().getActiveJobsIds()
+        assert _files(tgt) == before
+        assert not (tmp_path / "refused_early" / "_staging").exists()
+
+    def test_failed_publish_is_finished_by_the_next_run(
+        self, spark, sf_dir, tmp_path, monkeypatch
+    ):
+        """A publish that fails keeps its staged files and marker (the
+        run raises the publish's own error), and the next run publishes
+        them to the end before its gate reads the target."""
+        import pathlib
+
+        from bend_archiver_spark import job as job_mod
+        from bend_archiver_spark.sink import PUBLISHING_MARKER
+
+        tgt = tmp_path / "publish_failed"
+
+        def failing_publish(spark_, staged, target):
+            # the marker is written, then the first rename fails
+            pathlib.Path(staged, PUBLISHING_MARKER).touch()
+            raise RuntimeError("publish: could not rename")
+
+        li = load_table(spark, sf_dir, "lineitem")
+        monkeypatch.setattr(job_mod, "publish_staged", failing_publish)
+        with pytest.raises(RuntimeError, match="could not rename"):
+            FileArchiveJob(spark, _cfg(str(tgt)), li).run()
+        monkeypatch.undo()
+        [run] = list((tgt / "_staging").iterdir())
+        assert (run / PUBLISHING_MARKER).exists()
+        assert not [f for f in _files(str(tgt)) if "_staging" not in f
+                    and f.endswith(".parquet")]
+
+        # the rerun publishes the verified rows; they are then archived,
+        # so its gate refuses
+        with pytest.raises(RuntimeError, match="idempotency"):
+            FileArchiveJob(spark, _cfg(str(tgt)), li).run()
+        assert not (tgt / "_staging").exists()
+        assert spark.read.parquet(str(tgt)).count() == li.filter(
+            "l_quantity > 5"
+        ).count()
+
+    def test_unpublishable_staged_run_is_moved_aside(
+        self, spark, sf_dir, tmp_path, monkeypatch, capsys
+    ):
+        """A leftover publish that fails again does not block every later
+        run: it is moved to ``_unpublished`` and named on stderr."""
+        from bend_archiver_spark import sink
+        from bend_archiver_spark.sink import PUBLISHING_MARKER, staging_path
+
+        tgt = str(tmp_path / "stuck")
+        li = load_table(spark, sf_dir, "lineitem")
+        write_batch(li, staging_path(tgt, "verified"), "parquet")
+        (tmp_path / "stuck" / "_staging" / "verified" / PUBLISHING_MARKER).touch()
+
+        def failing_publish(spark_, staged, target):
+            raise RuntimeError("publish: could not rename")
+
+        monkeypatch.setattr(sink, "publish_staged", failing_publish)
+        sink.clear_staging(spark, tgt)
+        monkeypatch.undo()
+        assert "stuck/_staging/verified" in capsys.readouterr().err
+        assert (tmp_path / "stuck" / "_unpublished" / "verified"
+                / PUBLISHING_MARKER).exists()
+        assert not (tmp_path / "stuck" / "_staging").exists()
+        # hidden from readers; the next run archives as on a clean target
+        report = FileArchiveJob(spark, _cfg(tgt), li).run()
+        assert report.verify.is_correct
+        assert spark.read.parquet(tgt).count() == report.source_rows
+
+
 class TestCountAndFingerprint:
     def test_equals_count_and_row_hash_sum(self, spark):
         from pyspark.sql import functions as F
