@@ -14,7 +14,9 @@ the matching JDBC driver jar on the Spark classpath. The reference's
 start/end/total logging (cmd/main.go:26-28, 118-120) and the
 verification gate are preserved; per-table reports are emitted as one
 JSON line each for machine consumption, followed by one JSON line of
-the run's phase timings (``{"phases": {name: {start_s, seconds, rows}}}``).
+the run's phase timings and what its idempotency gate read
+(``{"phases": {name: {start_s, seconds, rows}}, "gate": {manifests,
+files, scanned, runs_skipped}}``).
 """
 
 from __future__ import annotations
@@ -229,8 +231,12 @@ def _archive_main(argv: list[str] | None = None) -> int:
                     }
                 )
             )
-            # when each phase started, how long it ran, what it counted
-            print(json.dumps({"phases": report.details["phases"]}))
+            # when each phase started, how long it ran, what it counted;
+            # the manifests, target files and runs the gate read or skipped
+            print(json.dumps({
+                "phases": report.details["phases"],
+                "gate": report.details.get("gate"),
+            }))
             if not report.verify.is_correct:
                 print("verification FAILED: source/target counts differ", file=sys.stderr)
                 rc = 1

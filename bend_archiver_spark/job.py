@@ -41,9 +41,25 @@ jobs run side by side, each pair's second job on one worker thread:
 The verification contract is unchanged: the source must equal what the
 target holds for the predicate once published, i.e. published + staged
 rows. With the gate on, published is 0 or the run was refused, so only
-the staged files are read, with the schema the gate read instead of
-inferring it again. ``ArchiveReport.details["phases"]`` records when
-each phase started, how long it took and the rows it counted.
+the staged files are read, with the written frame's schema (no
+inference job; an ``ndjson`` target reads typed values, not strings).
+That one aggregate counts the predicate's rows (``count_if``), sums
+their fingerprint, and takes the min and max of every integral,
+``decimal(p,0)``, date and timestamp column over all staged rows.
+
+A verified run writes its manifest (``manifest.py``): predicate, rows,
+fingerprint, schema, files and those ranges, carried in the staged
+run's ``_PUBLISHING`` marker and recorded as
+``<target>/_manifests/<run_id>.json`` once its files are renamed
+(``sink.publish_staged``). The gate then reads only the candidate
+files: those no manifest covers, and those of runs whose ranges can
+meet the predicate; with none it runs no Spark job. Each run still
+reads every manifest and lists the target's files (O(runs) small
+reads on the driver), and files that compaction or an outside writer
+left uncovered are scanned. ``ArchiveReport.details["phases"]`` records
+when each phase started, how long it took and the rows it counted;
+``details["gate"]`` the manifests the gate read, the target files it
+listed, the files it scanned and the runs it skipped.
 """
 
 from __future__ import annotations
@@ -58,7 +74,7 @@ from pyspark import inheritable_thread_target
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StructField, StructType
 
 from .cancel import JobCancelled, raise_if_cancelled
 from .config import Config
@@ -68,8 +84,15 @@ from .planner import (
     plan_jdbc_partitions,
     split_time_windows,
 )
-from .sink import clear_staging, publish_staged, staging_path, write_batch
-from .verify import VerifyResult, count_and_fingerprint, idempotency_gate
+from .manifest import gate_scan, range_aggregates, ranges_from
+from .sink import (
+    clear_staging,
+    mark_publishing,
+    publish_staged,
+    staging_path,
+    write_batch,
+)
+from .verify import VerifyResult, idempotency_gate, verify_aggregate
 
 __all__ = [
     "ArchiveJob",
@@ -85,14 +108,18 @@ def read_target(
     cfg: Config,
     schema: StructType | None = None,
     paths: list[str] | None = None,
+    base_path: str | None = None,
 ) -> DataFrame:
     """Read the sink back for gate/verify: the published target, or
-    ``paths`` (staged files, or the target and staged files together).
-    'ndjson' is a sink-side name (stage-file parity); Spark's reader
-    calls it 'json', with the same micro-precision timestamp format the
-    writer used. A given ``schema`` (the one the gate read) spares the
-    Spark job that file formats spend inferring it; Delta keeps its
-    schema in the table log and refuses one given at read time."""
+    ``paths`` (staged files, the target and staged files together, or
+    some of the target's files, whose partition directories Spark reads
+    from ``base_path``). 'ndjson' is a sink-side name (stage-file
+    parity); Spark's reader calls it 'json', with the same
+    micro-precision timestamp format the writer used. A given
+    ``schema`` spares the Spark job that file formats spend inferring it
+    and, for 'ndjson', reads typed values rather than the strings
+    inference sees; Delta keeps its schema in the table log and refuses
+    one given at read time."""
     if cfg.target_format == "ndjson":
         from .sink import NDJSON_TS_FMT
 
@@ -103,29 +130,38 @@ def read_target(
         reader = spark.read.format(cfg.target_format)
     if schema is not None and cfg.target_format != "delta":
         reader = reader.schema(schema)
+    if base_path is not None:
+        reader = reader.option("basePath", base_path)
     return reader.load(paths or cfg.target_path)
 
 
-def check_idempotency_gate(
-    spark: SparkSession, cfg: Config
-) -> StructType | None:
-    """Refuse to double-archive (A32, cmd/main.go:74-82). Returns the
-    schema of the existing target, or ``None`` when there is none yet.
-    Only the target *load* may fail soft (missing target == clean
-    slate); an error evaluating the gate predicate against an existing
-    target must propagate — swallowing it would silently skip the guard
-    on a corrupt or schema-degraded target and append rows twice."""
+def check_idempotency_gate(spark: SparkSession, cfg: Config) -> dict:
+    """Refuse to double-archive (A32, cmd/main.go:74-82): count the
+    target rows matching the predicate over the candidate files only
+    (``manifest.gate_scan``: files no manifest covers, and the files of
+    runs whose recorded ranges can meet the predicate). No candidate
+    file: the gate passes without a Spark job. Every file a candidate:
+    the whole target is read, as before manifests. Returns the scan's
+    counts for ``ArchiveReport.details["gate"]``. Only the target *load*
+    may fail soft (missing target == clean slate); an error evaluating
+    the gate predicate against an existing target must propagate —
+    swallowing it would silently skip the guard on a corrupt or
+    schema-degraded target and append rows twice."""
+    scan = gate_scan(spark, cfg.target_path, cfg.source_where_condition)
+    if scan.paths == []:
+        return scan.stats
+    base = cfg.target_path if scan.paths else None
     try:
-        existing = read_target(spark, cfg)
+        existing = read_target(spark, cfg, scan.schema, scan.paths, base)
     except AnalysisException:
-        return None  # target does not exist yet — clean slate
+        return scan.stats  # target does not exist yet — clean slate
     already = idempotency_gate(existing, cfg.source_where_condition)
     if already > 0:
         raise RuntimeError(
             f"idempotency gate: target already has {already} rows "
             "matching the predicate; refusing to double-archive"
         )
-    return existing.schema
+    return scan.stats
 
 
 def verify_target(
@@ -134,27 +170,30 @@ def verify_target(
     columns: list[str],
     schema: StructType | None = None,
     paths: list[str] | None = None,
-) -> tuple[int, int | None]:
+) -> tuple[int, int | None, dict]:
     """Target side of the verification contract in one scan: the
-    number of target rows matching the predicate and, with
-    ``verify_fingerprint``, their content fingerprint over ``columns``
-    (``None`` otherwise). ``schema`` and ``paths`` are passed on to
-    :func:`read_target`."""
+    number of target rows matching the predicate, with
+    ``verify_fingerprint`` their content fingerprint over ``columns``
+    (``None`` otherwise), and the ranges a manifest records of every
+    row read (``manifest.range_aggregates``). ``schema`` and ``paths``
+    are passed on to :func:`read_target`. Predicate-scoped: a target
+    dir may hold other archives; under ``reference_compat`` the
+    degraded column types may not accept the source predicate, and the
+    whole read counts."""
     target = read_target(spark, cfg, schema, paths)
-    # predicate-scoped: a target dir may hold other archives. Under
-    # reference_compat the degraded column types may not accept the
-    # source predicate — fall back to the whole target
-    try:
-        scoped = (
-            target.filter(cfg.source_where_condition)
-            if cfg.source_where_condition
-            else target
-        )
-    except AnalysisException:
-        scoped = target
-    if not cfg.verify_fingerprint:
-        return scoped.count(), None
-    return count_and_fingerprint(scoped.select(*columns))
+    names, bounds = range_aggregates(schema or target.schema)
+    rows, fingerprint, values = verify_aggregate(
+        target, cfg.source_where_condition, columns,
+        cfg.verify_fingerprint, bounds,
+    )
+    return rows, fingerprint, ranges_from(names, values)
+
+
+def _read_schema(written: StructType) -> StructType:
+    """The schema the written rows are read back with: the written
+    frame's types, without field metadata (a JDBC frame's char/varchar
+    marks) or non-null flags, as file inference would give them."""
+    return StructType([StructField(f.name, f.dataType) for f in written.fields])
 
 
 def run_copy_into(spark: SparkSession, cfg: Config, copy_executor=None) -> int:
@@ -323,7 +362,8 @@ class ArchiveJob:
                 " a staged publish cannot commit to a Delta table"
             )
         clear_staging(spark, cfg.target_path)
-        staged = staging_path(cfg.target_path, uuid.uuid4().hex)
+        run_id = uuid.uuid4().hex
+        staged = staging_path(cfg.target_path, run_id)
         description = spark.sparkContext.getLocalProperty(JOB_DESCRIPTION)
         phases = _Phases(spark, cfg.source_table, t0)
         worker = _Worker(spark)
@@ -350,13 +390,15 @@ class ArchiveJob:
                     rows=lambda p: getattr(p, "row_count", None),
                 )
                 if not plan.num_partitions:
+                    details = {"phases": phases.timings}
                     if gate is not None:
-                        gate.result()  # a drained source still refuses
+                        # a drained source still refuses
+                        details["gate"] = gate.result()
                     # empty-table short-circuit (worker/worker.go:92-95)
                     return ArchiveReport(
                         cfg.source_table, 0, 0, 0, plan.batch_size,
                         time.monotonic() - t0, VerifyResult(0, 0),
-                        details={"phases": phases.timings},
+                        details=details,
                     )
                 raise_if_cancelled("write")
                 extracted, written = self._read(plan)
@@ -382,11 +424,12 @@ class ArchiveJob:
                 raise
             finally:
                 worker.caller_stopped()
-            schema = gate.result() if gate is not None else None
+            _raise_if_refused(gate)
 
             # verification contract (worker/worker.go:230-242): source
             # rows == published + staged target rows for the predicate;
-            # the source fingerprint runs beside the count and verify
+            # the source fingerprint runs beside the count and verify,
+            # which reads the staged files with the written schema
             fingerprint = None
             if cfg.verify_fingerprint:
                 from .verify import content_fingerprint
@@ -398,12 +441,16 @@ class ArchiveJob:
             source_rows = phases.run(
                 "source_count", lambda: self._count(plan), rows=lambda n: n
             )
+            schema = _read_schema(extracted.schema)
             paths = [staged] if check_idempotency else [cfg.target_path, staged]
-            tgt_rows, tgt_fp = phases.run(
+            tgt_rows, tgt_fp, ranges = phases.run(
                 "verify",
                 lambda: verify_target(spark, cfg, written.columns, schema, paths),
                 rows=lambda r: r[0],
             )
+            details = {"phases": phases.timings}
+            if gate is not None:
+                details["gate"] = gate.result()
             verify = VerifyResult(source_rows, tgt_rows)
             if fingerprint is not None:
                 verify.source_fingerprint = fingerprint.result()
@@ -411,11 +458,23 @@ class ArchiveJob:
 
             copied, deleted = None, 0
             if verify.is_correct:
+                manifest = {
+                    "run_id": run_id,
+                    "predicate": cfg.source_where_condition,
+                    "rows": tgt_rows,
+                    "fingerprint": tgt_fp,
+                    "schema": schema.jsonValue(),
+                    # exact over the run's rows only when the verify
+                    # read the staged files alone
+                    "ranges": ranges if check_idempotency else None,
+                }
+
+                def publish():
+                    mark_publishing(spark, staged, manifest)
+                    return publish_staged(spark, staged, cfg.target_path)
+
                 publishing = True
-                phases.run(
-                    "publish",
-                    lambda: publish_staged(spark, staged, cfg.target_path),
-                )
+                phases.run("publish", publish)
                 publishing = False
                 if cfg.execute_copy_into:
                     copied = phases.run(
@@ -434,7 +493,6 @@ class ArchiveJob:
                         "delete", lambda: self._delete(plan, verify),
                         rows=lambda n: n,
                     )
-            details = {"phases": phases.timings}
             if copied is not None:
                 details["copy_into_rows"] = copied
             return ArchiveReport(

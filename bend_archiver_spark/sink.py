@@ -29,10 +29,22 @@ crash part-way through it is finished by the next run
 carry a Delta table's ``_delta_log``, so ``ArchiveJob.run`` refuses the
 optional ``delta`` format; Delta's own commit protocol would take the
 place of this flow.
+
+Manifests: a verified run writes its manifest into its ``_PUBLISHING``
+marker (:func:`mark_publishing`) before the first rename; it names the
+run's files with their sizes, its predicate, rows, fingerprint, schema
+and column ranges (``manifest.py``). Once every file is renamed, the
+publish moves the marker to ``<target>/_manifests/<run_id>.json``, so a
+publish that a crash cut short and :func:`clear_staging` finished
+records its manifest too. A run without one (published before
+manifests, or whose marker is empty) leaves its files uncovered, and
+the idempotency gate scans them.
 """
 
 from __future__ import annotations
 
+import json
+import os
 import sys
 
 from pyspark.sql import DataFrame
@@ -40,8 +52,11 @@ from pyspark.sql import DataFrame
 __all__ = [
     "write_batch",
     "staging_path",
+    "mark_publishing",
     "publish_staged",
     "clear_staging",
+    "listed_files",
+    "read_manifests",
     "copy_into_sql",
     "execute_copy_into",
     "NDJSON_TS_FMT",
@@ -58,6 +73,8 @@ UNPUBLISHED_DIR = "_unpublished"
 # written into a staged run before its first rename: the run verified,
 # so a publish cut short is finished rather than discarded
 PUBLISHING_MARKER = "_PUBLISHING"
+# one ``<run_id>.json`` per published run that carried a manifest
+MANIFEST_DIR = "_manifests"
 
 
 def write_batch(
@@ -117,33 +134,138 @@ def _hidden(name: str) -> bool:
     )
 
 
-def _listed_files(fs, root, prefix: str = "") -> list[str]:
+def _local_path(fs, jpath) -> str | None:
+    """``jpath`` as a path of the local filesystem, or ``None`` when it
+    lives elsewhere. Locally the listings and the manifests' reads and
+    writes use Python's ``os`` calls: Hadoop's would cost a Py4J round
+    trip per file, and its ``create`` spawns a ``chmod`` process per
+    file (and per checksum file)."""
+    return jpath.toUri().getPath() if fs.getScheme() == "file" else None
+
+
+def _listed_files(fs, root) -> list[tuple[str, int]]:
     """The files under ``root`` that Spark's listing reads, as paths
-    relative to ``root``. ``listStatus`` level by level: a recursive
-    ``listFiles`` builds a ``LocatedFileStatus`` per file, which on the
-    local filesystem spawns a process to read its permissions."""
-    files = []
-    for status in fs.listStatus(root):
-        name = status.getPath().getName()
-        if _hidden(name):
+    relative to ``root`` with their sizes. Elsewhere than on the local
+    filesystem, ``listStatus`` level by level: a recursive ``listFiles``
+    builds a ``LocatedFileStatus`` per file, which on the local
+    filesystem spawns a process to read its permissions."""
+
+    def local(path, prefix):
+        with os.scandir(path) as entries:
+            for entry in entries:
+                if _hidden(entry.name):
+                    continue
+                if entry.is_dir():
+                    yield from local(entry.path, f"{prefix}{entry.name}/")
+                else:
+                    yield prefix + entry.name, entry.stat().st_size
+
+    def hadoop(path, prefix):
+        for status in fs.listStatus(path):
+            name = status.getPath().getName()
+            if _hidden(name):
+                continue
+            if status.isDirectory():
+                yield from hadoop(status.getPath(), f"{prefix}{name}/")
+            else:
+                yield prefix + name, status.getLen()
+
+    path = _local_path(fs, root)
+    return list(local(path, "") if path is not None else hadoop(root, ""))
+
+
+def listed_files(spark, path: str) -> dict[str, int]:
+    """Size of every file Spark's listing reads under ``path``, keyed by
+    its path relative to ``path``; empty when ``path`` does not exist."""
+    fs, root = _hadoop_path(spark, path)
+    return dict(_listed_files(fs, root)) if fs.exists(root) else {}
+
+
+def _write_json(fs, path, value) -> None:
+    data = json.dumps(value).encode()
+    local = _local_path(fs, path)
+    if local is not None:
+        with open(local, "wb") as out:
+            out.write(data)
+        return
+    out = fs.create(path, True)
+    try:
+        out.write(bytearray(data))
+    finally:
+        out.close()
+
+
+def _loads(data: bytes):
+    """The JSON value in ``data``; ``None`` when it is empty or torn (a
+    writer cut short)."""
+    try:
+        return json.loads(data) if data else None
+    except ValueError:
+        return None
+
+
+def mark_publishing(spark, staged: str, manifest: dict) -> None:
+    """Mark a verified staged run for publishing: its marker holds
+    ``manifest`` plus the run's ``files`` (path relative to the target
+    and size), listed before any of them moves."""
+    fs, src = _hadoop_path(spark, staged)
+    Path = spark._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001
+    files = [{"path": rel, "size": size} for rel, size in _listed_files(fs, src)]
+    _write_json(fs, Path(src, PUBLISHING_MARKER), dict(manifest, files=files))
+
+
+def record_manifest(spark, fs, marker, target: str) -> None:
+    """Move a published run's marker to ``<target>/_manifests/<run_id>.json``
+    if it carries a manifest; an empty marker records none."""
+    if fs.getFileStatus(marker).getLen() == 0:
+        return
+    run_id = marker.getParent().getName()
+    Path = spark._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001
+    dst = Path(f"{target.rstrip('/')}/{MANIFEST_DIR}/{run_id}.json")
+    fs.mkdirs(dst.getParent())
+    if not fs.rename(marker, dst):
+        raise RuntimeError(f"publish: could not record manifest {dst}")
+
+
+def read_manifests(spark, target: str) -> list[dict]:
+    """The manifests of ``target``'s published runs, one small read
+    each; a torn one is left out, so its files count as uncovered."""
+    fs, root = _hadoop_path(spark, f"{target.rstrip('/')}/{MANIFEST_DIR}")
+    if not fs.exists(root):
+        return []
+    Path = spark._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001
+    local = _local_path(fs, root)
+    manifests = []
+    for name, _size in _listed_files(fs, root):
+        if not name.endswith(".json") or "/" in name:
             continue
-        if status.isDirectory():
-            files += _listed_files(fs, status.getPath(), f"{prefix}{name}/")
+        if local is not None:
+            with open(os.path.join(local, name), "rb") as stream:
+                manifest = _loads(stream.read())
         else:
-            files.append(prefix + name)
-    return files
+            stream = fs.open(Path(root, name))
+            try:
+                manifest = _loads(bytes(stream.readAllBytes()))
+            finally:
+                stream.close()
+        if isinstance(manifest, dict) and "files" in manifest:
+            manifests.append(manifest)
+    return manifests
 
 
 def publish_staged(spark, staged: str, target: str) -> int:
     """Move a staged run's data files into ``target``, each to the same
     path relative to the target as it had under ``staged`` (partition
-    directories included), then delete ``staged``. What Spark's listing
-    skips (``_SUCCESS``; checksum files, which the rename carries
-    along) is not published. Returns the number of files moved."""
+    directories included), record its manifest (:func:`record_manifest`),
+    then delete ``staged``. What Spark's listing skips (``_SUCCESS``;
+    checksum files, which the rename carries along) is not published.
+    Returns the number of files moved."""
     fs, src = _hadoop_path(spark, staged)
     Path = spark._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001
-    fs.create(Path(src, PUBLISHING_MARKER), True).close()
-    files = _listed_files(fs, src)
+    marker = Path(src, PUBLISHING_MARKER)
+    if not fs.exists(marker):
+        fs.create(marker, True).close()
+    files = [rel for rel, _ in _listed_files(fs, src)]
     dst_root = Path(target)
     made = set()
     for rel in files:
@@ -154,6 +276,7 @@ def publish_staged(spark, staged: str, target: str) -> int:
             made.add(parent)
         if not fs.rename(Path(src, rel), dst):
             raise RuntimeError(f"publish: could not rename {staged}/{rel} to {dst}")
+    record_manifest(spark, fs, marker, target)
     fs.delete(src, True)
     return len(files)
 

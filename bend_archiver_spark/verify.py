@@ -10,14 +10,16 @@ Parity with the reference's correctness contract:
   aggregates distributively (one partial agg, no sort, scales to any
   partition count). The count and the fingerprint of one side come
   from the same aggregate, so fingerprinting the target costs no scan
-  beyond its count.
+  beyond its count; :func:`verify_aggregate` adds the aggregates a run
+  manifest records (column ranges over every row) to that one pass.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.errors import AnalysisException
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 __all__ = [
@@ -25,6 +27,7 @@ __all__ = [
     "idempotency_gate",
     "count_and_fingerprint",
     "content_fingerprint",
+    "verify_aggregate",
 ]
 
 
@@ -75,3 +78,35 @@ def content_fingerprint(df: DataFrame) -> int:
     Upgrade over the reference's count-only check — detects value
     corruption, not just cardinality drift."""
     return count_and_fingerprint(df)[1]
+
+
+def verify_aggregate(
+    df: DataFrame,
+    predicate: str | None,
+    columns: list[str],
+    fingerprint: bool,
+    extra: list[Column] = (),
+) -> tuple[int, int | None, list]:
+    """ONE aggregate over ``df``: the number of rows matching
+    ``predicate``, with ``fingerprint`` their fingerprint over
+    ``columns`` (as :func:`count_and_fingerprint` of the filtered rows;
+    ``None`` without), and the values of the ``extra`` aggregates over
+    every row. A predicate ``df`` cannot analyze (columns degraded by
+    ``reference_compat``) scopes nothing, so every row counts."""
+
+    def aggregate(cond):
+        def scoped(value):
+            return value if cond is None else F.when(cond, value)
+
+        aggs = [F.count(scoped(F.lit(1)))]
+        if fingerprint:
+            aggs.append(F.sum(scoped(F.xxhash64(*columns).cast("decimal(38,0)"))))
+        return df.agg(*aggs, *extra), len(aggs)
+
+    try:
+        frame, n = aggregate(F.expr(predicate) if predicate else None)
+    except AnalysisException:
+        frame, n = aggregate(None)
+    row = frame.first()
+    fp = (int(row[1]) if row[1] is not None else 0) if fingerprint else None
+    return int(row[0]), fp, list(row[n:])

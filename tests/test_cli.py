@@ -110,6 +110,31 @@ class TestCliContract:
             set(p) == {"start_s", "seconds", "rows"} for p in phases.values()
         )
 
+    def test_archive_prints_what_the_gate_read(
+        self, cli_spark, sf_dir, tmp_path, capsys
+    ):
+        """The phases line also carries the gate's reads: a second
+        archive of a key-disjoint slice reads the first run's manifest,
+        lists its files and scans none of them."""
+        source = ["--source-path", f"{sf_dir}/lineitem.parquet"]
+        gates = []
+        for where in ("l_orderkey < 1000", "l_orderkey >= 1000"):
+            conf = _write_conf(
+                tmp_path, tmp_path / "out", sourceWhereCondition=where
+            )
+            assert cli.main(["--conf", conf, *source]) == 0
+            lines = [
+                json.loads(l)
+                for l in capsys.readouterr().out.splitlines()
+                if l.startswith("{")
+            ]
+            gates.append(lines[1]["gate"])
+        assert gates[0] == {
+            "manifests": 0, "files": 0, "scanned": 0, "runs_skipped": 0,
+        }
+        assert gates[1]["manifests"] == gates[1]["runs_skipped"] == 1
+        assert gates[1]["files"] > 0 and gates[1]["scanned"] == 0
+
     def test_delete_after_sync_on_file_source_fails(
         self, cli_spark, sf_dir, tmp_path, capsys
     ):

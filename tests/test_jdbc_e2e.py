@@ -17,7 +17,7 @@ from bend_archiver_spark.config import Config
 from bend_archiver_spark.job import JdbcArchiveJob
 
 N_ROWS = 200
-PINNED_JDBC_JOBS = 8
+PINNED_JDBC_JOBS = 5
 
 
 @pytest.fixture()
@@ -456,11 +456,13 @@ class TestStagedJdbcRun:
 # the same Derby files): argv = db, target, mode, flag file. ``kill``
 # stalls the write inside the task that holds ID 150, after an earlier
 # task has written its file, until the test kills that process group;
-# ``corrupt`` alters one written value so the fingerprints differ.
+# ``corrupt`` alters one written value so the fingerprints differ;
+# ``publish`` stalls after the publish's renames, before the run's
+# manifest is recorded.
 _CRASH_CHILD = r"""
 import sys, time
 from pyspark.sql import functions as F
-from bend_archiver_spark import job
+from bend_archiver_spark import job, sink
 from bend_archiver_spark.config import Config
 from bend_archiver_spark.session import get_spark
 
@@ -478,12 +480,18 @@ def stall_at_150(i):
 def write(df, *a, **kw):
     if mode == "kill":
         df = df.filter(stall_at_150("ID"))
-    else:
+    elif mode == "corrupt":
         df = df.withColumn(
             "V", F.when(F.col("ID") == 42, F.col("V") + 1).otherwise(F.col("V")))
     return real_write(df, *a, **kw)
 
+def stall_before_manifest(*a):
+    open(flag, "w").close()
+    time.sleep(60)
+
 job.write_batch = write
+if mode == "publish":
+    sink.record_manifest = stall_before_manifest
 cfg = Config(database_type="derby", source_db=db, source_table="TESTTAB",
              source_split_key="ID", batch_size=50, target_path=target,
              target_format="parquet", verify_fingerprint=True,
@@ -613,6 +621,53 @@ class TestCrashSafety:
         assert not os.path.exists(os.path.join(tgt, "_staging"))
         assert _source_count(spark, derby) == N_ROWS
         self._rerun_archives_exactly_once(spark, derby, tgt)
+        shutil.rmtree(tgt, ignore_errors=True)
+
+
+    def test_driver_killed_between_publish_and_manifest(
+        self, spark, derby, tmp_path, release_heap
+    ):
+        """Every file is renamed into the target, the manifest not yet
+        recorded: the rows are archived once, so a rerun finishes the
+        publish, records the manifest from the staged run's marker and
+        refuses; a gate over other keys then skips the run."""
+        import glob
+        import json
+        import os
+        import signal
+        import time
+
+        from bend_archiver_spark.job import check_idempotency_gate
+
+        tgt = str(tmp_path / "tgt_publish")
+        proc, flag, log = self._child(spark, derby, tgt, "publish", tmp_path)
+        try:
+            deadline = time.monotonic() + 180
+            while not flag.exists():
+                assert proc.poll() is None, (tmp_path / "child_publish.log").read_text()
+                assert time.monotonic() < deadline
+                time.sleep(0.1)
+        finally:
+            self._end(proc, log)
+        assert proc.returncode == -signal.SIGKILL
+        [marker] = glob.glob(os.path.join(tgt, "_staging", "*", "_PUBLISHING"))
+        assert json.loads(open(marker).read())["rows"] == N_ROWS
+        assert not os.path.exists(os.path.join(tgt, "_manifests"))
+        assert spark.read.parquet(tgt).count() == N_ROWS
+
+        cfg = _cfg(derby, tgt, verify_fingerprint=True, delete_after_sync=True)
+        with pytest.raises(RuntimeError, match="idempotency gate"):
+            JdbcArchiveJob(spark, cfg).run()
+        back = spark.read.parquet(tgt)
+        assert back.count() == back.select("ID").distinct().count() == N_ROWS
+        assert not os.path.exists(os.path.join(tgt, "_staging"))
+        [manifest] = glob.glob(os.path.join(tgt, "_manifests", "*.json"))
+        assert json.loads(open(manifest).read())["ranges"]["ID"] == [1, N_ROWS]
+        stats = check_idempotency_gate(
+            spark, _cfg(derby, tgt, source_where_condition="ID > 200")
+        )
+        assert stats["runs_skipped"] == 1 and stats["scanned"] == 0
+        assert _source_count(spark, derby) == N_ROWS  # never deleted
         shutil.rmtree(tgt, ignore_errors=True)
 
 
@@ -807,11 +862,12 @@ class TestArchiveJobSparkJobs:
         self, spark, derby, tmp_path, spark_jobs
     ):
         """Pins the Spark jobs of a fingerprinted, deleting archive into
-        an existing target: gate schema inference + gate count, the
-        write, one target pass for count and fingerprint, the JDBC
-        fingerprint re-read. Probes, the source count and the delete
-        run on the driver's connection; the post-write target read
-        reuses the gate's schema."""
+        an existing target: the write, one pass over the staged files
+        for count and fingerprint, the JDBC fingerprint re-read. The
+        gate runs none: the first run's manifest records ID in [1, 100],
+        which ``ID > 100`` cannot meet. Probes, the source count and the
+        delete run on the driver's connection; the staged files are
+        read with the written schema."""
         tgt = str(tmp_path / "tgt_jobs")
         first = _cfg(derby, tgt, source_where_condition="ID <= 100")
         assert JdbcArchiveJob(spark, first).run().verify.is_correct

@@ -15,7 +15,7 @@ from bend_archiver_spark.verify import (
     count_and_fingerprint,
 )
 
-PINNED_FILE_JOBS = 12
+PINNED_FILE_JOBS = 11
 
 
 def _cfg(target, **kw):
@@ -168,10 +168,12 @@ class TestFileArchiveJob:
         self, spark, sf_dir, tmp_path, spark_jobs
     ):
         """Pins the Spark jobs of a fingerprinted archive into an
-        existing target: the target is read once for the gate and once
-        for a fused count + fingerprint (reusing the gate's schema), and
-        the source fingerprint hashes the filtered rows without
-        re-running the range-partition sampling and shuffle."""
+        existing target: the gate counts the first run's files (a double
+        column's predicate cannot skip them) with the schema its
+        manifest records, the staged files are read once with the
+        written schema for a fused count + fingerprint, and the source
+        fingerprint hashes the filtered rows without re-running the
+        range-partition sampling and shuffle."""
         tgt = str(tmp_path / "fp_jobs")
         li = load_table(spark, sf_dir, "lineitem")
         first = _cfg(tgt, source_where_condition="l_quantity <= 25")
@@ -518,6 +520,396 @@ class TestStagedRun:
         report = FileArchiveJob(spark, _cfg(tgt), li).run()
         assert report.verify.is_correct
         assert spark.read.parquet(tgt).count() == report.source_rows
+
+
+def _keyed(spark, n=2000):
+    """``n`` rows keyed 0..n-1 with an integral, string, double,
+    timestamp (one a minute from 2024-01-01 UTC) and date column."""
+    return spark.range(0, n, 1, 4).selectExpr(
+        "id AS k",
+        "id % 7 AS j",
+        "CAST(id % 3 AS INT) AS p",
+        "CAST(id AS STRING) AS s",
+        "CAST(id AS DOUBLE) AS x",
+        "timestamp_seconds(1704067200 + id * 60) AS ts",
+        "date_add(DATE'2024-01-01', CAST(id DIV 100 AS INT)) AS d",
+    )
+
+
+def _keyed_cfg(target, where, **kw):
+    return _cfg(
+        target, source_table="keyed", source_split_key="k",
+        source_where_condition=where, **kw,
+    )
+
+
+def _slice(lo, hi):
+    return f"k >= {lo} AND k < {hi}"
+
+
+def _gate(spark, target, where):
+    from bend_archiver_spark.job import check_idempotency_gate
+
+    return check_idempotency_gate(spark, _keyed_cfg(target, where))
+
+
+class TestManifestGate:
+    """Each verified publish records a manifest with its files and the
+    exact ranges of its integral, date and timestamp columns; the gate
+    scans only uncovered files and runs whose ranges can meet the
+    predicate, and refuses exactly as the full scan would."""
+
+    @pytest.fixture(scope="class")
+    def one_run(self, spark, tmp_path_factory):
+        """A target holding one run: ``k`` in [0, 100)."""
+        tgt = str(tmp_path_factory.mktemp("gate") / "one_run")
+        report = FileArchiveJob(
+            spark, _keyed_cfg(tgt, _slice(0, 100)), _keyed(spark)
+        ).run()
+        assert report.verify.is_correct and report.source_rows == 100
+        return tgt
+
+    def test_manifest_records_files_and_exact_ranges(self, spark, one_run):
+        import json
+        import os
+
+        [name] = [n for n in os.listdir(f"{one_run}/_manifests")
+                  if n.endswith(".json")]
+        manifest = json.loads(open(f"{one_run}/_manifests/{name}").read())
+        assert manifest["run_id"] == name[:-len(".json")]
+        assert manifest["predicate"] == _slice(0, 100)
+        assert manifest["rows"] == 100
+        published = {
+            f: os.path.getsize(f"{one_run}/{f}") for f in os.listdir(one_run)
+            if f.endswith(".parquet")
+        }
+        assert {f["path"]: f["size"] for f in manifest["files"]} == published
+        minute = 60 * 1_000_000
+        start = 1704067200 * 1_000_000
+        assert manifest["ranges"] == {
+            "k": [0, 99], "j": [0, 6], "p": [0, 2],
+            "ts": [start, start + 99 * minute],
+            "d": [19723, 19723],  # 2024-01-01 in days since the epoch
+        }
+        assert [f["name"] for f in manifest["schema"]["fields"]] == [
+            "k", "j", "p", "s", "x", "ts", "d"
+        ]
+
+    @pytest.mark.parametrize("where, skipped", [
+        ("k >= 100", True),
+        ("k > 99", True),
+        ("k < 0", True),
+        ("k >= -5 AND k < 0", True),
+        ("K >= 100", True),  # Spark resolves names case-insensitively
+        ("k >= 100 and j = 3", True),
+        ("j = 3 AND k >= 100", True),
+        ("d > '2024-01-01'", True),
+        ("d >= '2024-01-02 00:00:00'", True),
+        ("ts >= '2024-01-01 01:40:00'", True),
+        ("ts > '2024-01-01 01:39:00'", True),
+        ("ts < '2024-01-01'", True),
+        ("k >= 99", False),
+        ("k = 99", False),
+        ("k <= 0", False),
+        ("j = 3 AND k < 100", False),
+        ("d = '2024-01-01 23:59:59'", False),  # the cast keeps the date
+        ("ts >= '2024-01-01 01:39:00'", False),
+        ("ts <= '2024-01-01 00:00:00.000001'", False),
+        ("s = '5'", False),
+    ])
+    def test_in_grammar_predicates_skip_only_runs_they_miss(
+        self, spark, one_run, where, skipped
+    ):
+        if skipped:
+            stats = _gate(spark, one_run, where)
+            assert stats["scanned"] == 0 and stats["runs_skipped"] == 1
+        else:
+            with pytest.raises(RuntimeError, match="idempotency"):
+                _gate(spark, one_run, where)
+
+    @pytest.mark.parametrize("where", [
+        "k >= 1000 OR k < 5",
+        "NOT k >= 100",
+        "k BETWEEN 50 AND 60",
+        "k IN (1, 2)",
+        "abs(k) < 5",
+        "CAST(k AS INT) < 5",
+        "5 > k",
+        "k <= j",
+        "k < 5L",
+        "k < 5.5",
+        "k < 1e1",
+        "x < 5",
+        "s < '5'",
+        "k = 5 AND (k >= 1000 OR k < 10)",
+        "k <> 1000",
+        "ts < '2024-01-01T01:00:00'",
+        "ts < TIMESTAMP '2024-01-01 01:00:00'",
+        "d < date_add('2024-01-01', 1)",
+        "k >= 1000 OR true",
+    ])
+    def test_shapes_outside_the_grammar_scan_and_refuse(
+        self, spark, one_run, where
+    ):
+        """Each predicate holds for some archived rows, and a reading
+        of it as ``AND``-ed intervals would skip the run: the gate
+        scans it and refuses."""
+        with pytest.raises(RuntimeError, match="idempotency"):
+            _gate(spark, one_run, where)
+
+    def test_key_disjoint_gate_reads_no_data_file(
+        self, spark, tmp_path, spark_jobs
+    ):
+        """For key-disjoint slices the gate reads no target data file
+        and runs no Spark job at 1, 5 and 10 published runs; it reads
+        the manifests and lists the files instead."""
+        from bend_archiver_spark.job import check_idempotency_gate
+
+        tgt = str(tmp_path / "slices")
+        src = _keyed(spark)
+        for n in range(1, 11):
+            report = FileArchiveJob(
+                spark, _keyed_cfg(tgt, _slice(100 * (n - 1), 100 * n)), src
+            ).run()
+            assert report.verify.is_correct and report.source_rows == 100
+            if n in (1, 5, 10):
+                cfg = _keyed_cfg(tgt, _slice(100 * n, 100 * (n + 1)))
+                stats, jobs = spark_jobs(
+                    lambda: check_idempotency_gate(spark, cfg)
+                )
+                assert jobs == 0
+                assert stats["scanned"] == 0
+                assert stats["manifests"] == stats["runs_skipped"] == n
+                assert stats["files"] >= n
+        # a repeated slice is still refused
+        with pytest.raises(RuntimeError, match="idempotency"):
+            FileArchiveJob(spark, _keyed_cfg(tgt, _slice(400, 500)), src).run()
+
+    def test_session_time_zone_reads_the_literal(self, spark, one_run):
+        """A timestamp literal is read in ``spark.sql.session.timeZone``,
+        as Spark's comparison reads it: four hours before midnight in Los
+        Angeles is inside the run's UTC range, though the same wall time
+        in UTC is not."""
+        where = "ts >= '2023-12-31 16:30:00' AND ts < '2023-12-31 17:00:00'"
+        assert _gate(spark, one_run, where)["scanned"] == 0
+        spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+        try:
+            with pytest.raises(RuntimeError, match="idempotency"):
+                _gate(spark, one_run, where)
+        finally:
+            spark.conf.set("spark.sql.session.timeZone", "UTC")
+
+    def test_confgen_time_windows(self, spark, tmp_path):
+        """Rolling windows as ``confgen`` writes them (``key >= 'lo' and
+        key < 'hi'``, lower-case ``and``) over a timestamp and a date
+        key: the next window skips the archived one, the same window is
+        refused."""
+        from datetime import datetime
+
+        from bend_archiver_spark.confgen import generate_archive_config
+
+        src = _keyed(spark)
+        for key, fmt in (("ts", "parquet"), ("d", "orc")):
+            tgt = str(tmp_path / f"windows_{key}")
+
+            def window(day, key=key):
+                return generate_archive_config(
+                    "db", "keyed", "db.keyed", time_key=key, timeunit="day",
+                    now=datetime(2024, 1, day),
+                )["sourceWhereCondition"]
+
+            assert window(3).startswith(f"{key} >= '2024-01-02 00:00:00' and")
+            cfg = _keyed_cfg(tgt, window(2), target_format=fmt)
+            assert FileArchiveJob(spark, cfg, src).run().verify.is_correct
+            nxt = FileArchiveJob(
+                spark, _keyed_cfg(tgt, window(3), target_format=fmt), src
+            ).run()
+            assert nxt.verify.is_correct and nxt.source_rows > 0
+            assert nxt.details["gate"]["scanned"] == 0
+            assert nxt.details["gate"]["runs_skipped"] == 1
+            with pytest.raises(RuntimeError, match="idempotency"):
+                FileArchiveJob(spark, cfg, src).run()
+
+    def test_files_written_before_manifests_are_scanned(self, spark, tmp_path):
+        tgt = str(tmp_path / "legacy")
+        src = _keyed(spark)
+        write_batch(src.filter(_slice(0, 100)), tgt, "parquet")
+        stats = _gate(spark, tgt, _slice(100, 200))
+        assert stats["manifests"] == 0 and stats["scanned"] == stats["files"] > 0
+        with pytest.raises(RuntimeError, match="idempotency"):
+            _gate(spark, tgt, _slice(50, 150))
+        # a manifested run beside them skips, the uncovered files do not
+        FileArchiveJob(spark, _keyed_cfg(tgt, _slice(200, 300)), src).run()
+        stats = _gate(spark, tgt, _slice(300, 400))
+        assert stats["runs_skipped"] == 1
+        assert 0 < stats["scanned"] < stats["files"]
+        with pytest.raises(RuntimeError, match="idempotency"):
+            _gate(spark, tgt, _slice(0, 10))
+
+    def test_compacted_target_is_scanned(self, spark, tmp_path):
+        """Compaction rewrites every file (and drops the manifests with
+        the old directory): nothing is covered, so all is scanned."""
+        from bend_archiver_spark.maintenance import compact_files
+
+        tgt = str(tmp_path / "compacted")
+        src = _keyed(spark)
+        for lo in (0, 100):
+            FileArchiveJob(spark, _keyed_cfg(tgt, _slice(lo, lo + 100)), src).run()
+        assert _gate(spark, tgt, _slice(200, 300))["scanned"] == 0
+        compact_files(spark, tgt)
+        stats = _gate(spark, tgt, _slice(200, 300))
+        assert stats["scanned"] == stats["files"] > 0
+        with pytest.raises(RuntimeError, match="idempotency"):
+            _gate(spark, tgt, _slice(150, 250))
+
+    def test_file_rewritten_in_place_is_scanned(self, spark, tmp_path):
+        """A published file replaced by one of another size is no longer
+        the file its manifest names: its new rows are counted."""
+        import glob
+        import os
+        import shutil
+
+        tgt = str(tmp_path / "rewritten")
+        src = _keyed(spark)
+        FileArchiveJob(spark, _keyed_cfg(tgt, _slice(0, 100)), src).run()
+        victim = sorted(glob.glob(f"{tgt}/*.parquet"))[0]
+        other = str(tmp_path / "other")
+        src.filter(_slice(100, 300)).coalesce(1).write.parquet(other)
+        [new] = glob.glob(f"{other}/*.parquet")
+        assert os.path.getsize(new) != os.path.getsize(victim)
+        os.remove(victim)
+        crc = os.path.join(tgt, "." + os.path.basename(victim) + ".crc")
+        if os.path.exists(crc):
+            os.remove(crc)
+        shutil.copyfile(new, victim)
+        with pytest.raises(RuntimeError, match="idempotency"):
+            _gate(spark, tgt, _slice(100, 200))
+
+    def test_partitioned_target(self, spark, tmp_path):
+        """A partitioned target's candidate files are read with the
+        partition columns (``basePath``), so a predicate on one works."""
+        tgt = str(tmp_path / "parts")
+        src = _keyed(spark)
+        for lo in (0, 100):
+            report = FileArchiveJob(
+                spark,
+                _keyed_cfg(tgt, _slice(lo, lo + 100), target_partition_by=["p"]),
+                src,
+            ).run()
+            assert report.verify.is_correct
+        assert _gate(spark, tgt, _slice(200, 300) + " AND p = 1")["scanned"] == 0
+        # only the second run's files are candidates; its one row with
+        # k >= 199 has p = 1, so the gate scans them and passes
+        report = FileArchiveJob(
+            spark,
+            _keyed_cfg(tgt, "k >= 199 AND k < 250 AND p = 0",
+                       target_partition_by=["p"]),
+            src,
+        ).run()
+        assert report.verify.is_correct and report.source_rows == 17
+        stats = report.details["gate"]
+        assert stats["runs_skipped"] == 1 and 0 < stats["scanned"] < stats["files"]
+        with pytest.raises(RuntimeError, match="idempotency"):
+            _gate(spark, tgt, _slice(150, 250) + " AND p = 1")
+        assert spark.read.parquet(tgt).filter("p = 1").count() == 67
+        assert spark.read.parquet(tgt).count() == 217
+
+    def test_unchecked_run_records_no_ranges(self, spark, tmp_path):
+        """With the gate off the verify reads published and staged rows
+        together, so the run's ranges are not its own: its manifest
+        carries none and its files are always scanned."""
+        tgt = str(tmp_path / "unchecked_ranges")
+        src = _keyed(spark)
+        FileArchiveJob(spark, _keyed_cfg(tgt, _slice(0, 100)), src).run(
+            check_idempotency=False
+        )
+        stats = _gate(spark, tgt, _slice(100, 200))
+        assert stats["manifests"] == 1 and stats["scanned"] == stats["files"]
+
+    def test_hadoop_filesystem_calls_match_the_local_ones(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """Off the local filesystem the listing, the marker write and
+        the manifest reads go through Hadoop's ``FileSystem``: forced
+        here, they record and read the same manifest."""
+        from bend_archiver_spark import sink
+
+        tgt = str(tmp_path / "hadoop_io")
+        src = _keyed(spark)
+        FileArchiveJob(spark, _keyed_cfg(tgt, _slice(0, 100)), src).run()
+        local = (sink.listed_files(spark, tgt), sink.read_manifests(spark, tgt))
+        monkeypatch.setattr(sink, "_local_path", lambda fs, path: None)
+        assert (sink.listed_files(spark, tgt), sink.read_manifests(spark, tgt)) == local
+        FileArchiveJob(spark, _keyed_cfg(tgt, _slice(100, 200)), src).run()
+        stats = _gate(spark, tgt, _slice(200, 300))
+        assert stats["manifests"] == stats["runs_skipped"] == 2
+        assert stats["scanned"] == 0
+
+    def test_all_null_column_never_matches(self, spark, tmp_path):
+        tgt = str(tmp_path / "nulls")
+        src = _keyed(spark).selectExpr("*", "CAST(NULL AS BIGINT) AS n")
+        FileArchiveJob(spark, _keyed_cfg(tgt, _slice(0, 100)), src).run()
+        assert _gate(spark, tgt, "n >= 0 AND k >= 0")["runs_skipped"] == 1
+
+
+class TestConjuncts:
+    def test_grammar(self):
+        from bend_archiver_spark.manifest import conjuncts
+
+        assert conjuncts(None) == [] and conjuncts("  ") == []
+        assert conjuncts("O_ORDERKEY >= 0 AND O_ORDERKEY < 5000") == [
+            ("O_ORDERKEY", ">=", ("int", 0)), ("O_ORDERKEY", "<", ("int", 5000))
+        ]
+        assert conjuncts("`a b`=-3 and t<='2024-01-02 03:04:05.5'") == [
+            ("a b", "=", ("int", -3)),
+            ("t", "<=", ("str", "2024-01-02 03:04:05.5")),
+        ]
+        for bad in ("k >= 0 AND", "AND k > 0", "k > 0 AND AND k < 3",
+                    "k > 0x10", "k > 1_000", "null = 3", "k > 'it''s'",
+                    "k > 0;", "k > 0 -- c", "k > \"5\"", "t.k > 0",
+                    "k > 1" + "0" * 38):
+            assert conjuncts(bad) is None, bad
+
+
+class TestNdjsonTarget:
+    @pytest.mark.parametrize("fmt", ["parquet", "orc", "ndjson"])
+    def test_fingerprint_matches_with_timestamp_rows(
+        self, spark, sf_dir, tmp_path, fmt
+    ):
+        """The staged files are read back with the written schema, so an
+        ``ndjson`` target's timestamps are compared as timestamps, not
+        as the strings JSON inference gives."""
+        orders = load_table(spark, sf_dir, "orders")
+        cfg = _cfg(
+            str(tmp_path / fmt), source_table="orders",
+            source_split_key="o_orderkey",
+            source_where_condition="o_orderkey <= 3000",
+            target_format=fmt, verify_fingerprint=True,
+        )
+        verify = FileArchiveJob(spark, cfg, orders).run().verify
+        assert verify.source_fingerprint == 203934698655393158936
+        assert verify.is_correct
+
+    def test_typed_predicates_on_ndjson_timestamps(
+        self, spark, sf_dir, tmp_path
+    ):
+        """Five orders fall on 1995-06-19 00:00:00. As strings,
+        '1995-06-19T00:00:00.000000Z' is greater than '1995-06-19
+        00:00:00': a string-typed verify and gate would miss those rows
+        on one side of the boundary and count them on the other."""
+        orders = load_table(spark, sf_dir, "orders")
+        tgt = str(tmp_path / "ndjson_ts")
+        day = "'1995-06-19 00:00:00'"
+        for where in (f"o_orderdate <= {day}", f"o_orderdate > {day}"):
+            cfg = _cfg(
+                tgt, source_table="orders", source_split_key="o_orderkey",
+                source_where_condition=where, target_format="ndjson",
+            )
+            report = FileArchiveJob(spark, cfg, orders).run()
+            assert report.verify.is_correct, where
+        assert report.source_rows + orders.filter(
+            f"o_orderdate <= {day}"
+        ).count() == orders.count()
 
 
 class TestCountAndFingerprint:
