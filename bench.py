@@ -280,9 +280,9 @@ def _compilations(spark) -> int:
 
 
 def run_archive_sync(spark, sf_dir: str) -> tuple[float, ArchiveReport]:
-    """One archive_sync run into a fresh target (the job appends, so a
-    reused target would double its rows); returns (wall, report) and
-    fails unless the archive verifies."""
+    """One archive_sync run into a fresh target (a reused one already
+    holds the predicate's rows, so its gate would refuse the run);
+    returns (wall, report) and fails unless the archive verifies."""
     target = tempfile.mkdtemp(prefix="bench_archive_")
     shutil.rmtree(target, ignore_errors=True)
     try:
@@ -290,7 +290,7 @@ def run_archive_sync(spark, sf_dir: str) -> tuple[float, ArchiveReport]:
         cfg = Config(**ARCHIVE_SYNC, target_path=target)
         job = FileArchiveJob(spark, cfg, li)
         t0 = time.monotonic()
-        report = job.run(check_idempotency=False)
+        report = job.run()
         wall = time.monotonic() - t0
     finally:
         shutil.rmtree(target, ignore_errors=True)

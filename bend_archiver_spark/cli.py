@@ -70,7 +70,6 @@ def _parse_args(argv: list[str] | None) -> argparse.Namespace:
     p.add_argument("--source-format", default="parquet")
     p.add_argument("--target-path", default="", help="override target path")
     p.add_argument("--dry-run", action="store_true", help="plan + count only, no write")
-    p.add_argument("--no-idempotency-check", action="store_true")
     p.add_argument("--sf-table", default="", help="testdata table name (uses nano-ts-aware loader)")
     return p.parse_args(argv)
 
@@ -198,9 +197,7 @@ def _archive_main(argv: list[str] | None = None) -> int:
             print(json.dumps({"dry_run": True, "matching_rows": n}))
         else:
             try:
-                report = job.run(
-                    check_idempotency=not args.no_idempotency_check
-                )
+                report = job.run()
             except JobCancelled:
                 # a RuntimeError subclass — must reach the outer
                 # handler for the 128+signum exit, not the generic
@@ -208,7 +205,7 @@ def _archive_main(argv: list[str] | None = None) -> int:
                 raise
             except RuntimeError as e:
                 # a swallowed JobCancelled can come back re-wrapped
-                # (e.g. sink.py's delta guard chains `from e`) — with
+                # (a handler that raises RuntimeError `from e`) — with
                 # a recorded signal this is a cancellation, not a job
                 # failure; re-raise so the outer handlers exit
                 # 128+signum

@@ -84,7 +84,7 @@ class Config:
 
     # Engine-local extensions (not in the reference config)
     target_path: str = ""  # file/Delta sink location (alt. to databend_table)
-    target_format: str = "parquet"  # parquet | delta | ndjson | jdbc
+    target_format: str = "parquet"  # parquet | orc | ndjson
     # hive-style layout columns for the sink (e.g. a date column): at
     # scale this is what makes later reads partition-prunable
     target_partition_by: list[str] = field(default_factory=list)

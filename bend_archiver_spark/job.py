@@ -18,11 +18,13 @@ probes run as plain SQL on a driver-side connection (sources/jdbc.py).
 A run writes into ``<target>/_staging/<run_id>/`` (``sink.staging_path``),
 which readers of the target do not list, and publishes only a verified
 run: ``FileSystem.rename`` of the staged files into the target, then
-``COPY INTO`` if set, then delete-after-sync. A run that is refused,
-fails verification or raises before its publish publishes nothing and
-removes its staging directory; a crashed run leaves one, which the
-next run on the target removes (``sink.clear_staging``), as it
-finishes a publish that failed or was cut short. A cancellation still
+``COPY INTO`` if set, then delete-after-sync. Compaction
+(``maintenance.compact_files``) changes a target through the same
+staging, verify and publish. A run that is refused, fails verification
+or raises before its publish publishes nothing and removes its staging
+directory; a crashed run leaves one, which the next run on the target
+removes (``sink.clear_staging``), as it finishes a publish that failed
+or was cut short. A cancellation still
 stops a run at the last boundary before delete-after-sync
 (destructive-last), after a verified publish. The ``delta`` target
 format is refused: the publish renames plain files, which a Delta
@@ -40,8 +42,8 @@ jobs run side by side, each pair's second job on one worker thread:
 
 The verification contract is unchanged: the source must equal what the
 target holds for the predicate once published, i.e. published + staged
-rows. With the gate on, published is 0 or the run was refused, so only
-the staged files are read, with the written frame's schema (no
+rows. Every run gates, so published is 0 or the run was refused, and
+only the staged files are read, with the written frame's schema (no
 inference job; an ``ndjson`` target reads typed values, not strings).
 That one aggregate counts the predicate's rows (``count_if``), sums
 their fingerprint, and takes the min and max of every integral,
@@ -55,8 +57,8 @@ run's ``_PUBLISHING`` marker and recorded as
 files: those no manifest covers, and those of runs whose ranges can
 meet the predicate; with none it runs no Spark job. Each run still
 reads every manifest and lists the target's files (O(runs) small
-reads on the driver), and files that compaction or an outside writer
-left uncovered are scanned. ``ArchiveReport.details["phases"]`` records
+reads on the driver), and files that an outside writer left uncovered
+are scanned. ``ArchiveReport.details["phases"]`` records
 when each phase started, how long it took and the rows it counted;
 ``details["gate"]`` the manifests the gate read, the target files it
 listed, the files it scanned and the runs it skipped.
@@ -71,7 +73,6 @@ from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark import inheritable_thread_target
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
@@ -111,15 +112,13 @@ def read_target(
     base_path: str | None = None,
 ) -> DataFrame:
     """Read the sink back for gate/verify: the published target, or
-    ``paths`` (staged files, the target and staged files together, or
-    some of the target's files, whose partition directories Spark reads
-    from ``base_path``). 'ndjson' is a sink-side name (stage-file
-    parity); Spark's reader calls it 'json', with the same
-    micro-precision timestamp format the writer used. A given
-    ``schema`` spares the Spark job that file formats spend inferring it
-    and, for 'ndjson', reads typed values rather than the strings
-    inference sees; Delta keeps its schema in the table log and refuses
-    one given at read time."""
+    ``paths`` (a run's staged files, or some of the target's files,
+    whose partition directories Spark reads from ``base_path``).
+    'ndjson' is a sink-side name (stage-file parity); Spark's reader
+    calls it 'json', with the same micro-precision timestamp format the
+    writer used. A given ``schema`` spares the Spark job that file
+    formats spend inferring it and, for 'ndjson', reads typed values
+    rather than the strings inference sees."""
     if cfg.target_format == "ndjson":
         from .sink import NDJSON_TS_FMT
 
@@ -128,7 +127,7 @@ def read_target(
         )
     else:
         reader = spark.read.format(cfg.target_format)
-    if schema is not None and cfg.target_format != "delta":
+    if schema is not None:
         reader = reader.schema(schema)
     if base_path is not None:
         reader = reader.option("basePath", base_path)
@@ -140,21 +139,18 @@ def check_idempotency_gate(spark: SparkSession, cfg: Config) -> dict:
     target rows matching the predicate over the candidate files only
     (``manifest.gate_scan``: files no manifest covers, and the files of
     runs whose recorded ranges can meet the predicate). No candidate
-    file: the gate passes without a Spark job. Every file a candidate:
-    the whole target is read, as before manifests. Returns the scan's
-    counts for ``ArchiveReport.details["gate"]``. Only the target *load*
-    may fail soft (missing target == clean slate); an error evaluating
-    the gate predicate against an existing target must propagate —
-    swallowing it would silently skip the guard on a corrupt or
-    schema-degraded target and append rows twice."""
+    file, as on a missing or empty target: the gate passes without
+    touching Spark. Every file a candidate: the whole target is read, as
+    before manifests. Returns the scan's counts for
+    ``ArchiveReport.details["gate"]``. An error loading or evaluating
+    the candidates must propagate — swallowing it would silently skip
+    the guard on a corrupt or schema-degraded target and append rows
+    twice."""
     scan = gate_scan(spark, cfg.target_path, cfg.source_where_condition)
     if scan.paths == []:
         return scan.stats
     base = cfg.target_path if scan.paths else None
-    try:
-        existing = read_target(spark, cfg, scan.schema, scan.paths, base)
-    except AnalysisException:
-        return scan.stats  # target does not exist yet — clean slate
+    existing = read_target(spark, cfg, scan.schema, scan.paths, base)
     already = idempotency_gate(existing, cfg.source_where_condition)
     if already > 0:
         raise RuntimeError(
@@ -168,20 +164,19 @@ def verify_target(
     spark: SparkSession,
     cfg: Config,
     columns: list[str],
-    schema: StructType | None = None,
-    paths: list[str] | None = None,
+    schema: StructType,
+    staged: str,
 ) -> tuple[int, int | None, dict]:
-    """Target side of the verification contract in one scan: the
-    number of target rows matching the predicate, with
-    ``verify_fingerprint`` their content fingerprint over ``columns``
-    (``None`` otherwise), and the ranges a manifest records of every
-    row read (``manifest.range_aggregates``). ``schema`` and ``paths``
-    are passed on to :func:`read_target`. Predicate-scoped: a target
-    dir may hold other archives; under ``reference_compat`` the
-    degraded column types may not accept the source predicate, and the
-    whole read counts."""
-    target = read_target(spark, cfg, schema, paths)
-    names, bounds = range_aggregates(schema or target.schema)
+    """Target side of the verification contract in one scan of the
+    run's ``staged`` files, read with ``schema``: the number of rows
+    matching the predicate, with ``verify_fingerprint`` their content
+    fingerprint over ``columns`` (``None`` otherwise), and the ranges a
+    manifest records of every row read (``manifest.range_aggregates``).
+    Predicate-scoped: under ``reference_compat`` the degraded column
+    types may not accept the source predicate, and the whole read
+    counts."""
+    target = read_target(spark, cfg, schema, [staged])
+    names, bounds = range_aggregates(schema)
     rows, fingerprint, values = verify_aggregate(
         target, cfg.source_where_condition, columns,
         cfg.verify_fingerprint, bounds,
@@ -276,9 +271,9 @@ class _Phases:
         return result
 
 
-def _raise_if_refused(gate: Future | None) -> None:
+def _raise_if_refused(gate: Future) -> None:
     """Raise the gate's error once the gate has failed."""
-    if gate is not None and gate.done() and gate.exception() is not None:
+    if gate.done() and gate.exception() is not None:
         gate.result()
 
 
@@ -335,7 +330,7 @@ class _Worker:
 
 
 class ArchiveJob:
-    """Archive one table into a file/Delta target (Worker.Run,
+    """Archive one table into a file target (Worker.Run,
     worker/worker.go:244-259)."""
 
     deletes_source = False  # whether the subclass implements ``_delete``
@@ -344,9 +339,7 @@ class ArchiveJob:
         self.spark = spark
         self.cfg = cfg
 
-    def run(
-        self, check_idempotency: bool = True, copy_executor=None
-    ) -> ArchiveReport:
+    def run(self, copy_executor=None) -> ArchiveReport:
         cfg, spark = self.cfg, self.spark
         t0 = time.monotonic()
         if cfg.delete_after_sync and not self.deletes_source:
@@ -373,27 +366,20 @@ class ArchiveJob:
             # the plan and the staged write: nothing is published
             # unless it passes, and a refusal cancels the plan's or the
             # write's job in flight
-            gate = (
-                worker.submit(
-                    phases.run, "gate",
-                    lambda: check_idempotency_gate(spark, cfg),
-                    rows=lambda _: 0,
-                )
-                if check_idempotency
-                else None
+            gate = worker.submit(
+                phases.run, "gate",
+                lambda: check_idempotency_gate(spark, cfg),
+                rows=lambda _: 0,
             )
-            if gate is not None:
-                gate.add_done_callback(worker.cancel_on_error)
+            gate.add_done_callback(worker.cancel_on_error)
             try:
                 plan = phases.run(
                     "plan", self._plan,
                     rows=lambda p: getattr(p, "row_count", None),
                 )
                 if not plan.num_partitions:
-                    details = {"phases": phases.timings}
-                    if gate is not None:
-                        # a drained source still refuses
-                        details["gate"] = gate.result()
+                    # a drained source still refuses
+                    details = {"phases": phases.timings, "gate": gate.result()}
                     # empty-table short-circuit (worker/worker.go:92-95)
                     return ArchiveReport(
                         cfg.source_table, 0, 0, 0, plan.batch_size,
@@ -442,15 +428,12 @@ class ArchiveJob:
                 "source_count", lambda: self._count(plan), rows=lambda n: n
             )
             schema = _read_schema(extracted.schema)
-            paths = [staged] if check_idempotency else [cfg.target_path, staged]
             tgt_rows, tgt_fp, ranges = phases.run(
                 "verify",
-                lambda: verify_target(spark, cfg, written.columns, schema, paths),
+                lambda: verify_target(spark, cfg, written.columns, schema, staged),
                 rows=lambda r: r[0],
             )
-            details = {"phases": phases.timings}
-            if gate is not None:
-                details["gate"] = gate.result()
+            details = {"phases": phases.timings, "gate": gate.result()}
             verify = VerifyResult(source_rows, tgt_rows)
             if fingerprint is not None:
                 verify.source_fingerprint = fingerprint.result()
@@ -464,9 +447,7 @@ class ArchiveJob:
                     "rows": tgt_rows,
                     "fingerprint": tgt_fp,
                     "schema": schema.jsonValue(),
-                    # exact over the run's rows only when the verify
-                    # read the staged files alone
-                    "ranges": ranges if check_idempotency else None,
+                    "ranges": ranges,
                 }
 
                 def publish():

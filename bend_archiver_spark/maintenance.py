@@ -4,33 +4,46 @@ Incremental archives (streaming/archive.py) and per-batch appends
 accumulate many small files — the classic long-running-pipeline
 problem: at 100 TB, scan throughput is gated by file-open overhead and
 tiny row groups defeat both pruning and vectorized reads. Compaction
-rewrites a directory into size-targeted files, optionally re-clustered
+rewrites a target into size-targeted files, optionally re-clustered
 on the split key so row-group min/max pruning survives the rewrite
 (same property job.FileArchiveJob establishes at write time).
 
 The reference has no analog (its unit of write is one staged NDJSON
 file per batch, ingester/ingest_databend.go:74-104 — compaction is
 Databend's job after COPY INTO); this is engine-side capability the
-Spark-native design needs for file/Delta targets.
+Spark-native design needs for file targets.
 
-The rewrite lands in a temporary sibling directory first and swaps in
-only after success, so a failed compaction never loses data. On object
-stores the swap step maps to a manifest/pointer update (Delta's
-OPTIMIZE does exactly this transactionally; this is the plain-parquet
-equivalent).
+A compaction is one more staged run on the target, published the way
+an archive run is (``sink.py``): the rewrite lands in
+``_staging/<run_id>/``, is verified against its input, and its manifest
+names the files and runs it ``replaces``, which the publish deletes
+after renaming the new files in. It is Delta's OPTIMIZE (Armbrust et
+al., VLDB 2020) without ``delta-spark``: one commit adds the new files
+and removes the old, through the same path appends use. Every call is
+a Hadoop ``FileSystem`` call, so it runs on any filesystem a target
+lives on.
 """
 
 from __future__ import annotations
 
-import os
-import shutil
+import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 
-from .tables import load_parquet
+from .manifest import range_aggregates, ranges_from
+from .sink import (
+    MANIFEST_DIR,
+    clear_staging,
+    listed_files,
+    mark_publishing,
+    publish_staged,
+    staging_path,
+    write_batch,
+)
+from .verify import verify_aggregate
 
-__all__ = ["CompactionResult", "compact_files", "dir_stats"]
+__all__ = ["CompactionResult", "compact_files"]
 
 
 @dataclass
@@ -42,83 +55,94 @@ class CompactionResult:
     rows: int
 
 
-def dir_stats(path: str, suffix: str = ".parquet") -> tuple[int, int]:
-    """(file_count, total_bytes) of data files under ``path``."""
-    n = 0
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            if f.endswith(suffix):
-                n += 1
-                total += os.path.getsize(os.path.join(root, f))
-    return n, total
-
-
 def compact_files(
     spark: SparkSession,
     path: str,
     target_file_bytes: int = 128 * 1024 * 1024,
     key: str | None = None,
 ) -> CompactionResult:
-    """Rewrite a parquet directory into ~``target_file_bytes`` files.
+    """Rewrite the parquet target ``path`` into ~``target_file_bytes``
+    files, keeping its ``col=value/`` partition directories.
 
     ``key`` re-clusters on the split key (range partition + in-file
     sort) so key-range scans keep row-group pruning; without it the
     rewrite is a plain bin-pack (round-robin repartition — no skew by
     construction).
 
-    Crash safety: the swap is two directory renames, which POSIX does
-    not make atomic as a pair — no row is ever lost, but a crash
-    between them leaves the live path absent with the full data
-    retained at ``<path>__old`` (recovery: ``mv <path>__old <path>``).
-    The retained copy is deleted only after the NEW live path has been
-    re-verified to carry every row; a failed re-verification swaps the
-    original back and raises. Readers concurrent with the swap can see
-    a missing directory for the instant between the renames — schedule
-    compaction in a maintenance window (at 100 TB scale, a table
-    format with an atomic metadata pointer — e.g. Delta/Iceberg — is
-    the proper fix; this operator targets plain parquet directories).
-    """
-    files_before, bytes_before = dir_stats(path)
-    df = load_parquet(spark, path)
-    rows = df.count()
-    n_out = max(1, -(-bytes_before // target_file_bytes))  # ceil division
+    The run: finish or clear what ``_staging`` holds
+    (``sink.clear_staging``, so a verified publish waiting there is
+    published first and compacted with the rest); list the target's
+    files; write the rewrite into ``_staging/<run_id>/``; check that
+    its row count and content fingerprint equal the input's, in the one
+    aggregate that also takes the manifest's column ranges; mark it for
+    publishing with ``replaces`` (the listed files, and the runs whose
+    manifests covered them); publish. A mismatch or error before the
+    publish leaves the target as it was. A publish cut short is
+    finished by the next archive run or compaction.
 
-    tmp = path.rstrip("/") + "__compacting"
-    shutil.rmtree(tmp, ignore_errors=True)
+    Readers of the plain directory may, for the moment between the
+    renames and the deletes, see the compacted rows twice (old and new
+    files). One writer per target, as for archive runs; the next one
+    finishes an interrupted publish before its gate reads the target.
+    """
+    clear_staging(spark, path)
+    listed = listed_files(spark, path)
+    if not listed:
+        raise RuntimeError(f"compaction: no data files under {path}")
+    runs = [
+        name[: -len(".json")]
+        for name in listed_files(spark, f"{path.rstrip('/')}/{MANIFEST_DIR}")
+        if name.endswith(".json")
+    ]
+    bytes_before = sum(listed.values())
+    n_out = max(1, -(-bytes_before // target_file_bytes))  # ceil division
+    # the partition columns, read off one file's ``col=value/`` path
+    partition_by = [d.partition("=")[0] for d in next(iter(listed)).split("/")[:-1]]
+
+    df = spark.read.parquet(path)
+    schema = df.schema
     if key is not None:
         compacted = df.repartitionByRange(n_out, key).sortWithinPartitions(key)
     else:
         compacted = df.repartition(n_out)
-    compacted.write.mode("overwrite").parquet(tmp)
-
-    # verify before swap: the rewrite must carry every row
-    rewritten = spark.read.parquet(tmp).count()
-    if rewritten != rows:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise RuntimeError(
-            f"compaction row mismatch: {rows} before, {rewritten} after"
+    run_id = uuid.uuid4().hex
+    staged = staging_path(path, run_id)
+    publishing = False
+    try:
+        rows, fingerprint, _ = verify_aggregate(df, None, df.columns, True)
+        write_batch(compacted, staged, "parquet", partition_by=partition_by or None)
+        names, bounds = range_aggregates(schema)
+        staged_rows, staged_fp, values = verify_aggregate(
+            spark.read.schema(schema).parquet(staged), None, df.columns, True,
+            bounds,
         )
-    old = path.rstrip("/") + "__old"
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    # retain the original until the new live path re-verifies — only
-    # then is it safe to drop the recovery copy
-    live_rows = spark.read.parquet(path).count()
-    if live_rows != rows:
-        os.rename(path, tmp)
-        os.rename(old, path)
-        raise RuntimeError(
-            f"compaction live-path mismatch after swap: {rows} expected, "
-            f"{live_rows} read back; original restored"
-        )
-    shutil.rmtree(old, ignore_errors=True)
-
-    files_after, _ = dir_stats(path)
+        if (staged_rows, staged_fp) != (rows, fingerprint):
+            raise RuntimeError(
+                f"compaction mismatch: read {rows} rows (fingerprint "
+                f"{fingerprint}), staged {staged_rows} (fingerprint "
+                f"{staged_fp}); nothing published"
+            )
+        manifest = {
+            "run_id": run_id,
+            "predicate": None,
+            "rows": rows,
+            "fingerprint": fingerprint,
+            "schema": schema.jsonValue(),
+            "ranges": ranges_from(names, values),
+            "replaces": {"files": sorted(listed), "runs": sorted(runs)},
+        }
+        publishing = True
+        mark_publishing(spark, staged, manifest)
+        files_after = publish_staged(spark, staged, path)
+        publishing = False
+    finally:
+        # a publish cut short keeps its staged files and marker: the
+        # next run finishes it
+        if not publishing:
+            clear_staging(spark, path)
     return CompactionResult(
         path=path,
-        files_before=files_before,
+        files_before=len(listed),
         files_after=files_after,
         bytes_before=bytes_before,
         rows=rows,

@@ -4,9 +4,12 @@ Every verified publish records a manifest (``sink.mark_publishing``):
 the run's predicate, rows, fingerprint, written schema, files (path
 relative to the target and size) and the exact ``[min, max]`` of each
 integral, ``decimal(p,0)``, date and timestamp column over every row it
-published (``null`` for an all-NULL column). Dates are recorded as days
-and timestamps as microseconds since the epoch, both computed in the
-JVM (``unix_date`` / ``unix_micros``), so no Python time zone enters.
+published (``null`` for an all-NULL column). An archive run and a
+compaction (``maintenance.compact_files``, whose manifest replaces
+those of the runs it rewrote) record one the same way. Dates are
+recorded as days and timestamps as microseconds since the epoch, both
+computed in the JVM (``unix_date`` / ``unix_micros``), so no Python
+time zone enters.
 
 The gate (A32, cmd/main.go:74-82) then scans only the candidate files
 (:func:`gate_scan`): files no manifest covers with the same path and
@@ -24,14 +27,14 @@ comparison: to a date by its date part, to a timestamp in
 ``spark.sql.session.timeZone``. Any other shape (``OR``, ``NOT``,
 ``BETWEEN``, functions, casts, column-to-column comparisons, suffixed or
 float literals, string, float or other columns) scans every file of the
-run, as does a run without exact ranges over all its rows (published
-with the gate off, or before manifests).
+run, as does a run without exact ranges over all its rows (a manifest
+with ``"ranges": null``, as older versions wrote for runs with the gate
+off, or a run published before manifests).
 
 Limits: every run reads every manifest, O(runs) small reads on the
 driver, and lists the target's files; a compacted index of the
-manifests is the follow-up. Compaction (``maintenance.compact_files``)
-or an outside writer leaves files that no manifest covers, and the gate
-scans those.
+manifests is the follow-up. An outside writer leaves files that no
+manifest covers, and the gate scans those.
 """
 
 from __future__ import annotations
@@ -245,8 +248,9 @@ def _may_match(manifest: dict, parsed, literals: _Literals) -> bool:
 @dataclass
 class GateScan:
     """What the gate reads: ``paths`` are the candidate files (``None``:
-    the whole target, ``[]``: nothing), read with ``schema`` when every
-    candidate's manifest records the same one (``None``: infer)."""
+    the whole target, ``[]``: nothing, as when no file is listed), read
+    with ``schema`` when every candidate's manifest records the same one
+    (``None``: infer)."""
 
     paths: list[str] | None
     schema: StructType | None
@@ -292,7 +296,7 @@ def gate_scan(spark: SparkSession, target: str, predicate: str | None) -> GateSc
         "scanned": len(candidates),
         "runs_skipped": len(skipped),
     }
-    if len(candidates) == len(listed):  # every file: today's full scan
+    if listed and len(candidates) == len(listed):  # every file: a full scan
         return GateScan(None, schema, stats)
     root = target.rstrip("/")
     return GateScan([f"{root}/{rel}" for rel in candidates], schema, stats)

@@ -51,7 +51,6 @@ def run_multi_table(
     list_tables: Callable[[str], list[str]],
     load_source: Callable[[str, str], DataFrame],
     target_path_for: Callable[[str, str], str],
-    check_idempotency: bool = True,
 ) -> MultiTableReport:
     """Expand ``cfg.source_db_tables`` selectors and archive each
     matched (db, table). The three callables abstract the catalog and
@@ -74,8 +73,6 @@ def run_multi_table(
             sub.source_table = table
             sub.source_db_tables = []
             sub.target_path = target_path_for(db, table)
-            report = FileArchiveJob(
-                spark, sub, load_source(db, table)
-            ).run(check_idempotency=check_idempotency)
+            report = FileArchiveJob(spark, sub, load_source(db, table)).run()
             out.reports.append(report)
     return out

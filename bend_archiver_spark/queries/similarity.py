@@ -309,13 +309,12 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Deterministic training makes this fully hash-checkable against the
     SQL oracle (it was rows-only while it used MLlib KMeans, whose
-    kmeans|| init is not cross-engine reproducible — that variant
-    remains available as operators/ivf.py for users who want many
-    iterations and sampled training). Integer-mean centroids lose
-    <1e-6 precision per component — far below cosine resolution — and
-    keep every distance exact int64. Scale shape is unchanged from
-    ann_ivf_fixed_codebook: broadcast codebook both passes, combinable
-    groupBys, candidates shuffled only on probed cells."""
+    kmeans|| init is not cross-engine reproducible). Integer-mean
+    centroids lose <1e-6 precision per component — far below cosine
+    resolution — and keep every distance exact int64. Scale shape is
+    unchanged from ann_ivf_fixed_codebook: broadcast codebook both
+    passes, combinable groupBys, candidates shuffled only on probed
+    cells."""
     emb = t(spark, sf_dir, "embeddings")
     # persist barrier: the quantized explode has five consumers here
     # (init filter, both E-step joins, the M-step join, and the rerank

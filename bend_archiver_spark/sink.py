@@ -13,32 +13,30 @@ Formats:
   and column pruning work the same; useful for Hive-ecosystem targets).
 - ``ndjson``  — byte-compatible with the reference's stage files
   (one JSON object per line, NULLs as ``null``; source/source.go:164-189).
-- ``delta``   — used when delta-spark is installed (gated import).
 
-Staged publish: an archive run writes into ``<target>/_staging/<run_id>/``
-and, once verified, :func:`publish_staged` moves the files into the
-target with ``FileSystem.rename``. Spark's file listing skips
-``_``-prefixed directories, so readers of the target never see staged
-files, and a run that is refused, fails verification or crashes
-publishes nothing. Limits: one writer per target (the next run clears
-the whole ``_staging`` directory); on object stores a rename is a copy
-plus a delete, so publishing costs a second write of the data, file
-after file from the driver; a publish is file by file, not atomic: a
-crash part-way through it is finished by the next run
-(:func:`clear_staging`). The publish moves plain files and would not
-carry a Delta table's ``_delta_log``, so ``ArchiveJob.run`` refuses the
-optional ``delta`` format; Delta's own commit protocol would take the
-place of this flow.
+Staged publish: every write that changes a target (an archive run, a
+compaction) goes into ``<target>/_staging/<run_id>/`` and, once
+verified, :func:`publish_staged` moves the files into the target with
+``FileSystem.rename``. Spark's file listing skips ``_``-prefixed
+directories, so readers of the target never see staged files, and a
+run that is refused, fails verification or crashes publishes nothing.
+Limits: one writer per target (the next run clears the whole
+``_staging`` directory); on object stores a rename is a copy plus a
+delete, so publishing costs a second write of the data, file after
+file from the driver; a publish is file by file, not atomic: a crash
+part-way through it is finished by the next run (:func:`clear_staging`).
 
 Manifests: a verified run writes its manifest into its ``_PUBLISHING``
 marker (:func:`mark_publishing`) before the first rename; it names the
 run's files with their sizes, its predicate, rows, fingerprint, schema
-and column ranges (``manifest.py``). Once every file is renamed, the
-publish moves the marker to ``<target>/_manifests/<run_id>.json``, so a
-publish that a crash cut short and :func:`clear_staging` finished
-records its manifest too. A run without one (published before
-manifests, or whose marker is empty) leaves its files uncovered, and
-the idempotency gate scans them.
+and column ranges (``manifest.py``). A compaction's manifest also names
+what it ``replaces``: the target files it rewrote and the runs whose
+manifests covered them. Once every file is renamed, the publish deletes
+the replaced files and manifests (:func:`drop_replaced`), then moves the
+marker to ``<target>/_manifests/<run_id>.json``, so a publish that a
+crash cut short and :func:`clear_staging` finished does both too. A run
+without a manifest (published before manifests, or whose marker is
+empty) leaves its files uncovered, and the idempotency gate scans them.
 """
 
 from __future__ import annotations
@@ -54,6 +52,7 @@ __all__ = [
     "staging_path",
     "mark_publishing",
     "publish_staged",
+    "drop_replaced",
     "clear_staging",
     "listed_files",
     "read_manifests",
@@ -99,13 +98,6 @@ def write_batch(
         writer.option("ignoreNullFields", "false").option(
             "timestampFormat", NDJSON_TS_FMT
         ).json(path)
-    elif fmt == "delta":
-        try:
-            writer.format("delta").save(path)
-        except Exception as e:  # pragma: no cover - delta not installed here
-            raise RuntimeError(
-                "delta-spark not available in this environment"
-            ) from e
     else:
         raise ValueError(f"unsupported sink format: {fmt}")
 
@@ -143,20 +135,21 @@ def _local_path(fs, jpath) -> str | None:
     return jpath.toUri().getPath() if fs.getScheme() == "file" else None
 
 
-def _listed_files(fs, root) -> list[tuple[str, int]]:
-    """The files under ``root`` that Spark's listing reads, as paths
-    relative to ``root`` with their sizes. Elsewhere than on the local
-    filesystem, ``listStatus`` level by level: a recursive ``listFiles``
-    builds a ``LocatedFileStatus`` per file, which on the local
-    filesystem spawns a process to read its permissions."""
+def _listed_files(fs, root, local: str | None) -> list[tuple[str, int]]:
+    """The files under ``root`` (at ``local``, its :func:`_local_path`)
+    that Spark's listing reads, as paths relative to ``root`` with their
+    sizes. Elsewhere than on the local filesystem, ``listStatus`` level
+    by level: a recursive ``listFiles`` builds a ``LocatedFileStatus``
+    per file, which on the local filesystem spawns a process to read its
+    permissions."""
 
-    def local(path, prefix):
+    def scan(path, prefix):
         with os.scandir(path) as entries:
             for entry in entries:
                 if _hidden(entry.name):
                     continue
                 if entry.is_dir():
-                    yield from local(entry.path, f"{prefix}{entry.name}/")
+                    yield from scan(entry.path, f"{prefix}{entry.name}/")
                 else:
                     yield prefix + entry.name, entry.stat().st_size
 
@@ -170,29 +163,36 @@ def _listed_files(fs, root) -> list[tuple[str, int]]:
             else:
                 yield prefix + name, status.getLen()
 
-    path = _local_path(fs, root)
-    return list(local(path, "") if path is not None else hadoop(root, ""))
+    return list(scan(local, "") if local is not None else hadoop(root, ""))
 
 
 def listed_files(spark, path: str) -> dict[str, int]:
     """Size of every file Spark's listing reads under ``path``, keyed by
     its path relative to ``path``; empty when ``path`` does not exist."""
     fs, root = _hadoop_path(spark, path)
-    return dict(_listed_files(fs, root)) if fs.exists(root) else {}
+    if not fs.exists(root):
+        return {}
+    return dict(_listed_files(fs, root, _local_path(fs, root)))
 
 
-def _write_json(fs, path, value) -> None:
+def _write_json(fs, path, local: str | None, value) -> None:
+    """Write ``value`` to ``path`` (at ``local`` on the local filesystem)
+    under a ``.tmp`` name, then rename it: a reader finds the whole file
+    or none, never a torn or empty one."""
     data = json.dumps(value).encode()
-    local = _local_path(fs, path)
     if local is not None:
-        with open(local, "wb") as out:
+        with open(local + ".tmp", "wb") as out:
             out.write(data)
+        os.replace(local + ".tmp", local)
         return
-    out = fs.create(path, True)
+    tmp = path.suffix(".tmp")
+    out = fs.create(tmp, True)
     try:
         out.write(bytearray(data))
     finally:
         out.close()
+    if not fs.rename(tmp, path):
+        raise RuntimeError(f"could not write {path}")
 
 
 def _loads(data: bytes):
@@ -204,21 +204,57 @@ def _loads(data: bytes):
         return None
 
 
+def _read_json(fs, path, local: str | None):
+    """The JSON value in the file ``path`` (at ``local`` on the local
+    filesystem), as :func:`_loads` reads it."""
+    if local is not None:
+        with open(local, "rb") as stream:
+            return _loads(stream.read())
+    stream = fs.open(path)
+    try:
+        return _loads(bytes(stream.readAllBytes()))
+    finally:
+        stream.close()
+
+
+def _join(local: str | None, name: str) -> str | None:
+    """``name`` under the local directory ``local``, if there is one."""
+    return None if local is None else os.path.join(local, name)
+
+
 def mark_publishing(spark, staged: str, manifest: dict) -> None:
     """Mark a verified staged run for publishing: its marker holds
     ``manifest`` plus the run's ``files`` (path relative to the target
-    and size), listed before any of them moves."""
+    and size), listed before any of them moves. The marker appears
+    whole or not at all, so a run marked with ``replaces`` is never
+    published without them."""
     fs, src = _hadoop_path(spark, staged)
     Path = spark._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001
-    files = [{"path": rel, "size": size} for rel, size in _listed_files(fs, src)]
-    _write_json(fs, Path(src, PUBLISHING_MARKER), dict(manifest, files=files))
+    local = _local_path(fs, src)
+    files = [{"path": rel, "size": size} for rel, size in _listed_files(fs, src, local)]
+    _write_json(
+        fs, Path(src, PUBLISHING_MARKER), _join(local, PUBLISHING_MARKER),
+        dict(manifest, files=files),
+    )
+
+
+def drop_replaced(spark, fs, target: str, replaces: dict) -> None:
+    """Delete what a published compaction ``replaces``: the target files
+    it rewrote (``files``, paths relative to ``target``), then the
+    manifests of the runs that covered them (``runs``). A delete of what
+    is already gone is a no-op, so a publish finished after a crash
+    deletes the rest."""
+    Path = spark._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001
+    root = Path(target)
+    for rel in replaces["files"]:
+        fs.delete(Path(root, rel), False)
+    for run_id in replaces["runs"]:
+        fs.delete(Path(root, f"{MANIFEST_DIR}/{run_id}.json"), False)
 
 
 def record_manifest(spark, fs, marker, target: str) -> None:
-    """Move a published run's marker to ``<target>/_manifests/<run_id>.json``
-    if it carries a manifest; an empty marker records none."""
-    if fs.getFileStatus(marker).getLen() == 0:
-        return
+    """Move a published run's marker, which carries its manifest, to
+    ``<target>/_manifests/<run_id>.json``."""
     run_id = marker.getParent().getName()
     Path = spark._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001
     dst = Path(f"{target.rstrip('/')}/{MANIFEST_DIR}/{run_id}.json")
@@ -236,18 +272,10 @@ def read_manifests(spark, target: str) -> list[dict]:
     Path = spark._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001
     local = _local_path(fs, root)
     manifests = []
-    for name, _size in _listed_files(fs, root):
+    for name, _size in _listed_files(fs, root, local):
         if not name.endswith(".json") or "/" in name:
             continue
-        if local is not None:
-            with open(os.path.join(local, name), "rb") as stream:
-                manifest = _loads(stream.read())
-        else:
-            stream = fs.open(Path(root, name))
-            try:
-                manifest = _loads(bytes(stream.readAllBytes()))
-            finally:
-                stream.close()
+        manifest = _read_json(fs, Path(root, name), _join(local, name))
         if isinstance(manifest, dict) and "files" in manifest:
             manifests.append(manifest)
     return manifests
@@ -256,16 +284,19 @@ def read_manifests(spark, target: str) -> list[dict]:
 def publish_staged(spark, staged: str, target: str) -> int:
     """Move a staged run's data files into ``target``, each to the same
     path relative to the target as it had under ``staged`` (partition
-    directories included), record its manifest (:func:`record_manifest`),
-    then delete ``staged``. What Spark's listing skips (``_SUCCESS``;
-    checksum files, which the rename carries along) is not published.
-    Returns the number of files moved."""
+    directories included). If its marker carries a manifest, delete what
+    that ``replaces`` (:func:`drop_replaced`) and record it
+    (:func:`record_manifest`). Then delete ``staged``. What Spark's
+    listing skips (``_SUCCESS``; checksum files, which the rename
+    carries along) is not published. Returns the number of files moved."""
     fs, src = _hadoop_path(spark, staged)
     Path = spark._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001
+    local = _local_path(fs, src)
     marker = Path(src, PUBLISHING_MARKER)
     if not fs.exists(marker):
         fs.create(marker, True).close()
-    files = [rel for rel, _ in _listed_files(fs, src)]
+    manifest = _read_json(fs, marker, _join(local, PUBLISHING_MARKER))
+    files = [rel for rel, _ in _listed_files(fs, src, local)]
     dst_root = Path(target)
     made = set()
     for rel in files:
@@ -276,7 +307,10 @@ def publish_staged(spark, staged: str, target: str) -> int:
             made.add(parent)
         if not fs.rename(Path(src, rel), dst):
             raise RuntimeError(f"publish: could not rename {staged}/{rel} to {dst}")
-    record_manifest(spark, fs, marker, target)
+    if isinstance(manifest, dict):
+        if "replaces" in manifest:
+            drop_replaced(spark, fs, target, manifest["replaces"])
+        record_manifest(spark, fs, marker, target)
     fs.delete(src, True)
     return len(files)
 

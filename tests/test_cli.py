@@ -311,7 +311,7 @@ class TestCliCancellation:
         self, cli_spark, sf_dir, tmp_path, monkeypatch, capsys
     ):
         """A swallowed JobCancelled can come back re-wrapped as a
-        plain RuntimeError (e.g. sink.py's delta guard chains
+        plain RuntimeError (a handler that chains
         ``raise RuntimeError(...) from e``). With a recorded signal,
         the generic job-failure branch must NOT claim it as rc=1 —
         the run was cancelled, so it exits 128+signum."""

@@ -458,11 +458,13 @@ class TestStagedJdbcRun:
 # task has written its file, until the test kills that process group;
 # ``corrupt`` alters one written value so the fingerprints differ;
 # ``publish`` stalls after the publish's renames, before the run's
-# manifest is recorded.
+# manifest is recorded; ``compact`` compacts the target instead and
+# stalls after its publish's renames, before the replaced files are
+# deleted.
 _CRASH_CHILD = r"""
 import sys, time
 from pyspark.sql import functions as F
-from bend_archiver_spark import job, sink
+from bend_archiver_spark import job, maintenance, sink
 from bend_archiver_spark.config import Config
 from bend_archiver_spark.session import get_spark
 
@@ -485,23 +487,27 @@ def write(df, *a, **kw):
             "V", F.when(F.col("ID") == 42, F.col("V") + 1).otherwise(F.col("V")))
     return real_write(df, *a, **kw)
 
-def stall_before_manifest(*a):
+def stall(*a):
     open(flag, "w").close()
     time.sleep(60)
 
 job.write_batch = write
 if mode == "publish":
-    sink.record_manifest = stall_before_manifest
-cfg = Config(database_type="derby", source_db=db, source_table="TESTTAB",
-             source_split_key="ID", batch_size=50, target_path=target,
-             target_format="parquet", verify_fingerprint=True,
-             delete_after_sync=True)
-report = job.JdbcArchiveJob(spark, cfg).run()
-print("verified", report.verify.is_correct, "deleted", report.deleted_rows)
-try:  # release the database before the JVM's own exit, which lags ours
-    spark._jvm.java.sql.DriverManager.getConnection(f"jdbc:derby:{db};shutdown=true")
-except Exception:
-    pass  # Derby signals a clean shutdown via SQLException
+    sink.record_manifest = stall
+if mode == "compact":
+    sink.drop_replaced = stall
+    maintenance.compact_files(spark, target)
+else:
+    cfg = Config(database_type="derby", source_db=db, source_table="TESTTAB",
+                 source_split_key="ID", batch_size=50, target_path=target,
+                 target_format="parquet", verify_fingerprint=True,
+                 delete_after_sync=True)
+    report = job.JdbcArchiveJob(spark, cfg).run()
+    print("verified", report.verify.is_correct, "deleted", report.deleted_rows)
+    try:  # release the database before the JVM's own exit, which lags ours
+        spark._jvm.java.sql.DriverManager.getConnection(f"jdbc:derby:{db};shutdown=true")
+    except Exception:
+        pass  # Derby signals a clean shutdown via SQLException
 spark.stop()
 """
 
@@ -668,6 +674,59 @@ class TestCrashSafety:
         )
         assert stats["runs_skipped"] == 1 and stats["scanned"] == 0
         assert _source_count(spark, derby) == N_ROWS  # never deleted
+        shutil.rmtree(tgt, ignore_errors=True)
+
+    def test_compaction_killed_between_renames_and_deletes(
+        self, spark, derby, tmp_path, release_heap
+    ):
+        """Compaction of two runs is killed once its new files are
+        renamed in, before the files they replace are deleted: readers
+        of the directory see those rows twice. The next archive run
+        finishes the publish before its gate, which skips the compacted
+        run, and every row is archived exactly once."""
+        import glob
+        import json
+        import os
+        import signal
+        import time
+
+        from bend_archiver_spark.verify import content_fingerprint
+
+        tgt = str(tmp_path / "tgt_compact")
+        for where in ("ID <= 50", "ID > 50 AND ID <= 100"):
+            report = JdbcArchiveJob(
+                spark, _cfg(derby, tgt, source_where_condition=where)
+            ).run()
+            assert report.verify.is_correct
+        archived = content_fingerprint(spark.read.parquet(tgt))
+        proc, flag, log = self._child(spark, derby, tgt, "compact", tmp_path)
+        try:
+            deadline = time.monotonic() + 180
+            while not flag.exists():
+                assert proc.poll() is None, (tmp_path / "child_compact.log").read_text()
+                assert time.monotonic() < deadline
+                time.sleep(0.1)
+        finally:
+            self._end(proc, log)
+        assert proc.returncode == -signal.SIGKILL
+        [marker] = glob.glob(os.path.join(tgt, "_staging", "*", "_PUBLISHING"))
+        assert len(json.loads(open(marker).read())["replaces"]["runs"]) == 2
+        assert spark.read.parquet(tgt).count() == 2 * 100
+
+        cfg = _cfg(derby, tgt, source_where_condition="ID > 100",
+                   verify_fingerprint=True, delete_after_sync=True)
+        report = JdbcArchiveJob(spark, cfg).run()
+        assert report.verify.is_correct
+        assert report.verify.source_fingerprint == report.verify.target_fingerprint
+        assert report.source_rows == report.deleted_rows == 100
+        assert report.details["gate"]["runs_skipped"] == 1
+        assert report.details["gate"]["scanned"] == 0
+        back = spark.read.parquet(tgt)
+        assert back.count() == back.select("ID").distinct().count() == N_ROWS
+        assert content_fingerprint(back.filter("ID <= 100")) == archived
+        assert len(glob.glob(os.path.join(tgt, "_manifests", "*.json"))) == 2
+        assert not os.path.exists(os.path.join(tgt, "_staging"))
+        assert _source_count(spark, derby) == N_ROWS - 100
         shutil.rmtree(tgt, ignore_errors=True)
 
 
@@ -956,8 +1015,9 @@ class TestTracedEntryPoints:
         expected = {
             (job, "check_idempotency_gate"): 1,
             (job, "write_batch"): 1,
-            # the gate's read and the post-write count + fingerprint read
-            (job, "read_target"): 2,
+            # the post-write count + fingerprint read; the gate lists no
+            # file in the fresh target, so it reads nothing
+            (job, "read_target"): 1,
             (verify, "content_fingerprint"): 1,
             (jdbc.JdbcSource, "probe_bounds"): 1,
             (jdbc.JdbcSource, "count"): 1,

@@ -214,25 +214,6 @@ class TestStagedRun:
         assert _files(tgt) == before
         assert not (tmp_path / "refused" / "_staging").exists()
 
-    def test_unchecked_rerun_fails_verification_and_publishes_nothing(
-        self, spark, sf_dir, tmp_path
-    ):
-        """Without the gate, the target side counts published + staged
-        rows: a second copy doubles it, so the run fails verification
-        and its rows are never published."""
-        tgt = str(tmp_path / "unchecked")
-        li = load_table(spark, sf_dir, "lineitem")
-        cfg = _cfg(tgt, verify_fingerprint=True)
-        first = FileArchiveJob(spark, cfg, li).run(check_idempotency=False)
-        assert first.verify.is_correct
-        before = _files(tgt)
-        second = FileArchiveJob(spark, cfg, li).run(check_idempotency=False)
-        assert not second.verify.is_correct
-        assert second.target_rows == 2 * second.source_rows
-        assert "publish" not in second.details["phases"]
-        assert _files(tgt) == before
-        assert spark.read.parquet(tgt).count() == first.source_rows
-
     def test_phases_are_timed_and_describe_their_jobs(
         self, spark, sf_dir, tmp_path
     ):
@@ -746,9 +727,10 @@ class TestManifestGate:
         with pytest.raises(RuntimeError, match="idempotency"):
             _gate(spark, tgt, _slice(0, 10))
 
-    def test_compacted_target_is_scanned(self, spark, tmp_path):
-        """Compaction rewrites every file (and drops the manifests with
-        the old directory): nothing is covered, so all is scanned."""
+    def test_compacted_target_is_skipped(self, spark, tmp_path):
+        """Compaction publishes one run that replaces the runs it
+        rewrote, with exact ranges over all their rows: a key-disjoint
+        gate still reads no data file, an overlapping one refuses."""
         from bend_archiver_spark.maintenance import compact_files
 
         tgt = str(tmp_path / "compacted")
@@ -758,7 +740,8 @@ class TestManifestGate:
         assert _gate(spark, tgt, _slice(200, 300))["scanned"] == 0
         compact_files(spark, tgt)
         stats = _gate(spark, tgt, _slice(200, 300))
-        assert stats["scanned"] == stats["files"] > 0
+        assert stats["manifests"] == stats["runs_skipped"] == 1
+        assert stats["scanned"] == 0 and stats["files"] == 1
         with pytest.raises(RuntimeError, match="idempotency"):
             _gate(spark, tgt, _slice(150, 250))
 
@@ -814,17 +797,52 @@ class TestManifestGate:
         assert spark.read.parquet(tgt).filter("p = 1").count() == 67
         assert spark.read.parquet(tgt).count() == 217
 
-    def test_unchecked_run_records_no_ranges(self, spark, tmp_path):
-        """With the gate off the verify reads published and staged rows
-        together, so the run's ranges are not its own: its manifest
-        carries none and its files are always scanned."""
-        tgt = str(tmp_path / "unchecked_ranges")
+    def test_manifest_without_ranges_is_scanned(self, spark, tmp_path):
+        """A manifest with ``"ranges": null``, as older versions wrote
+        for runs with the gate off, covers its files but never skips
+        them."""
+        import glob
+        import json
+
+        tgt = str(tmp_path / "no_ranges")
         src = _keyed(spark)
-        FileArchiveJob(spark, _keyed_cfg(tgt, _slice(0, 100)), src).run(
-            check_idempotency=False
-        )
+        FileArchiveJob(spark, _keyed_cfg(tgt, _slice(0, 100)), src).run()
+        [path] = glob.glob(f"{tgt}/_manifests/*.json")
+        manifest = json.loads(open(path).read())
+        assert manifest["ranges"]["k"] == [0, 99]
+        with open(path, "w") as out:
+            json.dump(dict(manifest, ranges=None), out)
         stats = _gate(spark, tgt, _slice(100, 200))
-        assert stats["manifests"] == 1 and stats["scanned"] == stats["files"]
+        assert stats["manifests"] == 1 and stats["runs_skipped"] == 0
+        assert stats["scanned"] == stats["files"] > 0
+
+    def test_gate_on_an_empty_target_touches_no_spark(
+        self, spark, tmp_path, spark_jobs, monkeypatch
+    ):
+        """With no file listed, missing or empty, the gate passes
+        without reading the target."""
+        from bend_archiver_spark import job as job_mod
+
+        def no_read(*a, **kw):
+            raise AssertionError("the gate read an empty target")
+
+        monkeypatch.setattr(job_mod, "read_target", no_read)
+        empty = {"manifests": 0, "files": 0, "scanned": 0, "runs_skipped": 0}
+        missing = str(tmp_path / "missing")
+        assert spark_jobs(lambda: _gate(spark, missing, "k >= 0")) == (empty, 0)
+        (tmp_path / "empty" / "_staging").mkdir(parents=True)
+        assert _gate(spark, str(tmp_path / "empty"), None) == empty
+
+    def test_unreadable_target_refuses(self, spark, tmp_path):
+        """A load error on a target that holds files is not a clean
+        slate: it propagates."""
+        from py4j.protocol import Py4JJavaError
+
+        tgt = tmp_path / "junk"
+        tgt.mkdir()
+        (tgt / "part-0.parquet").write_bytes(b"not parquet")
+        with pytest.raises(Py4JJavaError):
+            _gate(spark, str(tgt), "k >= 0")
 
     def test_hadoop_filesystem_calls_match_the_local_ones(
         self, spark, tmp_path, monkeypatch
@@ -1045,7 +1063,7 @@ class TestReferenceCompat:
         tgt = str(tmp_path / "compat")
         li = load_table(spark, sf_dir, "lineitem")
         cfg = _cfg(tgt, reference_compat=True)
-        report = FileArchiveJob(spark, cfg, li).run(check_idempotency=False)
+        report = FileArchiveJob(spark, cfg, li).run()
         assert report.verify.is_correct
         out = spark.read.parquet(tgt)
         types = dict((f.name, f.dataType) for f in out.schema.fields)
@@ -1069,7 +1087,7 @@ class TestDecimalSplitKey:
             (F.col("l_orderkey").cast("decimal(20,0)") + Decimal(2) ** 63),
         )
         cfg = _cfg(tgt, source_split_key="big_id")
-        report = FileArchiveJob(spark, cfg, li).run(check_idempotency=False)
+        report = FileArchiveJob(spark, cfg, li).run()
         assert report.verify.is_correct
         assert report.source_rows > 0
 
@@ -1106,7 +1124,7 @@ class TestDecimalSplitKey:
             batch_size=100,
             verify_fingerprint=True,
         )
-        report = FileArchiveJob(spark, cfg, src).run(check_idempotency=False)
+        report = FileArchiveJob(spark, cfg, src).run()
         assert report.verify.is_correct
         assert report.verify.fingerprints_match
         assert report.source_rows == 300

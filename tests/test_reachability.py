@@ -1,0 +1,121 @@
+"""Every package module is reached from an entry point, or named here.
+
+An import walk over the source (``ast``; nothing is imported) starts
+from the programs people run: the CLI (``cli.py``, ``__main__``),
+``bench.py``, ``__spark_entry__.py``, ``tools/`` and ``perfbench/``.
+The package modules it does not reach are the ones only tests import;
+they must be exactly :data:`TEST_ONLY`, each with its reason, so a new
+dead module fails here instead of lingering.
+"""
+
+import ast
+import os
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PACKAGE = "bend_archiver_spark"
+
+# package module -> why only tests import it
+TEST_ONLY = {
+    "multi": "multi-table loop (cmd/main.go:54-110); the CLI never reads sourceDbTables",
+    "catalog": "dbRegex@tableRegex expansion, used only by multi",
+    "stage": "presign -> PUT -> COPY INTO stage upload (A27-A30), not wired as a publish step",
+    "retry": "the reference's DoRetry, used only by stage",
+    "sources.files": "explicit-schema CSV/NDJSON readers; the CLI reads with spark.read",
+    "confgen": "the reference's config generator (A37), without an entry point",
+    "streaming.stateful": "applyInPandasWithState wrapper no query or archive path uses",
+}
+
+
+def _roots() -> list[str]:
+    paths = [
+        os.path.join(REPO, PACKAGE, "cli.py"),
+        os.path.join(REPO, PACKAGE, "__main__.py"),
+        os.path.join(REPO, "bench.py"),
+        os.path.join(REPO, "__spark_entry__.py"),
+    ]
+    for folder in ("tools", "perfbench"):
+        for dirpath, _, names in os.walk(os.path.join(REPO, folder)):
+            paths += [os.path.join(dirpath, n) for n in names if n.endswith(".py")]
+    return paths
+
+
+def _module_file(name: str, bases: list[str]) -> str | None:
+    """The source file of module ``name`` under one of ``bases``."""
+    rel = name.replace(".", os.sep)
+    for base in bases:
+        for candidate in (rel + ".py", os.path.join(rel, "__init__.py")):
+            path = os.path.join(base, candidate)
+            if os.path.isfile(path):
+                return path
+    return None
+
+
+def _package_of(path: str) -> str:
+    """The dotted package ``path`` belongs to, relative to the repo."""
+    rel = os.path.relpath(os.path.dirname(path), REPO)
+    return "" if rel == "." else rel.replace(os.sep, ".")
+
+
+def _imports(path: str) -> set[str]:
+    """Every module name ``path`` imports, at any depth of its code;
+    ``from m import x`` also names ``m.x``, in case ``x`` is a module."""
+    tree = ast.parse(open(path, encoding="utf-8").read(), path)
+    names = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            names.update(alias.name for alias in node.names)
+        elif isinstance(node, ast.ImportFrom):
+            if node.level:
+                parts = _package_of(path).split(".")
+                parts = parts[: len(parts) - node.level + 1]
+                base = ".".join(parts + ([node.module] if node.module else []))
+            else:
+                base = node.module
+            names.add(base)
+            names.update(f"{base}.{alias.name}" for alias in node.names)
+    # importing a.b.c runs a/__init__ and a/b/__init__ first
+    return {
+        ".".join(name.split(".")[: i + 1])
+        for name in names
+        for i in range(name.count(".") + 1)
+    }
+
+
+def _reached(roots: list[str]) -> set[str]:
+    """The files an import walk from ``roots`` reaches."""
+    seen, todo = set(), list(roots)
+    while todo:
+        path = todo.pop()
+        if path in seen:
+            continue
+        seen.add(path)
+        bases = [REPO, os.path.dirname(path)]
+        for name in _imports(path):
+            found = _module_file(name, bases)
+            if found is not None:
+                todo.append(found)
+    return seen
+
+
+def _package_modules() -> dict[str, str]:
+    """Every package module's file, keyed by its name in the package."""
+    root = os.path.join(REPO, PACKAGE)
+    out = {}
+    for dirpath, _, names in os.walk(root):
+        for n in names:
+            if n.endswith(".py") and n != "__init__.py":
+                rel = os.path.relpath(os.path.join(dirpath, n[:-3]), root)
+                out[rel.replace(os.sep, ".")] = os.path.join(dirpath, n)
+    return out
+
+
+def test_only_named_modules_are_test_only():
+    modules = _package_modules()
+    reached = _reached(_roots())
+    unreached = {name for name, path in modules.items() if path not in reached}
+    assert unreached == set(TEST_ONLY)
+    tests = os.path.join(REPO, "tests")
+    from_tests = _reached(
+        [os.path.join(tests, n) for n in os.listdir(tests) if n.endswith(".py")]
+    )
+    assert {n for n in TEST_ONLY if modules[n] not in from_tests} == set()
