@@ -8,10 +8,11 @@ re-expressed Spark-first:
 - partition planning (key ranges / time windows)   -> planner.py
 - typed job config (JSON-compatible)               -> config.py
 - regex db/table catalog discovery                 -> catalog.py
+- the CLI and its one archive loop                 -> cli.py, multi.py
 - partitioned JDBC + file sources                  -> sources/
 - warehouse sinks (parquet/delta-style, NDJSON)    -> sink.py
 - verification / idempotency / delete-after-sync   -> verify.py, postsync.py
-- retry + throughput metrics                       -> retry.py, metrics.py
+- COPY INTO retry + throughput metrics             -> retry.py, metrics.py
 - job orchestration                                -> job.py
 - relational + LLM-data-pipeline operators         -> operators/, functions/
 - incremental (streaming) archive                  -> streaming/

@@ -5,8 +5,9 @@ worker/worker.go) is: discover tables -> idempotency gate -> bounds
 probe -> split plan -> fan out scan->ingest -> verify -> optional
 delete. In Spark that collapses to: one bounds probe, one partitioned
 read (the split plan *is* the partitioning), one distributed write,
-then the verification counts. The goroutine pool, condition channel,
-retry loop and pagination all disappear into the scheduler.
+then the verification counts. The goroutine pool, condition channel
+and pagination all disappear into the scheduler; the retry loop is
+left only around ``COPY INTO`` (``run_copy_into``).
 
 ``ArchiveJob.run`` is that one flow for every source, as Worker.Run is
 behind the reference's Sourcer interface (source/source.go:18-29).
@@ -191,16 +192,21 @@ def _read_schema(written: StructType) -> StructType:
     return StructType([StructField(f.name, f.dataType) for f in written.fields])
 
 
-def run_copy_into(spark: SparkSession, cfg: Config, copy_executor=None) -> int:
+def run_copy_into(
+    spark: SparkSession, cfg: Config, copy_executor=None, sleep=time.sleep
+) -> int:
     """Execute the generated ``COPY INTO`` against the warehouse after
     the stage write (A27-A28, ingester/ingest_databend.go:182-195) —
     gated behind ``cfg.execute_copy_into``. The statement references
     the stage path the job just wrote; ``copy_executor`` lets tests
     inject a statement executor, otherwise one is built over the
-    warehouse's JDBC URL."""
+    warehouse's JDBC URL. A failed statement is retried under the
+    reference's policy (``retry.do_retry`` on its ``CopyIntoError``
+    sentinel, ingest_databend.go:206-241), ``sleep`` between attempts."""
     import os
 
     from .postsync import jdbc_executor
+    from .retry import CopyIntoError, do_retry
     from .sink import execute_copy_into
 
     if not cfg.databend_table:
@@ -214,14 +220,23 @@ def run_copy_into(spark: SparkSession, cfg: Config, copy_executor=None) -> int:
     stage_loc = (
         f"@{cfg.user_stage}/{os.path.basename(cfg.target_path.rstrip('/'))}/"
     )
-    return execute_copy_into(
-        copy_executor,
-        cfg.databend_table,
-        stage_loc,
-        purge=cfg.copy_purge,
-        force=cfg.copy_force,
-        disable_variant_check=cfg.disable_variant_check,
-    )
+
+    def attempt() -> int:
+        try:
+            return execute_copy_into(
+                copy_executor,
+                cfg.databend_table,
+                stage_loc,
+                purge=cfg.copy_purge,
+                force=cfg.copy_force,
+                disable_variant_check=cfg.disable_variant_check,
+            )
+        except JobCancelled:
+            raise
+        except Exception as e:
+            raise CopyIntoError(f"copy into failed: {e}") from e
+
+    return do_retry(attempt, sleep=sleep)
 
 
 @dataclass

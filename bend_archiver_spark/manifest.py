@@ -22,7 +22,8 @@ case) of ``column op literal`` with ``op`` one of ``= < <= > >=``, each
 conjunct fits the run's schema, and one conjunct's interval misses the
 run's range. An integral column takes a plain integer literal; a date
 or timestamp column a quoted ``'YYYY-MM-DD[ HH:MM:SS[.ffffff]]'``
-literal (the form ``confgen`` emits), cast as Spark casts it in the
+literal (the form of a rolling-window ``sourceWhereCondition``,
+``key >= 'lo' and key < 'hi'``), cast as Spark casts it in the
 comparison: to a date by its date part, to a timestamp in
 ``spark.sql.session.timeZone``. Any other shape (``OR``, ``NOT``,
 ``BETWEEN``, functions, casts, column-to-column comparisons, suffixed or

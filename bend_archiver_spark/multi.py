@@ -1,23 +1,24 @@
-"""Multi-table archive orchestration — the reference CLI's per-table
-loop (cmd/main.go:54-110): expand the ``dbRegex@tableRegex`` catalog,
+"""The archive loop — the reference CLI's per-table loop
+(cmd/main.go:54-110): expand the ``dbRegex@tableRegex`` catalog,
 archive each (db, table) serially, roll up counts, and verify the
 aggregate (GetAllSourceReadRowsCount / A13 + IsWorkerCorrect / A31).
 
-The reference runs tables serially with parallelism only inside a
-table (cmd/main.go:83-101); that shape is preserved — each table is
-one Spark job whose internal parallelism is the partition plan.
+The reference sends a single-table config through the same loop; so
+does this one: a config without ``sourceDbTables`` is the loop's one
+table, ``(sourceDB, sourceTable)``. Tables run serially with
+parallelism only inside a table (cmd/main.go:83-101); each table is one
+``ArchiveJob`` whose internal parallelism is the partition plan. The
+loop stops at the first table that fails verification.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
 from collections.abc import Callable
-
-from pyspark.sql import DataFrame, SparkSession
+from dataclasses import dataclass, field, replace
 
 from .catalog import expand_db_tables
 from .config import Config
-from .job import ArchiveReport, FileArchiveJob
+from .job import ArchiveJob, ArchiveReport
 
 __all__ = ["MultiTableReport", "run_multi_table"]
 
@@ -44,35 +45,60 @@ class MultiTableReport:
         )
 
 
-def run_multi_table(
-    spark: SparkSession,
+def table_configs(
     cfg: Config,
-    list_databases: Callable[[], list[str]],
-    list_tables: Callable[[str], list[str]],
-    load_source: Callable[[str, str], DataFrame],
     target_path_for: Callable[[str, str], str],
+    list_databases: Callable[[], list[str]] = lambda: [],
+    list_tables: Callable[[str], list[str]] = lambda db: [],
+) -> list[Config]:
+    """One config per table the loop archives: the expansion of
+    ``cfg.source_db_tables`` merged with an explicit
+    ``sourceDB``/``sourceTable``, or without selectors that one table.
+    Each is a clone of ``cfg`` (cmd/main.go:83-98 clones per table)
+    whose target is ``target_path_for(db, table)``. ``list_databases``
+    and ``list_tables`` are injected: a JDBC catalog in the CLI,
+    fixtures in tests (the Sourcer interface boundary,
+    source/source.go:18-29)."""
+    if not cfg.source_db_tables:
+        tables = [(cfg.source_db, cfg.source_table)]
+    else:
+        expanded = expand_db_tables(
+            cfg.source_db_tables,
+            list_databases,
+            list_tables,
+            explicit_db=cfg.source_db,
+            explicit_table=cfg.source_table,
+        )
+        tables = [(db, t) for db, ts in sorted(expanded.items()) for t in ts]
+    return [
+        replace(
+            cfg,
+            source_db=db,
+            source_table=table,
+            source_db_tables=[],
+            target_path=target_path_for(db, table),
+        )
+        for db, table in tables
+    ]
+
+
+def run_multi_table(
+    cfg: Config,
+    job_for: Callable[[Config], ArchiveJob],
+    target_path_for: Callable[[str, str], str],
+    list_databases: Callable[[], list[str]] = lambda: [],
+    list_tables: Callable[[str], list[str]] = lambda db: [],
+    on_report: Callable[[ArchiveReport], None] = lambda report: None,
 ) -> MultiTableReport:
-    """Expand ``cfg.source_db_tables`` selectors and archive each
-    matched (db, table). The three callables abstract the catalog and
-    IO so the same loop drives JDBC catalogs, file layouts, and test
-    fixtures (dependency injection mirrors the Sourcer interface
-    boundary, source/source.go:18-29)."""
-    expanded = expand_db_tables(
-        cfg.source_db_tables,
-        list_databases,
-        list_tables,
-        explicit_db=cfg.source_db,
-        explicit_table=cfg.source_table,
-    )
+    """Archive every table of :func:`table_configs` with the job
+    ``job_for`` builds for its config, serially. ``on_report`` sees each
+    table's report as it lands. The first table that raises or fails
+    verification ends the loop; an exception propagates."""
     out = MultiTableReport()
-    for db, tables in sorted(expanded.items()):
-        for table in tables:
-            # per-table cfg clone, as cmd/main.go:83-98 clones per table
-            sub = Config(**{**cfg.__dict__})
-            sub.source_db = db
-            sub.source_table = table
-            sub.source_db_tables = []
-            sub.target_path = target_path_for(db, table)
-            report = FileArchiveJob(spark, sub, load_source(db, table)).run()
-            out.reports.append(report)
+    for sub in table_configs(cfg, target_path_for, list_databases, list_tables):
+        report = job_for(sub).run()
+        out.reports.append(report)
+        on_report(report)
+        if not report.verify.is_correct:
+            break
     return out

@@ -1,10 +1,10 @@
 """Retry combinator — parity with DoRetry
 (ingester/ingest_databend.go:206-241): up to 500 attempts, exponential
 backoff starting at 1s capped at 60 minutes, retrying only designated
-retryable error types (the reference retries its three sink sentinel
-errors; Spark task-level failures are already retried by
-``spark.task.maxFailures`` — this wraps *driver-side* actions like
-writes and JDBC statements).
+retryable error types (the reference retries its sink sentinel errors;
+Spark task-level failures are already retried by
+``spark.task.maxFailures`` — this wraps *driver-side* statements: the
+archive's ``COPY INTO``, ``job.run_copy_into``).
 """
 
 from __future__ import annotations
@@ -13,7 +13,7 @@ import time
 from collections.abc import Callable
 from typing import TypeVar
 
-__all__ = ["RetryableError", "do_retry"]
+__all__ = ["CopyIntoError", "RetryableError", "do_retry"]
 
 T = TypeVar("T")
 
@@ -24,6 +24,10 @@ MAX_BACKOFF_SEC = 60 * 60.0
 
 class RetryableError(Exception):
     """Errors eligible for retry (the sink-error sentinels)."""
+
+
+class CopyIntoError(RetryableError):
+    """COPY INTO failed (ErrCopyIntoFailed, ingest_databend.go:27)."""
 
 
 def do_retry(

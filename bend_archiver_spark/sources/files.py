@@ -1,5 +1,5 @@
 """File sources: CSV / NDJSON / parquet / ORC readers with explicit
-schemas.
+schemas; the CLI's ``--source-format`` reads through :func:`read_source`.
 
 The reference lists CSV and NDJSON sources as "coming soon"
 (README.md supported-sources table) — here they exist. Schemas are
@@ -13,6 +13,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from ..sink import NDJSON_TS_FMT
+from ..tables import load_parquet
+
 __all__ = ["read_source", "SUPPORTED_FORMATS"]
 
 SUPPORTED_FORMATS = ("parquet", "orc", "csv", "ndjson", "json")
@@ -23,37 +26,30 @@ def read_source(
     path: str,
     fmt: str = "parquet",
     schema: T.StructType | None = None,
-    csv_header: bool = True,
-    csv_delimiter: str = ",",
-    timestamp_format: str = "yyyy-MM-dd HH:mm:ss",
 ) -> DataFrame:
     """Read a file source. A schema skips inference (mandatory at
     scale: schema inference reads the data twice); without one, CSV
-    falls back to header+inference for interactive use."""
-    if fmt in ("parquet", "orc"):
-        reader = spark.read
-        if schema is not None:
-            reader = reader.schema(schema)
-        return reader.parquet(path) if fmt == "parquet" else reader.orc(path)
+    falls back to inference for interactive use. A CSV file's first
+    row is its header, naming the columns. Parquet goes
+    through ``tables.load_parquet``, which takes the schema from the
+    footers (memoised) and normalizes nanosecond timestamps."""
+    if fmt == "parquet":
+        return load_parquet(spark, path)
     if fmt == "csv":
-        reader = (
-            spark.read.option("header", str(csv_header).lower())
-            .option("sep", csv_delimiter)
-            .option("timestampFormat", timestamp_format)
-            .option("mode", "PERMISSIVE")
+        reader = spark.read.options(
+            header="true",
+            inferSchema="true",
+            timestampFormat="yyyy-MM-dd HH:mm:ss",
+            mode="PERMISSIVE",
         )
-        if schema is not None:
-            reader = reader.schema(schema)
-        else:
-            reader = reader.option("inferSchema", "true")
-        return reader.csv(path)
-    if fmt in ("ndjson", "json"):
-        from ..sink import NDJSON_TS_FMT
-
+    elif fmt in ("ndjson", "json"):
         reader = spark.read.option("timestampFormat", NDJSON_TS_FMT)
-        if schema is not None:
-            reader = reader.schema(schema)
-        return reader.json(path)
-    raise ValueError(
-        f"unsupported source format {fmt!r}; expected one of {SUPPORTED_FORMATS}"
-    )
+    elif fmt == "orc":
+        reader = spark.read
+    else:
+        raise ValueError(
+            f"unsupported source format {fmt!r}; expected one of {SUPPORTED_FORMATS}"
+        )
+    if schema is not None:
+        reader = reader.schema(schema)
+    return reader.format("json" if fmt == "ndjson" else fmt).load(path)

@@ -129,24 +129,60 @@ class JdbcSource:
             "queryTimeout": str(QUERY_TIMEOUT_S),
         }
 
-    def _query_row(self, sql: str) -> list[str | None]:
-        """First row of ``sql``, each value as its string form (NULL ->
-        None), read positionally over one driver-side connection — no
-        Spark job. The probes are single-row aggregates."""
+    @contextmanager
+    def _statement(self, database: str | None = None) -> Iterator[object]:
+        """A statement over one driver-side connection to ``database``
+        (default the config's), with the probe timeout; no Spark job."""
         cfg = self.cfg
         with driver_connection(
-            self.spark, self._url(), self.dialect.driver,
+            self.spark, self._url(database), self.dialect.driver,
             cfg.source_user, cfg.source_pass,
         ) as conn:
             stmt = conn.createStatement()
             try:
                 stmt.setQueryTimeout(QUERY_TIMEOUT_S)
-                rs = stmt.executeQuery(sql)
-                rs.next()
-                n = rs.getMetaData().getColumnCount()
-                return [rs.getString(i) for i in range(1, n + 1)]
+                yield stmt
             finally:
                 stmt.close()
+
+    def _query_row(self, sql: str) -> list[str | None]:
+        """First row of ``sql``, each value as its string form (NULL ->
+        None), read positionally. The probes are single-row aggregates."""
+        with self._statement() as stmt:
+            rs = stmt.executeQuery(sql)
+            rs.next()
+            n = rs.getMetaData().getColumnCount()
+            return [rs.getString(i) for i in range(1, n + 1)]
+
+    def _names(self, sql: str, database: str | None = None) -> list[str]:
+        """The first column of every row of ``sql``."""
+        with self._statement(database) as stmt:
+            rs = stmt.executeQuery(sql)
+            names = []
+            while rs.next():
+                names.append(rs.getString(1))
+            return names
+
+    # --- catalog discovery (A15-A16) ---------------------------------
+    def list_databases(self) -> list[str]:
+        return self._names(self.dialect.list_databases_sql())
+
+    def list_tables(self, database: str) -> list[str]:
+        """The tables of ``database``, listed over a connection to it
+        (PostgreSQL and SQL Server list per database)."""
+        return self._names(
+            self.dialect.list_tables_sql(database),
+            self.locate(database, "")[0],
+        )
+
+    def locate(self, database: str, table: str) -> tuple[str, str]:
+        """The ``(sourceDB, sourceTable)`` that read ``table`` of listed
+        ``database``. Derby lists the schemas of the one database at the
+        configured path, so there the path stays and the table is
+        qualified by its schema."""
+        if self.dialect.name != "derby" or database == self.cfg.source_db:
+            return database, table
+        return self.cfg.source_db, f"{database}.{table}"
 
     # --- DSv2 catalog (aggregate/limit pushdown) ---------------------
     def register_v2_catalog(self, catalog_name: str = "srcdb") -> str:

@@ -1,5 +1,5 @@
 """Structured Streaming: incremental archive, windowed aggregation,
-bounded-state deduplication, stateful sessionization, stream joins."""
+bounded-state deduplication, stream joins."""
 
 from .archive import incremental_archive, windowed_event_counts
 from .dedup import dedup_stream

@@ -36,6 +36,9 @@ import sys
 import duckdb
 import pandas as pd
 
+# the CLI's one-line failure detail; ROOT_CAUSE_CHARS is its bound
+from bend_archiver_spark.cli import ROOT_CAUSE_CHARS, root_cause  # noqa: F401
+
 TABLES = [
     "region",
     "nation",
@@ -65,30 +68,6 @@ def duck_con(sf_dir: str) -> "duckdb.DuckDBPyConnection":
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )
     return con
-
-
-_CAUSED_BY = "Caused by: "
-ROOT_CAUSE_CHARS = 300
-
-
-def root_cause(exc: BaseException) -> str:
-    """One line naming why *exc* happened: the deepest Java ``Caused by``
-    as ``Class: message``, else the Java exception a Py4J error wraps,
-    else the first line of the message; at most ``ROOT_CAUSE_CHARS``.
-
-    ``str()`` of a ``Py4JJavaError`` is ``An error occurred while
-    calling oN.method.`` followed by the whole Java stack trace; the
-    sweep keeps only the first line of a FAIL line, which names the
-    call but not the failure."""
-    lines = [ln.strip() for ln in str(exc).splitlines() if ln.strip()]
-    causes = [ln[len(_CAUSED_BY):] for ln in lines if ln.startswith(_CAUSED_BY)]
-    if causes:
-        line = causes[-1]
-    elif len(lines) > 1 and lines[1].startswith(": "):
-        line = lines[1][2:]
-    else:
-        line = lines[0] if lines else type(exc).__name__
-    return line[:ROOT_CAUSE_CHARS]
 
 
 def _norm_cell(v):

@@ -1,7 +1,5 @@
 """Unit tests for the archiver core: dialects, catalog, retry,
-postsync, metrics, confgen, sink SQL."""
-
-from datetime import datetime
+postsync, metrics, sink SQL."""
 
 import pytest
 
@@ -11,7 +9,6 @@ from bend_archiver_spark.catalog import (
     parse_selector,
 )
 from bend_archiver_spark.config import Config
-from bend_archiver_spark.confgen import generate_archive_config
 from bend_archiver_spark.metrics import ThroughputRecorder
 from bend_archiver_spark.postsync import delete_after_sync
 from bend_archiver_spark.retry import RetryableError, do_retry
@@ -177,6 +174,53 @@ class TestRetry:
         assert calls == [1]  # no second attempt after the cancel
 
 
+    def test_copy_into_retries_its_sentinel(self):
+        """``run_copy_into`` retries a failed statement under the
+        reference's policy (ingest_databend.go:206-241): 1 s, then 2 s
+        of backoff, then the third attempt's row count."""
+        from bend_archiver_spark.job import run_copy_into
+
+        cfg = Config(
+            source_split_key="id", source_where_condition="id > 0",
+            databend_table="db.t", target_path="/archive/t",
+        )
+        calls, slept = [], []
+
+        def executor(sql):
+            calls.append(sql)
+            if len(calls) < 3:
+                raise OSError("warehouse unreachable")
+            return 7
+
+        assert run_copy_into(None, cfg, executor, sleep=slept.append) == 7
+        assert len(calls) == 3 and slept == [1.0, 2.0]
+
+    def test_copy_into_cancel_stops_before_next_attempt(self):
+        from bend_archiver_spark import cancel
+        from bend_archiver_spark.job import run_copy_into
+
+        cfg = Config(
+            source_split_key="id", source_where_condition="id > 0",
+            databend_table="db.t", target_path="/archive/t",
+        )
+        calls = []
+
+        def executor(sql):
+            calls.append(sql)
+            raise OSError("warehouse unreachable")
+
+        cancel.reset()
+        try:
+            with pytest.raises(cancel.JobCancelled):
+                run_copy_into(
+                    None, cfg, executor,
+                    sleep=lambda s: cancel.request_cancel(),
+                )
+        finally:
+            cancel.reset()
+        assert len(calls) == 1
+
+
 class TestPostsync:
     def _cfg(self, dbtype="mysql", **kw):
         return Config(
@@ -256,22 +300,6 @@ class TestMetrics:
         rec.record(10, 100)
         line = rec.as_log_line("ingest")
         assert "rows/s" in line and "bytes/s" in line and "total 10 rows" in line
-
-
-class TestConfgen:
-    def test_day_window(self):
-        now = datetime(2024, 6, 30, 12, 0, 0)
-        conf = generate_archive_config("db", "t", "target.t", "ts", "day", now)
-        assert conf["sourceWhereCondition"] == (
-            "ts >= '2024-06-29 12:00:00' and ts < '2024-06-30 12:00:00'"
-        )
-        # generated config passes reference validation
-        cfg = Config.from_dict(conf)
-        assert cfg.source_split_time_key == "ts"
-
-    def test_bad_unit(self):
-        with pytest.raises(ValueError):
-            generate_archive_config("db", "t", "x", timeunit="year")
 
 
 class TestCopyInto:

@@ -357,3 +357,93 @@ class TestCliCancellation:
             cli.main(
                 ["--conf", conf, "--source-path", "whatever.parquet"]
             )
+
+
+class TestCliSourceFormat:
+    """``--source-format`` reads through ``sources.files.read_source``."""
+
+    def test_ndjson_source_archives(self, cli_spark, sf_dir, tmp_path, capsys):
+        from bend_archiver_spark.sink import write_batch
+        from bend_archiver_spark.tables import load_table
+
+        src = str(tmp_path / "nd")
+        rows = load_table(cli_spark, sf_dir, "lineitem").filter("l_orderkey < 200")
+        write_batch(rows, src, fmt="ndjson", mode="overwrite")
+        conf = _write_conf(tmp_path, tmp_path / "out")
+        rc = cli.main(
+            ["--conf", conf, "--source-path", src, "--source-format", "ndjson"]
+        )
+        assert rc == 0
+        report = next(
+            json.loads(l) for l in capsys.readouterr().out.splitlines()
+            if l.startswith("{")
+        )
+        assert report["verified"] is True
+        assert report["source_rows"] == report["target_rows"] == (
+            rows.filter("l_orderkey > 0").count()
+        )
+
+    def test_csv_header_names_the_columns(
+        self, cli_spark, tmp_path, capsys
+    ):
+        src = tmp_path / "t.csv"
+        src.write_text("id,name\n1,a\n2,b\n3,c\n")
+        conf = _write_conf(
+            tmp_path, tmp_path / "out",
+            sourceSplitKey="id", sourceWhereCondition="id > 1",
+        )
+        rc = cli.main(
+            ["--conf", conf, "--source-path", str(src), "--source-format", "csv"]
+        )
+        assert rc == 0
+        report = next(
+            json.loads(l) for l in capsys.readouterr().out.splitlines()
+            if l.startswith("{")
+        )
+        assert report["verified"] is True and report["target_rows"] == 2
+        back = cli_spark.read.parquet(str(tmp_path / "out"))
+        assert back.columns == ["id", "name"]
+        assert sorted(r.name for r in back.collect()) == ["b", "c"]
+
+    def test_unknown_format_is_usage_error(self, cli_spark, tmp_path, capsys):
+        conf = _write_conf(tmp_path, tmp_path / "out")
+        rc = cli.main(
+            ["--conf", conf, "--source-path", str(tmp_path),
+             "--source-format", "avro"]
+        )
+        assert rc == 2
+        assert "unsupported source format 'avro'" in capsys.readouterr().err
+
+
+class TestCliFailureLine:
+    """A run that fails with any exception exits 1 with one ``error:``
+    line naming its root cause, not a Python traceback."""
+
+    def _fails(self, sf_dir, tmp_path, capsys, target) -> str:
+        conf = _write_conf(tmp_path, target)
+        rc = cli.main(
+            ["--conf", conf, "--source-path", f"{sf_dir}/lineitem.parquet"]
+        )
+        err = capsys.readouterr().err
+        assert rc == 1
+        assert "Traceback" not in err
+        return next(l for l in err.splitlines() if l.startswith("error: "))
+
+    def test_target_is_a_regular_file(self, cli_spark, sf_dir, tmp_path, capsys):
+        """The gate lists a local target with ``os.scandir``, so a
+        regular file fails there first, with Python's error."""
+        target = tmp_path / "not_a_dir"
+        target.write_text("a regular file")
+        line = self._fails(sf_dir, tmp_path, capsys, target)
+        assert "Not a directory" in line and str(target) in line
+
+    def test_java_failure_names_the_java_cause(
+        self, cli_spark, sf_dir, tmp_path, capsys
+    ):
+        """Under a regular file the gate finds no target and the staged
+        write fails in the JVM: the line names the Java exception, not
+        Py4J's ``An error occurred while calling``."""
+        parent = tmp_path / "not_a_dir"
+        parent.write_text("a regular file")
+        line = self._fails(sf_dir, tmp_path, capsys, parent / "archive")
+        assert "org.apache.hadoop.fs.ParentNotDirectoryException" in line

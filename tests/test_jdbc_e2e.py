@@ -14,7 +14,7 @@ import shutil
 import pytest
 
 from bend_archiver_spark.config import Config
-from bend_archiver_spark.job import JdbcArchiveJob
+from bend_archiver_spark.job import FileArchiveJob, JdbcArchiveJob
 
 N_ROWS = 200
 PINNED_JDBC_JOBS = 5
@@ -185,14 +185,13 @@ class TestJdbcArchiveE2E:
         cfg = _cfg(derby, "", source_table="", source_db="",
                    source_db_tables=["APP@.*TAB.*"])
         report = run_multi_table(
-            spark,
             cfg,
-            list_databases,
-            list_tables,
-            load_source=lambda db, table: spark.read.jdbc(
-                url, table, properties=props
+            job_for=lambda c: FileArchiveJob(
+                spark, c, spark.read.jdbc(url, c.source_table, properties=props)
             ),
             target_path_for=lambda db, table: str(tmp_path / "multi" / table),
+            list_databases=list_databases,
+            list_tables=list_tables,
         )
         assert len(report.reports) == 2  # TESTTAB + SIDETAB discovered
         assert report.total_source_rows == N_ROWS + 80
@@ -278,16 +277,17 @@ class TestJdbcArchiveE2E:
         cfg = _cfg(derby, "", source_table="", source_db="",
                    source_db_tables=["ARCH.@EVENTS", "ARCHA@.*"])
         report = run_multi_table(
-            spark,
             cfg,
-            list_databases,
-            list_tables,
-            load_source=lambda db, table: spark.read.jdbc(
-                url, f"{db}.{table}", properties=props
+            job_for=lambda c: FileArchiveJob(
+                spark, c, spark.read.jdbc(
+                    url, f"{c.source_db}.{c.source_table}", properties=props
+                ),
             ),
             target_path_for=lambda db, table: str(
                 tmp_path / "mschema" / db / table
             ),
+            list_databases=list_databases,
+            list_tables=list_tables,
         )
         assert len(report.reports) == 3
         assert report.total_source_rows == 30 + 45 + 1
@@ -1093,3 +1093,82 @@ class TestCliJdbcMode:
             "dry_run": True, "matching_rows": N_ROWS,
         }
         assert not (tmp_path / "cli_tgt").exists()
+
+
+class TestCliMultiTable:
+    """A JDBC config with ``sourceDbTables`` runs the CLI's one loop
+    over every matched table: the catalog is listed over the driver's
+    connection, each table is archived into ``<targetPath>/<db>/<table>``
+    and deleted from its source, and a rollup line follows (A13, A17)."""
+
+    def test_two_schemas_archive_delete_and_roll_up(
+        self, spark, derby, tmp_path, monkeypatch, capsys, spark_jobs
+    ):
+        import json
+
+        from bend_archiver_spark import cancel, cli
+        from bend_archiver_spark.catalog import expand_db_tables
+        from bend_archiver_spark.sources.jdbc import JdbcSource
+
+        jvm = spark._sc._jvm  # noqa: SLF001
+        conn = jvm.java.sql.DriverManager.getConnection(
+            f"jdbc:derby:{derby};create=true"
+        )
+        st = conn.createStatement()
+        for schema, n in (("ARCHA", 30), ("ARCHB", 45)):
+            st.execute(f"CREATE SCHEMA {schema}")
+            st.execute(
+                f"CREATE TABLE {schema}.EVENTS (ID BIGINT NOT NULL, V INT)"
+            )
+            for i in range(1, n + 1):
+                st.execute(f"INSERT INTO {schema}.EVENTS VALUES ({i}, {i})")
+        conn.close()
+
+        raw = {
+            "databaseType": "derby",
+            "sourceDB": derby,
+            "sourceDbTables": ["ARCH.@EVENTS"],
+            "sourceSplitKey": "ID",
+            "sourceWhereCondition": "ID > 0",
+            "batchSize": 20,
+            "deleteAfterSync": True,
+            "targetPath": str(tmp_path / "arch"),
+            "targetFormat": "parquet",
+        }
+        cfg = Config.from_dict(raw)
+        source = JdbcSource(spark, cfg)
+        expanded, jobs = spark_jobs(lambda: expand_db_tables(
+            cfg.source_db_tables, source.list_databases, source.list_tables
+        ))
+        assert expanded == {"ARCHA": ["EVENTS"], "ARCHB": ["EVENTS"]}
+        assert jobs == 0
+
+        monkeypatch.setattr(cli, "get_spark", lambda *a, **k: spark)
+        monkeypatch.setattr(spark, "stop", lambda: None)
+        conf = tmp_path / "conf.json"
+        conf.write_text(json.dumps(raw))
+        cancel.reset()
+        try:
+            rc = cli.main(["--conf", str(conf)])
+        finally:
+            cancel.reset()
+        assert rc == 0
+        lines = [
+            json.loads(l)
+            for l in capsys.readouterr().out.splitlines()
+            if l.startswith("{")
+        ]
+        reports = [l for l in lines if "table" in l]
+        assert [(r["table"], r["source_rows"], r["verified"]) for r in reports] == [
+            ("ARCHA.EVENTS", 30, True), ("ARCHB.EVENTS", 45, True),
+        ]
+        assert lines[-1] == {
+            "tables": 2, "source_rows": 75, "target_rows": 75, "verified": True,
+        }
+        for schema, n in (("ARCHA", 30), ("ARCHB", 45)):
+            assert spark.read.parquet(
+                str(tmp_path / "arch" / schema / "EVENTS")
+            ).count() == n
+            drained = Config.from_dict({**raw, "sourceTable": f"{schema}.EVENTS"})
+            assert JdbcSource(spark, drained).count() == 0
+        shutil.rmtree(str(tmp_path / "arch"), ignore_errors=True)

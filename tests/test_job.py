@@ -681,23 +681,23 @@ class TestManifestGate:
             spark.conf.set("spark.sql.session.timeZone", "UTC")
 
     def test_confgen_time_windows(self, spark, tmp_path):
-        """Rolling windows as ``confgen`` writes them (``key >= 'lo' and
-        key < 'hi'``, lower-case ``and``) over a timestamp and a date
-        key: the next window skips the archived one, the same window is
-        refused."""
+        """Rolling one-day windows in the reference config generator's
+        form (``key >= 'lo' and key < 'hi'``, lower-case ``and``,
+        tools/confgenerotor/conf_generate.go) over a timestamp and a
+        date key: the next window skips the archived one, the same
+        window is refused."""
         from datetime import datetime
-
-        from bend_archiver_spark.confgen import generate_archive_config
 
         src = _keyed(spark)
         for key, fmt in (("ts", "parquet"), ("d", "orc")):
             tgt = str(tmp_path / f"windows_{key}")
 
             def window(day, key=key):
-                return generate_archive_config(
-                    "db", "keyed", "db.keyed", time_key=key, timeunit="day",
-                    now=datetime(2024, 1, day),
-                )["sourceWhereCondition"]
+                lo, hi = (
+                    datetime(2024, 1, d).strftime("%Y-%m-%d %H:%M:%S")
+                    for d in (day - 1, day)
+                )
+                return f"{key} >= '{lo}' and {key} < '{hi}'"
 
             assert window(3).startswith(f"{key} >= '2024-01-02 00:00:00' and")
             cfg = _keyed_cfg(tgt, window(2), target_format=fmt)

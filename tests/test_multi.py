@@ -6,6 +6,7 @@ tables are excluded (cmd/main_test.go:25-59)."""
 import shutil
 
 from bend_archiver_spark.config import Config
+from bend_archiver_spark.job import FileArchiveJob
 from bend_archiver_spark.multi import run_multi_table
 from bend_archiver_spark.tables import load_table
 
@@ -34,16 +35,17 @@ class TestMultiTable:
             target_format="parquet",
         )
         report = run_multi_table(
-            spark,
             cfg,
+            job_for=lambda c: FileArchiveJob(
+                spark, c, fixtures[(c.source_db, c.source_table)]
+            ),
+            target_path_for=lambda db, t: str(tmp_path / db / t),
             list_databases=lambda: ["db1", "db2", "other"],
             list_tables=lambda db: {
                 "db1": ["test_table1", "junk"],
                 "db2": ["test_table2"],
                 "other": ["ignored"],
             }[db],
-            load_source=lambda db, t: fixtures[(db, t)],
-            target_path_for=lambda db, t: str(tmp_path / db / t),
         )
         assert len(report.reports) == 2  # 'other' not matched
         # F2 semantics: sum of the two matched tables, nothing else
@@ -62,12 +64,11 @@ class TestMultiTable:
             batch_size=100,
         )
         report = run_multi_table(
-            spark,
             cfg,
+            job_for=lambda c: FileArchiveJob(spark, c, li),
+            target_path_for=lambda db, t: str(tmp_path / db / t),
             list_databases=lambda: [],
             list_tables=lambda db: [],
-            load_source=lambda db, t: li,
-            target_path_for=lambda db, t: str(tmp_path / db / t),
         )
         assert len(report.reports) == 1
         assert report.total_source_rows == 7

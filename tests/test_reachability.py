@@ -15,15 +15,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PACKAGE = "bend_archiver_spark"
 
 # package module -> why only tests import it
-TEST_ONLY = {
-    "multi": "multi-table loop (cmd/main.go:54-110); the CLI never reads sourceDbTables",
-    "catalog": "dbRegex@tableRegex expansion, used only by multi",
-    "stage": "presign -> PUT -> COPY INTO stage upload (A27-A30), not wired as a publish step",
-    "retry": "the reference's DoRetry, used only by stage",
-    "sources.files": "explicit-schema CSV/NDJSON readers; the CLI reads with spark.read",
-    "confgen": "the reference's config generator (A37), without an entry point",
-    "streaming.stateful": "applyInPandasWithState wrapper no query or archive path uses",
-}
+TEST_ONLY: dict[str, str] = {}
 
 
 def _roots() -> list[str]:
