@@ -173,6 +173,33 @@ class TestRetry:
             cancel.reset()
         assert calls == [1]  # no second attempt after the cancel
 
+    def test_sentinels_are_retryable(self):
+        # do_retry keys on RetryableError; COPY INTO's sentinel is one
+        # (ingest_databend.go:27, 229-232)
+        from bend_archiver_spark.retry import CopyIntoError
+
+        assert issubclass(CopyIntoError, RetryableError)
+
+    def test_copy_into_gives_up_with_its_sentinel(self):
+        """After the policy's last attempt ``run_copy_into`` raises the
+        ``CopyIntoError`` sentinel, chained to the executor's error."""
+        from bend_archiver_spark.job import run_copy_into
+        from bend_archiver_spark.retry import MAX_ATTEMPTS, CopyIntoError
+
+        cfg = Config(
+            source_split_key="id", source_where_condition="id > 0",
+            databend_table="db.t", target_path="/archive/t",
+        )
+        calls = []
+
+        def executor(sql):
+            calls.append(sql)
+            raise OSError("warehouse unreachable")
+
+        with pytest.raises(CopyIntoError, match="warehouse unreachable") as ei:
+            run_copy_into(None, cfg, executor, sleep=lambda s: None)
+        assert isinstance(ei.value.__cause__, OSError)
+        assert len(calls) == MAX_ATTEMPTS
 
     def test_copy_into_retries_its_sentinel(self):
         """``run_copy_into`` retries a failed statement under the
