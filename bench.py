@@ -267,7 +267,6 @@ ARCHIVE_SYNC = dict(
     source_split_key="l_orderkey",
     source_where_condition="l_quantity > 0",
     batch_size=40000,
-    max_thread=5,
     target_format="parquet",
 )
 

@@ -10,9 +10,10 @@ Semantic upgrade (documented, intentional): the reference forbids
 ``maxThread > 1`` with a time split key because its LIMIT/OFFSET paging
 is unsafe under concurrency (``worker/worker.go:139-143``). Spark
 partitioned reads have no OFFSET hazard — each time window becomes one
-independent partition predicate — so this engine accepts it instead
-of refusing. Set ``strict_reference_semantics=True`` to get the
-reference behavior.
+independent partition predicate, and the scheduler sizes the
+parallelism — so this engine reads no thread count: ``maxThread``,
+like ``sourceQuery`` and ``databendDSN``, loads as an unknown key and
+is ignored.
 """
 
 from __future__ import annotations
@@ -60,17 +61,12 @@ class Config:
     # multi-table selectors, format "dbRegex@tableRegex" ('@' separator
     # because '.' is regex-special; reference source/mysql.go:388)
     source_db_tables: list[str] = field(default_factory=list)
-    # JSON-compat only: the reference always overwrites this with
-    # "select * from db.table" (worker/worker.go:34) — never
-    # user-supplied SQL; our reads derive their own per-partition SQL
-    source_query: str = ""
     source_where_condition: str = ""
     source_split_key: str = ""
     source_split_time_key: str = ""
     time_split_unit: str = "hour"
 
     # Target (reference: config/config.go:53-64)
-    databend_dsn: str = "localhost:8000"
     databend_table: str = ""
     batch_size: int = 1000
     batch_max_interval: int = 3  # seconds; rate limit between delete batches
@@ -79,7 +75,6 @@ class Config:
     disable_variant_check: bool = True
     user_stage: str = "~"
     delete_after_sync: bool = False
-    max_thread: int = 1
     oracle_sid: str = ""
 
     # Engine-local extensions (not in the reference config)
@@ -88,7 +83,6 @@ class Config:
     # hive-style layout columns for the sink (e.g. a date column): at
     # scale this is what makes later reads partition-prunable
     target_partition_by: list[str] = field(default_factory=list)
-    strict_reference_semantics: bool = False
     # checksum upgrade: also compare order-insensitive content
     # fingerprints source-vs-target (verify.content_fingerprint) —
     # catches value corruption counts can't. The target's fingerprint
@@ -122,14 +116,12 @@ class Config:
         "sslMode": "ssl_mode",
         "sourceTable": "source_table",
         "sourceDbTables": "source_db_tables",
-        "sourceQuery": "source_query",
         "sourceWhereCondition": "source_where_condition",
         "sourceSplitKey": "source_split_key",
         "SourceSplitTimeKey": "source_split_time_key",
         "sourceSplitTimeKey": "source_split_time_key",
         "TimeSplitUnit": "time_split_unit",
         "timeSplitUnit": "time_split_unit",
-        "databendDSN": "databend_dsn",
         "databendTable": "databend_table",
         "batchSize": "batch_size",
         "batchMaxInterval": "batch_max_interval",
@@ -139,7 +131,6 @@ class Config:
         "userStage": "user_stage",
         "deleteAfterSync": "delete_after_sync",
         "verifyFingerprint": "verify_fingerprint",
-        "maxThread": "max_thread",
         "oracleSID": "oracle_sid",
         "targetPath": "target_path",
         "targetFormat": "target_format",
@@ -172,8 +163,6 @@ class Config:
     def validate(self) -> None:
         if not self.user_stage:
             self.user_stage = "~"
-        if self.max_thread == 0:
-            self.max_thread = 1
         if isinstance(self.target_partition_by, str):
             self.target_partition_by = [
                 c.strip()
@@ -193,11 +182,6 @@ class Config:
                 "must set sourceWhereCondition when a split key is set"
             )
         if self.source_split_time_key:
-            if self.strict_reference_semantics and self.max_thread > 1:
-                raise ConfigError(
-                    "SourceSplitTimeKey does not support MaxThread > 1; "
-                    "use SourceSplitKey for parallelism"
-                )
             if not _TIME_CONDITION_RE.match(self.source_where_condition):
                 raise ConfigError(
                     "SourceSplitTimeKey does not match the required format"
@@ -207,9 +191,6 @@ class Config:
                     f"invalid TimeSplitUnit: {self.time_split_unit}, it "
                     "should be 'minute', 'quarter', 'hour', or 'day'"
                 )
-
-    def time_split_stride(self) -> timedelta:
-        return TIME_SPLIT_STRIDES[self.time_split_unit]
 
 
 def load_config(path: str) -> Config:

@@ -31,15 +31,13 @@ stops a run at the last boundary before delete-after-sync
 format is refused: the publish renames plain files, which a Delta
 table's log would not list.
 
-Because nothing is published before verification, two pairs of Spark
-jobs run side by side, each pair's second job on one worker thread:
-
-- the gate's scan of the published target, beside the plan and the
-  staged write; a refusal cancels their Spark jobs in flight, so a
-  refused run does not extract the source to the end;
-- the source fingerprint, beside the source ``COUNT`` and the one
-  aggregate over the staged files that yields their count and (with
-  ``verify_fingerprint``) fingerprint.
+The gate runs first, on the calling thread, as the reference checks
+it before it extracts anything (cmd/main.go:74-82): a refused run
+plans and writes nothing. Because nothing is published before
+verification, one pair of Spark jobs runs side by side: the source
+fingerprint, on one worker thread, beside the source ``COUNT`` and the
+one aggregate over the staged files that yields their count and (with
+``verify_fingerprint``) fingerprint.
 
 The verification contract is unchanged: the source must equal what the
 target holds for the predicate once published, i.e. published + staged
@@ -67,7 +65,6 @@ listed, the files it scanned and the runs it skipped.
 
 from __future__ import annotations
 
-import threading
 import time
 import uuid
 from concurrent.futures import Future, ThreadPoolExecutor
@@ -91,6 +88,7 @@ from .sink import (
     clear_staging,
     mark_publishing,
     publish_staged,
+    refuse_non_directory,
     staging_path,
     write_batch,
 )
@@ -286,27 +284,18 @@ class _Phases:
         return result
 
 
-def _raise_if_refused(gate: Future) -> None:
-    """Raise the gate's error once the gate has failed."""
-    if gate.done() and gate.exception() is not None:
-        gate.result()
-
-
 class _Worker:
-    """The one background thread a run overlaps its independent Spark
-    jobs on. A task inherits the caller's local properties (job group,
-    description) through ``inheritable_thread_target``. The run's jobs,
-    on both threads, carry the run's tag while it lives, so
-    :meth:`close` can cancel what is still running before it waits for
-    the thread, and :meth:`cancel_on_error` what the caller runs."""
+    """The one background thread a run overlaps the source fingerprint
+    on. A task inherits the caller's local properties (job group,
+    description) through ``inheritable_thread_target`` and tags its
+    Spark jobs with the run's tag, so :meth:`close` can cancel what is
+    still running before it waits for the thread."""
 
     def __init__(self, spark: SparkSession):
         self.spark = spark
         self.tag = f"archive-{uuid.uuid4().hex}"
-        spark.sparkContext.addJobTag(self.tag)
         self.pool = ThreadPoolExecutor(1, thread_name_prefix="archive-worker")
         self.futures: list[Future] = []
-        self.stopped = threading.Event()
 
     def submit(self, fn, *args, **kwargs) -> Future:
         sc, tag = self.spark.sparkContext, self.tag
@@ -319,29 +308,10 @@ class _Worker:
         self.futures.append(future)
         return future
 
-    def cancel_on_error(self, future: Future) -> None:
-        """Done-callback: once a task fails, cancel the run's jobs until
-        the caller has stopped (:meth:`caller_stopped`). One cancel is
-        not enough: a phase such as the write runs several jobs in a
-        row, and a cancel landing between two of them stops neither."""
-        if future.cancelled() or future.exception() is None:
-            return
-        while True:
-            self.spark.sparkContext.cancelJobsWithTag(self.tag)
-            if self.stopped.wait(0.05):
-                return
-
-    def caller_stopped(self) -> None:
-        """The caller runs no more jobs a failed task should cancel."""
-        self.stopped.set()
-
     def close(self) -> None:
-        self.caller_stopped()
-        sc = self.spark.sparkContext
         if not all(f.done() for f in self.futures):
-            sc.cancelJobsWithTag(self.tag)
+            self.spark.sparkContext.cancelJobsWithTag(self.tag)
         self.pool.shutdown(wait=True, cancel_futures=True)
-        sc.removeJobTag(self.tag)
 
 
 class ArchiveJob:
@@ -369,6 +339,7 @@ class ArchiveJob:
                 "targetFormat 'delta' is not supported by ArchiveJob.run:"
                 " a staged publish cannot commit to a Delta table"
             )
+        refuse_non_directory(spark, cfg.target_path)
         clear_staging(spark, cfg.target_path)
         run_id = uuid.uuid4().hex
         staged = staging_path(cfg.target_path, run_id)
@@ -377,55 +348,38 @@ class ArchiveJob:
         worker = _Worker(spark)
         publishing = False
         try:
-            # pre-flight gate (A32) over the published target, beside
-            # the plan and the staged write: nothing is published
-            # unless it passes, and a refusal cancels the plan's or the
-            # write's job in flight
-            gate = worker.submit(
-                phases.run, "gate",
-                lambda: check_idempotency_gate(spark, cfg),
+            # pre-flight gate (A32, cmd/main.go:74-82) over the published
+            # target, before anything is extracted: a refused run plans
+            # and writes nothing, and nothing is published unless it
+            # passes
+            gate = phases.run(
+                "gate", lambda: check_idempotency_gate(spark, cfg),
                 rows=lambda _: 0,
             )
-            gate.add_done_callback(worker.cancel_on_error)
-            try:
-                plan = phases.run(
-                    "plan", self._plan,
-                    rows=lambda p: getattr(p, "row_count", None),
+            plan = phases.run(
+                "plan", self._plan,
+                rows=lambda p: getattr(p, "row_count", None),
+            )
+            if not plan.num_partitions:
+                # empty-table short-circuit (worker/worker.go:92-95)
+                return ArchiveReport(
+                    cfg.source_table, 0, 0, 0, plan.batch_size,
+                    time.monotonic() - t0, VerifyResult(0, 0),
+                    details={"phases": phases.timings, "gate": gate},
                 )
-                if not plan.num_partitions:
-                    # a drained source still refuses
-                    details = {"phases": phases.timings, "gate": gate.result()}
-                    # empty-table short-circuit (worker/worker.go:92-95)
-                    return ArchiveReport(
-                        cfg.source_table, 0, 0, 0, plan.batch_size,
-                        time.monotonic() - t0, VerifyResult(0, 0),
-                        details=details,
-                    )
-                raise_if_cancelled("write")
-                extracted, written = self._read(plan)
-                if cfg.reference_compat:
-                    from .sources.typemap import apply_reference_compat
+            raise_if_cancelled("write")
+            extracted, written = self._read(plan)
+            if cfg.reference_compat:
+                from .sources.typemap import apply_reference_compat
 
-                    extracted = apply_reference_compat(extracted)
-                    written = apply_reference_compat(written)
-                _raise_if_refused(gate)
-                phases.run("write", lambda: write_batch(
-                    extracted,
-                    staged,
-                    cfg.target_format,
-                    mode="append",
-                    partition_by=cfg.target_partition_by or None,
-                ))
-            except JobCancelled:
-                raise
-            except Exception:
-                # a job the refusal cancelled fails with Spark's error:
-                # report the refusal instead
-                _raise_if_refused(gate)
-                raise
-            finally:
-                worker.caller_stopped()
-            _raise_if_refused(gate)
+                extracted = apply_reference_compat(extracted)
+                written = apply_reference_compat(written)
+            phases.run("write", lambda: write_batch(
+                extracted,
+                staged,
+                cfg.target_format,
+                partition_by=cfg.target_partition_by or None,
+            ))
 
             # verification contract (worker/worker.go:230-242): source
             # rows == published + staged target rows for the predicate;
@@ -448,7 +402,7 @@ class ArchiveJob:
                 lambda: verify_target(spark, cfg, written.columns, schema, staged),
                 rows=lambda r: r[0],
             )
-            details = {"phases": phases.timings, "gate": gate.result()}
+            details = {"phases": phases.timings, "gate": gate}
             verify = VerifyResult(source_rows, tgt_rows)
             if fingerprint is not None:
                 verify.source_fingerprint = fingerprint.result()
@@ -503,7 +457,7 @@ class ArchiveJob:
                 details=details,
             )
         finally:
-            # wait for (or cancel) the worker's job before removing
+            # wait for (or cancel) the fingerprint's job before removing
             # what it may still be reading
             worker.close()
             # a publish cut short keeps its staged files and marker: the

@@ -38,6 +38,7 @@ from .sink import (
     listed_files,
     mark_publishing,
     publish_staged,
+    refuse_non_directory,
     staging_path,
     write_batch,
 )
@@ -85,6 +86,7 @@ def compact_files(
     files). One writer per target, as for archive runs; the next one
     finishes an interrupted publish before its gate reads the target.
     """
+    refuse_non_directory(spark, path)
     clear_staging(spark, path)
     listed = listed_files(spark, path)
     if not listed:

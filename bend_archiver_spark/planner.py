@@ -1,29 +1,29 @@
 """Partition planning: key ranges, time windows, adaptive batch sizing.
 
 This is the heart of the reference engine — it turns ``(min, max,
-batch_size, max_thread)`` statistics into disjoint SQL range predicates
+batch_size, row_count)`` statistics into disjoint SQL range predicates
 that shard a table scan. In Spark those predicates feed
 ``spark.read.jdbc(url, table, predicates=[...])`` (one predicate = one
 partition = one task), or equivalently ``partitionColumn/lowerBound/
 upperBound/numPartitions``.
 
 Capability parity (reference file:line):
-- slim_condition             <- source/source.go:48-64   (A5)
 - split_condition            <- source/source.go:66-77   (A6)
-- split_condition_streaming  <- source/source.go:79-111  (A7, stride batch-1)
 - split_time_windows         <- source/source.go:130-162 (A8)
-- chunk_conditions           <- source/source.go:113-128 (A9)
 - parse_time_dynamic         <- source/source.go:218-236
 - coerce_key                 <- source/source.go:238-259
 - adjust_batch_size          <- source/mysql.go:43-65    (A18)
-- needs_fanout               <- worker/worker.go:82-84   (A19)
+
+The reference's fan-out machinery has no counterpart: its coarse
+per-goroutine ranges (A5), per-worker streaming splitter (A7),
+condition chunking (A9) and fan-out decision (A19) become one
+predicate per partition, which Spark's scheduler queues onto its
+executors.
 
 Edge semantics preserved exactly (pinned by golden tests, see
 tests/test_planner.py): half-open ``[a, a+batch)`` ranges with a final
-inclusive range; the streaming variant advances by ``batch_size - 1``
-and emits an inclusive upper bound when it reaches the global max.
-These goldens make the planner a drop-in for configs tuned against the
-reference.
+inclusive range. These goldens make the planner a drop-in for configs
+tuned against the reference.
 
 Scale note: predicate generation is O(range/batch) driver-side work and
 produces one Spark partition per predicate. For 100 TB tables prefer
@@ -36,21 +36,16 @@ the reference.
 from __future__ import annotations
 
 from dataclasses import dataclass
-from datetime import datetime, timedelta
-from typing import Iterator
+from datetime import datetime
 
 from .config import TIME_SPLIT_STRIDES
 
 __all__ = [
-    "slim_condition",
     "split_condition",
-    "split_condition_streaming",
     "split_time_windows",
-    "chunk_conditions",
     "parse_time_dynamic",
     "coerce_key",
     "adjust_batch_size",
-    "needs_fanout",
     "plan_jdbc_partitions",
     "JdbcPartitionPlan",
     "MAX_PARTITIONS",
@@ -60,28 +55,6 @@ _TIME_FMT = "%Y-%m-%d %H:%M:%S"
 
 # the most partitions (tasks) one archive plan may fan out to
 MAX_PARTITIONS = 10_000
-
-
-def slim_condition(
-    max_thread: int, min_key: int, max_key: int
-) -> list[tuple[int, int]]:
-    """Divide ``[min_key, max_key]`` into ``max_thread`` contiguous
-    coarse ranges; the last range absorbs the remainder.
-
-    Parity: source/source.go:48-64. Golden: (5, 0, 100) -> 5 ranges,
-    last upper bound 100; inverted range -> [].
-    """
-    if min_key > max_key:
-        return []
-    range_size = (max_key - min_key) // max_thread
-    out: list[tuple[int, int]] = []
-    for i in range(max_thread):
-        lo = min_key + range_size * i
-        hi = lo + range_size
-        if i == max_thread - 1:
-            hi = max_key
-        out.append((lo, hi))
-    return out
 
 
 def split_condition(
@@ -104,49 +77,6 @@ def split_condition(
         )
         min_key += batch_size
     return conditions
-
-
-def split_condition_streaming(
-    split_key: str,
-    batch_size: int,
-    min_key: int,
-    max_key: int,
-    all_max: int,
-) -> Iterator[str]:
-    """Per-worker batch splitter used in fan-out mode. Distinct edge
-    semantics from :func:`split_condition`: the stride is
-    ``batch_size - 1`` and the window that reaches ``all_max`` (the
-    global maximum across all workers) closes with an inclusive bound.
-
-    Parity: source/source.go:79-111 — including the quirk that adjacent
-    windows share a boundary value but remain disjoint because of the
-    half-open upper bound. Goldens: ("id",10,0,100,100) -> 12
-    predicates, 10th == "(id >= 81 and id < 90)"; ("id",10,0,50,100)
-    -> 6 predicates, 5th == "(id >= 36 and id < 45)".
-
-    In the reference this yields through a buffered channel so planning
-    pipelines with extraction; in Spark the generator is materialized
-    into the ``predicates=`` list and the scheduler does the pipelining.
-    """
-    if min_key > max_key:
-        return
-    while True:
-        if min_key + batch_size - 1 >= max_key:
-            if min_key > all_max:
-                return
-            if max_key == all_max:
-                yield f"({split_key} >= {min_key} and {split_key} <= {max_key})"
-            else:
-                yield f"({split_key} >= {min_key} and {split_key} < {max_key})"
-            return
-        if min_key + batch_size - 1 >= all_max:
-            yield f"({split_key} >= {min_key} and {split_key} <= {all_max})"
-            return
-        yield (
-            f"({split_key} >= {min_key} and "
-            f"{split_key} < {min_key + batch_size - 1})"
-        )
-        min_key += batch_size - 1
 
 
 def parse_time_dynamic(time_str: str) -> datetime:
@@ -181,7 +111,6 @@ def split_time_windows(
     unit: str,
     min_time: str | datetime,
     max_time: str | datetime,
-    stride: timedelta | None = None,
 ) -> list[str]:
     """Tumbling time-window predicates: half-open windows stepped by the
     unit stride, final window inclusive; ``min == max`` -> one inclusive
@@ -196,7 +125,7 @@ def split_time_windows(
     """
     lo = parse_time_dynamic(min_time) if isinstance(min_time, str) else min_time
     hi = parse_time_dynamic(max_time) if isinstance(max_time, str) else max_time
-    step = stride if stride is not None else TIME_SPLIT_STRIDES[unit]
+    step = TIME_SPLIT_STRIDES[unit]
     conditions: list[str] = []
     if lo > hi:
         return conditions
@@ -213,20 +142,6 @@ def split_time_windows(
         )
         lo = lo + step
     return conditions
-
-
-def chunk_conditions(conditions: list[str], max_thread: int) -> list[list[str]]:
-    """Chunk a condition list into at most ``max_thread`` groups (ceil
-    division). Parity: source/source.go:113-128. Golden:
-    ([a..e], 2) -> [[a,b,c],[d,e]].
-
-    Unnecessary for Spark execution (the scheduler assigns partitions to
-    executors) — kept for planner parity and driver-side tooling.
-    """
-    if max_thread >= len(conditions):
-        return [list(conditions)]
-    chunk = (len(conditions) + max_thread - 1) // max_thread
-    return [conditions[i : i + chunk] for i in range(0, len(conditions), chunk)]
 
 
 def coerce_key(val: object) -> int:
@@ -281,14 +196,6 @@ def adjust_batch_size(
     if range_size // row_count >= 100:  # pragma: no cover - shadowed branch
         return batch_size * 20
     return batch_size
-
-
-def needs_fanout(
-    min_key: int, max_key: int, batch_size: int, max_thread: int
-) -> bool:
-    """Fan-out mode iff the number of batches exceeds max_thread.
-    Parity: worker/worker.go:82-84."""
-    return (max_key - min_key) // batch_size > max_thread
 
 
 # ---------------------------------------------------------------------------

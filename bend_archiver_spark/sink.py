@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame
 
 __all__ = [
     "write_batch",
+    "refuse_non_directory",
     "staging_path",
     "mark_publishing",
     "publish_staged",
@@ -80,12 +81,11 @@ def write_batch(
     df: DataFrame,
     path: str,
     fmt: str = "parquet",
-    mode: str = "append",
     partition_by: list[str] | None = None,
 ) -> None:
-    """Distributed write of one batch/table. ``mode='append'`` matches
-    the reference's COPY INTO accumulation semantics."""
-    writer = df.write.mode(mode)
+    """Distributed append of one batch/table, as the reference's COPY
+    INTO accumulates."""
+    writer = df.write.mode("append")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     if fmt == "parquet":
@@ -112,6 +112,18 @@ def _hadoop_path(spark, path: str):
     so the same calls serve local, HDFS and object-store targets."""
     jpath = spark._jvm.org.apache.hadoop.fs.Path(path)  # noqa: SLF001
     return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath  # noqa: SLF001
+
+
+def refuse_non_directory(spark, target: str) -> None:
+    """Refuse a ``target`` that exists and is not a directory, before
+    anything reads or writes it: Hadoop's ``listStatus`` on a file
+    returns the file itself, so the gate would read it as a one-file
+    target, while ``os.scandir`` fails on it. The target's
+    ``FileSystem`` answers on every filesystem, so the error is the
+    same on all of them."""
+    fs, root = _hadoop_path(spark, target)
+    if fs.exists(root) and not fs.getFileStatus(root).isDirectory():
+        raise RuntimeError(f"targetPath {target} exists and is not a directory")
 
 
 def _hidden(name: str) -> bool:
@@ -269,32 +281,34 @@ def read_manifests(spark, target: str) -> list[dict]:
     fs, root = _hadoop_path(spark, f"{target.rstrip('/')}/{MANIFEST_DIR}")
     if not fs.exists(root):
         return []
-    Path = spark._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001
     local = _local_path(fs, root)
     manifests = []
     for name, _size in _listed_files(fs, root, local):
         if not name.endswith(".json") or "/" in name:
             continue
-        manifest = _read_json(fs, Path(root, name), _join(local, name))
+        if local is not None:  # read with ``open``: no Py4J round trip
+            manifest = _read_json(fs, None, os.path.join(local, name))
+        else:
+            Path = spark._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001
+            manifest = _read_json(fs, Path(root, name), None)
         if isinstance(manifest, dict) and "files" in manifest:
             manifests.append(manifest)
     return manifests
 
 
 def publish_staged(spark, staged: str, target: str) -> int:
-    """Move a staged run's data files into ``target``, each to the same
-    path relative to the target as it had under ``staged`` (partition
-    directories included). If its marker carries a manifest, delete what
-    that ``replaces`` (:func:`drop_replaced`) and record it
-    (:func:`record_manifest`). Then delete ``staged``. What Spark's
-    listing skips (``_SUCCESS``; checksum files, which the rename
-    carries along) is not published. Returns the number of files moved."""
+    """Move a marked staged run's data files (:func:`mark_publishing`)
+    into ``target``, each to the same path relative to the target as it
+    had under ``staged`` (partition directories included). If its marker
+    carries a manifest, delete what that ``replaces``
+    (:func:`drop_replaced`) and record it (:func:`record_manifest`).
+    Then delete ``staged``. What Spark's listing skips (``_SUCCESS``;
+    checksum files, which the rename carries along) is not published.
+    Returns the number of files moved."""
     fs, src = _hadoop_path(spark, staged)
     Path = spark._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001
     local = _local_path(fs, src)
     marker = Path(src, PUBLISHING_MARKER)
-    if not fs.exists(marker):
-        fs.create(marker, True).close()
     manifest = _read_json(fs, marker, _join(local, PUBLISHING_MARKER))
     files = [rel for rel, _ in _listed_files(fs, src, local)]
     dst_root = Path(target)

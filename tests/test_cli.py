@@ -368,7 +368,7 @@ class TestCliSourceFormat:
 
         src = str(tmp_path / "nd")
         rows = load_table(cli_spark, sf_dir, "lineitem").filter("l_orderkey < 200")
-        write_batch(rows, src, fmt="ndjson", mode="overwrite")
+        write_batch(rows, src, fmt="ndjson")
         conf = _write_conf(tmp_path, tmp_path / "out")
         rc = cli.main(
             ["--conf", conf, "--source-path", src, "--source-format", "ndjson"]
@@ -430,12 +430,12 @@ class TestCliFailureLine:
         return next(l for l in err.splitlines() if l.startswith("error: "))
 
     def test_target_is_a_regular_file(self, cli_spark, sf_dir, tmp_path, capsys):
-        """The gate lists a local target with ``os.scandir``, so a
-        regular file fails there first, with Python's error."""
+        """A run refuses a target that is a regular file before its
+        gate lists it, with one line naming ``targetPath``."""
         target = tmp_path / "not_a_dir"
         target.write_text("a regular file")
         line = self._fails(sf_dir, tmp_path, capsys, target)
-        assert "Not a directory" in line and str(target) in line
+        assert line == f"error: targetPath {target} exists and is not a directory"
 
     def test_java_failure_names_the_java_cause(
         self, cli_spark, sf_dir, tmp_path, capsys

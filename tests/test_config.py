@@ -1,6 +1,8 @@
 """Config validation tests — parity with config/config_test.go."""
 
+import glob
 import json
+import os
 
 import pytest
 
@@ -94,19 +96,33 @@ class TestConfigValidation:
                 timeSplitUnit="day",
             )
         )
-        assert cfg.time_split_stride().total_seconds() == 86400
+        assert TIME_SPLIT_STRIDES[cfg.time_split_unit].total_seconds() == 86400
 
-    def test_strict_mode_rejects_parallel_time_split(self):
-        with pytest.raises(ConfigError):
-            Config.from_dict(
-                self._base(
-                    sourceSplitKey="",
-                    sourceSplitTimeKey="ts",
-                    sourceWhereCondition="ts > 'a' and ts < 'b'",
-                    maxThread=4,
-                    strict_reference_semantics=True,
-                )
+    def test_parallel_time_split_is_accepted(self):
+        """The reference refuses ``maxThread > 1`` with a time split
+        key (worker/worker.go:139-143); its OFFSET paging hazard does
+        not exist here, so the config loads."""
+        cfg = Config.from_dict(
+            self._base(
+                sourceSplitKey="",
+                sourceSplitTimeKey="ts",
+                sourceWhereCondition="ts > 'a' and ts < 'b'",
+                maxThread=4,
             )
+        )
+        assert cfg.source_split_time_key == "ts"
+
+    @pytest.mark.parametrize("key, value", [
+        ("maxThread", 5),
+        ("sourceQuery", "select * from db.t"),
+        ("databendDSN", "warehouse:8000"),
+    ])
+    def test_reference_keys_without_a_reader_are_ignored(self, key, value):
+        """Keys of the reference's config that this engine reads no
+        value from load as unknown keys do, without a field."""
+        assert Config.from_dict(self._base(**{key: value})) == Config.from_dict(
+            self._base()
+        )
 
     def test_bad_time_unit(self):
         with pytest.raises(ConfigError):
@@ -139,12 +155,29 @@ class TestConfigValidation:
         cfg = load_config(str(p))
         assert cfg.database_type == "pg"
         assert cfg.batch_size == 40000
-        assert cfg.max_thread == 5
         assert cfg.source_db_tables == ["db.*@tbl.*"]
 
     def test_defaults(self):
         cfg = Config.from_dict(self._base())
         assert cfg.batch_size == 1000
-        assert cfg.max_thread == 1
         assert cfg.user_stage == "~"
         assert cfg.copy_purge is True
+
+
+CONF_DIR = os.path.join(os.path.dirname(os.path.dirname(__file__)), "conf")
+
+
+@pytest.mark.parametrize(
+    "path", sorted(glob.glob(os.path.join(CONF_DIR, "*.json"))),
+    ids=os.path.basename,
+)
+def test_shipped_conf_loads_unchanged(path):
+    """Every shipped config loads as written: each key the engine
+    reads lands on its field, and the reference's keys it reads no
+    value from (``maxThread``) are ignored, as unknown keys are."""
+    with open(path) as f:
+        raw = json.load(f)
+    cfg = load_config(path)
+    read = {k: v for k, v in raw.items() if k in Config._JSON_KEYS}
+    assert {k: getattr(cfg, Config._JSON_KEYS[k]) for k in read} == read
+    assert set(raw) - set(read) <= {"maxThread"}

@@ -29,7 +29,11 @@ WHERES = [
     "status = 'A' and id > 5",
     planner.split_condition("id", 30, 0, 100)[0],
     planner.split_condition("id", 30, 0, 100)[-1],
-    list(planner.split_condition_streaming("seq", 40, 0, 100, 100))[0],
+    # what one JDBC read task filters on: a key range and the user's
+    # condition, as plan_jdbc_partitions composes them
+    planner.plan_jdbc_partitions(
+        "id", 0, 100, 101, 30, "status = 'A'"
+    ).predicates[0],
     planner.split_time_windows(
         "ts", "day", "2024-01-01 00:00:00", "2024-01-03 12:00:00"
     )[0],

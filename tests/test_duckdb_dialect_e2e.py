@@ -33,12 +33,7 @@ import re
 import duckdb
 import pytest
 
-from bend_archiver_spark.planner import (
-    slim_condition,
-    split_condition,
-    split_condition_streaming,
-    split_time_windows,
-)
+from bend_archiver_spark.planner import split_condition, split_time_windows
 from bend_archiver_spark.sources.dialects import get_dialect
 
 N_ROWS = 200
@@ -185,23 +180,6 @@ class TestPgDialectOnDuckDB:
         # only the parity quirk's final inclusive overshoot window
         # (min > max after the last stride) may be empty
         assert all(c > 0 for c in counts[:-1])
-
-    def test_streaming_split_predicates_partition_exactly(self, duck):
-        """Fan-out splitter (A7) with its stride=batch-1 quirk: the
-        shared-boundary windows must still partition the id space when
-        a real engine evaluates them."""
-        coarse = slim_condition(4, 1, N_ROWS)
-        assert len(coarse) == 4
-        all_preds = []
-        for lo, hi in coarse:
-            all_preds.extend(
-                split_condition_streaming("id", 10, lo, hi, N_ROWS)
-            )
-        counts = [
-            duck.execute(PG.count_sql("", "testtab", p)).fetchone()[0]
-            for p in all_preds
-        ]
-        assert sum(counts) == N_ROWS
 
     def test_time_window_predicates_partition_exactly(self, duck):
         """Time splitter (A8): windows over the probed [min, max] must

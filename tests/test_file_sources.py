@@ -19,7 +19,7 @@ class TestFileSources:
             "props", F.when(F.col("event_id") % 3 == 0, F.col("props"))
         )
         path = str(tmp_path / "nd")
-        write_batch(ev, path, fmt="ndjson", mode="overwrite")
+        write_batch(ev, path, fmt="ndjson")
         back = read_source(spark, path, fmt="ndjson", schema=ev.schema)
         assert back.count() == ev.count()
         assert (
@@ -57,7 +57,7 @@ class TestFileSources:
             "props", F.when(F.col("event_id") % 3 == 0, F.col("props"))
         )
         path = str(tmp_path / "orc")
-        write_batch(ev, path, fmt="orc", mode="overwrite")
+        write_batch(ev, path, fmt="orc")
         back = read_source(spark, path, fmt="orc", schema=ev.schema)
         assert back.count() == ev.count()
         assert content_fingerprint(ev) == content_fingerprint(back)

@@ -104,6 +104,22 @@ class TestJdbcArchiveE2E:
         assert row.TS.microsecond == 123500  # sub-second precision kept
         shutil.rmtree(tgt, ignore_errors=True)
 
+    def test_one_read_task_per_predicate(self, spark, derby):
+        """The reference's fan-out (per-goroutine key ranges, A5; a
+        streaming splitter per worker, A7; condition chunks, A9; the
+        fan-out decision, A19) is one predicate per read partition,
+        which Spark's scheduler queues onto its cores: 21 predicates
+        read every row exactly once."""
+        from bend_archiver_spark.sources.jdbc import JdbcSource
+
+        src = JdbcSource(
+            spark, _cfg(derby, "", batch_size=10, source_where_condition="ID > 0")
+        )
+        plan = src.plan()
+        df = src.read(plan)
+        assert df.rdd.getNumPartitions() == len(plan.predicates) == 21
+        assert df.count() == df.select("ID").distinct().count() == N_ROWS
+
     def test_time_split_includes_subsecond_max_row(
         self, spark, derby, tmp_path
     ):
@@ -438,9 +454,8 @@ class TestCancellationDestructiveLast:
 
 class TestStagedJdbcRun:
     def test_rerun_on_drained_source_still_refuses(self, spark, derby, tmp_path):
-        """Delete-after-sync drained the source, so a rerun plans no
-        partitions; the empty-plan short-circuit still waits for the
-        gate, which refuses."""
+        """Delete-after-sync drained the source, so a rerun would plan
+        no partitions; the gate runs before the plan and refuses."""
         tgt = str(tmp_path / "tgt_drained")
         cfg = _cfg(derby, tgt, source_where_condition="ID > 0",
                    delete_after_sync=True)
@@ -448,6 +463,35 @@ class TestStagedJdbcRun:
         assert _source_count(spark, derby) == 0
         with pytest.raises(RuntimeError, match="idempotency gate"):
             JdbcArchiveJob(spark, cfg).run()
+        assert spark.read.parquet(tgt).count() == N_ROWS
+        shutil.rmtree(tgt, ignore_errors=True)
+
+    def test_refused_rerun_plans_and_writes_nothing(
+        self, spark, derby, tmp_path, monkeypatch, spark_jobs
+    ):
+        """The gate runs before the plan: a refused rerun never probes
+        the source or calls ``write_batch``, and its only Spark jobs are
+        the gate's count of the first run's files (two: the count's
+        shuffle stage and its result)."""
+        from bend_archiver_spark import job as job_mod
+
+        tgt = str(tmp_path / "tgt_refused")
+        cfg = _cfg(derby, tgt, source_where_condition="ID > 0")
+        assert JdbcArchiveJob(spark, cfg).run().verify.is_correct
+        called = []
+        monkeypatch.setattr(
+            JdbcArchiveJob, "_plan", lambda self: called.append("plan")
+        )
+        monkeypatch.setattr(
+            job_mod, "write_batch", lambda *a, **kw: called.append("write")
+        )
+
+        def refused():
+            with pytest.raises(RuntimeError, match="idempotency gate"):
+                JdbcArchiveJob(spark, cfg).run()
+
+        _, jobs = spark_jobs(refused)
+        assert called == [] and jobs == 2
         assert spark.read.parquet(tgt).count() == N_ROWS
         shutil.rmtree(tgt, ignore_errors=True)
 

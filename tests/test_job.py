@@ -151,6 +151,34 @@ class TestFileArchiveJob:
         assert report.source_rows == 0
         assert report.num_partitions == 0
 
+    def test_empty_source_reports_its_gate(self, spark, sf_dir, tmp_path):
+        """The short-circuit runs after the gate: its report carries the
+        gate's stats and the two phases it ran, and nothing is written."""
+        tgt = tmp_path / "t3gate"
+        li = load_table(spark, sf_dir, "lineitem")
+        report = FileArchiveJob(
+            spark, _cfg(str(tgt), source_where_condition="l_quantity > 1e9"), li
+        ).run()
+        assert set(report.details["phases"]) == {"gate", "plan"}
+        assert report.details["gate"] == {
+            "manifests": 0, "files": 0, "scanned": 0, "runs_skipped": 0
+        }
+        assert not tgt.exists()
+
+    @pytest.mark.parametrize("fmt", ["parquet", "orc", "ndjson"])
+    def test_write_batch_appends(self, spark, tmp_path, fmt):
+        """Every write appends, as the reference's COPY INTO
+        accumulates: a second batch into the same path adds its rows."""
+        from bend_archiver_spark.job import read_target
+
+        path = str(tmp_path / f"appended_{fmt}")
+        rows = spark.range(0, 10, 1, 2).selectExpr("id AS k")
+        write_batch(rows, path, fmt)
+        write_batch(rows, path, fmt)
+        back = read_target(spark, _cfg(path, target_format=fmt), rows.schema)
+        assert back.count() == 20
+        assert back.distinct().count() == 10
+
     def test_delete_after_sync_refused_before_any_write(
         self, spark, sf_dir, tmp_path
     ):
@@ -201,8 +229,8 @@ def _files(root) -> list[str]:
 
 class TestStagedRun:
     """A run writes into ``<target>/_staging/<run_id>/`` and publishes
-    only once verified; the gate and the source fingerprint overlap
-    other phases on one worker thread."""
+    only once verified; the gate runs before the plan, and the source
+    fingerprint overlaps the staged verify on one worker thread."""
 
     def test_gate_refusal_leaves_target_unchanged(self, spark, sf_dir, tmp_path):
         tgt = str(tmp_path / "refused")
@@ -241,9 +269,10 @@ class TestStagedRun:
         def end(name):
             return phases[name]["start_s"] + phases[name]["seconds"]
 
-        # the gate overlaps the write, the fingerprint the verify scan;
-        # publishing waits for both
-        assert phases["gate"]["start_s"] < end("write")
+        # the gate ends before the plan starts, the fingerprint
+        # overlaps the verify scan; publishing waits for both
+        # (offsets and durations are rounded to 0.1 ms apiece)
+        assert end("gate") <= phases["plan"]["start_s"] + 1e-3
         assert phases["fingerprint"]["start_s"] < end("verify")
         # (offsets and durations are rounded to 0.1 ms apiece)
         assert phases["publish"]["start_s"] >= max(
@@ -268,48 +297,47 @@ class TestStagedRun:
         self, spark, sf_dir, tmp_path, monkeypatch, error
     ):
         """An exception or a cancellation on the run's thread while the
-        gate's Spark job runs on the worker: the job is cancelled and
-        the worker thread has ended before ``run`` returns, and the
-        staged files are gone."""
+        source fingerprint's Spark job runs on the worker: the job is
+        cancelled and the worker thread has ended before ``run``
+        returns, and the staged files are gone."""
         import threading
         import time
 
-        from bend_archiver_spark import cancel
+        from bend_archiver_spark import cancel, verify
         from bend_archiver_spark import job as job_mod
 
         sc = spark.sparkContext
-        gate_outcome = []
+        fingerprint_outcome = []
 
-        def endless_gate(spark_, cfg_):
+        def endless_fingerprint(df):
             try:
                 # minutes of work unless cancelled
-                spark_.range(0, 1 << 42, 1, 2).selectExpr("sum(id % 7)").collect()
+                df.sparkSession.range(0, 1 << 42, 1, 2).selectExpr(
+                    "sum(id % 7)").collect()
             except Exception as e:  # noqa: BLE001
-                gate_outcome.append(type(e).__name__)
+                fingerprint_outcome.append(type(e).__name__)
                 raise
 
-        real_write = job_mod.write_batch
-
-        def write_then_fail(*a, **kw):
-            real_write(*a, **kw)
+        def verify_fails(*a, **kw):
             deadline = time.monotonic() + 60
             while not sc.statusTracker().getActiveJobsIds():
                 assert time.monotonic() < deadline
                 time.sleep(0.05)
             if error == "cancel":
                 raise cancel.JobCancelled("received signal 15")
-            raise RuntimeError("write failed")
+            raise RuntimeError("verify failed")
 
-        monkeypatch.setattr(job_mod, "check_idempotency_gate", endless_gate)
-        monkeypatch.setattr(job_mod, "write_batch", write_then_fail)
+        monkeypatch.setattr(verify, "content_fingerprint", endless_fingerprint)
+        monkeypatch.setattr(job_mod, "verify_target", verify_fails)
         tgt = tmp_path / "inflight"
         expected = cancel.JobCancelled if error == "cancel" else RuntimeError
         t0 = time.monotonic()
         with pytest.raises(expected):
-            FileArchiveJob(spark, _cfg(str(tgt)), load_table(
-                spark, sf_dir, "lineitem")).run()
+            FileArchiveJob(spark, _cfg(str(tgt), verify_fingerprint=True),
+                           load_table(spark, sf_dir, "lineitem")).run()
         assert time.monotonic() - t0 < 120
-        assert gate_outcome  # the gate's job was cancelled, not finished
+        # the fingerprint's job was cancelled, not finished
+        assert fingerprint_outcome
         assert not [
             t for t in threading.enumerate()
             if t.name.startswith("archive-worker")
@@ -317,6 +345,28 @@ class TestStagedRun:
         assert not sc.statusTracker().getActiveJobsIds()
         assert not (tgt / "_staging").exists()
         assert not [f for f in _files(tgt) if f.endswith(".parquet")]
+
+    @pytest.mark.parametrize("listing", ["local", "hadoop"])
+    def test_unmarked_run_is_never_published(
+        self, spark, tmp_path, monkeypatch, listing
+    ):
+        """A publish starts only from a marked run (``mark_publishing``):
+        without the marker a cut-short publish could not be finished, so
+        ``publish_staged`` fails before it moves a file."""
+        from py4j.protocol import Py4JJavaError
+
+        from bend_archiver_spark import sink
+
+        if listing == "hadoop":
+            monkeypatch.setattr(sink, "_local_path", lambda fs, path: None)
+        tgt = tmp_path / "unmarked"
+        staged = sink.staging_path(str(tgt), "run")
+        write_batch(spark.range(0, 10, 1, 2), staged, "parquet")
+        before = _files(staged)
+        with pytest.raises((OSError, Py4JJavaError), match=sink.PUBLISHING_MARKER):
+            sink.publish_staged(spark, staged, str(tgt))
+        assert _files(staged) == before
+        assert not [f for f in _files(tgt) if "_staging" not in f]
 
     def test_next_run_clears_staging_left_by_a_crash(
         self, spark, sf_dir, tmp_path
@@ -379,61 +429,33 @@ class TestStagedRun:
             ).run()
         assert not tgt.exists()
 
-    @pytest.mark.parametrize("phase", ["plan", "write"])
-    def test_gate_refusal_cancels_the_job_in_flight(
-        self, spark, sf_dir, tmp_path, monkeypatch, phase
+    def test_refused_rerun_plans_and_writes_nothing(
+        self, spark, sf_dir, tmp_path, monkeypatch, spark_jobs
     ):
-        """A refusal does not wait for the main thread's plan or staged
-        write: their Spark job is cancelled and the refusal raised."""
-        import threading
-        import time
-
+        """The gate runs before the plan: a refused rerun never calls
+        ``_plan`` or ``write_batch``, and its only Spark jobs are the
+        gate's count of the first run's files (two: the count's shuffle
+        stage and its result)."""
         from bend_archiver_spark import job as job_mod
 
-        sc = spark.sparkContext
         tgt = str(tmp_path / "refused_early")
         li = load_table(spark, sf_dir, "lineitem")
         assert FileArchiveJob(spark, _cfg(tgt), li).run().verify.is_correct
         before = _files(tgt)
+        called = []
+        monkeypatch.setattr(
+            FileArchiveJob, "_plan", lambda self: called.append("plan")
+        )
+        monkeypatch.setattr(
+            job_mod, "write_batch", lambda *a, **kw: called.append("write")
+        )
 
-        # minutes of work unless cancelled
-        endless = spark.range(0, 1 << 42, 1, 2)
-        started = threading.Event()
-        real_gate, real_write = job_mod.check_idempotency_gate, job_mod.write_batch
+        def refused():
+            with pytest.raises(RuntimeError, match="idempotency"):
+                FileArchiveJob(spark, _cfg(tgt), li).run()
 
-        def late_gate(spark_, cfg_):
-            # refuse only once the main thread's job is running
-            assert started.wait(60)
-            deadline = time.monotonic() + 60
-            while not sc.statusTracker().getActiveJobsIds():
-                assert time.monotonic() < deadline
-                time.sleep(0.05)
-            return real_gate(spark_, cfg_)
-
-        def endless_write(df, path, *a, **kw):
-            started.set()
-            real_write(endless.selectExpr("sum(id % 7) AS s"), path, *a, **kw)
-
-        monkeypatch.setattr(job_mod, "check_idempotency_gate", late_gate)
-        if phase == "plan":
-            source = endless.selectExpr(
-                "id AS l_orderkey", "id % 50 AS l_quantity"
-            )
-            real_plan = FileArchiveJob._plan
-
-            def signalled_plan(self):
-                started.set()
-                return real_plan(self)
-
-            monkeypatch.setattr(FileArchiveJob, "_plan", signalled_plan)
-        else:
-            source = li
-            monkeypatch.setattr(job_mod, "write_batch", endless_write)
-        t0 = time.monotonic()
-        with pytest.raises(RuntimeError, match="idempotency"):
-            FileArchiveJob(spark, _cfg(tgt), source).run()
-        assert time.monotonic() - t0 < 120
-        assert not sc.statusTracker().getActiveJobsIds()
+        _, jobs = spark_jobs(refused)
+        assert called == [] and jobs == 2
         assert _files(tgt) == before
         assert not (tmp_path / "refused_early" / "_staging").exists()
 
@@ -862,6 +884,73 @@ class TestManifestGate:
         stats = _gate(spark, tgt, _slice(200, 300))
         assert stats["manifests"] == stats["runs_skipped"] == 2
         assert stats["scanned"] == 0
+
+    @pytest.mark.parametrize("operation", ["archive", "compact"])
+    @pytest.mark.parametrize("listing", ["local", "hadoop"])
+    def test_target_that_is_a_file_is_refused(
+        self, spark, tmp_path, monkeypatch, listing, operation
+    ):
+        """A ``targetPath`` that is a regular file is refused before the
+        gate or the compaction lists it, with the same error whether the
+        listing is Python's (local) or Hadoop's ``listStatus``, which
+        would read the file as a one-file target. The file is untouched."""
+        import re
+
+        from bend_archiver_spark import sink
+        from bend_archiver_spark.maintenance import compact_files
+
+        if listing == "hadoop":
+            monkeypatch.setattr(sink, "_local_path", lambda fs, path: None)
+        target = tmp_path / "a_file"
+        target.write_text("a regular file")
+        message = f"targetPath {target} exists and is not a directory"
+        with pytest.raises(RuntimeError, match=f"^{re.escape(message)}$"):
+            if operation == "archive":
+                FileArchiveJob(
+                    spark, _keyed_cfg(str(target), _slice(0, 100)), _keyed(spark)
+                ).run()
+            else:
+                compact_files(spark, str(target))
+        assert target.read_text() == "a regular file"
+
+    def test_gate_round_trips_do_not_grow_with_runs(self, spark, tmp_path):
+        """On a local target the gate lists the files and reads each
+        manifest with Python's calls: the Py4J commands it sends,
+        counted at the gateway client, are as many at 25 published runs
+        as at 5."""
+        import threading
+
+        client = spark.sparkContext._gateway._gateway_client  # noqa: SLF001
+        real, me = client.send_command, threading.get_ident()
+        tgt = str(tmp_path / "round_trips")
+        src = _keyed(spark)
+
+        def commands(where) -> int:
+            sent = []
+
+            def counted(*a, **kw):
+                if threading.get_ident() == me:
+                    sent.append(1)
+                return real(*a, **kw)
+
+            client.send_command = counted
+            try:
+                stats = _gate(spark, tgt, where)
+            finally:
+                del client.send_command
+            assert stats["scanned"] == 0
+            return len(sent)
+
+        counts = {}
+        for n in range(1, 26):
+            report = FileArchiveJob(
+                spark, _keyed_cfg(tgt, _slice(50 * (n - 1), 50 * n)), src
+            ).run()
+            assert report.verify.is_correct
+            if n in (5, 25):
+                commands(_slice(1500, 1600))  # warm what the session caches
+                counts[n] = commands(_slice(1500, 1600))
+        assert counts[5] == counts[25] > 0
 
     def test_all_null_column_never_matches(self, spark, tmp_path):
         tgt = str(tmp_path / "nulls")

@@ -5,70 +5,12 @@ import pytest
 
 from bend_archiver_spark.planner import (
     adjust_batch_size,
-    chunk_conditions,
     coerce_key,
-    needs_fanout,
     parse_time_dynamic,
     plan_jdbc_partitions,
-    slim_condition,
     split_condition,
-    split_condition_streaming,
     split_time_windows,
 )
-
-
-class TestSlimCondition:
-    # source/source_test.go:14-57
-    def test_basic(self):
-        conds = slim_condition(5, 0, 100)
-        assert len(conds) == 5
-        assert conds[4][1] == 100
-
-    def test_inverted(self):
-        assert slim_condition(5, 200, 100) == []
-
-    def test_single_thread(self):
-        conds = slim_condition(1, 0, 100)
-        assert len(conds) == 1
-        assert conds[0] == (0, 100)
-
-    def test_equal_bounds(self):
-        conds = slim_condition(1, 100, 100)
-        assert conds == [(100, 100)]
-
-    def test_disjoint_cover(self):
-        conds = slim_condition(7, 3, 1000)
-        assert conds[0][0] == 3
-        assert conds[-1][1] == 1000
-        for (a, b), (c, d) in zip(conds, conds[1:]):
-            assert b == c  # contiguous
-
-
-class TestSplitConditionStreaming:
-    # source/source_test.go:59-102 — exact golden strings
-    def test_count_full_range(self):
-        conds = list(split_condition_streaming("id", 10, 0, 100, 100))
-        assert len(conds) == 12
-
-    def test_partial_range_goldens(self):
-        conds = list(split_condition_streaming("id", 10, 0, 50, 100))
-        assert len(conds) == 6
-        assert conds[4] == "(id >= 36 and id < 45)"
-
-    def test_full_range_goldens(self):
-        conds = list(split_condition_streaming("id", 10, 0, 100, 100))
-        assert conds[9] == "(id >= 81 and id < 90)"
-        # final window inclusive of global max
-        assert conds[-1].endswith("<= 100)")
-
-    def test_inverted(self):
-        assert list(split_condition_streaming("id", 10, 200, 100, 300)) == []
-
-    def test_boundary_sharing_disjoint(self):
-        # adjacent windows share the boundary value but stay disjoint
-        conds = list(split_condition_streaming("id", 10, 0, 50, 100))
-        assert conds[0] == "(id >= 0 and id < 9)"
-        assert conds[1] == "(id >= 9 and id < 18)"
 
 
 class TestSplitCondition:
@@ -126,24 +68,6 @@ class TestSplitTimeWindows:
             len(split_time_windows("t", "day", "2024-01-01 00:00:00", "2024-01-03 00:00:00"))
             == 3
         )
-
-
-class TestChunkConditions:
-    # source/source_test.go:139-174
-    def test_split_into_2_groups(self):
-        assert chunk_conditions(["a", "b", "c", "d", "e"], 2) == [
-            ["a", "b", "c"],
-            ["d", "e"],
-        ]
-
-    def test_even_split(self):
-        assert chunk_conditions(["a", "b", "c", "d", "e", "f"], 2) == [
-            ["a", "b", "c"],
-            ["d", "e", "f"],
-        ]
-
-    def test_all_in_one_group(self):
-        assert chunk_conditions(["a", "b", "c", "d"], 5) == [["a", "b", "c", "d"]]
 
 
 class TestParseTimeDynamic:
@@ -226,13 +150,6 @@ class TestAdjustBatchSize:
 
     def test_sparse_keys_widen(self):
         assert adjust_batch_size(1000, 0, 1_000_000, 10_000) == 5000
-
-
-class TestNeedsFanout:
-    # worker/worker.go:82-84
-    def test_modes(self):
-        assert needs_fanout(0, 1000, 10, 5) is True
-        assert needs_fanout(0, 40, 10, 5) is False
 
 
 class TestPlanJdbcPartitions:

@@ -3,8 +3,7 @@ reference's example-only test suite (SURVEY §5: no property testing).
 
 The invariants that make partitioned extraction *correct* regardless
 of configuration: every key in [min, max] falls in exactly one split
-predicate (coverage + disjointness), time windows tile the range, and
-chunking preserves order and content.
+predicate (coverage + disjointness), and time windows tile the range.
 """
 
 import re
@@ -14,11 +13,8 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from bend_archiver_spark.planner import (
-    chunk_conditions,
     plan_jdbc_partitions,
-    slim_condition,
     split_condition,
-    split_condition_streaming,
     split_time_windows,
 )
 
@@ -52,48 +48,6 @@ class TestSplitConditionProperties:
         key = probe.draw(st.integers(lo, hi))
         assert _covering_count(conds, key) == 1
 
-    @given(
-        batch=st.integers(2, 100),
-        lo=st.integers(0, 1000),
-        span=st.integers(0, 5000),
-        extra=st.integers(0, 5000),
-        probe=st.data(),
-    )
-    @settings(max_examples=200, deadline=None)
-    def test_streaming_variant_covered_exactly_once(
-        self, batch, lo, span, extra, probe
-    ):
-        # worker range [lo, hi] within global max all_max >= hi
-        hi = lo + span
-        all_max = hi + extra
-        conds = list(split_condition_streaming("k", batch, lo, hi, all_max))
-        if not conds:
-            return
-        # every key the worker owns is covered exactly once; keys are
-        # owned up to the last emitted bound
-        last = _COND_RE.fullmatch(conds[-1])
-        upper = int(last.group(3)) - (1 if last.group(2) == "<" else 0)
-        if upper < lo:
-            return
-        key = probe.draw(st.integers(lo, upper))
-        assert _covering_count(conds, key) == 1
-
-
-class TestSlimConditionProperties:
-    @given(
-        threads=st.integers(1, 64),
-        lo=st.integers(0, 10_000),
-        span=st.integers(0, 100_000),
-    )
-    def test_contiguous_cover(self, threads, lo, span):
-        hi = lo + span
-        ranges = slim_condition(threads, lo, hi)
-        assert len(ranges) == threads
-        assert ranges[0][0] == lo
-        assert ranges[-1][1] == hi
-        for (a, b), (c, d) in zip(ranges, ranges[1:]):
-            assert b == c
-
 
 class TestTimeWindowProperties:
     @given(
@@ -118,18 +72,6 @@ class TestTimeWindowProperties:
         ]
         for (a_lo, a_hi), (b_lo, b_hi) in zip(bounds, bounds[1:]):
             assert a_hi == b_lo
-
-
-class TestChunkProperties:
-    @given(
-        items=st.lists(st.text(max_size=5), min_size=1, max_size=200),
-        threads=st.integers(1, 50),
-    )
-    def test_chunking_preserves_order_and_content(self, items, threads):
-        chunks = chunk_conditions(items, threads)
-        flat = [x for chunk in chunks for x in chunk]
-        assert flat == items
-        assert len(chunks) <= max(threads, 1)
 
 
 class TestPlanProperties:

@@ -6,6 +6,12 @@ from the programs people run: the CLI (``cli.py``, ``__main__``),
 The package modules it does not reach are the ones only tests import;
 they must be exactly :data:`TEST_ONLY`, each with its reason, so a new
 dead module fails here instead of lingering.
+
+One level down, every top-level function and class of the archive
+path's modules (:data:`ARCHIVE_MODULES`) is named by code outside the
+tests, other than its own definition, or listed in
+:data:`UNNAMED_OUTSIDE_TESTS` with its reason: a function only tests
+call fails here.
 """
 
 import ast
@@ -16,6 +22,13 @@ PACKAGE = "bend_archiver_spark"
 
 # package module -> why only tests import it
 TEST_ONLY: dict[str, str] = {}
+
+ARCHIVE_MODULES = (
+    "job", "sink", "manifest", "planner", "verify", "postsync", "config",
+    "sources.jdbc",
+)
+# "module.name" -> why no code outside the tests names it
+UNNAMED_OUTSIDE_TESTS: dict[str, str] = {}
 
 
 def _roots() -> list[str]:
@@ -111,3 +124,56 @@ def test_only_named_modules_are_test_only():
         [os.path.join(tests, n) for n in os.listdir(tests) if n.endswith(".py")]
     )
     assert {n for n in TEST_ONLY if modules[n] not in from_tests} == set()
+
+
+def _source_files() -> list[str]:
+    """Every ``.py`` file of the repo outside the test directories."""
+    out = []
+    for dirpath, dirnames, names in os.walk(REPO):
+        dirnames[:] = [
+            d for d in dirnames if not d.startswith(".") and d != "tests"
+        ]
+        out += [os.path.join(dirpath, n) for n in names if n.endswith(".py")]
+    return out
+
+
+def _names(node: ast.AST, skip: ast.AST | None = None) -> set[str]:
+    """The identifiers ``node`` names (``Name``, ``Attribute`` and import
+    ``alias`` nodes), leaving out those inside ``skip``."""
+    out, todo = set(), [node]
+    while todo:
+        n = todo.pop()
+        if n is skip:
+            continue
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, ast.alias):
+            out.add(n.name.rsplit(".", 1)[-1])
+            if n.asname:
+                out.add(n.asname)
+        todo.extend(ast.iter_child_nodes(n))
+    return out
+
+
+def test_archive_definitions_are_named_outside_tests():
+    trees = {
+        path: ast.parse(open(path, encoding="utf-8").read(), path)
+        for path in _source_files()
+    }
+    names = {path: _names(tree) for path, tree in trees.items()}
+    modules = _package_modules()
+    unnamed = set()
+    for module in ARCHIVE_MODULES:
+        path = modules[module]
+        elsewhere = set().union(*(n for p, n in names.items() if p != path))
+        for node in trees[path].body:
+            if not isinstance(
+                node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ):
+                continue
+            # the defining module's own uses count, outside the definition
+            if node.name not in elsewhere | _names(trees[path], skip=node):
+                unnamed.add(f"{module}.{node.name}")
+    assert unnamed == set(UNNAMED_OUTSIDE_TESTS)
