@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """Headline benchmark and the one timer for registry queries and the
 archive-sync job. Runs at $SPARK_GRAFT_SF_DIR (default sf0.1) on
-local[$SPARK_GRAFT_CPUS].
+local[$SPARK_GRAFT_CPUS], and gates each headline median against this
+host's entry at this scale in ANCHORS.
 
     python bench.py                # headline suite + archive_sync: one JSON line
     python bench.py NAME ...       # registry names or archive_sync: one
@@ -24,7 +25,8 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, REPO)
 
 from bend_archiver_spark.config import Config
 from bend_archiver_spark.job import ArchiveReport, FileArchiveJob
@@ -38,121 +40,138 @@ def force(df) -> int:
     return df.write.format("noop").mode("overwrite").save() or 0
 
 
-# Round-1 anchor (BENCH_r01.json, sf0.1, 32 cpus) — the self-relative
-# baseline BASELINE.md gates against (stay within 2x). The regression
-# gate below flags any headline query slower than 2x its anchor in the
-# JSON line so a perf regression fails loudly in the recorded artifact
-# instead of waiting for a human to diff BENCH_r0N files (the round-2/3
-# minhash regression survived two rounds that way).
-_R01_ANCHOR = {
-    "split_key_buckets": 0.432,
-    "split_time_buckets": 0.479,
-    "tpch_q1": 1.354,
-    "tpch_q3_topk": 0.8299,
-    "tpch_q5_region_revenue": 0.5909,
-    "tpch_q6_revenue": 0.2124,
-    "window_top_orders_per_customer": 0.3463,
-    "sessionize_events": 0.5177,
-    "text_token_stats": 0.2405,
-    "dedup_minhash_lsh": 3.5573,
-    "ann_topk_bruteforce": 0.5517,
-    "pipeline_curate_documents": 0.5253,
-    "archive_sync": 3.7274,
-}
-
-# Headline queries promoted after r01 gate against their round-7
-# idle-machine MEDIANS (the r01 run predates them). Same 2x factor;
-# `anchored_total` stays the r01-only subset so the round-over-round
-# baseline comparison is unaffected.
-_R07_ANCHOR = {
-    "dedup_cross_corpus_minhash": 0.5618,
-    # re-anchored round 12 (was 1.0511, recorded in the round-7 bench
-    # context): that number is NOT reproducible by the r07 code on the
-    # current environment — a bench-protocol replica on the 548c729
-    # checkout measures best 2.41 / median 3.49 s idle, while the
-    # current plan measures 1.2-1.4x FASTER side-by-side. Anchor = the
-    # r12 idle full-suite best (after the LM single-pass + DSIR
-    # histogram-totals rewrites); COVERAGE.md "Round 12 notes" has the
-    # full attribution.
-    "pipeline_curate_v2": 1.4526,
-    "pipeline_cdc_chunks": 0.4129,
-    "graph_pagerank_event_types": 0.4114,
-    "graph_triangle_count": 0.1855,
-    "agg_histogram_quantile": 0.4093,
-    "profile_ks_drift": 0.1113,
-    "verify_block_fingerprints": 0.9192,
-    "agg_gini_revenue": 0.4055,
-}
-
-_GATE_ANCHOR = {**_R01_ANCHOR, **_R07_ANCHOR}
+# BASELINE.md step 4: a headline query regresses when its median is
+# more than 2x its anchor. The gate flags it in the JSON line, so a
+# perf regression fails loudly in the recorded artifact instead of
+# waiting for a human to diff result files (the round-2/3 minhash
+# regression survived two rounds that way).
 _REGRESSION_FACTOR = 2.0
 
-# sf1 anchors (round-10 idle-machine MEDIANS against the 10x
-# scale-correctness corpus, symlinked so the sf parser reads 1.0;
-# BENCH_sf1_r09 had numbers but no gate). Same 2x factor, applied
-# when the suite runs at sf=1.0 — a 10x-data constant-factor cliff
-# now fails loudly in the artifact exactly like an sf0.1 regression.
-# archive_sync is single-iteration (it writes real data), so its
-# anchor carries the full run-to-run spread; the others are
-# 3-iteration medians.
-_SF1_R10_ANCHOR = {
-    "split_key_buckets": 0.425,
-    "split_time_buckets": 0.574,
-    "tpch_q1": 0.888,
-    "tpch_q3_topk": 0.666,
-    "tpch_q5_region_revenue": 0.858,
-    "tpch_q6_revenue": 0.122,
-    "window_top_orders_per_customer": 0.535,
-    "sessionize_events": 0.650,
-    "text_token_stats": 0.907,
-    "dedup_minhash_lsh": 2.843,
-    "dedup_cross_corpus_minhash": 0.690,
-    "ann_topk_bruteforce": 0.360,
-    "pipeline_curate_documents": 1.415,
-    "pipeline_curate_v2": 3.063,
-    "pipeline_cdc_chunks": 0.756,
-    "graph_pagerank_event_types": 0.404,
-    "graph_triangle_count": 0.175,
-    "agg_histogram_quantile": 0.764,
-    "profile_ks_drift": 0.122,
-    "verify_block_fingerprints": 0.797,
-    "agg_gini_revenue": 1.026,
-    "archive_sync": 5.655,
+# The one anchor table: (os.cpu_count(), sf) -> {query: median sec}.
+# A run gates only against its own host's entry at its own scale: wall
+# times from another CPU count or another corpus size say nothing
+# about the code. A run whose key has no entry is ungated, and its
+# JSON line says so with "anchor": null. A host is recorded by
+# committing three plain `python bench.py` result lines, each started
+# at 1-min loadavg < 1, and entering per query the median of the three
+# runs' medians. archive_sync is one iteration per run (it writes real
+# data), so its anchor carries the full run-to-run spread.
+ANCHORS: dict[tuple[int, float], dict[str, float]] = {
+    # 32 CPUs, ~127 GB free. Per query, the smaller of its first
+    # anchor (the round-1 best-of-N, or the round-7 idle median for a
+    # query promoted later) and its round-11 idle median, so this one
+    # gate flags exactly what those two gates flagged together.
+    # pipeline_curate_v2 holds the round-12 idle best instead of its
+    # round-7 1.0511 s, which the round-7 code does not reproduce on
+    # the current environment (COVERAGE.md "Round 12 notes").
+    (32, 0.1): {
+        "split_key_buckets": 0.3217,
+        "split_time_buckets": 0.4508,
+        "tpch_q1": 1.1601,
+        "tpch_q3_topk": 0.5903,
+        "tpch_q5_region_revenue": 0.5111,
+        "tpch_q6_revenue": 0.1628,
+        "window_top_orders_per_customer": 0.3463,
+        "sessionize_events": 0.5177,
+        "text_token_stats": 0.2405,
+        "dedup_minhash_lsh": 0.7452,
+        "ann_topk_bruteforce": 0.3137,
+        "pipeline_curate_documents": 0.3922,
+        "archive_sync": 2.8748,
+        "dedup_cross_corpus_minhash": 0.4321,
+        "pipeline_curate_v2": 1.4526,
+        "pipeline_cdc_chunks": 0.4129,
+        "graph_pagerank_event_types": 0.4114,
+        "graph_triangle_count": 0.1855,
+        "agg_histogram_quantile": 0.4093,
+        "profile_ks_drift": 0.1113,
+        "verify_block_fingerprints": 0.9192,
+        "agg_gini_revenue": 0.4055,
+    },
+    # 32 CPUs, sf1: round-10 idle medians (BENCH_sf1_r10.json) over the
+    # 10x scale-correctness corpus, symlinked as .../sf1 so scale_of
+    # reads 1.0.
+    (32, 1.0): {
+        "split_key_buckets": 0.425,
+        "split_time_buckets": 0.574,
+        "tpch_q1": 0.888,
+        "tpch_q3_topk": 0.666,
+        "tpch_q5_region_revenue": 0.858,
+        "tpch_q6_revenue": 0.122,
+        "window_top_orders_per_customer": 0.535,
+        "sessionize_events": 0.65,
+        "text_token_stats": 0.907,
+        "dedup_minhash_lsh": 2.843,
+        "dedup_cross_corpus_minhash": 0.69,
+        "ann_topk_bruteforce": 0.36,
+        "pipeline_curate_documents": 1.415,
+        "pipeline_curate_v2": 3.063,
+        "pipeline_cdc_chunks": 0.756,
+        "graph_pagerank_event_types": 0.404,
+        "graph_triangle_count": 0.175,
+        "agg_histogram_quantile": 0.764,
+        "profile_ks_drift": 0.122,
+        "verify_block_fingerprints": 0.797,
+        "agg_gini_revenue": 1.026,
+        "archive_sync": 5.655,
+    },
+    # 4 CPUs, ~15 GB, plain `python bench.py` (so local[32], the
+    # session default): BENCH_cpus4_sf0.1.jsonl. tests/test_bench_gate.py
+    # recomputes both 4-CPU entries from their committed lines.
+    (4, 0.1): {
+        "split_key_buckets": 0.2612,
+        "split_time_buckets": 0.4478,
+        "tpch_q1": 3.5679,
+        "tpch_q3_topk": 0.578,
+        "tpch_q5_region_revenue": 0.532,
+        "tpch_q6_revenue": 0.1682,
+        "window_top_orders_per_customer": 0.4018,
+        "sessionize_events": 0.5769,
+        "text_token_stats": 0.2439,
+        "dedup_minhash_lsh": 1.0158,
+        "dedup_cross_corpus_minhash": 0.9505,
+        "ann_topk_bruteforce": 0.5086,
+        "pipeline_curate_documents": 0.3285,
+        "pipeline_curate_v2": 2.3804,
+        "pipeline_cdc_chunks": 0.4926,
+        "graph_pagerank_event_types": 0.955,
+        "graph_triangle_count": 0.4244,
+        "agg_histogram_quantile": 0.5516,
+        "profile_ks_drift": 0.1489,
+        "verify_block_fingerprints": 1.0415,
+        "agg_gini_revenue": 0.5192,
+        "archive_sync": 3.5068,
+    },
+    # 4 CPUs, sf1 over the same 10x corpus: BENCH_cpus4_sf1.jsonl.
+    (4, 1.0): {
+        "split_key_buckets": 0.6605,
+        "split_time_buckets": 0.8999,
+        "tpch_q1": 4.8666,
+        "tpch_q3_topk": 3.2007,
+        "tpch_q5_region_revenue": 2.0483,
+        "tpch_q6_revenue": 0.3712,
+        "window_top_orders_per_customer": 1.1862,
+        "sessionize_events": 1.6011,
+        "text_token_stats": 1.0712,
+        "dedup_minhash_lsh": 5.4618,
+        "dedup_cross_corpus_minhash": 1.8181,
+        "ann_topk_bruteforce": 1.0462,
+        "pipeline_curate_documents": 1.7625,
+        "pipeline_curate_v2": 9.6285,
+        "pipeline_cdc_chunks": 1.0401,
+        "graph_pagerank_event_types": 0.9152,
+        "graph_triangle_count": 0.3696,
+        "agg_histogram_quantile": 1.8357,
+        "profile_ks_drift": 0.2028,
+        "verify_block_fingerprints": 3.3566,
+        "agg_gini_revenue": 1.6891,
+        "archive_sync": 22.9974,
+    },
 }
 
-
-# sf0.1 MEDIAN anchors (round-11 idle-machine suite run — 3-iteration
-# medians; archive_sync single-iteration). The r01 anchor stays the
-# BASELINE ratio (it is the only number anchored to round 1's code),
-# but it holds best-of-N values, and best-vs-best gating is
-# noise-sensitive in both directions (the r9->r10 "drift" was machine
-# state: a contended r11 run measured 12.4s anchored where the idle
-# re-run gave 7.9s). This set gates median-on-median, like
-# _SF1_R10_ANCHOR does at sf1; both gates apply at sf0.1.
-_SF01_R11_MEDIAN_ANCHOR = {
-    "split_key_buckets": 0.3217,
-    "split_time_buckets": 0.4508,
-    "tpch_q1": 1.1601,
-    "tpch_q3_topk": 0.5903,
-    "tpch_q5_region_revenue": 0.5111,
-    "tpch_q6_revenue": 0.1628,
-    "window_top_orders_per_customer": 0.3611,
-    "sessionize_events": 0.5478,
-    "text_token_stats": 0.2617,
-    "dedup_minhash_lsh": 0.7452,
-    "dedup_cross_corpus_minhash": 0.4321,
-    "ann_topk_bruteforce": 0.3137,
-    "pipeline_curate_documents": 0.3922,
-    "pipeline_curate_v2": 1.9293,
-    "pipeline_cdc_chunks": 0.543,
-    "graph_pagerank_event_types": 0.622,
-    "graph_triangle_count": 0.3452,
-    "agg_histogram_quantile": 0.5407,
-    "profile_ks_drift": 0.176,
-    "verify_block_fingerprints": 0.9626,
-    "agg_gini_revenue": 0.6513,
-    "archive_sync": 2.8748,
-}
+# Round 1's result line (sf0.1, 32 cpus): the queries and the
+# denominator of the self-relative baseline ratio BASELINE.md reports.
+R01_RESULT = os.path.join(REPO, "BENCH_r01.json")
 
 
 def _machine_state() -> dict:
@@ -204,58 +223,34 @@ def _sample_stats(samples: list[float]) -> dict[str, float]:
 
 def find_regressions(
     timings: dict[str, float],
-    sf: float,
+    cpus: int | None,
+    sf: float | None,
     stats: dict[str, dict[str, float]] | None = None,
 ) -> dict:
-    """Headline queries slower than 2x their anchor. Empty dict =
-    gate green. Only meaningful at an anchor's own scale: sf0.1
-    gates against the r01/r07 anchors, sf1 against the r10 sf1
-    anchors (the 10x scale-correctness corpus). When per-query stats
-    are available the gate compares the MEDIAN — a lucky best-of-3
-    must not mask a real 2x regression that two of three iterations
+    """Headline queries slower than 2x their ``ANCHORS[(cpus, sf)]``
+    entry. Empty dict = gate green, and always empty when the table
+    has no entry for this host and scale. When per-query stats are
+    available the gate compares the MEDIAN — a lucky best-of-3 must
+    not mask a real 2x regression that two of three iterations
     show."""
-    if sf == 0.1:
-        # two gates: the r01/r07 anchors keep the round-1-anchored
-        # baseline ratio honest, and the r11 median anchors gate
-        # median-on-median (symmetric statistics on both sides)
-        gate_sets = [
-            ("r01_anchor", _GATE_ANCHOR),
-            ("r11_median_anchor", _SF01_R11_MEDIAN_ANCHOR),
-        ]
-    elif sf == 1.0:
-        gate_sets = [("sf1_r10_anchor", _SF1_R10_ANCHOR)]
-    else:
-        return {}
-    gate_value = {
-        name: (stats or {}).get(name, {}).get("median", sec)
-        for name, sec in timings.items()
-    }
+    anchors = ANCHORS.get((cpus, sf), {})
     out: dict = {}
-    for gate_name, anchors in gate_sets:
-        for name in timings:
-            if (
-                name in anchors
-                and gate_value[name] > _REGRESSION_FACTOR * anchors[name]
-            ):
-                row = out.setdefault(
-                    name,
-                    {
-                        "sec": timings[name],
-                        "median_sec": round(gate_value[name], 4),
-                        "gates": {},
-                    },
-                )
-                row["gates"][gate_name] = {
-                    "anchor_sec": anchors[name],
-                    "ratio": round(gate_value[name] / anchors[name], 2),
-                }
+    for name, sec in timings.items():
+        median = (stats or {}).get(name, {}).get("median", sec)
+        if name in anchors and median > _REGRESSION_FACTOR * anchors[name]:
+            out[name] = {
+                "sec": sec,
+                "median_sec": round(median, 4),
+                "anchor_sec": anchors[name],
+                "ratio": round(median / anchors[name], 2),
+            }
     return out
 
 
 def scale_of(sf_dir: str) -> float | None:
     """The scale factor an ``.../sf<N>`` corpus directory names; None
     for any other directory (e.g. a rehearsal corpus ``.../x3``),
-    which no anchor set gates."""
+    which no anchor entry gates."""
     m = re.fullmatch(r"(?:.*/)?sf(\d+(?:\.\d+)?)/?", sf_dir)
     return float(m.group(1)) if m else None
 
@@ -344,6 +339,7 @@ def time_one(spark, name: str, sf_dir: str) -> dict:
 def run_suite(spark, sf_dir: str, machine_start: dict) -> dict:
     """The headline suite plus archive_sync as the one JSON result."""
     sf = scale_of(sf_dir)
+    cpus = os.cpu_count()
     timings: dict[str, float] = {}
     stats: dict[str, dict[str, float]] = {}
     errors: dict[str, str] = {}
@@ -364,7 +360,7 @@ def run_suite(spark, sf_dir: str, machine_start: dict) -> dict:
         stats[name] = _sample_stats(row["samples"])
 
     total = round(sum(timings.values()), 4)
-    regressions = find_regressions(timings, sf, stats)
+    regressions = find_regressions(timings, cpus, sf, stats)
     if regressions:
         # every flagged row carries the run's own machine evidence, so
         # a contended-run artifact indicts itself instead of burning a
@@ -374,9 +370,9 @@ def run_suite(spark, sf_dir: str, machine_start: dict) -> dict:
     # round-over-round comparisons must use the r01-anchored subset:
     # `value` grows whenever a round promotes new queries to headline
     # status (r05 added dedup_cross_corpus_minhash, pipeline_curate_v2)
-    anchored_total = round(
-        sum(v for k, v in timings.items() if k in _R01_ANCHOR), 4
-    )
+    with open(R01_RESULT) as f:
+        r01 = json.load(f)["parsed"]["queries"]
+    anchored_total = round(sum(v for k, v in timings.items() if k in r01), 4)
     result = {
         "metric": "headline_suite_total",
         "value": total,
@@ -390,31 +386,28 @@ def run_suite(spark, sf_dir: str, machine_start: dict) -> dict:
         # consumers MUST check this: when false, `value` sums only the
         # queries that ran, so it is NOT comparable round-over-round
         "complete": not errors,
-        # non-empty => a headline query is >2x an anchor (per-query
-        # `gates` names which anchor set tripped); treat like a
-        # failing test, not a footnote
+        # the ANCHORS key this run gated against; null = no entry for
+        # this host and scale, so the run is ungated
+        "anchor": {"cpus": cpus, "sf": sf} if (cpus, sf) in ANCHORS else None,
+        # non-empty => a headline query's median is >2x its anchor;
+        # treat like a failing test, not a footnote
         "regressions": regressions,
-        # machine state at start/end: numbers are only comparable to
-        # the idle-machine anchors when start 1-min loadavg is ~0 —
-        # check this BEFORE reading a drift as real
-        "machine": {"start": machine_start, "end": _machine_state()},
+        # the host and the local[N] the session ran on, and machine
+        # state at start/end: numbers are only comparable to the
+        # idle-machine anchors when start 1-min loadavg is ~0 — check
+        # this BEFORE reading a drift as real
+        "machine": {
+            "cpus": cpus,
+            "master": spark.sparkContext.master,
+            "start": machine_start,
+            "end": _machine_state(),
+        },
     }
     if sf == 0.1:
-        # both suite-level ratios, so the artifact shows the
-        # round-1-anchored baseline AND the noise-symmetric median
-        # comparison side by side
+        # the round-1-anchored baseline ratio (BASELINE.md)
         result["anchored_ratio_r01"] = round(
-            anchored_total / sum(_R01_ANCHOR.values()), 3
+            anchored_total / sum(r01.values()), 3
         )
-        med_common = [
-            k for k in _SF01_R11_MEDIAN_ANCHOR if k in stats
-        ]
-        if med_common:
-            result["median_ratio_r11"] = round(
-                sum(stats[k]["median"] for k in med_common)
-                / sum(_SF01_R11_MEDIAN_ANCHOR[k] for k in med_common),
-                3,
-            )
     if errors:
         result["errors"] = errors
     return result

@@ -12,7 +12,7 @@ re-expressed Spark-first:
 - partitioned JDBC + file sources                  -> sources/
 - warehouse sinks (parquet/delta-style, NDJSON)    -> sink.py
 - verification / idempotency / delete-after-sync   -> verify.py, postsync.py
-- COPY INTO retry + throughput metrics             -> retry.py, metrics.py
+- COPY INTO retry                                  -> retry.py
 - job orchestration                                -> job.py
 - relational + LLM-data-pipeline operators         -> operators/, functions/
 - incremental (streaming) archive                  -> streaming/

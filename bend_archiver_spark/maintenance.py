@@ -152,15 +152,14 @@ def compact_files(
 
 
 # ---------------------------------------------------------------------------
-# Z-order clustering — multi-dimensional data-skipping layout.
+# Z-order value — multi-dimensional data-skipping layout.
 #
 # Interleaving the low 16 bits of two keys into one Morton value and
 # range-partition-sorting on it gives every output file a tight
 # min/max envelope on BOTH keys simultaneously, so parquet row-group
 # statistics prune scans filtered on either key (a plain sort only
-# prunes its leading column). This is the layout step a 100 TB table
-# runs at compaction time; the write itself stays fully distributed
-# (repartitionByRange + sortWithinPartitions, no global sort).
+# prunes its leading column). The registry's `zorder_bucket_stats`
+# profiles that layout over lineitem.
 # ---------------------------------------------------------------------------
 
 
@@ -181,44 +180,3 @@ def zorder_value(x_col, y_col, bits: int = 16):
             F.shiftright(y, b).bitwiseAND(1), 2 * b + 1
         ).cast("long")
     return z
-
-
-def zorder_write(
-    df, path: str, x_name: str, y_name: str, n_files: int, bits: int = 16
-) -> None:
-    """Write ``df`` as ``n_files`` parquet files clustered by the
-    Morton order of (x_name, y_name): range-partition on the z-value
-    (parallel sampling, no single-partition sort), sort within each
-    partition so row groups inside a file are tight too.
-
-    Both keys are min/max-normalized onto the full ``bits``-bit range
-    before interleaving — with raw values, a key whose range uses
-    fewer bits contributes only low-order z-bits and the layout
-    degenerates to a single-column sort on the wider key. The bounds
-    probe is one tiny aggregate (same pattern as the archive jobs'
-    bounds probe)."""
-    from pyspark.sql import functions as F
-
-    lo_x, hi_x, lo_y, hi_y = df.agg(
-        F.min(x_name), F.max(x_name), F.min(y_name), F.max(y_name)
-    ).collect()[0]
-    top = (1 << bits) - 1
-
-    def norm(col, lo, hi):
-        if hi <= lo:  # constant column: every row maps to 0
-            return F.lit(0)
-        return F.floor(
-            (col - F.lit(lo)).cast("double") * (top / (hi - lo))
-        ).cast("long")
-
-    z = zorder_value(
-        norm(F.col(x_name), lo_x, hi_x), norm(F.col(y_name), lo_y, hi_y), bits
-    )
-    (
-        df.withColumn("__z", z)
-        .repartitionByRange(n_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )

@@ -211,10 +211,6 @@ class JdbcPartitionPlan:
     batch_size: int
     num_partitions: int
 
-    @property
-    def is_empty(self) -> bool:
-        return not self.predicates
-
 
 def plan_jdbc_partitions(
     split_key: str,

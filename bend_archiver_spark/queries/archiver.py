@@ -347,8 +347,8 @@ def zorder_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Morton (Z-order) bucket profile of lineitem over
     (l_orderkey, l_partkey): interleave the low 16 bits of both keys,
     bucket by the top z-bits, and report each bucket's key envelopes.
-    This is the planning/audit view of the zorder_write layout step
-    (maintenance.py): tight per-bucket min/max on BOTH keys is what
+    This is the planning/audit view of a Z-order layout
+    (maintenance.zorder_value): tight per-bucket min/max on BOTH keys is what
     lets parquet row-group stats prune scans filtered on either key
     at 100 TB. Exact integer bit arithmetic in both engines."""
     from ..maintenance import zorder_value

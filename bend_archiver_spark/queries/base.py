@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from ..tables import load_table
 
-__all__ = ["QuerySpec", "REGISTRY", "register", "t", "fanout", "dec_sum", "dec_avg", "hash64_expr", "HASH64_SQL", "ngram_array"]
+__all__ = ["QuerySpec", "REGISTRY", "register", "t", "fanout", "dec_sum", "hash64_expr", "HASH64_SQL", "ngram_array"]
 
 
 @dataclass
@@ -172,26 +172,12 @@ def dec_sum(col: Column, alias: str) -> Column:
     return F.sum(col.cast("decimal(38,6)")).cast("double").alias(alias)
 
 
-def dec_avg(col: Column, alias: str) -> Column:
-    """Order-independent double average (exact decimal sum / count)."""
-    return (
-        F.sum(col.cast("decimal(38,6)")).cast("double") / F.count(col)
-    ).alias(alias)
-
-
 def o_dec_sum(expr: str, alias: str) -> str:
     """Oracle-side twin of :func:`dec_sum` (module-level helper for
     building SQL strings)."""
     return (
         f"CAST(CAST(SUM(CAST({expr} AS DECIMAL(38,6))) AS VARCHAR)"
         f" AS DOUBLE) AS {alias}"
-    )
-
-
-def o_dec_avg(expr: str, alias: str) -> str:
-    return (
-        f"CAST(CAST(SUM(CAST({expr} AS DECIMAL(38,6))) AS VARCHAR)"
-        f" AS DOUBLE) / COUNT({expr}) AS {alias}"
     )
 
 

@@ -101,16 +101,6 @@ class Dialect:
         w = f" WHERE {where}" if where else ""
         return f"SELECT COUNT(*) AS cnt FROM {self.table_ref(db, table)}{w}"
 
-    def minmax_key_sql(self, db: str, table: str, key: str, where: str) -> str:
-        w = f" WHERE {where}" if where else ""
-        # COALESCE(...,0) empty-table sentinel as in the pg/oracle
-        # drivers (source/postgres.go:116, source/oracle.go:120)
-        return (
-            f"SELECT COALESCE(MIN({key}), 0) AS min_key, "
-            f"COALESCE(MAX({key}), 0) AS max_key "
-            f"FROM {self.table_ref(db, table)}{w}"
-        )
-
     def minmax_time_sql(self, db: str, table: str, key: str, where: str) -> str:
         w = f" WHERE {where}" if where else ""
         if self.name == "mssql":
@@ -128,6 +118,8 @@ class Dialect:
         """One probe replacing count+minmax (engine upgrade: the
         reference runs three queries, we run one)."""
         w = f" WHERE {where}" if where else ""
+        # COALESCE(...,0) empty-table sentinel as in the pg/oracle
+        # drivers (source/postgres.go:116, source/oracle.go:120)
         return (
             f"SELECT COALESCE(MIN({key}), 0) AS min_key, "
             f"COALESCE(MAX({key}), 0) AS max_key, COUNT(*) AS cnt "

@@ -184,37 +184,6 @@ class JdbcSource:
             return database, table
         return self.cfg.source_db, f"{database}.{table}"
 
-    # --- DSv2 catalog (aggregate/limit pushdown) ---------------------
-    def register_v2_catalog(self, catalog_name: str = "srcdb") -> str:
-        """Expose this source as a Spark DSv2 JDBC catalog with
-        aggregate and limit pushdown enabled, and return the catalog
-        name. ``SELECT MIN(k), MAX(k), COUNT(*) FROM <cat>.<schema>.
-        <table>`` then executes source-side (the plan shows
-        ``PushedAggregates``), matching the reference's source-side
-        bounds aggregation (source/mysql.go:79-114) through Catalyst
-        instead of hand-written SQL. The raw-SQL probes above remain
-        the driver-parity path (COALESCE sentinels, dialect CONVERT);
-        this is the idiomatic route for ad-hoc DataFrame work against
-        the source, where v1 ``spark.read.jdbc`` would pull every row
-        of an aggregated column. Verified against embedded Derby in
-        tests/test_jdbc_e2e.py."""
-        conf = self.spark.conf
-        prefix = f"spark.sql.catalog.{catalog_name}"
-        conf.set(
-            prefix,
-            "org.apache.spark.sql.execution.datasources.v2.jdbc."
-            "JDBCTableCatalog",
-        )
-        conf.set(f"{prefix}.url", self._url())
-        conf.set(f"{prefix}.driver", self.dialect.driver)
-        conf.set(f"{prefix}.pushDownAggregate", "true")
-        conf.set(f"{prefix}.pushDownLimit", "true")
-        if self.cfg.source_user:
-            conf.set(f"{prefix}.user", self.cfg.source_user)
-        if self.cfg.source_pass:
-            conf.set(f"{prefix}.password", self.cfg.source_pass)
-        return catalog_name
-
     # --- probes (A10-A12, A18) ---------------------------------------
     def probe_bounds(self) -> tuple[int, int, int]:
         """min/max/count in ONE round trip (the reference runs three:

@@ -1,4 +1,4 @@
-"""Type-fidelity layer — dialect type mapping with reference semantics.
+"""Type fidelity, with the reference's degradations as an opt-in.
 
 The reference degrades types at scan time (SURVEY §1.2): DECIMAL ->
 float64, temporals -> strings, bool -> 0/1 tinyint, and needs a custom
@@ -10,9 +10,6 @@ as an explicit opt-in (``reference_compat``) for byte-compatible
 output against an existing Databend target
 (bool->tinyint: source/sql_server.go:351-360 "target databend bool is
 int8"; temporal format '2006-01-02 15:04:05': source/source.go:221).
-
-``custom_schema`` emits the JDBC ``customSchema`` option string for
-cases where a driver's default mapping needs overriding.
 """
 
 from __future__ import annotations
@@ -21,100 +18,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-__all__ = [
-    "spark_type_for",
-    "custom_schema",
-    "apply_reference_compat",
-    "TEMPORAL_FORMAT",
-]
+__all__ = ["apply_reference_compat", "TEMPORAL_FORMAT"]
 
 TEMPORAL_FORMAT = "yyyy-MM-dd HH:mm:ss"
-
-# dialect type name (upper) -> Catalyst type, per SURVEY §1.2 tables.
-# Unsigned 64-bit needs DecimalType(20,0): int64 cannot hold 2^64-1.
-_COMMON: dict[str, T.DataType] = {
-    "TINYINT": T.ByteType(),
-    "SMALLINT": T.ShortType(),
-    "MEDIUMINT": T.IntegerType(),
-    "INT": T.IntegerType(),
-    "INTEGER": T.IntegerType(),
-    "INT4": T.IntegerType(),
-    "BIGINT": T.LongType(),
-    "INT8": T.LongType(),
-    "BIGINT UNSIGNED": T.DecimalType(20, 0),
-    "FLOAT": T.FloatType(),
-    "REAL": T.FloatType(),
-    "DOUBLE": T.DoubleType(),
-    "FLOAT8": T.DoubleType(),
-    "BINARY_FLOAT": T.FloatType(),
-    "BINARY_DOUBLE": T.DoubleType(),
-    "BOOL": T.BooleanType(),
-    "BOOLEAN": T.BooleanType(),
-    "BIT": T.BooleanType(),
-    "CHAR": T.StringType(),
-    "NCHAR": T.StringType(),
-    "VARCHAR": T.StringType(),
-    "VARCHAR2": T.StringType(),
-    "NVARCHAR": T.StringType(),
-    "NVARCHAR2": T.StringType(),
-    "TEXT": T.StringType(),
-    "TINYTEXT": T.StringType(),
-    "MEDIUMTEXT": T.StringType(),
-    "LONGTEXT": T.StringType(),
-    "NTEXT": T.StringType(),
-    "CLOB": T.StringType(),
-    "NCLOB": T.StringType(),
-    "UNIQUEIDENTIFIER": T.StringType(),
-    "DATE": T.DateType(),
-    "TIME": T.StringType(),
-    "DATETIME": T.TimestampType(),
-    "DATETIME2": T.TimestampType(),
-    "SMALLDATETIME": T.TimestampType(),
-    "TIMESTAMP": T.TimestampType(),
-    "DATETIMEOFFSET": T.TimestampType(),
-    "MONEY": T.DecimalType(19, 4),
-    "SMALLMONEY": T.DecimalType(10, 4),
-    "BINARY": T.BinaryType(),
-    "VARBINARY": T.BinaryType(),
-    "IMAGE": T.BinaryType(),
-    "BLOB": T.BinaryType(),
-    "RAW": T.BinaryType(),
-    "LONG RAW": T.BinaryType(),
-    "INTERVALYM": T.StringType(),
-    "INTERVALDS": T.StringType(),
-}
-
-
-def spark_type_for(
-    db_type: str, precision: int | None = None, scale: int | None = None
-) -> T.DataType:
-    """Map a dialect type name to a Catalyst type. DECIMAL/NUMERIC/
-    NUMBER keep their exact precision/scale (fidelity upgrade over the
-    reference's float64 degradation, source/mysql.go:214)."""
-    name = db_type.strip().upper()
-    if name.startswith(("DECIMAL", "NUMERIC", "NUMBER")):
-        if precision:
-            return T.DecimalType(precision, scale or 0)
-        # Oracle NUMBER with unknown precision: keep maximal decimal
-        return T.DecimalType(38, 10)
-    base = _COMMON.get(name)
-    if base is not None:
-        return base
-    if "UNSIGNED" in name:
-        # other unsigned ints fit in the next-wider signed type
-        return T.LongType()
-    # unknown types degrade to string — the analog of the reference's
-    # RawBytes-then-stringify fallback (source/mysql.go:281-283)
-    return T.StringType()
-
-
-def custom_schema(columns: list[tuple[str, str]]) -> str:
-    """Build a Spark JDBC ``customSchema`` option string from
-    (column, dialect_type) pairs."""
-    parts = []
-    for col, db_type in columns:
-        parts.append(f"{col} {spark_type_for(db_type).simpleString()}")
-    return ", ".join(parts)
 
 
 def apply_reference_compat(df: DataFrame) -> DataFrame:

@@ -1,5 +1,5 @@
 """Unit tests for the archiver core: dialects, catalog, retry,
-postsync, metrics, sink SQL."""
+postsync, sink SQL."""
 
 import pytest
 
@@ -9,7 +9,6 @@ from bend_archiver_spark.catalog import (
     parse_selector,
 )
 from bend_archiver_spark.config import Config
-from bend_archiver_spark.metrics import ThroughputRecorder
 from bend_archiver_spark.postsync import delete_after_sync
 from bend_archiver_spark.retry import RetryableError, do_retry
 from bend_archiver_spark.sink import copy_into_sql
@@ -297,36 +296,6 @@ class TestPostsync:
         cfg = self._cfg()
         cfg.delete_after_sync = False
         assert delete_after_sync(cfg, VerifyResult(1, 1), lambda s: 99) == 0
-
-
-class TestMetrics:
-    def test_rates(self):
-        now = [0.0]
-        rec = ThroughputRecorder(window_sec=10, clock=lambda: now[0])
-        rec.record(100, 1000)
-        now[0] = 5.0
-        rec.record(100, 1000)
-        wr, wb = rec.window_rates()
-        assert wr == pytest.approx(40.0)  # 200 rows / 5s span
-        cr, cb = rec.cumulative_rates()
-        assert cr == pytest.approx(40.0)
-        assert rec.total_rows == 200
-
-    def test_window_trims(self):
-        now = [0.0]
-        rec = ThroughputRecorder(window_sec=10, clock=lambda: now[0])
-        rec.record(1000)
-        now[0] = 100.0
-        rec.record(10)
-        wr, _ = rec.window_rates()
-        assert rec.total_rows == 1010  # cumulative keeps everything
-        assert wr < 1000  # window dropped the old event
-
-    def test_log_line_shape(self):
-        rec = ThroughputRecorder()
-        rec.record(10, 100)
-        line = rec.as_log_line("ingest")
-        assert "rows/s" in line and "bytes/s" in line and "total 10 rows" in line
 
 
 class TestCopyInto:

@@ -8,6 +8,7 @@ fixture survives.
 """
 
 import json
+import re
 
 import pytest
 
@@ -134,6 +135,28 @@ class TestCliContract:
         }
         assert gates[1]["manifests"] == gates[1]["runs_skipped"] == 1
         assert gates[1]["files"] > 0 and gates[1]["scanned"] == 0
+
+    def test_job_line_rate_is_rows_over_elapsed(
+        self, cli_spark, sf_dir, tmp_path, capsys
+    ):
+        """The closing ``job:`` line reports the loop's rows, its
+        elapsed seconds (at least the table's own) and rows/s as their
+        quotient, not a rate over a clamped one-event window."""
+        conf = _write_conf(tmp_path, tmp_path / "out")
+        rc = cli.main(
+            ["--conf", conf, "--source-path", f"{sf_dir}/lineitem.parquet"]
+        )
+        assert rc == 0
+        out = capsys.readouterr().out.splitlines()
+        report = json.loads(next(l for l in out if l.startswith("{")))
+        job = [l for l in out if l.startswith("job:")]
+        assert len(job) == 1
+        m = re.fullmatch(r"job: (\d+) rows in ([\d.]+) s, ([\d.]+) rows/s", job[0])
+        assert m, job[0]
+        rows, elapsed, rate = int(m[1]), float(m[2]), float(m[3])
+        assert rows == report["source_rows"] > 0
+        assert elapsed >= report["elapsed_sec"] > 0
+        assert rate == pytest.approx(rows / elapsed, rel=1e-3)
 
     def test_delete_after_sync_on_file_source_fails(
         self, cli_spark, sf_dir, tmp_path, capsys

@@ -58,7 +58,6 @@ class TestGeneratedSqlParses:
         for db, table in DB_TABLE:
             for sql in (
                 d.count_sql(db, table, where),
-                d.minmax_key_sql(db, table, "id", where),
                 d.minmax_time_sql(db, table, "updated_at", where),
                 d.bounds_sql(db, table, "id", where),
             ):

@@ -333,51 +333,6 @@ class TestJdbcArchiveE2E:
         assert "TESTTAB" in names
 
 
-class TestV2CatalogPushdown:
-    def test_bounds_aggregate_pushes_to_source(self, spark, derby, tmp_path):
-        """MIN/MAX/COUNT over the DSv2 catalog must execute inside the
-        source database (PushedAggregates in the scan), not by pulling
-        every row into Spark — the reference computes bounds source-side
-        (source/mysql.go:79-114) and a v1 jdbc read silently would
-        not."""
-        from bend_archiver_spark.sources.jdbc import JdbcSource
-
-        src = JdbcSource(spark, _cfg(derby, str(tmp_path / "t")))
-        cat = src.register_v2_catalog("pushcat")
-        agg = spark.sql(
-            f"SELECT MIN(ID) AS min_key, MAX(ID) AS max_key, "
-            f"COUNT(*) AS cnt FROM {cat}.APP.TESTTAB"
-        )
-        plan = agg._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
-        assert "PushedAggregates: [MIN(ID), MAX(ID), COUNT(*)]" in plan
-        row = agg.first()
-        assert (row["min_key"], row["max_key"], row["cnt"]) == (1, N_ROWS, N_ROWS)
-
-    def test_filter_pushes_to_source(self, spark, derby, tmp_path):
-        """Range predicates over the v2 catalog reach the source SQL.
-        (Limit pushdown is dialect-gated and Derby's Spark dialect has
-        no LIMIT clause support, so the option is set but exercised
-        only by dialects that can express it — MySQL/PG/MSSQL.)"""
-        from bend_archiver_spark.sources.jdbc import JdbcSource
-
-        src = JdbcSource(spark, _cfg(derby, str(tmp_path / "t")))
-        cat = src.register_v2_catalog("pushcat2")
-        df = spark.sql(
-            f"SELECT ID FROM {cat}.APP.TESTTAB WHERE ID > 150"
-        )
-        plan = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
-        assert "PushedFilters" in plan and "ID > 150" in plan
-        assert df.count() == N_ROWS - 150
-
-
 class TestCancellationDestructiveLast:
     def test_interrupt_between_write_and_verify_never_deletes(
         self, spark, derby, tmp_path, monkeypatch

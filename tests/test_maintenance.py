@@ -171,46 +171,8 @@ class TestStagedCompaction:
 
 
 class TestZorder:
-    def test_zorder_write_localizes_both_keys(self, spark, sf_dir, tmp_path):
-        """Z-order layout: every output file gets a tight min/max
-        envelope on BOTH interleaved keys (a plain sort only localizes
-        its leading column — the trailing key's per-file span stays
-        ~global). Envelopes are what parquet row-group stats prune on."""
-        from bend_archiver_spark.maintenance import zorder_write
-
-        li = load_table(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_partkey", "l_quantity"
-        )
-        n_files = 16
-        tgt = str(tmp_path / "zsorted")
-        zorder_write(li, tgt, "l_orderkey", "l_partkey", n_files)
-
-        files = sorted(glob.glob(tgt + "/part-*.parquet"))
-        assert len(files) == n_files
-        glb = li.groupBy().agg(
-            *[f(c) for c in ("l_orderkey", "l_partkey") for f in (F.min, F.max)]
-        ).collect()[0]
-        ok_span = glb[1] - glb[0]
-        pk_span = glb[3] - glb[2]
-
-        total_rows = 0
-        ok_spans, pk_spans = [], []
-        for path in files:
-            meta = pq.read_metadata(path)
-            total_rows += meta.num_rows
-            t = pq.read_table(path, columns=["l_orderkey", "l_partkey"])
-            ok = t.column("l_orderkey").to_pylist()
-            pk = t.column("l_partkey").to_pylist()
-            ok_spans.append(max(ok) - min(ok))
-            pk_spans.append(max(pk) - min(pk))
-        assert total_rows == li.count()
-        # both dimensions localized: mean per-file span well under the
-        # global span (plain sort would leave one of them ~100%)
-        assert sum(ok_spans) / len(ok_spans) < 0.6 * ok_span
-        assert sum(pk_spans) / len(pk_spans) < 0.6 * pk_span
-
     def test_morton_query_matches_layout_expr(self, spark, sf_dir):
-        """The registered zorder_bucket_stats query and the write-path
+        """The registered zorder_bucket_stats query and
         zorder_value agree (same bit interleave)."""
         from bend_archiver_spark.maintenance import zorder_value
         from bend_archiver_spark.queries import REGISTRY

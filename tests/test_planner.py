@@ -155,7 +155,7 @@ class TestAdjustBatchSize:
 class TestPlanJdbcPartitions:
     def test_empty_sentinel(self):
         plan = plan_jdbc_partitions("id", 0, 0, 0)
-        assert plan.is_empty
+        assert plan.predicates == []
 
     def test_predicates_cover_and_compose_where(self):
         plan = plan_jdbc_partitions(

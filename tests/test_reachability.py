@@ -7,8 +7,8 @@ The package modules it does not reach are the ones only tests import;
 they must be exactly :data:`TEST_ONLY`, each with its reason, so a new
 dead module fails here instead of lingering.
 
-One level down, every top-level function and class of the archive
-path's modules (:data:`ARCHIVE_MODULES`) is named by code outside the
+One level down, every top-level function and class of every package
+module outside :data:`QUERY_SURFACE` is named by code outside the
 tests, other than its own definition, or listed in
 :data:`UNNAMED_OUTSIDE_TESTS` with its reason: a function only tests
 call fails here.
@@ -23,12 +23,16 @@ PACKAGE = "bend_archiver_spark"
 # package module -> why only tests import it
 TEST_ONLY: dict[str, str] = {}
 
-ARCHIVE_MODULES = (
-    "job", "sink", "manifest", "planner", "verify", "postsync", "config",
-    "sources.jdbc",
-)
+# Top-level packages the name scan leaves out: the registry reaches each
+# query function through ``@register`` and its name string, and
+# operators/functions/streaming are the surface those queries build on.
+QUERY_SURFACE = ("queries", "operators", "functions", "streaming")
 # "module.name" -> why no code outside the tests names it
-UNNAMED_OUTSIDE_TESTS: dict[str, str] = {}
+UNNAMED_OUTSIDE_TESTS: dict[str, str] = {
+    "cancel.cancel_requested": "the tests' view of the cancellation token",
+    "tables.register_views": "the documented launch recipe for ad-hoc SQL "
+    "drives (every corpus table as a view)",
+}
 
 
 def _roots() -> list[str]:
@@ -165,8 +169,9 @@ def test_archive_definitions_are_named_outside_tests():
     names = {path: _names(tree) for path, tree in trees.items()}
     modules = _package_modules()
     unnamed = set()
-    for module in ARCHIVE_MODULES:
-        path = modules[module]
+    for module, path in modules.items():
+        if module.split(".")[0] in QUERY_SURFACE:
+            continue
         elsewhere = set().union(*(n for p, n in names.items() if p != path))
         for node in trees[path].body:
             if not isinstance(

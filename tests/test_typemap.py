@@ -6,11 +6,7 @@ from decimal import Decimal
 
 from pyspark.sql import types as T
 
-from bend_archiver_spark.sources.typemap import (
-    apply_reference_compat,
-    custom_schema,
-    spark_type_for,
-)
+from bend_archiver_spark.sources.typemap import apply_reference_compat
 from bend_archiver_spark.verify import content_fingerprint
 
 F1_SCHEMA = T.StructType(
@@ -63,28 +59,6 @@ def _f1_rows():
             )
         )
     return rows
-
-
-class TestSparkTypeFor:
-    def test_unsigned_bigint_is_decimal20(self):
-        # int64 cannot hold 2^64-1; reference needed NullUint64
-        t = spark_type_for("BIGINT UNSIGNED")
-        assert t == T.DecimalType(20, 0)
-
-    def test_decimal_keeps_precision(self):
-        assert spark_type_for("DECIMAL", 18, 6) == T.DecimalType(18, 6)
-        assert spark_type_for("NUMBER", 10, 0) == T.DecimalType(10, 0)
-
-    def test_temporals_are_native(self):
-        assert spark_type_for("DATETIME") == T.TimestampType()
-        assert spark_type_for("DATE") == T.DateType()
-
-    def test_unknown_degrades_to_string(self):
-        assert spark_type_for("GEOMETRY") == T.StringType()
-
-    def test_custom_schema_string(self):
-        s = custom_schema([("id", "BIGINT UNSIGNED"), ("de", "DECIMAL")])
-        assert s.startswith("id decimal(20,0), de decimal(")
 
 
 class TestNullRoundTrip:
