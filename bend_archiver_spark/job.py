@@ -5,9 +5,10 @@ worker/worker.go) is: discover tables -> idempotency gate -> bounds
 probe -> split plan -> fan out scan->ingest -> verify -> optional
 delete. In Spark that collapses to: one bounds probe, one partitioned
 read (the split plan *is* the partitioning), one distributed write,
-then the verification counts. The goroutine pool, condition channel
-and pagination all disappear into the scheduler; the retry loop is
-left only around ``COPY INTO`` (``run_copy_into``).
+then the verification counts. The goroutine pool and condition
+channel become one wave of write tasks, each running a contiguous run
+of the plan's predicates; pagination disappears into the reader, and
+the retry loop is left only around ``COPY INTO`` (``run_copy_into``).
 
 ``ArchiveJob.run`` is that one flow for every source, as Worker.Run is
 behind the reference's Sourcer interface (source/source.go:18-29).
@@ -34,17 +35,21 @@ table's log would not list.
 The gate runs first, on the calling thread, as the reference checks
 it before it extracts anything (cmd/main.go:74-82): a refused run
 plans and writes nothing. Because nothing is published before
-verification, one pair of Spark jobs runs side by side: the source
-fingerprint, on one worker thread, beside the source ``COUNT`` and the
-one aggregate over the staged files that yields their count and (with
-``verify_fingerprint``) fingerprint.
+verification, the source fingerprint's Spark job runs on one worker
+thread, beside the source ``COUNT`` and the one pass over the staged
+files that yields their count and (with ``verify_fingerprint``)
+fingerprint. Every global aggregate of a run (the gate's count, a file
+source's probe, the staged verify, the fingerprint) is one Spark job
+with no exchange (``verify.observe_aggregates``), so a fingerprinted
+JDBC run launches three: the write, the staged verify and the
+fingerprint's re-read.
 
 The verification contract is unchanged: the source must equal what the
 target holds for the predicate once published, i.e. published + staged
 rows. Every run gates, so published is 0 or the run was refused, and
 only the staged files are read, with the written frame's schema (no
 inference job; an ``ndjson`` target reads typed values, not strings).
-That one aggregate counts the predicate's rows (``count_if``), sums
+That one pass counts the predicate's rows (``count_if``), sums
 their fingerprint, and takes the min and max of every integral,
 ``decimal(p,0)``, date and timestamp column over all staged rows.
 
@@ -92,7 +97,12 @@ from .sink import (
     staging_path,
     write_batch,
 )
-from .verify import VerifyResult, idempotency_gate, verify_aggregate
+from .verify import (
+    VerifyResult,
+    idempotency_gate,
+    observe_aggregates,
+    verify_aggregate,
+)
 
 __all__ = [
     "ArchiveJob",
@@ -490,17 +500,18 @@ class FileArchiveJob(ArchiveJob):
         return self.source.filter(cond) if cond else self.source
 
     def _plan(self) -> _FilePlan:
-        """One aggregate replaces the reference's three probe queries
+        """One pass replaces the reference's three probe queries
         (GetMinMaxSplitKey + GetSourceReadRowsCount); the split mode
         (worker/worker.go:248-252) then sizes the plan: one partition
         per time window, or the planner's key-range plan."""
         cfg = self.cfg
         key = cfg.source_split_time_key or cfg.source_split_key
-        row = self.filtered().agg(
-            F.min(key).alias("mn"),
-            F.max(key).alias("mx"),
-            F.count(F.lit(1)).alias("cnt"),
-        ).first()
+        row = observe_aggregates(
+            self.filtered(),
+            mn=F.min(key),
+            mx=F.max(key),
+            cnt=F.count(F.lit(1)),
+        )
         cnt = int(row["cnt"])
         if cnt == 0:
             return _FilePlan(key, 0, 0, cfg.batch_size)
@@ -537,9 +548,10 @@ class FileArchiveJob(ArchiveJob):
 
 
 class JdbcArchiveJob(ArchiveJob):
-    """Archive one RDBMS table over a live JDBC source: one predicate
-    per read task, a SQL ``COUNT`` after the write, and the
-    verification-gated delete-after-sync (cmd/main.go:74-121).
+    """Archive one RDBMS table over a live JDBC source: the planner's
+    predicates packed into one wave of write tasks (:meth:`_read`), a
+    SQL ``COUNT`` after the write, and the verification-gated
+    delete-after-sync (cmd/main.go:74-121).
 
     Requires the dialect's JDBC driver jar on the Spark classpath. The
     whole flow runs end to end against embedded Derby
@@ -557,10 +569,22 @@ class JdbcArchiveJob(ArchiveJob):
         return self.source.plan()
 
     def _read(self, plan) -> tuple[DataFrame, DataFrame]:
-        # the fingerprint's source side re-reads over JDBC: the extra
-        # scan that makes verify_fingerprint opt-in
+        """The written frame packs the plan's predicates into one wave
+        of ``min(predicates, defaultParallelism)`` write tasks, as the
+        reference's ``maxThread`` workers each pull many conditions
+        (A20, worker/worker.go:86-136): each write task ships a
+        serialized Hadoop configuration, so one per predicate spends
+        more time deserializing than reading. JDBC partitions prefer
+        no host, so ``coalesce`` packs neighbouring predicates and each
+        file holds one contiguous key range. The SQL sent is unchanged:
+        one ``SELECT`` per predicate. The trade-off: a packed task
+        cannot be rebalanced, so one slow predicate holds back its
+        neighbours. The fingerprint's source side re-reads over JDBC
+        (the extra scan that makes ``verify_fingerprint`` opt-in), one
+        task per predicate: its tasks are cheap to ship."""
         df = self.source.read(plan)
-        return df, df
+        slots = self.spark.sparkContext.defaultParallelism
+        return df.coalesce(min(plan.num_partitions, slots)), df
 
     def _count(self, plan) -> int:
         return self.source.count()

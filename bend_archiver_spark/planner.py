@@ -4,8 +4,11 @@ This is the heart of the reference engine — it turns ``(min, max,
 batch_size, row_count)`` statistics into disjoint SQL range predicates
 that shard a table scan. In Spark those predicates feed
 ``spark.read.jdbc(url, table, predicates=[...])`` (one predicate = one
-partition = one task), or equivalently ``partitionColumn/lowerBound/
-upperBound/numPartitions``.
+partition), or equivalently ``partitionColumn/lowerBound/
+upperBound/numPartitions``; the archive write packs neighbouring
+partitions into at most ``defaultParallelism`` tasks
+(``job.JdbcArchiveJob._read``), so the predicates and the SQL they
+send do not depend on the cluster's size.
 
 Capability parity (reference file:line):
 - split_condition            <- source/source.go:66-77   (A6)
@@ -17,8 +20,7 @@ Capability parity (reference file:line):
 The reference's fan-out machinery has no counterpart: its coarse
 per-goroutine ranges (A5), per-worker streaming splitter (A7),
 condition chunking (A9) and fan-out decision (A19) become one
-predicate per partition, which Spark's scheduler queues onto its
-executors.
+predicate per partition, packed into one wave of write tasks.
 
 Edge semantics preserved exactly (pinned by golden tests, see
 tests/test_planner.py): half-open ``[a, a+batch)`` ranges with a final
@@ -27,10 +29,10 @@ tuned against the reference.
 
 Scale note: predicate generation is O(range/batch) driver-side work and
 produces one Spark partition per predicate. For 100 TB tables prefer
-``plan_jdbc_partitions`` which caps partition count and lets Spark's
-scheduler handle task queueing — millions of tiny predicates would
-swamp the driver, exactly like millions of goroutine batches would in
-the reference.
+``plan_jdbc_partitions`` which caps partition count: millions of tiny
+predicates would swamp the driver, exactly like millions of goroutine
+batches would in the reference. A packed write task writes one file of
+all its predicates' rows, so files grow with predicates per slot.
 """
 
 from __future__ import annotations

@@ -84,8 +84,11 @@ def write_batch(
     partition_by: list[str] | None = None,
 ) -> None:
     """Distributed append of one batch/table, as the reference's COPY
-    INTO accumulates."""
-    writer = df.write.mode("append")
+    INTO accumulates. No ``_SUCCESS`` marker: nothing reads it (the
+    publish moves only data files), and each one costs a file create."""
+    writer = df.write.mode("append").option(
+        "mapreduce.fileoutputcommitter.marksuccessfuljobs", "false"
+    )
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     if fmt == "parquet":
@@ -302,8 +305,8 @@ def publish_staged(spark, staged: str, target: str) -> int:
     had under ``staged`` (partition directories included). If its marker
     carries a manifest, delete what that ``replaces``
     (:func:`drop_replaced`) and record it (:func:`record_manifest`).
-    Then delete ``staged``. What Spark's listing skips (``_SUCCESS``;
-    checksum files, which the rename carries along) is not published.
+    Then delete ``staged``. What Spark's listing skips (checksum files,
+    which the rename carries along) is not published.
     Returns the number of files moved."""
     fs, src = _hadoop_path(spark, staged)
     Path = spark._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001

@@ -1,12 +1,17 @@
 """Partitioned JDBC source — the Spark-native form of the reference's
 extraction engine (A1-A4, A20-A24).
 
-Where the Go engine hand-rolls goroutine pools consuming predicate
-strings from a channel (worker/worker.go:86-136), Spark's JDBC reader
-takes the same predicate list and makes each predicate one partition =
-one task; the scheduler is the worker pool. Pagination (the MSSQL
-OFFSET/FETCH loop, source/sql_server.go:284-313) is replaced by
-``fetchsize``; the time-split single-thread restriction
+Where the Go engine hand-rolls a pool of ``maxThread`` goroutines
+consuming predicate strings from a channel (worker/worker.go:86-136),
+Spark's JDBC reader takes the same predicate list as one partition per
+predicate, and the archive's write packs those partitions into one
+wave of at most ``defaultParallelism`` tasks (``coalesce``, in
+``job.JdbcArchiveJob._read``), each running a contiguous run of
+predicates, one ``SELECT`` each: the pool the size of the slots that
+runs all the conditions. The trade-off: a packed task cannot be
+rebalanced, so a slow predicate delays the ones packed with it.
+Pagination (the MSSQL OFFSET/FETCH loop, source/sql_server.go:284-313)
+is replaced by ``fetchsize``; the time-split single-thread restriction
 (worker/worker.go:139-143) disappears because window predicates are
 independent snapshots, not LIMIT/OFFSET pages.
 
@@ -267,7 +272,8 @@ class JdbcSource:
         return self._read_plan(predicates, self.cfg.batch_size)
 
     def read(self, plan: JdbcReadPlan) -> DataFrame:
-        """Partitioned read: one Spark partition per predicate. Filters
+        """Partitioned read: one Spark partition per predicate (the
+        archive's write packs them into fewer tasks). Filters
         and column pruning push down into the generated per-partition
         SQL (Catalyst JDBC pushdown). An empty plan (the empty-table
         sentinel, worker/worker.go:92-95) reads an empty frame with the

@@ -7,11 +7,19 @@ Parity with the reference's correctness contract:
   when the target already holds rows matching the predicate;
 - checksum upgrade: order-insensitive content fingerprints (sum of
   per-row xxhash64) — a strictly stronger check than counts that still
-  aggregates distributively (one partial agg, no sort, scales to any
-  partition count). The count and the fingerprint of one side come
-  from the same aggregate, so fingerprinting the target costs no scan
-  beyond its count; :func:`verify_aggregate` adds the aggregates a run
-  manifest records (column ranges over every row) to that one pass.
+  aggregates distributively (no sort, scales to any partition count).
+  The count and the fingerprint of one side come from the same pass, so
+  fingerprinting the target costs no scan beyond its count;
+  :func:`verify_aggregate` adds the aggregates a run manifest records
+  (column ranges over every row) to that one pass.
+
+Every global aggregate on the archive path goes through
+:func:`observe_aggregates`: the aggregates ride on the frame as observed
+metrics (``DataFrame.observe``) of one ``noop`` write, so each is one
+Spark job with no exchange, where ``agg(...).first()`` is a partial
+aggregate, a shuffle and a final aggregate (two jobs under AQE). Spark
+collects the metrics in the result stage, so a retried task's rows
+count once.
 """
 
 from __future__ import annotations
@@ -19,11 +27,12 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 __all__ = [
     "VerifyResult",
+    "observe_aggregates",
     "idempotency_gate",
     "count_and_fingerprint",
     "content_fingerprint",
@@ -53,23 +62,43 @@ class VerifyResult:
         return self.source_rows == self.target_rows and self.fingerprints_match
 
 
+def observe_aggregates(df: DataFrame, **aggregates: Column) -> dict:
+    """The values of the named global ``aggregates`` over ``df``, as
+    ``df.agg(...).first()`` gives them, in one Spark job with no
+    exchange: observed metrics of a ``noop`` write of no columns (Spark
+    prunes the scan to the columns the aggregates read). A fresh
+    ``Observation`` per call: one only records its first action. An
+    aggregate ``df`` cannot analyze raises ``AnalysisException`` before
+    any job runs."""
+    observation = Observation()
+    observed = df.observe(
+        observation, *(agg.alias(name) for name, agg in aggregates.items())
+    )
+    observed.select().write.format("noop").mode("overwrite").save()
+    return observation.get
+
+
 def idempotency_gate(target_df: DataFrame, predicate: str | None = None) -> int:
     """Pre-flight check (A32): returns the number of rows already in
     the target for this predicate. Caller aborts when > 0, exactly as
     cmd/main.go:74-82 does."""
     tgt = target_df.filter(predicate) if predicate else target_df
-    return tgt.count()
+    return observe_aggregates(tgt, n=F.count(F.lit(1)))["n"]
+
+
+def _fingerprint(columns: list[str]) -> Column:
+    """Per-row xxhash64 over ``columns``, as the decimal the fingerprint
+    sums (no int64 overflow under ANSI)."""
+    return F.xxhash64(*columns).cast("decimal(38,0)")
 
 
 def count_and_fingerprint(df: DataFrame) -> tuple[int, int]:
     """Row count and order-insensitive content fingerprint in ONE
-    aggregate over ``df``: the fingerprint is xxhash64 per row (all
+    pass over ``df``: the fingerprint is xxhash64 per row (all
     columns), summed distributively; an empty frame gives (0, 0)."""
-    row = df.agg(
-        F.count(F.lit(1)).alias("n"),
-        # decimal sum: no int64 overflow (ANSI)
-        F.sum(F.xxhash64(*df.columns).cast("decimal(38,0)")).alias("fp"),
-    ).first()
+    row = observe_aggregates(
+        df, n=F.count(F.lit(1)), fp=F.sum(_fingerprint(df.columns))
+    )
     return int(row["n"]), (int(row["fp"]) if row["fp"] is not None else 0)
 
 
@@ -87,7 +116,7 @@ def verify_aggregate(
     fingerprint: bool,
     extra: list[Column] = (),
 ) -> tuple[int, int | None, list]:
-    """ONE aggregate over ``df``: the number of rows matching
+    """ONE pass over ``df``: the number of rows matching
     ``predicate``, with ``fingerprint`` their fingerprint over
     ``columns`` (as :func:`count_and_fingerprint` of the filtered rows;
     ``None`` without), and the values of the ``extra`` aggregates over
@@ -98,15 +127,15 @@ def verify_aggregate(
         def scoped(value):
             return value if cond is None else F.when(cond, value)
 
-        aggs = [F.count(scoped(F.lit(1)))]
+        aggs = {"n": F.count(scoped(F.lit(1)))}
         if fingerprint:
-            aggs.append(F.sum(scoped(F.xxhash64(*columns).cast("decimal(38,0)"))))
-        return df.agg(*aggs, *extra), len(aggs)
+            aggs["fp"] = F.sum(scoped(_fingerprint(columns)))
+        aggs.update((f"x{i}", agg) for i, agg in enumerate(extra))
+        return observe_aggregates(df, **aggs)
 
     try:
-        frame, n = aggregate(F.expr(predicate) if predicate else None)
+        row = aggregate(F.expr(predicate) if predicate else None)
     except AnalysisException:
-        frame, n = aggregate(None)
-    row = frame.first()
-    fp = (int(row[1]) if row[1] is not None else 0) if fingerprint else None
-    return int(row[0]), fp, list(row[n:])
+        row = aggregate(None)
+    fp = (int(row["fp"]) if row["fp"] is not None else 0) if fingerprint else None
+    return int(row["n"]), fp, [row[f"x{i}"] for i in range(len(extra))]

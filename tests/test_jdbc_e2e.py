@@ -17,7 +17,7 @@ from bend_archiver_spark.config import Config
 from bend_archiver_spark.job import FileArchiveJob, JdbcArchiveJob
 
 N_ROWS = 200
-PINNED_JDBC_JOBS = 5
+PINNED_JDBC_JOBS = 3
 
 
 @pytest.fixture()
@@ -333,6 +333,99 @@ class TestJdbcArchiveE2E:
         assert "TESTTAB" in names
 
 
+class TestPackedWrite:
+    """The archive's write packs the plan's predicates into one wave of
+    ``min(predicates, defaultParallelism)`` tasks; neighbouring
+    predicates share a task, so each file holds one contiguous key
+    range, and the predicates (the SQL sent) stay the planner's."""
+
+    @staticmethod
+    def _archive(spark, derby, tmp_path, batch_size, monkeypatch):
+        """Archive ``ID > 0`` at ``batch_size``: the plan, the
+        predicates its JDBC reads were given, the write frame's task
+        count and the (min ID, max ID, rows) of each published file."""
+        import os
+
+        from pyspark.sql import functions as F
+
+        from bend_archiver_spark.sources.jdbc import JdbcSource
+
+        tgt = str(tmp_path / f"tgt_packed_{batch_size}")
+        cfg = _cfg(derby, tgt, batch_size=batch_size,
+                   source_where_condition="ID > 0")
+        plan = JdbcSource(spark, cfg).plan()
+        read, tasks = [], []
+        real_read = JdbcSource.read
+        real_job_read = JdbcArchiveJob._read
+
+        def recorded_read(self, p):
+            read.append(list(p.predicates))
+            return real_read(self, p)
+
+        def recorded_job_read(self, p):
+            written, fingerprinted = real_job_read(self, p)
+            tasks.append(written.rdd.getNumPartitions())
+            return written, fingerprinted
+
+        monkeypatch.setattr(JdbcSource, "read", recorded_read)
+        monkeypatch.setattr(JdbcArchiveJob, "_read", recorded_job_read)
+        report = JdbcArchiveJob(spark, cfg).run()
+        assert report.verify.is_correct and report.target_rows == N_ROWS
+        files = sorted(
+            tuple(spark.read.parquet(os.path.join(tgt, name)).agg(
+                F.min("ID"), F.max("ID"), F.count(F.lit(1))
+            ).first())
+            for name in os.listdir(tgt)
+            if name.startswith("part-")
+        )
+        shutil.rmtree(tgt, ignore_errors=True)
+        return plan, read, tasks, files
+
+    def test_more_predicates_than_slots(self, spark, derby, tmp_path, monkeypatch):
+        slots = spark.sparkContext.defaultParallelism
+        if 2 * slots + 1 > N_ROWS:
+            pytest.skip("needs two non-empty predicates per slot")
+        # at least two predicates per task, so every task has rows
+        plan, read, tasks, files = self._archive(
+            spark, derby, tmp_path, N_ROWS // (2 * slots + 1), monkeypatch
+        )
+        assert plan.num_partitions > slots
+        assert read == [plan.predicates]
+        assert tasks == [slots] and len(files) == slots
+        # one contiguous key range per file (IDs are dense), disjoint,
+        # covering every row once
+        assert all(hi - lo + 1 == rows for lo, hi, rows in files)
+        assert all(a[1] < b[0] for a, b in zip(files, files[1:]))
+        assert files[0][0] == 1 and files[-1][1] == N_ROWS
+
+    def test_no_more_predicates_than_slots(
+        self, spark, derby, tmp_path, monkeypatch
+    ):
+        """A plan that fits the slots writes one task per predicate and
+        one file per predicate that has rows, as without the packing."""
+        from pyspark.sql import functions as F
+
+        from bend_archiver_spark.sources.jdbc import JdbcSource
+
+        slots = spark.sparkContext.defaultParallelism
+        plan, read, tasks, files = self._archive(
+            spark, derby, tmp_path, N_ROWS // max(1, slots // 2) + 1,
+            monkeypatch,
+        )
+        if plan.num_partitions > slots:
+            pytest.skip("a plan of two predicates needs two slots")
+        assert read == [plan.predicates]
+        assert tasks == [plan.num_partitions]
+        src = JdbcSource(spark, _cfg(derby, "", batch_size=plan.batch_size,
+                                     source_where_condition="ID > 0"))
+        per_predicate = sorted(
+            tuple(row[1:]) for row in src.read(plan).groupBy(
+                F.spark_partition_id()
+            ).agg(F.min("ID"), F.max("ID"), F.count(F.lit(1))).collect()
+        )
+        assert files == per_predicate
+
+
 class TestCancellationDestructiveLast:
     def test_interrupt_between_write_and_verify_never_deletes(
         self, spark, derby, tmp_path, monkeypatch
@@ -425,9 +518,9 @@ class TestStagedJdbcRun:
         self, spark, derby, tmp_path, monkeypatch, spark_jobs
     ):
         """The gate runs before the plan: a refused rerun never probes
-        the source or calls ``write_batch``, and its only Spark jobs are
-        the gate's count of the first run's files (two: the count's
-        shuffle stage and its result)."""
+        the source or calls ``write_batch``, and its only Spark job is
+        the gate's count of the first run's files (one: the count runs
+        with no exchange)."""
         from bend_archiver_spark import job as job_mod
 
         tgt = str(tmp_path / "tgt_refused")
@@ -446,7 +539,7 @@ class TestStagedJdbcRun:
                 JdbcArchiveJob(spark, cfg).run()
 
         _, jobs = spark_jobs(refused)
-        assert called == [] and jobs == 2
+        assert called == [] and jobs == 1
         assert spark.read.parquet(tgt).count() == N_ROWS
         shutil.rmtree(tgt, ignore_errors=True)
 
@@ -921,7 +1014,8 @@ class TestArchiveJobSparkJobs:
     ):
         """Pins the Spark jobs of a fingerprinted, deleting archive into
         an existing target: the write, one pass over the staged files
-        for count and fingerprint, the JDBC fingerprint re-read. The
+        for count and fingerprint, the JDBC fingerprint re-read, each
+        one job (an aggregate runs with no exchange). The
         gate runs none: the first run's manifest records ID in [1, 100],
         which ``ID > 100`` cannot meet. Probes, the source count and the
         delete run on the driver's connection; the staged files are
@@ -936,6 +1030,29 @@ class TestArchiveJobSparkJobs:
         report, jobs = spark_jobs(JdbcArchiveJob(spark, cfg).run)
         assert report.verify.is_correct and report.deleted_rows == 100
         assert jobs == PINNED_JDBC_JOBS
+        shutil.rmtree(tgt, ignore_errors=True)
+
+    def test_fresh_bounds_run_compiles_one_class(
+        self, spark, derby, tmp_path, codegen_compiles
+    ):
+        """A drain run (fingerprinted, deleting, key-disjoint from the
+        target's runs) with slice bounds no earlier run used compiles
+        one new Janino class: Spark inlines the predicate's literals
+        into the staged verify's generated code. Every other class is
+        cached by an earlier run of the same shape."""
+        tgt = str(tmp_path / "tgt_compiles")
+
+        def drain(lo, hi):
+            cfg = _cfg(
+                derby, tgt, source_where_condition=f"ID > {lo} AND ID <= {hi}",
+                verify_fingerprint=True, delete_after_sync=True,
+            )
+            return JdbcArchiveJob(spark, cfg).run()
+
+        assert drain(0, 60).deleted_rows == 60
+        report, compiles = codegen_compiles(lambda: drain(60, 130))
+        assert report.verify.is_correct and report.deleted_rows == 70
+        assert compiles == 1
         shutil.rmtree(tgt, ignore_errors=True)
 
 

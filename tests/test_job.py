@@ -15,7 +15,7 @@ from bend_archiver_spark.verify import (
     count_and_fingerprint,
 )
 
-PINNED_FILE_JOBS = 11
+PINNED_FILE_JOBS = 7
 
 
 def _cfg(target, **kw):
@@ -198,10 +198,12 @@ class TestFileArchiveJob:
         """Pins the Spark jobs of a fingerprinted archive into an
         existing target: the gate counts the first run's files (a double
         column's predicate cannot skip them) with the schema its
-        manifest records, the staged files are read once with the
-        written schema for a fused count + fingerprint, and the source
-        fingerprint hashes the filtered rows without re-running the
-        range-partition sampling and shuffle."""
+        manifest records, the probe takes the key's bounds and count,
+        the write samples, shuffles and writes, the staged files are
+        read once with the written schema for a fused count +
+        fingerprint, and the source fingerprint hashes the filtered rows
+        without re-running the range-partition sampling and shuffle.
+        Each global aggregate is one job with no exchange."""
         tgt = str(tmp_path / "fp_jobs")
         li = load_table(spark, sf_dir, "lineitem")
         first = _cfg(tgt, source_where_condition="l_quantity <= 25")
@@ -346,6 +348,34 @@ class TestStagedRun:
         assert not (tgt / "_staging").exists()
         assert not [f for f in _files(tgt) if f.endswith(".parquet")]
 
+    @pytest.mark.parametrize("fmt", ["parquet", "ndjson"])
+    def test_staged_run_holds_only_data_files_and_its_marker(
+        self, spark, sf_dir, tmp_path, monkeypatch, fmt
+    ):
+        """What a verified run's publish finds in its staging directory:
+        its data files (with their local checksum files) and
+        ``_PUBLISHING``, and no ``_SUCCESS`` marker, which nothing
+        reads."""
+        from bend_archiver_spark import job as job_mod
+        from bend_archiver_spark.sink import PUBLISHING_MARKER
+
+        real_publish = job_mod.publish_staged
+        staged_files = []
+
+        def publish(spark, staged, target):
+            staged_files.append(_files(staged))
+            return real_publish(spark, staged, target)
+
+        monkeypatch.setattr(job_mod, "publish_staged", publish)
+        tgt = str(tmp_path / f"only_data_{fmt}")
+        li = load_table(spark, sf_dir, "lineitem")
+        report = FileArchiveJob(spark, _cfg(tgt, target_format=fmt), li).run()
+        assert report.verify.is_correct
+        [names] = staged_files
+        data = {n for n in names if n.startswith("part-")}
+        checksums = {f".{n}.crc" for n in data}
+        assert data and set(names) - data - checksums == {PUBLISHING_MARKER}
+
     @pytest.mark.parametrize("listing", ["local", "hadoop"])
     def test_unmarked_run_is_never_published(
         self, spark, tmp_path, monkeypatch, listing
@@ -433,9 +463,9 @@ class TestStagedRun:
         self, spark, sf_dir, tmp_path, monkeypatch, spark_jobs
     ):
         """The gate runs before the plan: a refused rerun never calls
-        ``_plan`` or ``write_batch``, and its only Spark jobs are the
-        gate's count of the first run's files (two: the count's shuffle
-        stage and its result)."""
+        ``_plan`` or ``write_batch``, and its only Spark job is the
+        gate's count of the first run's files (one: the count runs with
+        no exchange)."""
         from bend_archiver_spark import job as job_mod
 
         tgt = str(tmp_path / "refused_early")
@@ -455,7 +485,7 @@ class TestStagedRun:
                 FileArchiveJob(spark, _cfg(tgt), li).run()
 
         _, jobs = spark_jobs(refused)
-        assert called == [] and jobs == 2
+        assert called == [] and jobs == 1
         assert _files(tgt) == before
         assert not (tmp_path / "refused_early" / "_staging").exists()
 

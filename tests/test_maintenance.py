@@ -18,10 +18,10 @@ from bend_archiver_spark.verify import content_fingerprint
 from .test_job import _files, _gate, _keyed, _keyed_cfg, _slice
 
 # Spark jobs of a compaction of a 10-run, 50-file target, with or
-# without a clustering key: schema inference, the input's count and
-# fingerprint, the write, the staged files' count, fingerprint and
-# ranges
-PINNED_COMPACT_JOBS = 7
+# without a clustering key: schema inference, one job for the input's
+# count and fingerprint, the write (its shuffle and the write job), one
+# job for the staged files' count, fingerprint and ranges
+PINNED_COMPACT_JOBS = 5
 
 
 class TestCompaction:

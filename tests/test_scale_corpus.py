@@ -58,3 +58,23 @@ class TestAffineCorpusTransform:
             ta, tb = _caesar(a, r), _caesar(b, r)
             diff = sum(x != y for x, y in zip(ta, tb))
             assert diff == 1
+
+
+class TestCorpusDir:
+    def test_sf_root_names_the_scale_bench_reads(self, tmp_path):
+        """``--sf-root`` builds n replicas of sf0.1 as ``sf<n/10>``, the
+        directory name ``bench.scale_of`` gates by; a complete corpus
+        is not rebuilt."""
+        from bench import scale_of
+        from tests.oracle_compare import TABLES
+        from tools.scale_corpus import corpus_dir, sf_name
+
+        assert [sf_name(n) for n in (1, 3, 10, 100)] == [
+            "sf0.1", "sf0.3", "sf1", "sf10"
+        ]
+        out = tmp_path / "sf1"
+        out.mkdir()
+        for table in TABLES:
+            (out / f"{table}.parquet").touch()
+        assert corpus_dir(10, str(tmp_path)) == str(out)
+        assert scale_of(str(out)) == 1.0

@@ -44,14 +44,19 @@ sf0.01 oracle-parity rules apply unchanged.
 Usage:
     python tools/scale_corpus.py 10    # builds /tmp/scale_correctness/x10
                                        # unless present; delete it to rebuild
+    python tools/scale_corpus.py 10 --sf-root /data
+                                       # builds /data/sf1 (10 x sf0.1), the
+                                       # name bench.py reads its scale from
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import shutil
 import sys
 import time
+from decimal import Decimal
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -237,10 +242,16 @@ def build_full_corpus(n: int, out_dir: str) -> None:
     write_scaled_documents(n, out_dir)
 
 
-def corpus_dir(n: int) -> str:
+def sf_name(n: int) -> str:
+    """The ``sf<N>`` name of n replicas of sf0.1: 10 -> ``sf1``."""
+    return f"sf{Decimal(n) / 10:f}"
+
+
+def corpus_dir(n: int, sf_root: str | None = None) -> str:
     """The n-replica corpus directory, built first if any table is
-    missing from it."""
-    out_dir = f"{WORK}/x{n}"
+    missing from it: ``<WORK>/x<n>``, or ``<sf_root>/sf<N>`` (N = n/10,
+    the scale factor ``bench.scale_of`` reads from the name)."""
+    out_dir = f"{WORK}/x{n}" if sf_root is None else os.path.join(sf_root, sf_name(n))
     if not all(os.path.exists(f"{out_dir}/{t}.parquet") for t in TABLES):
         print(f"building {n}x corpus at {out_dir} ...", file=sys.stderr)
         t0 = time.monotonic()
@@ -250,4 +261,11 @@ def corpus_dir(n: int) -> str:
 
 
 if __name__ == "__main__":
-    print(corpus_dir(int(sys.argv[1])))
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("replicas", type=int, help="replicas of sf0.1")
+    ap.add_argument(
+        "--sf-root",
+        help=f"build into <SF_ROOT>/sf<replicas/10> instead of {WORK}/x<replicas>",
+    )
+    args = ap.parse_args()
+    print(corpus_dir(args.replicas, args.sf_root))
